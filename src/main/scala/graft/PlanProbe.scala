@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * calibration collects, guard probes — that run during query
   * CONSTRUCTION and therefore never appear in the final plan an
   * `explain` of the result captures (VERDICT r21: the claimed
-  * gridOccupancy plan delta was not visible in the q186/q190 dumps
+  * grid-occupancy plan delta was not visible in the q186/q190 dumps
   * because the sweep collects before the dumped plan exists).
   *
   * A dump harness ([[PlanDump]]) installs a sink; operators call

@@ -3,7 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{LshGuard, MinHashLsh, TextFns}
+import graft.functions.{BandedLsh, LshGuard, MinHashLsh, TextFns}
 import graft.operators.{BloomDecontaminate, Components}
 
 /** Composable corpus-curation stages — the public API form of the
@@ -145,20 +145,17 @@ object Curation {
       .persist()
     // fused calibrate-then-execute: the sweep's persisted occupancy
     // yields the selected config's over-cap buckets, so the executing
-    // join skips LshGuard's separate probe pass (pathological hot sets
+    // join skips the separate occupancy probe (pathological hot sets
     // past HotKeyCollectCap fall back to the probing path)
-    val (selected, hotOpt) = MinHashLsh.calibrateBandsFused(
-      sigs, idCol, k, bandGrid, pairsPerDocBudget)
-    val pairs = hotOpt match {
-      case Some((rows, schema)) =>
-        MinHashLsh.candidatePairsKnown(sigs, idCol, k, selected, rows, schema)
-      case None => MinHashLsh.candidatePairs(sigs, idCol, k, selected)
-    }
+    val (selected, pairs, releasePairs) = BandedLsh.calibratedPairs(
+      MinHashLsh.family(sigs, idCol, k), bandGrid, pairsPerDocBudget,
+      LshGuard.DefaultMaxBucket)
     val drop = pairs
       .filter(col("est") >= threshold)
       .select(col("b").as(idCol)).distinct()
     (selected, src.join(drop, Seq(idCol), "left_anti"),
       () => {
+        releasePairs()
         sigs.unpersist(blocking = false)
         src.unpersist(blocking = false)
         ()
@@ -428,7 +425,7 @@ object Curation {
     * recall is an unbiased estimate of the full audit's (the q181
     * shape).
     *
-    * CAVEAT — [[graft.functions.LshGuard]] interaction: the
+    * CAVEAT — [[graft.functions.BandedLsh]] guard interaction: the
     * band-key-only argument above holds for the UNguarded join. A
     * bucket that is hot (> maxBucket occupants) in the full corpus is
     * chain-linked there, while the same bucket sampled down by

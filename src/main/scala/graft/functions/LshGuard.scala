@@ -2,67 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
-/** Hot-bucket guard for LSH band self-joins.
+/** Index-side bucket caps for banded LSH probe joins.
   *
-  * A banded LSH candidate join is an equi-join on (band, key). AQE's
-  * skew-join splitting re-balances *shuffle partitions*, but it cannot
-  * bound the O(m²) pair explosion of a single degenerate band key —
-  * e.g. millions of empty or boilerplate-identical documents sharing
-  * one signature at 100 TB, which would emit ~10¹² candidate pairs
-  * from one bucket no matter how the partitions are split.
-  *
-  * The guard bounds that bucket to O(m) while preserving what dedup
-  * needs from it: rows behind a (band, key) bucket with more than
-  * `maxBucket` occupants skip the all-pairs self-join and are instead
-  * chain-linked — each row paired with its predecessor in
-  * (content, id) order, where "content" is the full signature
-  * (MinHash path) or quantized vector (embedding path). A chain emits
-  * m−1 pairs instead of m(m−1)/2, keeps every member of the bucket in
-  * one connected component of the RAW candidate graph, and leaves
-  * every bucket at or under the threshold — and therefore every
-  * non-degenerate pair — untouched.
-  *
-  * Ordering by content FIRST is what makes the chain survive the
-  * similarity filter nearly every consumer applies AFTER candidate
-  * generation (`est >= t` / `cos >= minCos`): content-identical rows
-  * form contiguous runs whose links score est = 1.0 / cos = 1, so a
-  * degenerate bucket of identical content stays one connected
-  * component post-filter too — identical clusters to the unguarded
-  * join. In a MIXED hot bucket (rows sharing one band key but
-  * differing elsewhere) only the cross-run links can fall below the
-  * threshold; those are links between genuinely dissimilar rows,
-  * which the unguarded all-pairs join would filter out as well. The
-  * one shape the guard does change: rows similar-but-not-identical
-  * (est in [t, 1)) inside a hot bucket may connect through the bucket
-  * on the unguarded path but not via the surviving chains — the
-  * documented precision/recall trade of capping a degenerate bucket.
-  *
-  * HOW OCCUPANCY IS FOUND (round 13): the round-12 guard materialized
-  * a `count(*) OVER (PARTITION BY band, key)` column on the full
-  * banded frame — an exchange + sort + window ahead of the band join
-  * that the A/B referee (LshGuardPerfSpec) measured at ~1.35–1.5× the
-  * unguarded floor even when NO bucket is hot. [[splitHot]] replaces
-  * it with a partial-aggregate occupancy probe: `groupBy(band, key)
-  * .count` (map-side combined — the shuffle carries one row per
-  * distinct key, not per input row) filtered to keys above the
-  * threshold, collected to the driver (bounded: at most |banded| /
-  * maxBucket keys can be hot, and [[HotKeyCollectCap]] guards the
-  * pathological corpus where that is still too many). The common case
-  * — zero hot keys — then returns the input untouched, so the cold
-  * path IS the unguarded plan: fully codegen'd, no added exchange, no
-  * sort, no bookkeeping column. When hot keys exist, the frame is
-  * split by a broadcast hash anti/semi join against the tiny key set,
-  * which adds a broadcast lookup but still no exchange to the cold
-  * side. The probe costs one Spark job at plan-construction time; its
-  * scan is the same one that materializes the caller's persisted
-  * banded frame, which the band self-join was about to pay anyway.
-  *
-  * Metrics: each triggered run registers two named Spark accumulators
-  * (`graft.lsh.hotBuckets`, `graft.lsh.suppressedPairs`) visible in
-  * the UI and via [[lastMetrics]], and the first emitted pair of each
-  * hot bucket logs a warning executor-side with the bucket size.
+  * A delta-vs-index lookup joins a probe batch's band keys against a
+  * standing index's: a degenerate index bucket of m rows multiplies
+  * EVERY colliding probe row by m, which AQE's skew splitting cannot
+  * bound. The caps here keep at most `maxBucket` representatives per
+  * (band, key) in ascending-id order, metered on the
+  * `graft.lsh.indexRowsCapped` accumulator with one executor-side
+  * warning per capped bucket. The self-join side of banded LSH — the
+  * chain-link guard and its occupancy probe — lives in [[BandedLsh]].
   */
 object LshGuard {
 
@@ -73,103 +23,6 @@ object LshGuard {
     */
   val DefaultMaxBucket = 1000
 
-  /** Most hot (band, key) keys the occupancy probe collects to the
-    * driver. At the default `maxBucket` = 1000 this bounds the
-    * driver-side set to ~4 MB; a corpus with MORE hot keys than this
-    * (over 10⁸ rows of pure boilerplate) takes the distributed-split
-    * fallback instead of failing.
-    */
-  val HotKeyCollectCap = 100000
-
-  final class Metrics(val hotBuckets: LongAccumulator,
-      val suppressedPairs: LongAccumulator)
-
-  @volatile private var last: Metrics = _
-
-  /** Metrics of the most recently *constructed* guarded join in this
-    * JVM (populated when a guarded plan with a non-empty hot side is
-    * built; accumulator values update as the job runs). When the
-    * occupancy probe finds no hot bucket the guard is a structural
-    * no-op and registers nothing. Introspection hook for specs and
-    * ops — not a per-query API.
-    */
-  def lastMetrics: Option[Metrics] = Option(last)
-
-  /** Splits a banded frame (must carry `band` and `key` columns) into
-    * (cold, hot) on per-(band, key) occupancy. Cold rows belong to
-    * buckets at or under `maxBucket`; the hot side — `None` in the
-    * common no-hot-bucket case, where cold is the INPUT FRAME
-    * UNCHANGED — carries every row of each over-threshold bucket plus
-    * that bucket's occupancy as `__cnt`.
-    *
-    * EAGER: runs the occupancy probe (one aggregate job over `banded`)
-    * at call time to decide the plan shape. Callers persist `banded`
-    * first so the probe's scan doubles as the cache materialization
-    * the downstream self-join needs.
-    */
-  def splitHot(banded: DataFrame, maxBucket: Int): (DataFrame, Option[DataFrame]) = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    val hotKeys = banded.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") > maxBucket)
-    graft.PlanProbe.record("lshguard.splitHot.occupancyProbe", hotKeys)
-    val probe = hotKeys.limit(HotKeyCollectCap + 1).collect()
-    if (probe.isEmpty) (banded, None)
-    else if (probe.length <= HotKeyCollectCap)
-      splitHotKnown(banded, probe.toSeq, hotKeys.schema)
-    else {
-      // pathological corpus (≥ cap hot keys): keep the split lazy and
-      // distributed; AQE still broadcasts `hotKeys` when it fits
-      (banded.join(hotKeys.select("band", "key"), Seq("band", "key"), "left_anti"),
-        Some(banded.join(hotKeys, Seq("band", "key"))))
-    }
-  }
-
-  /** [[splitHot]] when the per-bucket occupancy is ALREADY KNOWN — a
-    * caller-side aggregation (e.g. a calibration sweep over a BOUNDED
-    * keyspace, `SimHash.calibratedPairs`) holds the exact
-    * `(band, key, __cnt)` rows over the cap, so the split costs zero
-    * probe jobs: the hot set broadcasts from the driver and the split
-    * is the same hash anti/semi lookup pair splitHot's probe builds.
-    * `hotRows` must be exactly the over-cap buckets in a schema whose
-    * band/key types match `banded`'s (key type is caller-defined) with
-    * the occupancy as a third `__cnt` column.
-    */
-  def splitHotKnown(banded: DataFrame, hotRows: Seq[org.apache.spark.sql.Row],
-      hotSchema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, Option[DataFrame]) = {
-    if (hotRows.isEmpty) (banded, None)
-    else {
-      val local = banded.sparkSession.createDataFrame(
-        java.util.Arrays.asList(hotRows: _*), hotSchema)
-      val cold = banded.join(broadcast(local.select("band", "key")),
-        Seq("band", "key"), "left_anti")
-      val hot = banded.join(broadcast(local), Seq("band", "key"))
-      (cold, Some(hot))
-    }
-  }
-
-  /** The hot-subset side of the [[splitHot]] probe policy for callers
-    * that already HOLD per-bucket occupancy (the fused calibration
-    * sweeps): given the selected config's (band, key, m) occupancy
-    * frame, collect the over-cap buckets in the [[splitHotKnown]]
-    * row/schema contract (`__cnt` third column). Returns None past
-    * [[HotKeyCollectCap]] — the pathological regime where the caller
-    * must fall back to the probing path and its distributed split.
-    * Keeping this here means the cap policy and the hot-row schema
-    * live in ONE place next to the splits that consume them.
-    */
-  def collectHotKnown(occ: DataFrame, maxBucket: Int)
-      : Option[(Seq[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)] = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    val hotFrame = occ.filter(col("m") > maxBucket)
-      .select(col("band"), col("key"), col("m").as("__cnt"))
-    val hot = hotFrame.limit(HotKeyCollectCap + 1).collect()
-    if (hot.length > HotKeyCollectCap) None
-    else Some((hot.toSeq, hotFrame.schema))
-  }
-
   /** [[capBuckets]] for a COLLISION-BOUNDED slice — the streaming
     * standing-index probe's semi-joined index slice, whose size is
     * bounded by the batch's collisions, not the index. There the
@@ -179,22 +32,46 @@ object LshGuard {
     * round-12 "window ahead of the join" concern was about
     * corpus-sized banded frames, and does not apply to a slice that
     * is already batch-footprint-sized). Semantics are identical to
-    * [[capBuckets]]: rows beyond `maxBucket` per (band, key) drop in
-    * ascending-`idCol` order, overflow metered on
-    * `graft.lsh.indexRowsCapped` with an executor-side warning per
-    * capped bucket. The metering pass is non-codegen but runs over
+    * [[capBuckets]]. The metering pass is non-codegen but runs over
     * the slice only.
     */
   def capBucketsSlice(slice: DataFrame, idCol: String, maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     import org.apache.spark.sql.expressions.Window
     val part = Window.partitionBy(col("band"), col("key"))
-    val capped = slice
+    metered(slice
       .withColumn("__cnt", count(lit(1)).over(part))
-      .withColumn("__rn", row_number().over(part.orderBy(col(idCol))))
-      .filter(col("__rn") <= maxBucket)
-    val sc = slice.sparkSession.sparkContext
-    val cappedAcc = sc.longAccumulator("graft.lsh.indexRowsCapped")
+      .withColumn("__rn", row_number().over(part.orderBy(col(idCol)))),
+      maxBucket)
+  }
+
+  /** Index-side guard for probe joins: buckets over `maxBucket` keep
+    * only their first `maxBucket` rows in ascending-id order — for the
+    * production decision ("does this delta doc collide with the
+    * standing corpus?") any bounded set of representatives is
+    * sufficient — and buckets at or under the threshold are untouched
+    * (structurally: with no hot bucket the input frame is returned
+    * as-is, after [[BandedLsh.splitHot]]'s one occupancy-probe job).
+    */
+  def capBuckets(banded: DataFrame, idCol: String, maxBucket: Int): DataFrame =
+    BandedLsh.splitHot(banded, maxBucket) match {
+      case (cold, None) => cold
+      case (cold, Some(hot)) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band"), col("key")).orderBy(col(idCol))
+        cold.unionByName(
+          metered(hot.withColumn("__rn", row_number().over(w)), maxBucket))
+    }
+
+  /** Keeps the rows ranked `__rn` <= `maxBucket` of each bucket
+    * (occupancy `__cnt`), adds each capped bucket's overflow to
+    * `graft.lsh.indexRowsCapped` and logs it once, on the bucket's
+    * first row, then drops the bookkeeping columns.
+    */
+  private def metered(ranked: DataFrame, maxBucket: Int): DataFrame = {
+    val capped = ranked.filter(col("__rn") <= maxBucket)
+    val cappedAcc = ranked.sparkSession.sparkContext
+      .longAccumulator("graft.lsh.indexRowsCapped")
     val schema = capped.schema
     val cntIdx = schema.fieldIndex("__cnt")
     val rnIdx = schema.fieldIndex("__rn")
@@ -208,83 +85,6 @@ object LshGuard {
           cappedAcc.add(m - mb)
           log.warn(s"hot LSH index bucket: $m rows behind one band key; " +
             s"capped to $mb representatives (dropped ${m - mb})")
-        }
-        r
-      }
-    }(enc).drop("__cnt", "__rn")
-  }
-
-  /** Index-side guard for probe joins (delta-vs-index LSH lookup): a
-    * degenerate index bucket of m rows multiplies EVERY colliding
-    * probe row by m. Buckets over `maxBucket` keep only their first
-    * `maxBucket` rows in ascending-id order — for the production
-    * decision ("does this delta doc collide with the standing
-    * corpus?") any bounded set of representatives is sufficient, and
-    * buckets at or under the threshold are untouched (structurally:
-    * with no hot bucket the input frame is returned as-is). Overflow
-    * is metered via the `graft.lsh.indexRowsCapped` accumulator and an
-    * executor-side warning (on each capped bucket's first row).
-    */
-  def capBuckets(banded: DataFrame, idCol: String, maxBucket: Int): DataFrame =
-    capSplit(banded, idCol, maxBucket, splitHot(banded, maxBucket))
-
-  private def capSplit(banded: DataFrame, idCol: String, maxBucket: Int,
-      split: (DataFrame, Option[DataFrame])): DataFrame =
-    split match {
-      case (cold, None) => cold
-      case (cold, Some(hot)) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("key")).orderBy(col(idCol))
-        val capped = hot.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxBucket)
-        val sc = banded.sparkSession.sparkContext
-        val cappedAcc = sc.longAccumulator("graft.lsh.indexRowsCapped")
-        val schema = capped.schema
-        val cntIdx = schema.fieldIndex("__cnt")
-        val rnIdx = schema.fieldIndex("__rn")
-        val enc = org.apache.spark.sql.Encoders.row(schema)
-        val mb = maxBucket.toLong
-        val hotMetered = capped.mapPartitions { it =>
-          lazy val log = org.slf4j.LoggerFactory.getLogger("graft.lsh.guard")
-          it.map { r =>
-            if (r.getInt(rnIdx) == 1) {
-              val m = r.getLong(cntIdx)
-              cappedAcc.add(m - mb)
-              log.warn(s"hot LSH index bucket: $m rows behind one band key; " +
-                s"capped to $mb representatives (dropped ${m - mb})")
-            }
-            r
-          }
-        }(enc).drop("__cnt", "__rn")
-        cold.unionByName(hotMetered)
-    }
-
-  /** Pass-through instrumentation of the chained hot-pair rows: bumps
-    * the accumulators and logs once per hot bucket (on the bucket's
-    * first emitted pair, `__rn` == 2), then drops the bookkeeping
-    * columns. Only ever in the plan when the occupancy probe found a
-    * hot bucket, so the non-codegen stage never touches the common
-    * case.
-    */
-  def instrument(hotPairs: DataFrame): DataFrame = {
-    val sc = hotPairs.sparkSession.sparkContext
-    val buckets = sc.longAccumulator("graft.lsh.hotBuckets")
-    val suppressed = sc.longAccumulator("graft.lsh.suppressedPairs")
-    last = new Metrics(buckets, suppressed)
-    val schema = hotPairs.schema
-    val cntIdx = schema.fieldIndex("__cnt")
-    val rnIdx = schema.fieldIndex("__rn")
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    hotPairs.mapPartitions { it =>
-      lazy val log = org.slf4j.LoggerFactory.getLogger("graft.lsh.guard")
-      it.map { r =>
-        if (r.getInt(rnIdx) == 2) {
-          val m = r.getLong(cntIdx)
-          buckets.add(1)
-          suppressed.add(m * (m - 1) / 2 - (m - 1))
-          log.warn(s"hot LSH bucket: $m rows behind one band key; " +
-            s"chain-linked to ${m - 1} pairs " +
-            s"(suppressed ${m * (m - 1) / 2 - (m - 1)})")
         }
         r
       }

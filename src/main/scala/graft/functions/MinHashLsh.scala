@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * near-duplicate clusters is re-balanced by AQE's skew-join
   * splitting; *degenerate* buckets (beyond [[LshGuard.DefaultMaxBucket]]
   * rows behind one key, e.g. millions of empty docs) are capped by the
-  * [[LshGuard]] chain-link guard, which AQE cannot do — splitting
+  * [[BandedLsh]] chain-link guard, which AQE cannot do — splitting
   * partitions never bounds a single key's O(m²) pair count.
   */
 object MinHashLsh {
@@ -186,36 +186,27 @@ object MinHashLsh {
       (0 until k).map(i => col("_2")(i).as(s"s$i")): _*)
   }
 
-  /** Candidate near-duplicate pairs from banded signatures.
-    * @return (a, b, est) with a < b; `est` = fraction of equal
-    *         signature components (MinHash Jaccard estimate).
-    */
   /** Banded LSH keys from a signature table: one row per (id, band)
     * with the band's 60-bit numeric key ([[bandKeyCol]]) plus the
-    * full signature columns carried
-    * through (so a downstream join can compute the component-match
-    * estimate without a second signature lookup). This IS the "LSH
-    * index" layout: persisted (or written out) once, an incremental
-    * batch probes it with an equi-join on (band, key).
+    * full signature columns carried through (so a downstream join can
+    * compute the component-match estimate without a second signature
+    * lookup). This IS the "LSH index" layout: persisted (or written
+    * out) once, an incremental batch probes it with an equi-join on
+    * (band, key).
     *
     * GUARD CONTRACT: never feed this frame to a join on (band, key)
     * directly — a degenerate bucket makes any such join O(m²) (pair
     * build) or O(m·probes) (index lookup), which AQE cannot bound.
-    * Route self-joins through [[candidatePairs]] and index sides
-    * through [[LshGuard.capBuckets]]; only an unguarded PROBE side
-    * (the delta batch of an incremental lookup, each row multiplied
-    * only by the already-capped index bucket) may use the raw frame.
-    * Call-site audit as of round 13: `Extended16` q161 caps the index
-    * and probes with the delta; `EmbedNearDup` builds its own banded
-    * frame and splits via [[LshGuard.splitHot]]; no other consumer
-    * joins raw band keys.
+    * Route self-joins through [[candidatePairs]] (the
+    * [[BandedLsh]] hot-bucket guard) and index sides through
+    * [[LshGuard.capBuckets]]; only an unguarded PROBE side (the delta
+    * batch of an incremental lookup, each row multiplied only by the
+    * already-capped index bucket) may use the raw frame.
     */
   def bandKeys(sigs: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val r = k / bands
     val keys = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        bandKeyCol((b * r until (b + 1) * r).map(i => col(s"s$i"))).as("key"))
+      struct(lit(b).as("band"), bandKey(k, bands, b).as("key"))
     }
     val bandedCols = Seq(col(idCol), col("__bk.band").as("band"),
       col("__bk.key").as("key")) ++ (0 until k).map(i => col(s"s$i"))
@@ -223,81 +214,60 @@ object MinHashLsh {
       .select(bandedCols: _*)
   }
 
-  /** One-pass band-count calibration over a signature frame (the
-    * q185 sweep as a reusable operator): for every candidate band
-    * count, the exact banded-join candidate load Σ m·(m−1)/2 comes
-    * from one groupBy over the signatures, and the highest-recall
-    * (most bands) config whose load fits `pairsPerDocBudget` per
-    * signed document is selected — fewest bands as fallback when none
-    * fits, `bandGrid.min` on an empty frame. The stats frame has
-    * |bandGrid| rows, so the selection collect is bounded by
-    * construction. Callers should pass a persisted `sigs` (the sweep
-    * and whatever executes the selection share the scan).
+  /** Band `band`'s [[bandKeyCol]] key when the k signature components
+    * are cut into `bands` bands of k/bands components.
+    */
+  private def bandKey(k: Int, bands: Int, band: Int): Column = {
+    val r = k / bands
+    bandKeyCol((band * r until (band + 1) * r).map(i => col(s"s$i")))
+  }
+
+  /** The MinHash [[BandedLsh.Family]] over a signature frame
+    * (`id`, s0..s{k-1}): configs are band counts (divisors of k), each
+    * band's key is [[bandKeyCol]] over its k/bands components, hot
+    * chains run in full-signature order, and pairs carry `est` = the
+    * fraction of equal signature components (the MinHash Jaccard
+    * estimate, the same comparison on the cold and chained paths).
+    */
+  def family(sigs: DataFrame, id: String, k: Int): BandedLsh.Family =
+    new BandedLsh.Family {
+      val idCol = id
+      val recallOrder = Ordering.Int.reverse
+      def bands(cfg: Int): Int = {
+        require(k % cfg == 0, s"band count $cfg must divide k=$k")
+        cfg
+      }
+      def gridInput(grid: Seq[Int]): DataFrame = sigs
+      def gridKey(cfg: Int, band: Int): Column = bandKey(k, cfg, band)
+      def banded(cfg: Int): DataFrame = bandKeys(sigs, id, k, cfg)
+      def content: Column = struct((0 until k).map(i => col(s"s$i")): _*)
+      def pair(lo: String => Column, hi: String => Column): Seq[Column] = {
+        val matches = (0 until k)
+          .map(i => when(lo(s"s$i") === hi(s"s$i"), 1).otherwise(0))
+          .reduce(_ + _)
+        Seq(round(matches / lit(k.toDouble), 4).as("est"))
+      }
+    }
+
+  /** The band-count calibration (the q185 sweep as a reusable
+    * operator): the most-bands (highest-recall) config whose exact
+    * banded-join load fits `pairsPerDocBudget` per signed document,
+    * fewest bands as fallback — one aggregation over the signatures,
+    * a |bandGrid|-row collect. Callers should pass a persisted `sigs`
+    * (the sweep and whatever executes the selection share the scan).
     */
   def calibrateBands(sigs: DataFrame, idCol: String, k: Int,
       bandGrid: Seq[Int], pairsPerDocBudget: Long): Int = {
-    val statsDf = sweepStats(gridOccupancy(sigs, idCol, k, bandGrid))
-    graft.PlanProbe.record("minhash.calibrateBands.sweepStats", statsDf)
-    selectBands(statsDf.collect(), bandGrid, pairsPerDocBudget)
-  }
-
-  /** Per-bucket occupancy of the WHOLE band grid in one aggregation:
-    * (bands, band, key, m) — the single sweep definition
-    * [[calibrateBands]], [[calibrateBandsFused]] and the q185
-    * calibration query all consume, so the probe, fused and reported
-    * selections can never desync. Public since r22 so q185 shares this
-    * single-explode pass instead of re-deriving the grid as a
-    * per-config `unionByName` (|bandGrid| scans of the signature
-    * frame, guide §6).
-    */
-  def gridOccupancy(sigs: DataFrame, idCol: String, k: Int,
-      bandGrid: Seq[Int]): DataFrame = {
-    require(bandGrid.nonEmpty && bandGrid.forall(b => k % b == 0),
-      s"band grid $bandGrid must be non-empty divisors of k=$k")
-    // ONE explode emits every grid config's (bands, band, key) rows in
-    // a single pass over the signatures — the former per-config
-    // unionByName scanned the signature frame |bandGrid| times (4
-    // cached scans + a 4-branch union plan) for the identical rows
-    // (r21; md5 count per signature row is unchanged: Σ_b b keys)
-    val keyCols = for { b <- bandGrid; band <- 0 until b } yield {
-      val r = k / b
-      struct(lit(b).as("bands"), lit(band).as("band"),
-        bandKeyCol((band * r until (band + 1) * r).map(i => col(s"s$i")))
-          .as("key"))
-    }
-    sigs.select(explode(array(keyCols: _*)).as("__gk"))
-      .select(col("__gk.bands").as("bands"), col("__gk.band").as("band"),
-        col("__gk.key").as("key"))
-      .groupBy("bands", "band", "key")
-      .agg(count(lit(1)).as("m"))
-  }
-
-  /** Per-config load/doc stats over a [[gridOccupancy]] frame. */
-  private def sweepStats(occ: DataFrame): DataFrame =
-    occ.groupBy("bands")
-      .agg(sum(expr("(m * (m - 1)) div 2")).as("cand_pairs"),
-        sum(col("m")).as("tot"))
-      .withColumn("n_docs", expr("tot div bands"))
-
-  /** The one selection comparator (ARCHITECTURE calibration table):
-    * most bands (highest recall) whose load fits the per-doc budget;
-    * fewest bands as fallback; `bandGrid.min` on an empty frame.
-    */
-  private def selectBands(stats: Array[org.apache.spark.sql.Row],
-      bandGrid: Seq[Int], pairsPerDocBudget: Long): Int = {
-    val fitting = stats.filter(r => r.getAs[Long]("cand_pairs") <=
-        r.getAs[Long]("n_docs") * pairsPerDocBudget)
-      .map(_.getAs[Int]("bands"))
-    if (fitting.nonEmpty) fitting.max
-    else if (stats.nonEmpty) stats.map(_.getAs[Int]("bands")).min
-    else bandGrid.min // no signed docs — any config is a no-op
+    val fam = family(sigs, idCol, k)
+    BandedLsh.select(BandedLsh.occupancy(fam, bandGrid), fam, bandGrid,
+      pairsPerDocBudget)._1
   }
 
   /** The whole pricing grid's band keys as bijectively PACKED longs —
     * the input shape of [[OccupancySweep.exactStratified]], the
     * bounded-peak EXACT sweep for corpora whose distinct-key count
     * exceeds one aggregation's spill budget (VERDICT r19 #1; the
-    * in-memory [[calibrateBands]]/[[calibrateBandsFused]] stay the
+    * in-memory [[calibrateBands]]/[[BandedLsh.calibrate]] stay the
     * operational path — this is the decade-pricing path).
     *
     * Each (bands, band) grid pair gets a 4-bit tag above the 60-bit
@@ -314,9 +284,7 @@ object MinHashLsh {
       s"grid $grid spans ${tags.size} (bands, band) pairs — " +
         "more than the 4 tag bits above a 60-bit key carry")
     val cols = tags.zipWithIndex.map { case ((b, band), tag) =>
-      val r = k / b
-      OccupancySweep.packTag(tag,
-        bandKeyCol((band * r until (band + 1) * r).map(i => col(s"s$i"))),
+      OccupancySweep.packTag(tag, bandKey(k, b, band),
         OccupancySweep.MinHashTagShift)
     }
     val cfgByTag = tags.map(_._1).toArray
@@ -325,148 +293,16 @@ object MinHashLsh {
       (p: Long) => cfgByTag((p >>> shift).toInt))
   }
 
-  /** [[calibrateBands]] fused with the hot-bucket discovery the
-    * executing join would otherwise probe for: the sweep's per-bucket
-    * occupancy intermediate (bands, band, key, m) is persisted for
-    * the duration of the call, so the selected config's over-cap
-    * buckets come from a cached-scan filter instead of a second
-    * corpus-wide aggregation ([[LshGuard.splitHot]]'s probe). Unlike
-    * the SimHash family, the md5 keyspace is corpus-sized — the
-    * occupancy cannot be collected wholesale — so the fusion persists
-    * the distributed frame and collects only the (bounded) hot
-    * subset.
-    *
-    * @return (selected bands, Some((hotRows, schema)) with exactly the
-    *         over-cap buckets for [[candidatePairsKnown]], or None
-    *         when the hot set exceeded [[LshGuard.HotKeyCollectCap]] —
-    *         the pathological regime where the caller must fall back
-    *         to the probing [[candidatePairs]] and its distributed
-    *         split)
-    */
-  def calibrateBandsFused(sigs: DataFrame, idCol: String, k: Int,
-      bandGrid: Seq[Int], pairsPerDocBudget: Long,
-      maxBucket: Int = LshGuard.DefaultMaxBucket)
-      : (Int, Option[(Seq[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]) = {
-    val occ = gridOccupancy(sigs, idCol, k, bandGrid).persist()
-    try {
-      val statsDf = sweepStats(occ)
-      graft.PlanProbe.record("minhash.calibrateBandsFused.sweepStats", statsDf)
-      val stats = statsDf.collect()
-      val selected = selectBands(stats, bandGrid, pairsPerDocBudget)
-      (selected, LshGuard.collectHotKnown(
-        occ.filter(col("bands") === selected), maxBucket))
-    } finally { occ.unpersist(blocking = false); () }
-  }
-
-  /** Candidate pairs with the [[LshGuard]] hot-bucket cap: buckets
-    * holding at most `maxBucket` rows take the exact all-pairs band
-    * self-join; degenerate buckets above it are chain-linked — each
-    * row paired with its predecessor in (signature, id) order —
-    * bounding any single band key to O(m) pairs instead of O(m²)
-    * while keeping the bucket one connected component for downstream
-    * clustering. Ordering by signature FIRST means rows with
-    * identical full signatures form contiguous runs chained at
-    * est = 1.0, so the degenerate cluster survives any downstream
-    * `est >= t` filter intact (exactly as the unguarded all-pairs
-    * join would keep its signature-identical pairs); only the m' − 1
-    * cross-run links (between rows that genuinely differ outside the
-    * hot band) carry est < 1 and may be severed by such a filter —
-    * the same pairs the unguarded join would drop. `est` is the same
-    * k-component comparison on either path, so a pair reachable both
-    * ways dedups in the final `distinct()`.
+  /** Candidate pairs (a, b, est), a < b, at `bands` bands through the
+    * [[BandedLsh]] hot-bucket guard: buckets of at most `maxBucket`
+    * rows take the exact all-pairs band self-join, degenerate ones are
+    * chain-linked in (signature, id) order — O(m) pairs, one connected
+    * component, signature-identical runs chained at est = 1.0 so they
+    * survive any downstream `est >= t` filter. The banded frame is
+    * persisted for the self-join (the occupancy probe materializes it)
+    * and stays cached until the session's caches are cleared.
     */
   def candidatePairs(sigs: DataFrame, idCol: String, k: Int, bands: Int,
-      maxBucket: Int = LshGuard.DefaultMaxBucket): DataFrame = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    // Persist before the self-join: both join sides reference this
-    // subplan, and without materialization the whole shingle→minhash
-    // pipeline would execute twice (signatures are the expensive part
-    // — the md5 work over every shingle). The splitHot occupancy probe
-    // below materializes the cache as a side effect, so the self-join
-    // reads only cached blocks.
-    val banded = bandKeys(sigs, idCol, k, bands).persist()
-    pairsFromSplit(LshGuard.splitHot(banded, maxBucket), idCol, k)
-  }
-
-  /** [[candidatePairs]] when the selected config's over-cap buckets
-    * are ALREADY KNOWN (a fused calibration sweep,
-    * [[calibrateBandsFused]]) — same pairs, same chain-link semantics,
-    * zero occupancy-probe jobs. `hotRows`/`hotSchema` follow the
-    * [[LshGuard.splitHotKnown]] contract.
-    */
-  def candidatePairsKnown(sigs: DataFrame, idCol: String, k: Int, bands: Int,
-      hotRows: Seq[org.apache.spark.sql.Row],
-      hotSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    if (hotRows.isEmpty)
-      // No hot bucket (the common case): the pair join is a pure
-      // self-join on the banded frame, whose two sides plan the
-      // IDENTICAL exchange — AQE's stage reuse materializes it once,
-      // so the md5 band-key pass over the (caller-persisted) signature
-      // cache runs once with zero extra jobs (r22; formerly a
-      // persist + materialization count() = one whole extra pass).
-      pairsFromSplit((bandKeys(sigs, idCol, k, bands), None), idCol, k)
-    else {
-      val banded = bandKeys(sigs, idCol, k, bands).persist()
-      // three consumers below (cold anti-join + hot join + window) and
-      // the hot/cold split breaks the exchange-identity that the
-      // empty-hot path leans on — materialize the cache with a
-      // SHUFFLE-FREE count before the self-join: against an
-      // unmaterialized cache the join's map stages launch concurrently
-      // and each computes every banded partition — the per-band md5
-      // work runs twice (same-JVM A/B at 500 k docs: +2 s on the
-      // join). The count scans once and writes the blocks; unlike the
-      // probe it shuffles nothing.
-      banded.count(): Unit
-      pairsFromSplit(LshGuard.splitHotKnown(banded, hotRows, hotSchema),
-        idCol, k)
-    }
-  }
-
-  /** The banded-join body shared by the probe path and the
-    * known-occupancy path: exact all-pairs + est on the cold side,
-    * (signature, id)-ordered chain links on the hot side.
-    */
-  private def pairsFromSplit(split: (DataFrame, Option[DataFrame]),
-      idCol: String, k: Int): DataFrame = {
-    val (cold, hotOpt) = split
-    val l = cold.as("l")
-    val rj = cold.as("r")
-    val matches = (0 until k)
-      .map(i => when(col(s"l.s$i") === col(s"r.s$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    val coldPairs = l.join(rj,
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("a"), col(s"r.$idCol").as("b"),
-        round(matches / lit(k.toDouble), 4).as("est"))
-
-    // Chain in (signature, id) order: signature-identical rows form
-    // contiguous runs, so their chain links carry est = 1.0 and
-    // survive downstream est-threshold filters (see scaladoc above).
-    // Only built when the occupancy probe found a hot bucket; the
-    // common-case plan is exactly the unguarded self-join.
-    val hotPairs = hotOpt.map { hot =>
-      val sigStruct = struct((0 until k).map(i => col(s"s$i")): _*)
-      val ordered = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("key"))
-        .orderBy(sigStruct.asc, col(idCol).asc)
-      val hotMatches = (0 until k)
-        .map(i => when(col("__prev")(s"s$i") === col(s"s$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      LshGuard.instrument(hot
-        .withColumn("__pid", lag(col(idCol), 1).over(ordered))
-        .withColumn("__prev", lag(sigStruct, 1).over(ordered))
-        .withColumn("__rn", row_number().over(ordered))
-        .filter(col("__pid").isNotNull)
-        // est is symmetric; only the (a, b) ids need the canonical
-        // a < b orientation (cross-run links can run id-descending)
-        .select(least(col("__pid"), col(idCol)).as("a"),
-          greatest(col("__pid"), col(idCol)).as("b"),
-          round(hotMatches / lit(k.toDouble), 4).as("est"),
-          col("__cnt"), col("__rn")))
-    }
-
-    hotPairs.fold(coldPairs)(coldPairs.unionByName).distinct()
-  }
+      maxBucket: Int = LshGuard.DefaultMaxBucket): DataFrame =
+    BandedLsh.execute(family(sigs, idCol, k), bands, None, maxBucket)._1
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** SimHash document fingerprinting, parameterized by fingerprint
@@ -132,9 +132,8 @@ sealed abstract class SimHashFamily(val bits: Int) {
     * @param n         shingle width (tokens per shingle)
     * @return one row per id that has ≥ 1 shingle: idCol, sh
     */
-  def fingerprintsFromTokens(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, tokensCol: String, n: Int)
-      : org.apache.spark.sql.DataFrame = {
+  def fingerprintsFromTokens(docs: DataFrame, idCol: String,
+      tokensCol: String, n: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val nBits = bits
@@ -213,7 +212,7 @@ sealed abstract class SimHashFamily(val bits: Int) {
     rows.select(col("_1").cast(idType).as(idCol), col("_2").as("sh"))
   }
 
-  /** Default bits-per-band grid for [[calibrateWidth]] (divisors of
+  /** Default bits-per-band grid for [[calibratedPairs]] (divisors of
     * [[bits]], narrowest first — fewer bits per band → more bands and
     * more collisions → higher recall, more candidate pairs). The
     * 64-bit grid starts at 4 (a 2-bit band of a 64-bit fingerprint is
@@ -234,8 +233,7 @@ sealed abstract class SimHashFamily(val bits: Int) {
     * arithmetic shift's sign extension is masked off identically in
     * Spark and the oracle's engine).
     */
-  def bandKeys(sigs: org.apache.spark.sql.DataFrame, shCol: String,
-      w: Int): org.apache.spark.sql.DataFrame = {
+  def bandKeys(sigs: DataFrame, shCol: String, w: Int): DataFrame = {
     require(bits % w == 0, s"width $w must divide $bits")
     sigs
       .withColumn("band",
@@ -244,115 +242,45 @@ sealed abstract class SimHashFamily(val bits: Int) {
         .bitwiseAND(lit((1L << w) - 1)))
   }
 
-  /** Per-bucket occupancy of the WHOLE width grid in one aggregation:
-    * (w, band, key, m) — a DISTRIBUTED intermediate, never collected:
-    * narrow widths bound it by keyspace (Σ_w (bits/w)·2^w), but a
-    * 32-bit band's keyspace exceeds any corpus, so the frame is
-    * corpus-sized in general and everything driver-side derives from
-    * its |grid|-row aggregation ([[widthSweep]]) or its over-cap
-    * filtrate (the [[LshGuard]] probe), both provably small.
+  /** The SimHash [[BandedLsh.Family]] over a fingerprint frame
+    * (`id`, `shCol`): configs are bits per band (divisors of [[bits]]),
+    * keys are [[bandKeys]]' bit slices, hot chains run in fingerprint
+    * order (identical fingerprints form hamming-0 runs), and pairs
+    * carry both fingerprints as `sa`/`sb`.
     */
-  def occupancy(sigs: org.apache.spark.sql.DataFrame, shCol: String,
-      widthGrid: Seq[Int] = DefaultWidthGrid): org.apache.spark.sql.DataFrame = {
-    require(widthGrid.nonEmpty && widthGrid.forall(w => bits % w == 0),
-      s"width grid $widthGrid must be non-empty divisors of $bits")
-    // ONE explode emits every grid config's (w, band, key) rows in a
-    // single pass over the fingerprints (r22 — the
-    // MinHashLsh.gridOccupancy shape): the former per-width bandKeys +
-    // unionByName scanned the fingerprint frame |widthGrid| times for
-    // the identical rows (Σ_w bits/w keys per row either way, pure bit
-    // arithmetic both ways).
-    val keyCols = for { w <- widthGrid; band <- 0 until bits / w } yield
-      struct(lit(w).as("w"), lit(band).as("band"),
-        expr(s"shiftright($shCol, ${band * w})")
-          .bitwiseAND(lit((1L << w) - 1)).as("key"))
-    sigs.select(explode(array(keyCols: _*)).as("__gk"))
-      .select(col("__gk.w").as("w"), col("__gk.band").as("band"),
-        col("__gk.key").as("key"))
-      .groupBy("w", "band", "key")
-      .agg(count(lit(1)).as("m"))
-  }
-
-  def widthSweep(sigs: org.apache.spark.sql.DataFrame, shCol: String,
-      widthGrid: Seq[Int] = DefaultWidthGrid): org.apache.spark.sql.DataFrame =
-    widthSweepFromOcc(occupancy(sigs, shCol, widthGrid))
-
-  /** [[widthSweep]] over a prebuilt (possibly persisted) [[occupancy]]
-    * frame — the fused calibrate path shares one occupancy scan
-    * between the sweep and the hot-bucket filtrate.
-    */
-  private def widthSweepFromOcc(occ: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    occ
-      .groupBy("w")
-      .agg(sum(expr("(m * (m - 1)) div 2")).as("cand_pairs"),
-        sum(col("m")).as("tot"))
-      .withColumn("n_docs", expr(s"tot div ($bits div w)"))
-      .select("w", "cand_pairs", "n_docs")
-
-  /** The one selection comparator (ARCHITECTURE calibration table):
-    * narrowest (highest-recall) width whose load fits the per-doc
-    * budget; widest as fallback. `stats` rows are (w, candPairs, nDocs).
-    */
-  private def selectWidth(stats: Seq[(Int, Long, Long)], widthGrid: Seq[Int],
-      pairsPerDocBudget: Long): Int = {
-    val fitting = stats.collect {
-      case (w, p, n) if p <= n * pairsPerDocBudget => w
+  def family(sigs: DataFrame, id: String, shCol: String): BandedLsh.Family =
+    new BandedLsh.Family {
+      val idCol = id
+      val recallOrder = Ordering.Int
+      def bands(w: Int): Int = {
+        require(bits % w == 0, s"width $w must divide $bits")
+        bits / w
+      }
+      def gridInput(grid: Seq[Int]): DataFrame = sigs
+      def gridKey(w: Int, band: Int): Column =
+        expr(s"shiftright($shCol, ${band * w})").bitwiseAND(lit((1L << w) - 1))
+      def banded(w: Int): DataFrame =
+        bandKeys(sigs.select(col(id), col(shCol)), shCol, w)
+      def content: Column = col(shCol)
+      def pair(lo: String => Column, hi: String => Column): Seq[Column] =
+        Seq(lo(shCol).as("sa"), hi(shCol).as("sb"))
     }
-    if (fitting.nonEmpty) fitting.min else widthGrid.max
-  }
 
-  /** Per-width (load, docs) stats as collected [[widthSweep]] rows —
-    * the single stats definition both [[calibrateWidth]] and
-    * [[calibratedPairs]] consume, so the two selection paths can
-    * never desync; the collect is |grid|-row by construction.
-    */
-  private def sweepStats(sigs: org.apache.spark.sql.DataFrame, shCol: String,
-      widthGrid: Seq[Int]): Seq[(Int, Long, Long)] = {
-    val sweep = widthSweep(sigs, shCol, widthGrid)
-    graft.PlanProbe.record("simhash.widthSweep", sweep)
-    sweep.collect().toSeq.map(r =>
-      (r.getAs[Int]("w"), r.getAs[Long]("cand_pairs"),
-        r.getAs[Long]("n_docs")))
-  }
-
-  /** Selection over the |grid|-row [[widthSweep]] aggregate: the
-    * narrowest (highest-recall) width whose candidate load fits
-    * `pairsPerDocBudget` per signed document; widest as fallback when
-    * none fits (or the frame is empty).
-    */
-  def calibrateWidth(sigs: org.apache.spark.sql.DataFrame, shCol: String,
-      widthGrid: Seq[Int] = DefaultWidthGrid,
-      pairsPerDocBudget: Long = 20L): Int =
-    selectWidth(sweepStats(sigs, shCol, widthGrid),
-      widthGrid, pairsPerDocBudget)
-
-  /** Calibrate-then-execute in ONE pass over the corpus: one
-    * [[widthSweep]] aggregation prices the whole grid (a |grid|-row
-    * collect), the width is selected driver-side with the same
-    * comparator as [[calibrateWidth]], and the banded join executes
-    * at the selected width with the [[LshGuard]] probe running over
-    * the already-persisted banded frame — cheap bit re-derivation
-    * against cached blocks, never a second corpus pass. (Round 17:
-    * this replaced the full-occupancy collect, which was
-    * keyspace-bounded only while every grid width was ≤16 bits —
-    * a 32-bit band's occupancy is corpus-sized.)
+  /** Calibrate-then-execute: the narrowest (highest-recall) width
+    * whose exact banded-join load fits `pairsPerDocBudget` per signed
+    * document is selected (widest as fallback) by the fused
+    * [[BandedLsh.calibrate]], and the hot-bucket-guarded band join
+    * executes at that width. The banded frame's unpersist handle is
+    * registered with [[PersistLeases]], so harnesses that drain leases
+    * between queries release it; callers managing lifetime explicitly
+    * should prefer [[calibratedPairsWithCleanup]].
     *
-    * The banded frame stays persisted for the returned pairs frame's
-    * benefit; the unpersist handle is registered with
-    * [[PersistLeases]] so harnesses and long-lived sessions that
-    * drain leases between queries release it without threading the
-    * handle (callers that manage lifetime explicitly should prefer
-    * [[calibratedPairsWithCleanup]]).
-    *
-    * @return (selected width, pairs frame — the [[candidatePairs]]
-    *         schema and semantics, bit-identical to the probe path)
+    * @return (selected width, distinct pairs (a, b, sa, sb), a < b;
+    *         sa/sb are a's/b's fingerprints)
     */
-  def calibratedPairs(sigs: org.apache.spark.sql.DataFrame, idCol: String,
-      shCol: String, widthGrid: Seq[Int] = DefaultWidthGrid,
-      pairsPerDocBudget: Long = 20L,
-      maxBucket: Int = LshGuard.DefaultMaxBucket)
-      : (Int, org.apache.spark.sql.DataFrame) = {
+  def calibratedPairs(sigs: DataFrame, idCol: String, shCol: String,
+      widthGrid: Seq[Int] = DefaultWidthGrid, pairsPerDocBudget: Long = 20L,
+      maxBucket: Int = LshGuard.DefaultMaxBucket): (Int, DataFrame) = {
     val (w, pairs, release) = calibratedPairsWithCleanup(
       sigs, idCol, shCol, widthGrid, pairsPerDocBudget, maxBucket)
     PersistLeases.register(release)
@@ -361,130 +289,17 @@ sealed abstract class SimHashFamily(val bits: Int) {
 
   /** [[calibratedPairs]] plus the banded frame's unpersist handle —
     * the `EmbedNearDup.calibratedPairsWithCleanup` contract: callers
-    * outside a clear-caches-between-queries loop (long-lived ingest
-    * or test sessions issuing repeated calls) invoke the handle once
-    * the returned frame is consumed, instead of accumulating
+    * outside a clear-caches-between-queries loop invoke the handle
+    * once the returned frame is consumed, instead of accumulating
     * corpus×bands-sized cached blocks.
     */
-  def calibratedPairsWithCleanup(sigs: org.apache.spark.sql.DataFrame,
-      idCol: String, shCol: String, widthGrid: Seq[Int] = DefaultWidthGrid,
+  def calibratedPairsWithCleanup(sigs: DataFrame, idCol: String,
+      shCol: String, widthGrid: Seq[Int] = DefaultWidthGrid,
       pairsPerDocBudget: Long = 20L,
       maxBucket: Int = LshGuard.DefaultMaxBucket)
-      : (Int, org.apache.spark.sql.DataFrame, () => Unit) = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    // Fused calibrate + hot discovery (r22 — the
-    // MinHashLsh.calibrateBandsFused shape): the sweep's per-bucket
-    // occupancy persists for the duration of the call, so the selected
-    // width's over-cap buckets come from a cached-scan filter instead
-    // of LshGuard.splitHot's second aggregation over the banded frame.
-    val occ = occupancy(sigs, shCol, widthGrid).persist()
-    val (selected, hotOpt) = try {
-      val sweep = widthSweepFromOcc(occ)
-      graft.PlanProbe.record("simhash.calibrated.widthSweep", sweep)
-      val stats = sweep.collect().toSeq.map(r =>
-        (r.getAs[Int]("w"), r.getAs[Long]("cand_pairs"),
-          r.getAs[Long]("n_docs")))
-      val sel = selectWidth(stats, widthGrid, pairsPerDocBudget)
-      (sel, LshGuard.collectHotKnown(occ.filter(col("w") === sel), maxBucket))
-    } finally { occ.unpersist(blocking = false); () }
-    hotOpt match {
-      case Some((rows, _)) if rows.isEmpty =>
-        // No hot bucket (the common case): a pure self-join whose two
-        // sides plan the IDENTICAL exchange — AQE's stage reuse
-        // materializes it once; no persist, no probe, no count job.
-        (selected,
-          pairsFromSplit(
-            (bandKeys(sigs.select(col(idCol), col(shCol)), shCol, selected),
-              None), idCol, shCol),
-          () => ())
-      case Some((rows, schema)) =>
-        // hot/cold split breaks the exchange identity — materialize the
-        // banded cache with a shuffle-free count before the self-join.
-        val banded = bandKeys(sigs.select(col(idCol), col(shCol)), shCol,
-          selected).persist()
-        banded.count(): Unit
-        (selected,
-          pairsFromSplit(LshGuard.splitHotKnown(banded, rows, schema),
-            idCol, shCol),
-          () => { banded.unpersist(blocking = false); () })
-      case None =>
-        // pathological hot set past HotKeyCollectCap: the probing path
-        // and its distributed split (the probe materializes the cache)
-        val banded = bandKeys(sigs.select(col(idCol), col(shCol)), shCol,
-          selected).persist()
-        (selected,
-          pairsFromSplit(LshGuard.splitHot(banded, maxBucket), idCol, shCol),
-          () => { banded.unpersist(blocking = false); () })
-    }
-  }
-
-  /** Banded candidate pairs at `w` bits per band with the
-    * [[LshGuard]] hot-bucket cap — the SimHash counterpart of
-    * `MinHashLsh.candidatePairs`, and the reason the fallback width is
-    * safe to EXECUTE (not just price): a narrow fingerprint has at most
-    * 2^w keys per band, so fingerprint-concentrated corpora put
-    * hundreds of thousands of rows behind one key, and the raw band
-    * self-join is O(m²) per bucket regardless of which width the sweep
-    * selected. Buckets over `maxBucket` are chain-linked in
-    * (fingerprint, id) order — identical fingerprints form contiguous
-    * hamming-0 runs, so a degenerate cluster still connects (and still
-    * passes a hamming threshold) while emitting m−1 pairs instead of
-    * m(m−1)/2. Buckets at or under the cap take the exact all-pairs
-    * join; with no hot bucket the plan IS the unguarded self-join.
-    *
-    * @return (a, b, sa, sb) with a < b; sa/sb are a's/b's fingerprints
-    */
-  def candidatePairs(sigs: org.apache.spark.sql.DataFrame, idCol: String,
-      shCol: String, w: Int,
-      maxBucket: Int = LshGuard.DefaultMaxBucket)
-      : org.apache.spark.sql.DataFrame = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    // persist before the self-join: the occupancy probe materializes
-    // the cache, the two join sides then read cached blocks; the
-    // unpersist lease drains at the harness between-queries point
-    val banded = bandKeys(sigs.select(col(idCol), col(shCol)), shCol, w)
-      .persist()
-    PersistLeases.register(() => { banded.unpersist(blocking = false); () })
-    pairsFromSplit(LshGuard.splitHot(banded, maxBucket), idCol, shCol)
-  }
-
-  /** The banded-join body shared by the probe path ([[candidatePairs]])
-    * and the known-occupancy path ([[calibratedPairs]]): exact
-    * all-pairs on the cold side, chain-links in (fingerprint, id)
-    * order on the hot side.
-    */
-  private def pairsFromSplit(
-      split: (org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame]),
-      idCol: String, shCol: String): org.apache.spark.sql.DataFrame = {
-    val (cold, hotOpt) = split
-    val l = cold.select(col(idCol).as("a"), col(shCol).as("sa"),
-      col("band"), col("key"))
-    val rj = cold.select(col(idCol).as("b"), col(shCol).as("sb"),
-      col("band"), col("key"))
-    val coldPairs = l.join(rj, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .select("a", "b", "sa", "sb")
-    val hotPairs = hotOpt.map { hot =>
-      val ordered = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("key"))
-        .orderBy(col(shCol).asc, col(idCol).asc)
-      LshGuard.instrument(hot
-        .withColumn("__pid", lag(col(idCol), 1).over(ordered))
-        .withColumn("__psh", lag(col(shCol), 1).over(ordered))
-        .withColumn("__rn", row_number().over(ordered))
-        .filter(col("__pid").isNotNull)
-        .select(least(col("__pid"), col(idCol)).as("a"),
-          greatest(col("__pid"), col(idCol)).as("b"),
-          // fingerprints follow the id orientation (hamming is
-          // symmetric, but distinct() needs a canonical row)
-          when(col("__pid") < col(idCol), col("__psh"))
-            .otherwise(col(shCol)).as("sa"),
-          when(col("__pid") < col(idCol), col(shCol))
-            .otherwise(col("__psh")).as("sb"),
-          col("__cnt"), col("__rn")))
-    }
-    hotPairs.fold(coldPairs)(coldPairs.unionByName).distinct()
-  }
+      : (Int, DataFrame, () => Unit) =
+    BandedLsh.calibratedPairs(family(sigs, idCol, shCol), widthGrid,
+      pairsPerDocBudget, maxBucket)
 }
 
 /** The original 16-bit family — every committed SimHash oracle

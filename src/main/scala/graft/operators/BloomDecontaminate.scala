@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * TIERED EVAL SIDE (round 14): the eval set's size spans six orders
   * of magnitude between a single benchmark (10³ shingles) and a full
   * eval suite (10⁹), and the right plan differs. A `limit(cap+1)`
-  * probe-collect (the LshGuard pattern) picks per run:
+  * probe-collect (the `BandedLsh.splitHot` pattern) picks per run:
   *  - ≤ [[EvalCollectCap]] rows: ONE narrow job collects the eval
   *    hashes; dedup, exact sizing, and the bloom build all happen on
   *    the driver (microseconds at this size), and [[verifiedFlags]]

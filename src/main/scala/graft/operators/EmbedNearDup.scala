@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{LshGuard, VecFns}
+import graft.functions.{BandedLsh, LshGuard, VecFns}
 
 /** Embedding-cosine near-duplicate pairs.
   *
@@ -55,60 +55,24 @@ object EmbedNearDup {
     * call it after the consuming action to release the cached blocks
     * deterministically (idempotent, non-blocking).
     *
-    * Hot-bucket guard: a (band, key) bucket holding more than
-    * `maxBucket` rows (a degenerate hyperplane cell — e.g. millions of
-    * zero or boilerplate-identical embeddings) skips the all-pairs
-    * self-join and is chain-linked in (quantized-vector, id) order via
-    * [[graft.functions.LshGuard]], bounding the cell to O(m) candidate
-    * pairs while keeping it one connected component for clustering.
-    * Ordering by vector FIRST makes identical vectors contiguous, so
-    * their chain links verify at cos = 1 and survive the `minCos`
-    * filter — the degenerate cluster is preserved through
-    * verification, not just through raw candidate generation; only
-    * links between genuinely different vectors can be filtered, as
-    * they would be on the all-pairs path. Chained candidates still go
-    * through the exact cosine verify.
+    * Hot-bucket guard: a (band, key) cell holding more than
+    * `maxBucket` vectors (a degenerate hyperplane cell — e.g. millions
+    * of zero or boilerplate-identical embeddings) skips the all-pairs
+    * self-join and is chain-linked in (quantized-vector, id) order by
+    * the [[BandedLsh]] guard, bounding the cell to O(m) candidate
+    * pairs while keeping it one connected component. Identical vectors
+    * are contiguous in that order, so their chain links verify at
+    * cos = 1 and survive the `minCos` filter; only links between
+    * genuinely different vectors can be filtered, as they would be on
+    * the all-pairs path. Chained candidates still go through the exact
+    * cosine verify.
     */
   def bandedPairsWithCleanup(vecs: DataFrame, idCol: String, bands: Int,
       planesPerBand: Int, dim: Int, minCos: Double,
       maxBucket: Int = LshGuard.DefaultMaxBucket): (DataFrame, () => Unit) = {
-    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    val banded = bandedFrame(vecs, idCol, bands, planesPerBand, dim).persist()
-    (pairsFromSplit(LshGuard.splitHot(banded, maxBucket), idCol, minCos),
-      () => { banded.unpersist(blocking = false); () })
-  }
-
-  /** [[bandedPairsWithCleanup]] when the selected config's over-cap
-    * cells are ALREADY KNOWN (the fused calibration,
-    * [[calibratePlanesFused]]) — same pairs, same chain semantics,
-    * zero occupancy-probe jobs. `hotRows`/`hotSchema` follow the
-    * [[LshGuard.splitHotKnown]] contract.
-    */
-  def bandedPairsKnown(vecs: DataFrame, idCol: String, bands: Int,
-      planesPerBand: Int, dim: Int, minCos: Double,
-      hotRows: Seq[org.apache.spark.sql.Row],
-      hotSchema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, () => Unit) = {
-    if (hotRows.isEmpty)
-      // No hot cell (the common case): a pure self-join whose two
-      // sides plan the IDENTICAL exchange — AQE's stage reuse
-      // materializes it once, so the sign-mask pass runs once with no
-      // persist and no materialization count() job (r22; the
-      // MinHashLsh.candidatePairsKnown rationale, refereed there at
-      // 1.17×/1.13× on q186/q190).
-      (pairsFromSplit((bandedFrame(vecs, idCol, bands, planesPerBand, dim),
-        None), idCol, minCos), () => ())
-    else {
-      val banded = bandedFrame(vecs, idCol, bands, planesPerBand, dim).persist()
-      // hot/cold split breaks the exchange identity — materialize the
-      // cache with a shuffle-free count before the self-join (without
-      // it the join map stages each re-run the per-band sign dot
-      // products)
-      banded.count(): Unit
-      (pairsFromSplit(LshGuard.splitHotKnown(banded, hotRows, hotSchema),
-          idCol, minCos),
-        () => { banded.unpersist(blocking = false); () })
-    }
+    val (cand, release) = BandedLsh.execute(family(vecs, idCol, bands, dim),
+      planesPerBand, None, maxBucket)
+    (verify(cand, minCos), release)
   }
 
   /** One row per (vector, band) with the band's packed sign key. The
@@ -121,10 +85,6 @@ object EmbedNearDup {
     */
   private def bandedFrame(vecs: DataFrame, idCol: String, bands: Int,
       planesPerBand: Int, dim: Int): DataFrame = {
-    // self-sufficient registration (idempotent): the mask kernel is a
-    // registered function, and not every caller runs after a query
-    // that registered the session
-    graft.functions.expressions.GraftFunctions.register(vecs.sparkSession)
     val bandKeys = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         VecFns.bandKeyFromMask(col("__mask"), b, planesPerBand).as("key"))
@@ -137,66 +97,46 @@ object EmbedNearDup {
         col("__bk.band").as("band"), col("__bk.key").as("key"))
   }
 
-  /** The banded-join body shared by the probe path and the
-    * known-occupancy path: all-pairs + exact cosine verify on the
-    * cold side, (vector, id)-ordered chain links on the hot side.
+  /** The hyperplane [[BandedLsh.Family]] over quantized vectors
+    * (`id`, vq, nsq) at a fixed band count: configs are planes per
+    * band. The grid's prelude is ONE sign-mask kernel per vector,
+    * `nBands · grid.max` planes wide and shared by every config
+    * (config p's band b reads bits b·p .. b·p+p−1) — per-plane sign
+    * COLUMNS hit the JIT method-size cliff past ~32 planes (60 s vs
+    * 4.5 s at 200 k vectors). Hot chains run in quantized-vector
+    * order; pairs carry both sides' vectors and squared norms for
+    * [[verify]].
     */
-  private def pairsFromSplit(split: (DataFrame, Option[DataFrame]),
-      idCol: String, minCos: Double): DataFrame = {
-    val (cold, hotOpt) = split
-
-    val l = cold.select(col(idCol).as("a"), col("vq").as("a_vq"),
-      col("nsq").as("a_nsq"), col("band"), col("key"))
-    val r = cold.select(col(idCol).as("b"), col("vq").as("b_vq"),
-      col("nsq").as("b_nsq"), col("band"), col("key"))
-    val coldCand = l.join(r, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .select("a", "b", "a_vq", "a_nsq", "b_vq", "b_nsq")
-
-    // Chain in (vector, id) order so identical vectors form
-    // contiguous runs whose links verify at cos = 1 (see scaladoc);
-    // the (a, b) sides are then re-oriented to the canonical a < b
-    // the cold path emits, keeping the pre-verify distinct() able to
-    // collapse a pair reachable through both paths. Only in the plan
-    // when the occupancy probe found a degenerate cell.
-    val hotCand = hotOpt.map { hot =>
-      val ordered = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("key"))
-        .orderBy(col("vq").asc, col(idCol).asc)
-      val self = struct(col(idCol).as("id"), col("vq").as("vq"),
-        col("nsq").as("nsq"))
-      LshGuard.instrument(hot
-        .withColumn("__prev", lag(self, 1).over(ordered))
-        .withColumn("__rn", row_number().over(ordered))
-        .filter(col("__prev").isNotNull)
-        .withColumn("__lo",
-          when(col("__prev")("id") < col(idCol), col("__prev")).otherwise(self))
-        .withColumn("__hi",
-          when(col("__prev")("id") < col(idCol), self).otherwise(col("__prev")))
-        .select(col("__lo")("id").as("a"), col("__hi")("id").as("b"),
-          col("__lo")("vq").as("a_vq"), col("__lo")("nsq").as("a_nsq"),
-          col("__hi")("vq").as("b_vq"), col("__hi")("nsq").as("b_nsq"),
-          col("__cnt"), col("__rn")))
+  def family(vecs: DataFrame, id: String, nBands: Int,
+      dim: Int): BandedLsh.Family = {
+    // self-sufficient registration (idempotent): the mask kernel is a
+    // registered function, and not every caller runs after a query
+    // that registered the session
+    graft.functions.expressions.GraftFunctions.register(vecs.sparkSession)
+    new BandedLsh.Family {
+      val idCol = id
+      val recallOrder = Ordering.Int
+      def bands(p: Int): Int = nBands
+      def gridInput(grid: Seq[Int]): DataFrame = vecs.select(
+        VecFns.planeSignMask(col("vq"), nBands * grid.max, dim).as("__mask"))
+      def gridKey(p: Int, band: Int): Column =
+        VecFns.bandKeyFromMask(col("__mask"), band, p)
+      def banded(p: Int): DataFrame = bandedFrame(vecs, id, nBands, p, dim)
+      def content: Column = col("vq")
+      def pair(lo: String => Column, hi: String => Column): Seq[Column] =
+        Seq(lo("vq").as("a_vq"), lo("nsq").as("a_nsq"),
+          hi("vq").as("b_vq"), hi("nsq").as("b_nsq"))
     }
-
-    // distinct before scoring: a pair sharing several bands (possibly
-    // cold in one, chained in another) must be examined exactly once
-    val cand = hotCand.fold(coldCand)(coldCand.unionByName).distinct()
-    verify(cand, minCos)
   }
 
   /** Calibrate-then-execute banded pairs — the operator that CONSUMES
     * the q184 planes-per-band calibration instead of running a fixed
-    * geometry. One projection over the quantized vectors computes the
-    * per-(config, band, key) occupancy for every config in
-    * `planeGrid` (no per-config corpus re-scan), the per-config
-    * banded-join cost Σ m·(m−1)/2 follows from the occupancies, and
-    * the NARROWEST config whose candidate load fits
-    * `pairsPerVecBudget` pairs per vector is selected (fewer planes →
-    * higher recall → more pairs; widest config as fallback — q184's
-    * exact rule). [[bandedPairs]] then executes with the selection.
-    * The stats frame has |planeGrid| rows, so the selection collect
-    * is constant-size by construction.
+    * geometry. One projection over the quantized vectors prices every
+    * config in `planeGrid` ([[calibratePlanesFused]]); the NARROWEST
+    * config whose candidate load fits `pairsPerVecBudget` pairs per
+    * vector is selected (fewer planes → higher recall → more pairs;
+    * widest config as fallback — q184's exact rule), and the banded
+    * join executes with the selection.
     *
     * @return (selectedPlanesPerBand, scored pairs as in bandedPairs)
     */
@@ -217,20 +157,19 @@ object EmbedNearDup {
       planeGrid: Seq[Int], dim: Int, minCos: Double,
       pairsPerVecBudget: Long = 20L,
       maxBucket: Int = LshGuard.DefaultMaxBucket): (Int, DataFrame, () => Unit) = {
-    // fused calibrate-then-execute: the sweep's persisted occupancy
-    // yields the selected config's over-cap cells, so the executing
-    // join skips LshGuard's separate probe pass (pathological hot sets
-    // past HotKeyCollectCap fall back to the probing path)
-    val (selected, hotOpt) = calibratePlanesFused(vecs, bands, planeGrid,
-      dim, pairsPerVecBudget, maxBucket)
-    val (pairs, release) = hotOpt match {
-      case Some((rows, schema)) => bandedPairsKnown(
-        vecs, idCol, bands, selected, dim, minCos, rows, schema)
-      case None => bandedPairsWithCleanup(
-        vecs, idCol, bands, selected, dim, minCos, maxBucket)
-    }
-    (selected, pairs, release)
+    val fam = family(vecs, idCol, bands, dim)
+    val (selected, hot) =
+      calibratePlanesFused(fam, planeGrid, pairsPerVecBudget, maxBucket)
+    val (cand, release) = BandedLsh.execute(fam, selected, hot, maxBucket)
+    (selected, verify(cand, minCos), release)
   }
+
+  /** Hard ceiling for planes per band, shared by [[planeGridFor]]'s
+    * derived ceiling and [[calibratePlanesFused]]'s extend-on-
+    * overshoot loop — 16M cells per band prices out any realistic
+    * budget long before the cap binds.
+    */
+  val PlaneCap = 24
 
   /** Planes-per-band grid scaled to the corpus — the ceiling the
     * fixed 2/4/6/8 grid lacked. On isotropic vectors each band's 2^p
@@ -244,16 +183,8 @@ object EmbedNearDup {
     * fitting selection to keep existing. Even steps from 2 up to the
     * derived ceiling (never below 8, so small corpora keep today's
     * grid and the q184/q187 oracles replay unchanged at harness
-    * scales; capped at 24 — 16M cells per band prices out any
-    * realistic budget long before the cap binds).
+    * scales; capped at [[PlaneCap]]).
     */
-  /** Hard ceiling for planes per band, shared by [[planeGridFor]]'s
-    * derived ceiling and [[calibratePlanesFused]]'s extend-on-
-    * overshoot loop — 16M cells per band prices out any realistic
-    * budget long before the cap binds.
-    */
-  val PlaneCap = 24
-
   def planeGridFor(nVecs: Long, bands: Int = 4,
       pairsPerVecBudget: Long = 20L): Seq[Int] = {
     require(bands >= 1 && pairsPerVecBudget >= 1)
@@ -264,142 +195,34 @@ object EmbedNearDup {
     2 to pMax by 2
   }
 
-  /** The grid sweep's per-config stats — (p, cand_pairs, n_vec), one
-    * row per grid member — as a frame (public for the decade audit in
-    * ScaleCalibrationSpec, symmetric with `SimHash.widthSweep`).
-    * `cand_pairs` is an exact prediction of the banded join's
-    * candidate multiset: Σ m·(m−1)/2 over cells counts the join's
-    * output pairs with band multiplicity.
-    */
-  def planeSweep(vecs: DataFrame, bands: Int, planeGrid: Seq[Int],
-      dim: Int): DataFrame =
-    sweepStats(gridOccupancy(vecs, bands, planeGrid, dim), bands)
-
-  /** The planes-per-band sweep and selection alone (the q184 rule as
-    * a standalone selector, symmetric with
-    * `MinHashLsh.calibrateBands` / `SimHash.calibrateWidth`): fewest
-    * planes — the highest-recall config — whose exact banded
-    * candidate load fits `pairsPerVecBudget` per vector; most planes
-    * as the lowest-load fallback when none fits. One projection pass
-    * prices the whole grid (plane signs are shared across configs —
-    * see `VecFns.planeSign`).
-    */
-  def calibratePlanes(vecs: DataFrame, bands: Int, planeGrid: Seq[Int],
-      dim: Int, pairsPerVecBudget: Long = 20L): Int = {
-    val statsDf = sweepStats(gridOccupancy(vecs, bands, planeGrid, dim), bands)
-    graft.PlanProbe.record("embed.calibratePlanes.sweepStats", statsDf)
-    selectPlanes(statsDf.collect(), planeGrid, pairsPerVecBudget)
-  }
-
-  /** Per-cell occupancy of the WHOLE planes grid in one aggregation:
-    * (p, band, key, m) — the single sweep definition both
-    * [[calibratePlanes]] and [[calibratePlanesFused]] consume, so the
-    * probe and fused selections can never desync. Plane signs
-    * materialize once per vector (shared across configs — see
-    * `VecFns.planeSign`); keys are then pure bit assembly.
-    */
-  private def gridOccupancy(vecs: DataFrame, bands: Int,
-      planeGrid: Seq[Int], dim: Int): DataFrame = {
-    require(planeGrid.nonEmpty, "planeGrid must be non-empty")
-    graft.functions.expressions.GraftFunctions.register(vecs.sparkSession)
-    val maxPlanes = bands * planeGrid.max
-    // one sign-mask kernel per vector (shared across every config —
-    // config p's band b reads bits b·p .. b·p+p−1), then pure bit
-    // extraction per (config, band). The former per-plane sign
-    // COLUMNS hit the JIT method-size cliff past ~32 planes (the
-    // scaled grid sweeps 64+) — measured 60 s vs 4.5 s at 200 k
-    // vectors before this kernel.
-    val signed = vecs.select(
-      VecFns.planeSignMask(col("vq"), maxPlanes, dim).as("__mask"))
-    signed.select(explode(array(
-        (for { p <- planeGrid; b <- 0 until bands } yield
-          struct(lit(p).as("p"), lit(b).as("band"),
-            VecFns.bandKeyFromMask(col("__mask"), b, p)
-              .as("key"))): _*))
-        .as("bk"))
-      .select(col("bk.p"), col("bk.band"), col("bk.key"))
-      .groupBy("p", "band", "key")
-      .agg(count(lit(1)).as("m"))
-  }
-
-  /** Per-config load/vector stats over a [[gridOccupancy]] frame
-    * (every vector opens a key in every band, so tot = bands · N);
-    * |planeGrid| rows — constant-size by construction.
-    */
-  private def sweepStats(occ: DataFrame, bands: Int): DataFrame =
-    occ.groupBy("p")
-      .agg(sum(expr("(m * (m - 1)) div 2")).as("cand_pairs"),
-        sum(col("m")).as("tot"))
-      .withColumn("n_vec", expr(s"tot div $bands"))
-
-  /** The one selection comparator (ARCHITECTURE calibration table):
-    * fewest planes (highest recall) whose load fits the per-vector
-    * budget; most planes as fallback.
-    */
-  private def selectPlanes(stats: Array[org.apache.spark.sql.Row],
-      planeGrid: Seq[Int], pairsPerVecBudget: Long): Int = {
-    val fitting = stats.filter(r => r.getAs[Long]("cand_pairs") <=
-        r.getAs[Long]("n_vec") * pairsPerVecBudget)
-      .map(_.getAs[Int]("p"))
-    if (fitting.nonEmpty) fitting.min
-    else planeGrid.max
-  }
-
-  /** [[calibratePlanes]] fused with the hot-cell discovery the
-    * executing join would otherwise probe for (the
-    * `MinHashLsh.calibrateBandsFused` shape): the sweep's per-cell
-    * occupancy intermediate persists for the duration of the call, so
-    * the selected config's over-cap cells come from a cached-scan
-    * filter instead of a second corpus-wide aggregation. The swept
-    * keys are built from the shared plane signs
-    * (`VecFns.lshBandKeyFromSigns`) and the executed join's from the
-    * vectors directly (`VecFns.lshBandKey`) — the same packed-sign
-    * values by construction, pinned by the fused-parity spec.
+  /** [[BandedLsh.calibrate]] with extend-on-overshoot for a hyperplane
+    * [[family]] (VERDICT r16 #2): `planeGridFor`'s ceiling is exact
+    * on isotropic vectors, but clustered corpora densify cells and can
+    * price out the whole derived grid (sf100: the p=18 fallback
+    * executed 1.9× its budget while the cap had rungs to spare). The
+    * sweep knows the fallback's load BEFORE executing, so when nothing
+    * fits and headroom remains two more rungs are swept (+2, +4 —
+    * `need` doubles per plane, so two rungs cover a 16× densification)
+    * instead of executing a known overshoot. Each extension round
+    * re-sweeps ONLY the new rungs; priced-out rungs stay priced out.
+    * At the cap the guarded fallback executes. Isotropic corpora fit
+    * inside the derived grid and never extend, and at harness scales
+    * (≤2k vectors) the grid is the static 2/4/6/8 the oracles replay.
     *
-    * @return (selected planes, Some((hotRows, schema)) for
-    *         [[bandedPairsKnown]], or None past
-    *         [[LshGuard.HotKeyCollectCap]] — fall back to the probing
-    *         [[bandedPairs]])
+    * @return (selected planes, the selected config's hot cells for
+    *         [[BandedLsh.execute]])
     */
-  def calibratePlanesFused(vecs: DataFrame, bands: Int, planeGrid: Seq[Int],
-      dim: Int, pairsPerVecBudget: Long = 20L,
-      maxBucket: Int = LshGuard.DefaultMaxBucket)
-      : (Int, Option[(Seq[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]) = {
-    // Extend-on-overshoot (VERDICT r16 #2): `planeGridFor`'s ceiling
-    // is exact on isotropic vectors, but clustered corpora densify
-    // cells and can price out the whole derived grid (sf100: the p=18
-    // fallback executed 1.9× its budget while the cap had rungs to
-    // spare). The sweep knows the fallback's load BEFORE executing, so
-    // when nothing fits and headroom remains we sweep two more rungs
-    // (+2, +4 — `need` doubles per plane, so two rungs cover a 16×
-    // densification) instead of executing a known overshoot. Each
-    // extension round re-sweeps ONLY the new rungs; priced-out rungs
-    // stay priced out. At the cap the guarded fallback executes as
-    // before — now with a committed proof the cap itself is over
-    // budget. Isotropic corpora fit inside the derived grid and never
-    // reach this loop, and at harness scales (≤2k vectors) the grid
-    // is the static 2/4/6/8 the oracles replay — behavior unchanged.
+  def calibratePlanesFused(fam: BandedLsh.Family, planeGrid: Seq[Int],
+      pairsPerVecBudget: Long, maxBucket: Int): (Int, BandedLsh.Hot) = {
     var grid = planeGrid
-    var overallMax = planeGrid.max
     while (true) {
-      val occ = gridOccupancy(vecs, bands, grid, dim).persist()
-      val statsDf = sweepStats(occ, bands)
-      graft.PlanProbe.record("embed.calibratePlanesFused.sweepStats", statsDf)
-      val stats = statsDf.collect()
-      val fitting = stats.filter(r => r.getAs[Long]("cand_pairs") <=
-        r.getAs[Long]("n_vec") * pairsPerVecBudget).map(_.getAs[Int]("p"))
-      if (fitting.nonEmpty || overallMax + 2 > PlaneCap) {
-        try {
-          val selected = if (fitting.nonEmpty) fitting.min else overallMax
-          return (selected, LshGuard.collectHotKnown(
-            occ.filter(col("p") === selected), maxBucket))
-        } finally { occ.unpersist(blocking = false); () }
-      }
-      occ.unpersist(blocking = false)
-      grid = Seq(overallMax + 2, math.min(overallMax + 4, PlaneCap))
-        .distinct.filter(_ <= PlaneCap)
-      overallMax = grid.max
+      val occ = BandedLsh.occupancy(fam, grid).persist()
+      try {
+        val (selected, fits) = BandedLsh.select(occ, fam, grid, pairsPerVecBudget)
+        if (fits || selected + 2 > PlaneCap)
+          return (selected, BandedLsh.collectHot(occ, selected, maxBucket))
+      } finally { occ.unpersist(blocking = false); () }
+      grid = Seq(grid.max + 2, math.min(grid.max + 4, PlaneCap)).distinct
     }
     sys.error("unreachable: extension loop always returns at the cap")
   }
@@ -419,7 +242,10 @@ object EmbedNearDup {
     verify(a.join(b, col("a") < col("b")), minCos)
   }
 
-  private def verify(cand: DataFrame, minCos: Double): DataFrame =
+  /** Exact quantized-cosine scoring of candidate pairs (a, b, a_vq,
+    * a_nsq, b_vq, b_nsq): (a, b, cos_r) with round(cos, 6) >= minCos.
+    */
+  private[graft] def verify(cand: DataFrame, minCos: Double): DataFrame =
     cand
       .withColumn("cos", VecFns.cosineFromQ(
         VecFns.dotQFast(col("a_vq"), col("b_vq")),

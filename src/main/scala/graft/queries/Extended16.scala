@@ -25,8 +25,8 @@ object Extended16 {
     *
     * GUARDED/UNGUARDED ASYMMETRY: the `found` CTE below is the plain
     * (unguarded) all-pairs band join, while the implementation routes
-    * through `MinHashLsh.candidatePairs`, whose LshGuard chain-links
-    * any (band, key) bucket holding more than
+    * through `MinHashLsh.candidatePairs`, whose hot-bucket guard
+    * (`BandedLsh`) chain-links any (band, key) bucket holding more than
     * `LshGuard.DefaultMaxBucket` (1000) rows. Parity therefore rests
     * on the precondition that no bucket in the test corpus exceeds
     * that cap — LshGuardSpec's "no-op on a realistic corpus" test
@@ -384,7 +384,7 @@ object Extended16 {
         // buckets over the threshold keep maxBucket representatives
         // (plenty for the collides-with-corpus decision; a no-op on
         // non-degenerate data — see functions/LshGuard.scala). The
-        // banded frame is persisted BEFORE capBuckets per splitHot's
+        // banded frame is persisted BEFORE capBuckets per BandedLsh.splitHot's
         // contract: the eager occupancy probe materializes the cache,
         // so the probe and the probe-join read the same cached blocks
         // instead of re-deriving band keys from the sigs cache twice.

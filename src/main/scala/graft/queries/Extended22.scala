@@ -180,13 +180,15 @@ object Extended22 {
         // re-reads the cached per-doc frame, never the corpus
         val sigs = MinHashLsh.signaturesFromTokens(
           toks, "doc_id", "t", 3, MinhashK).persist()
-        // r22: the whole grid's (bands, band, key) rows come from ONE
-        // explode pass over the signatures (MinHashLsh.gridOccupancy —
-        // the same operator calibrateBands runs for q186/q190) instead
-        // of a per-config bandKeys + unionByName that scanned the
-        // persisted signature frame |BandGrid| times. Identical rows,
-        // identical md5 count (Σ_b b keys per signature row).
-        val occ = MinHashLsh.gridOccupancy(sigs, "doc_id", MinhashK, BandGrid)
+        // the whole grid's (bands, band, key) rows come from ONE
+        // explode pass over the signatures (BandedLsh.occupancy — the
+        // same operator the q186/q190 calibration runs) instead of a
+        // per-config bandKeys + unionByName that scanned the persisted
+        // signature frame |BandGrid| times. Identical rows, identical
+        // md5 count (Σ_b b keys per signature row).
+        val occ = graft.functions.BandedLsh.occupancy(
+            MinHashLsh.family(sigs, "doc_id", MinhashK), BandGrid)
+          .withColumnRenamed("cfg", "bands")
         val stats = occ.groupBy("bands").agg(
             count(lit(1)).as("n_buckets"),
             max(col("m")).as("max_occ"),

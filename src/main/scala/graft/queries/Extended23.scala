@@ -53,7 +53,7 @@ object Extended23 {
 
   /** q189 (SimHash family): candidate bits-per-band grid — the shared
     * operator's default, so the oracle replays exactly the grid
-    * `SimHash.calibrateWidth` sweeps.
+    * `SimHash.calibratedPairs` sweeps.
     */
   private val WidthGrid = SimHash.DefaultWidthGrid
 
@@ -161,10 +161,10 @@ object Extended23 {
         val (p, pairs) = graft.operators.EmbedNearDup.calibratedPairs(
           all, "vec_id", EmbBands, grid, EmbDim, MinCos,
           PairsPerVecBudget)
-        // the fused calibration has materialized the banded cache by
-        // the time it returns (eager sweep + count), so the quantized
-        // input's own cache is no longer load-bearing — release it
-        // here instead of leaking it until the harness cache-clear
+        // released before the pairs run: with no hot cell the band
+        // join reads the quantized vectors again and, uncached,
+        // recomputes them from the embeddings (BandedLsh.execute's
+        // caller-persisted-input precondition is not met here)
         all.unpersist(blocking = false)
         pairs
           .withColumn("planes", lit(p.toLong))
@@ -326,8 +326,8 @@ object Extended23 {
     // the narrowest width whose candidate load fits the per-doc
     // budget (the highest-recall fitting config; widest as fallback),
     // then the hamming-verified band join (q160's semantics) runs at
-    // the selected width only — through the LshGuard-capped
-    // `SimHash.candidatePairs`, the same execution bound the MinHash
+    // the selected width only — through the hot-bucket-capped
+    // `BandedLsh` band join, the same execution bound the MinHash
     // and hyperplane families carry. The guard is what makes the
     // fallback safe to EXECUTE on a fingerprint-concentrated corpus:
     // the sweep prices a quadratic config out of selection, and the
@@ -349,14 +349,15 @@ object Extended23 {
             .withColumn("t", TextFns.tokens(col("text"))),
           "doc_id", "t", 1)
           .persist() // sweep + selected-config join read it
-        // fused calibrate-then-execute: the 16-bit keyspace bounds the
-        // grid occupancy at 608 rows at any corpus size, so ONE
-        // collected aggregation drives the selection AND the hot-bucket
-        // split — no separate LshGuard probe job over the banded frame
+        // fused calibrate-then-execute: the sweep's persisted grid
+        // occupancy drives the selection AND the hot-bucket split — no
+        // separate occupancy probe job over the banded frame
         val (selected, pairs) = SimHash.calibratedPairs(sigs, "doc_id",
           "sh", WidthGrid, PairsPerDocBudget)
-        // occupancy collect + banded count have both run inside the
-        // fused call — the signature cache is done serving; release
+        // released before the pairs run: with no hot bucket the band
+        // join reads the fingerprints again and, uncached, recomputes
+        // them from the documents (BandedLsh.execute's
+        // caller-persisted-input precondition is not met here)
         sigs.unpersist(blocking = false)
         pairs
           .withColumn("hamming", SimHash.hamming(col("sa"), col("sb")))

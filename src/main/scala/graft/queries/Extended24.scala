@@ -31,7 +31,7 @@ import graft.functions.{SimHash64, TextFns}
   * share it. One fingerprint pass, the width sweep as pure bit
   * arithmetic over it, narrowest fitting width selected (widest as
   * fallback), then the hamming-verified band join at the selected
-  * width through the LshGuard-capped `candidatePairs` body. The
+  * width through the hot-bucket-capped `BandedLsh` band join. The
   * hamming threshold is 3 — and the banded index is structurally
   * COMPLETE for it at widths up to 16: 64/w ≥ 4 bands means a pair
   * within hamming 3 cannot spread its differing bits across all
@@ -102,8 +102,10 @@ object Extended24 {
           .persist() // sweep + selected-config join read it
         val (selected, pairs) = SimHash64.calibratedPairs(sigs, "doc_id",
           "sh", WidthGrid, PairsPerDocBudget)
-        // occupancy collect + banded count have both run inside the
-        // fused call — the signature cache is done serving; release
+        // released before the pairs run: with no hot bucket the band
+        // join reads the fingerprints again and, uncached, recomputes
+        // them from the documents (BandedLsh.execute's
+        // caller-persisted-input precondition is not met here)
         sigs.unpersist(blocking = false)
         pairs
           .withColumn("hamming", SimHash64.hamming(col("sa"), col("sb")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A/B perf referee for the fused calibrate-then-execute path (round
-  * 15): `calibrateBandsFused` + `candidatePairsKnown` must be at
+  * 15): `BandedLsh.calibratedPairs` over the MinHash family must be at
   * least at parity with the probing `calibrateBands` +
   * `candidatePairs` composition — the fusion replaces the guard's
   * corpus-wide occupancy aggregation (a full groupBy + shuffle over
@@ -54,13 +54,8 @@ class CalibrationFusedPerfSpec extends AnyFunSuite {
     }
     def fused(): Long = {
       val sigs = spark.read.parquet(sigsPath)
-      val (sel, hotOpt) = MinHashLsh.calibrateBandsFused(
-        sigs, "doc_id", K, Grid, Budget)
-      (hotOpt match {
-        case Some((rows, schema)) =>
-          MinHashLsh.candidatePairsKnown(sigs, "doc_id", K, sel, rows, schema)
-        case None => MinHashLsh.candidatePairs(sigs, "doc_id", K, sel)
-      }).count()
+      BandedLsh.calibratedPairs(MinHashLsh.family(sigs, "doc_id", K), Grid,
+        Budget, LshGuard.DefaultMaxBucket)._2.count()
     }
     // result identity before any perf claim (count-level here; the
     // pair-level identity is pinned corpus-exactly by Extended23Spec)

@@ -72,7 +72,7 @@ class LshGuardSpec extends AnyFunSuite {
     // metric, read after exactly ONE action on the guarded plan: one
     // hot bucket per band; suppressed = 4950 − 99 per band (Spark
     // accumulators re-count if the plan is executed again)
-    val m = LshGuard.lastMetrics.get
+    val m = graft.functions.BandedLsh.lastMetrics.get
     assert(m.hotBuckets.value === Bands.toLong)
     assert(m.suppressedPairs.value === Bands.toLong * (4950L - 99L))
 

@@ -2,8 +2,11 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.{Tables, TestSpark}
 import graft.corpus.Curation
+import graft.functions.{BandedLsh, LshGuard, MinHashLsh, SimHash, TextFns, VecFns}
+import graft.operators.EmbedNearDup
 
 /** Pins the calibration→execution loop: the config q186 executes is
   * the one the q185 calibration selects, and the executed dedup is
@@ -13,6 +16,16 @@ class Extended23Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val dir = "/root/testdata/sf0.001"
+
+  /** The sweep-only selection over an adapter's family (no fusion). */
+  private def sweepSelect(fam: BandedLsh.Family, grid: Seq[Int],
+      budget: Long): Int =
+    BandedLsh.select(BandedLsh.occupancy(fam, grid), fam, grid, budget)._1
+
+  private def simhashSigs(df: DataFrame) = df
+    .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
+    .distinct()
+    .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
 
   test("q186 executes exactly the band config q185 selects") {
     val sel185 = Registry.all("q185_minhash_calibration").impl(spark, dir)
@@ -61,18 +74,16 @@ class Extended23Spec extends AnyFunSuite {
     // degenerate buckets (m−1 pairs per band, deduped across bands)
     // instead of building m(m−1)/2 — the unguarded q189 join filled
     // 80 GB of shuffle scratch on a fingerprint-concentrated 500 k-doc
-    // corpus before SimHash.candidatePairs carried the LshGuard cap
-    import graft.functions.{SimHash, TextFns}
-    val sigs = spark.range(3000)
+    // corpus before the SimHash band join carried the hot-bucket cap
+    val sigs = simhashSigs(spark.range(3000)
       .selectExpr("id AS doc_id",
-        "'alpha beta gamma delta epsilon zeta' AS text")
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
-      .distinct()
-      .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-    val w = SimHash.calibrateWidth(sigs, "sh", pairsPerDocBudget = 5L)
+        "'alpha beta gamma delta epsilon zeta' AS text"))
+    val fam = SimHash.family(sigs, "doc_id", "sh")
+    val w = sweepSelect(fam, SimHash.DefaultWidthGrid, 5L)
     assert(w === SimHash.DefaultWidthGrid.max,
       "no config fits — expected the widest fallback")
-    val pairs = SimHash.candidatePairs(sigs, "doc_id", "sh", w).collect()
+    val pairs = BandedLsh.execute(fam, w, None, LshGuard.DefaultMaxBucket)
+      ._1.collect()
     // chain pairs: every band links (i, i+1) in id order, so the
     // distinct union across bands is exactly the 2999 adjacent pairs
     assert(pairs.length === 2999)
@@ -82,15 +93,11 @@ class Extended23Spec extends AnyFunSuite {
   }
 
   test("SimHash candidatePairs below the cap == the raw band join") {
-    import graft.functions.{SimHash, TextFns}
-    val sigs = Tables.docsParallel(spark, dir)
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
-      .distinct()
-      .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-      .persist()
-    val w = SimHash.calibrateWidth(sigs, "sh")
-    val guarded = SimHash.candidatePairs(sigs, "doc_id", "sh", w)
-      .select("a", "b").as[(Long, Long)].collect().toSet
+    val sigs = simhashSigs(Tables.docsParallel(spark, dir)).persist()
+    val fam = SimHash.family(sigs, "doc_id", "sh")
+    val w = sweepSelect(fam, SimHash.DefaultWidthGrid, 20L)
+    val guarded = BandedLsh.execute(fam, w, None, LshGuard.DefaultMaxBucket)
+      ._1.select("a", "b").as[(Long, Long)].collect().toSet
     val banded = SimHash.bandKeys(sigs, "sh", w)
       .select(col("doc_id"), col("sh"), col("band"), col("key"))
     val raw = banded.toDF("a", "sa", "band", "key")
@@ -102,133 +109,102 @@ class Extended23Spec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("SimHash calibratedPairs == calibrateWidth + candidatePairs, both regimes") {
-    import graft.functions.{SimHash, TextFns}
-    def sigsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
-      .distinct()
-      .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-      .persist()
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("a", "b").as[(Long, Long)].collect().toSet
-    // sub-cap regime (the oracle-equality regime the gate runs in)
-    val real = sigsOf(Tables.docsParallel(spark, dir))
-    val wProbe = SimHash.calibrateWidth(real, "sh")
-    val (wFused, fused) = SimHash.calibratedPairs(real, "doc_id", "sh")
-    assert(wFused === wProbe, "fused selection must equal calibrateWidth")
-    assert(pairSet(fused) ===
-      pairSet(SimHash.candidatePairs(real, "doc_id", "sh", wProbe)))
-    // hot regime: identical fingerprints, every bucket over the cap —
-    // the known-occupancy split must chain-link exactly like the probe
-    val degen = sigsOf(spark.range(3000).selectExpr("id AS doc_id",
-      "'alpha beta gamma delta epsilon zeta' AS text"))
-    val (wd, fusedHot) = SimHash.calibratedPairs(degen, "doc_id", "sh",
-      pairsPerDocBudget = 5L)
-    assert(wd === SimHash.DefaultWidthGrid.max)
-    val hotPairs = pairSet(fusedHot)
-    assert(hotPairs === pairSet(
-      SimHash.candidatePairs(degen, "doc_id", "sh", wd)))
-    assert(hotPairs.size === 2999)
-    spark.catalog.clearCache()
-  }
+  /** One family adapter under the fused-vs-probe parity check: its
+    * family over an input, a gate-scale input and a 3000-copy
+    * degenerate one (both persisted), its grid, its fused calibration
+    * and degenerate fallback, the step from candidate pairs to its
+    * output, and the mark of a content-identical chain link there.
+    */
+  private case class Parity(family: DataFrame => BandedLsh.Family,
+      real: () => DataFrame, degen: () => DataFrame, grid: Seq[Int],
+      fused: (BandedLsh.Family, Seq[Int], Long) => (Int, BandedLsh.Hot),
+      degenFallback: Int, finish: DataFrame => DataFrame,
+      identical: Row => Boolean)
 
-  test("MinHash calibrateBandsFused == calibrateBands + probe, both regimes") {
-    import graft.functions.{MinHashLsh, TextFns}
-    def sigsOf(df: org.apache.spark.sql.DataFrame) = MinHashLsh
-      .signaturesFromTokens(df.withColumn("__t", TextFns.tokens(col("text"))),
-        "doc_id", "__t", 3, 12)
-      .persist()
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("a", "b").as[(Long, Long)].collect().toSet
-    val grid = Seq(2, 3, 4, 6)
-    // sub-cap regime: fused selection == calibrateBands, no hot rows,
-    // and the executed pair set matches the probing path exactly
-    val real = sigsOf(Tables.docsParallel(spark, dir))
-    val sel = MinHashLsh.calibrateBands(real, "doc_id", 12, grid, 20L)
-    val (selF, hotOpt) = MinHashLsh.calibrateBandsFused(
-      real, "doc_id", 12, grid, 20L)
-    assert(selF === sel, "fused selection must equal calibrateBands")
-    val hot = hotOpt.getOrElse(fail("hot set should be exactly known"))
-    assert(hot._1.isEmpty, "gate-scale corpus has no over-cap bucket")
-    assert(pairSet(MinHashLsh.candidatePairsKnown(
-        real, "doc_id", 12, selF, hot._1, hot._2)) ===
-      pairSet(MinHashLsh.candidatePairs(real, "doc_id", 12, sel)))
-    // hot regime: identical docs put the whole corpus behind one key
-    // per band — the known-occupancy split must chain-link exactly
-    // like the probe path (m−1 pairs, deduped across bands)
-    val degen = sigsOf(spark.range(3000).selectExpr("id AS doc_id",
-      "'alpha beta gamma delta epsilon zeta' AS text"))
-    val (selD, hotD) = MinHashLsh.calibrateBandsFused(
-      degen, "doc_id", 12, grid, 5L)
-    val hd = hotD.getOrElse(fail("degenerate hot set is tiny and known"))
-    assert(hd._1.nonEmpty, "every bucket of the fallback config is hot")
-    val fusedPairs = pairSet(MinHashLsh.candidatePairsKnown(
-      degen, "doc_id", 12, selD, hd._1, hd._2))
-    assert(fusedPairs ===
-      pairSet(MinHashLsh.candidatePairs(degen, "doc_id", 12, selD)))
-    assert(fusedPairs.size === 2999)
-    spark.catalog.clearCache()
-  }
+  private def coreFused(fam: BandedLsh.Family, grid: Seq[Int], budget: Long) =
+    BandedLsh.calibrate(fam, grid, budget, LshGuard.DefaultMaxBucket)
 
-  test("hyperplane calibratePlanesFused == calibratePlanes + probe, both regimes") {
-    import graft.functions.VecFns
-    import graft.operators.EmbedNearDup
-    graft.functions.expressions.GraftFunctions.register(spark)
-    def pairMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val grid = Seq(2, 4, 6, 8)
-    // sub-cap regime: real embeddings — fused selection equals the
-    // sweep's, hot set is exactly known and empty, pair sets identical
-    // (this also pins lshBandKeyFromSigns == lshBandKey key values:
-    // a mismatched key construction would desync hot-cell discovery)
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-      .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-      .persist()
-    val sel = EmbedNearDup.calibratePlanes(vecs, 4, grid, 64)
-    val (selF, hotOpt) = EmbedNearDup.calibratePlanesFused(vecs, 4, grid, 64)
-    assert(selF === sel, "fused selection must equal calibratePlanes")
-    val hot = hotOpt.getOrElse(fail("hot set should be exactly known"))
-    assert(hot._1.isEmpty, "gate-scale embeddings have no over-cap cell")
-    val (known, rel1) = EmbedNearDup.bandedPairsKnown(
-      vecs, "vec_id", 4, selF, 64, 0.4, hot._1, hot._2)
-    val probed = EmbedNearDup.bandedPairs(vecs, "vec_id", 4, sel, 64, 0.4)
-    assert(pairMap(known) === pairMap(probed))
-    rel1()
-    // hot regime: 3000 identical vectors collapse every cell of every
-    // config — the known-occupancy split must chain-link like the probe
-    val degen = spark.range(3000).selectExpr("id AS vec_id",
-        s"transform(sequence(1, 64), x -> CAST(0.125 AS DOUBLE)) AS embedding")
-      .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-      .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-      .persist()
-    val (selD, hotD) = EmbedNearDup.calibratePlanesFused(degen, 4, grid, 64,
-      pairsPerVecBudget = 5L)
-    val hd = hotD.getOrElse(fail("degenerate hot set is tiny and known"))
-    assert(hd._1.nonEmpty, "every cell of the fallback config is hot")
-    val (knownD, rel2) = EmbedNearDup.bandedPairsKnown(
-      degen, "vec_id", 4, selD, 64, 0.4, hd._1, hd._2)
-    val kd = pairMap(knownD)
-    assert(kd === pairMap(EmbedNearDup.bandedPairs(
-      degen, "vec_id", 4, selD, 64, 0.4)))
-    assert(kd.size === 2999, "identical-vector chain links, deduped")
-    assert(kd.values.forall(_ == 1.0), "chain links verify at cos = 1")
-    rel2()
-    spark.catalog.clearCache()
-  }
+  private def degenDocs = spark.range(3000).selectExpr("id AS doc_id",
+    "'alpha beta gamma delta epsilon zeta' AS text")
+
+  private def quantized(df: DataFrame) = df
+    .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
+    .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
+    .persist()
+
+  private val parities: Seq[(String, Parity)] = Seq(
+    "MinHash" -> {
+      def sigsOf(df: DataFrame) = MinHashLsh
+        .signaturesFromTokens(df.withColumn("__t", TextFns.tokens(col("text"))),
+          "doc_id", "__t", 3, 12)
+        .persist()
+      val grid = Seq(2, 3, 4, 6)
+      Parity(MinHashLsh.family(_, "doc_id", 12),
+        () => sigsOf(Tables.docsParallel(spark, dir)), () => sigsOf(degenDocs),
+        grid, coreFused, grid.min, identity, _.getAs[Double]("est") == 1.0)
+    },
+    "SimHash" -> {
+      Parity(SimHash.family(_, "doc_id", "sh"),
+        () => simhashSigs(Tables.docsParallel(spark, dir)).persist(),
+        () => simhashSigs(degenDocs).persist(),
+        SimHash.DefaultWidthGrid, coreFused, SimHash.DefaultWidthGrid.max,
+        identity, r => r.getAs[Long]("sa") == r.getAs[Long]("sb"))
+    },
+    "hyperplane" -> {
+      // the gate-scale row also pins the sweep's mask-derived keys ==
+      // the executed join's banded keys: a mismatched key construction
+      // would desync hot-cell discovery
+      Parity(EmbedNearDup.family(_, "vec_id", 4, 64),
+        () => quantized(spark.read.parquet(s"$dir/embeddings.parquet")),
+        () => quantized(spark.range(3000).selectExpr("id AS vec_id",
+          "transform(sequence(1, 64), x -> CAST(0.125 AS DOUBLE)) AS embedding")),
+        Seq(2, 4, 6, 8),
+        EmbedNearDup.calibratePlanesFused(_, _, _, LshGuard.DefaultMaxBucket),
+        EmbedNearDup.PlaneCap, EmbedNearDup.verify(_, 0.4),
+        _.getAs[Double]("cos_r") == 1.0)
+    })
+
+  for ((name, p) <- parities)
+    test(s"fused == sweep-only selection + probe, both regimes: $name") {
+      graft.functions.expressions.GraftFunctions.register(spark)
+      def rows(fam: BandedLsh.Family, cfg: Int, hot: BandedLsh.Hot) = {
+        val (pairs, release) =
+          BandedLsh.execute(fam, cfg, hot, LshGuard.DefaultMaxBucket)
+        try p.finish(pairs).collect().toSet finally release()
+      }
+      // sub-cap regime (the oracle-equality regime the gate runs in):
+      // fused selection == the sweep-only one, hot set exactly known
+      // and empty, and the executed rows match the probing path's
+      val fam = p.family(p.real())
+      val sel = sweepSelect(fam, p.grid, 20L)
+      val (selF, hotOpt) = p.fused(fam, p.grid, 20L)
+      assert(selF === sel, "fused selection must equal the sweep-only one")
+      val hot = hotOpt.getOrElse(fail("hot set should be exactly known"))
+      assert(hot._1.isEmpty, "gate-scale input has no over-cap bucket")
+      assert(rows(fam, selF, hotOpt) === rows(fam, sel, None))
+      // hot regime: identical content puts the whole input behind one
+      // key per band — the known-occupancy split must chain-link
+      // exactly like the probe path (m−1 pairs, deduped across bands)
+      val famD = p.family(p.degen())
+      val (selD, hotD) = p.fused(famD, p.grid, 5L)
+      assert(selD === p.degenFallback, "nothing fits — expected the fallback")
+      val hd = hotD.getOrElse(fail("degenerate hot set is tiny and known"))
+      assert(hd._1.nonEmpty, "every bucket of the fallback config is hot")
+      val known = rows(famD, selD, hotD)
+      assert(known === rows(famD, selD, None))
+      assert(known.size === 2999, "identical-content chain links, deduped")
+      assert(known.forall(p.identical), "chain links must be content-identical")
+      spark.catalog.clearCache()
+    }
 
   test("fused calibration: fewer jobs (SimHash), less shuffle (MinHash, hyperplane)") {
-    // each family's precise fused-path claim, asserted comparatively
-    // (not absolutely, so AQE job-splitting can't flake it):
-    //  - SimHash collects the whole bounded-keyspace occupancy, so
-    //    ONE collect replaces the sweep collect + the probe collect →
-    //    strictly fewer jobs;
-    //  - MinHash/hyperplane keep the occupancy distributed (persisted)
-    //    and trade the probe's corpus-wide groupBy SHUFFLE for a
-    //    cached-scan hot filter + a shuffle-free materializing count →
-    //    job counts tie, shuffle-write volume strictly drops.
-    import graft.functions.{MinHashLsh, SimHash, TextFns, VecFns}
-    import graft.operators.EmbedNearDup
+    // the fused path's claims, asserted comparatively per family (not
+    // absolutely, so AQE job-splitting can't flake them): all three
+    // families persist the sweep's occupancy and trade the probe's
+    // corpus-wide groupBy SHUFFLE for a cached-scan hot filter —
+    //  - SimHash: with no hot bucket the fused join also skips the
+    //    banded persist, so strictly fewer jobs;
+    //  - MinHash/hyperplane: shuffle-write volume must not grow.
     graft.functions.expressions.GraftFunctions.register(spark)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val shuffleRecs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -266,15 +242,13 @@ class Extended23Spec extends AnyFunSuite {
     }
     try {
       // SimHash: fewer jobs
-      val sigs = Tables.docsParallel(spark, dir)
-        .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
-        .distinct()
-        .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-        .persist()
+      val sigs = simhashSigs(Tables.docsParallel(spark, dir)).persist()
       sigs.count() // materialize outside both measured regions
       val (shProbeJobs, _) = measure {
-        val w = SimHash.calibrateWidth(sigs, "sh")
-        SimHash.candidatePairs(sigs, "doc_id", "sh", w).count(): Unit
+        val fam = SimHash.family(sigs, "doc_id", "sh")
+        val w = sweepSelect(fam, SimHash.DefaultWidthGrid, 20L)
+        BandedLsh.execute(fam, w, None, LshGuard.DefaultMaxBucket)
+          ._1.count(): Unit
       }
       val (shFusedJobs, _) = measure {
         SimHash.calibratedPairs(sigs, "doc_id", "sh")._2.count(): Unit
@@ -294,11 +268,8 @@ class Extended23Spec extends AnyFunSuite {
         MinHashLsh.candidatePairs(mh, "doc_id", 12, b).count(): Unit
       }
       val (_, mhFusedShuffle) = measure {
-        val (b, hot) = MinHashLsh.calibrateBandsFused(
-          mh, "doc_id", 12, Seq(2, 3, 4, 6), 20L)
-        val (rows, schema) = hot.get
-        MinHashLsh.candidatePairsKnown(mh, "doc_id", 12, b, rows, schema)
-          .count(): Unit
+        BandedLsh.calibratedPairs(MinHashLsh.family(mh, "doc_id", 12),
+          Seq(2, 3, 4, 6), 20L, LshGuard.DefaultMaxBucket)._2.count(): Unit
       }
       // <= not <: the dropped shuffle is the probe's occupancy groupBy,
       // which could in principle shrink to the fused plan's volume on a
@@ -317,14 +288,12 @@ class Extended23Spec extends AnyFunSuite {
       vecs.count()
       val grid = Seq(2, 4, 6, 8)
       val (_, hpProbeShuffle) = measure {
-        val p = EmbedNearDup.calibratePlanes(vecs, 4, grid, 64)
+        val p = sweepSelect(EmbedNearDup.family(vecs, "vec_id", 4, 64), grid, 20L)
         EmbedNearDup.bandedPairs(vecs, "vec_id", 4, p, 64, 0.4).count(): Unit
       }
       val (_, hpFusedShuffle) = measure {
-        val (p, hot) = EmbedNearDup.calibratePlanesFused(vecs, 4, grid, 64)
-        val (rows, schema) = hot.get
-        EmbedNearDup.bandedPairsKnown(
-          vecs, "vec_id", 4, p, 64, 0.4, rows, schema)._1.count(): Unit
+        EmbedNearDup.calibratedPairs(vecs, "vec_id", 4, grid, 64, 0.4)
+          ._2.count(): Unit
       }
       assert(hpFusedShuffle <= hpProbeShuffle,
         s"hyperplane fused must not shuffle more records" +

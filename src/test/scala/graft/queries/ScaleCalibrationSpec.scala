@@ -106,16 +106,19 @@ class ScaleCalibrationSpec extends AnyFunSuite {
         explode(TextFns.tokens(col("text"))).as("tok"))
       .distinct()
       .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-    val stats = SimHash.widthSweep(sigs, "sh").collect()
+    val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+      SimHash.family(sigs, "doc_id", "sh"), SimHash.DefaultWidthGrid)).collect()
     for (r <- stats)
-      info(s"w=${r.getAs[Int]("w")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
+      info(s"w=${r.getAs[Int]("cfg")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
         s" budget=${Budget * r.getAs[Long]("n_docs")}")
     val fitting = stats.filter(r => r.getAs[Long]("cand_pairs") <=
       r.getAs[Long]("n_docs") * Budget)
     assert(fitting.isEmpty,
       "expected every 16-bit SimHash config to exceed the budget at 50k docs")
-    assert(SimHash.calibrateWidth(sigs, "sh",
-      pairsPerDocBudget = Budget) === SimHash.DefaultWidthGrid.max,
+    val fam = SimHash.family(sigs, "doc_id", "sh")
+    assert(graft.functions.BandedLsh.select(graft.functions.BandedLsh.occupancy(
+        fam, SimHash.DefaultWidthGrid), fam, SimHash.DefaultWidthGrid, Budget)._1
+      === SimHash.DefaultWidthGrid.max,
       "no fitting config must select the widest fallback")
     spark.catalog.clearCache()
   }
@@ -142,15 +145,18 @@ class ScaleCalibrationSpec extends AnyFunSuite {
         explode(TextFns.tokens(col("text"))).as("tok"))
       .distinct()
       .groupBy("doc_id").agg(SimHash.simhashAgg(col("tok")).as("sh"))
-    val stats = SimHash.widthSweep(sigs, "sh").collect()
+    val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+      SimHash.family(sigs, "doc_id", "sh"), SimHash.DefaultWidthGrid)).collect()
     for (r <- stats)
-      info(s"w=${r.getAs[Int]("w")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
+      info(s"w=${r.getAs[Int]("cfg")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
         s" budget=${Budget * r.getAs[Long]("n_docs")}")
     assert(stats.forall(r => r.getAs[Long]("cand_pairs") >
       r.getAs[Long]("n_docs") * Budget),
       "expected every 16-bit config to exceed the budget at 5M docs")
-    assert(SimHash.calibrateWidth(sigs, "sh",
-      pairsPerDocBudget = Budget) === SimHash.DefaultWidthGrid.max)
+    val fam = SimHash.family(sigs, "doc_id", "sh")
+    assert(graft.functions.BandedLsh.select(graft.functions.BandedLsh.occupancy(
+        fam, SimHash.DefaultWidthGrid), fam, SimHash.DefaultWidthGrid, Budget)._1
+      === SimHash.DefaultWidthGrid.max)
     spark.catalog.clearCache()
   }
 
@@ -171,15 +177,16 @@ class ScaleCalibrationSpec extends AnyFunSuite {
     val n = vecs.count()
     val grid = EmbedNearDup.planeGridFor(n, bands, Budget)
     info(s"n_vec=$n planeGridFor -> $grid")
-    val stats = EmbedNearDup.planeSweep(vecs, bands, grid, dim).collect()
-    for (r <- stats.sortBy(_.getAs[Int]("p")))
-      info(s"p=${r.getAs[Int]("p")}: " +
+    val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+        EmbedNearDup.family(vecs, "vec_id", bands, dim), grid)).collect()
+    for (r <- stats.sortBy(_.getAs[Int]("cfg")))
+      info(s"p=${r.getAs[Int]("cfg")}: " +
         s"cand_pairs=${r.getAs[Long]("cand_pairs")} budget=${Budget * n}")
     val fitting = stats.filter(r =>
-      r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_vec") * Budget)
-      .map(_.getAs[Int]("p"))
+      r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_docs") * Budget)
+      .map(_.getAs[Int]("cfg"))
     val selected = if (fitting.nonEmpty) fitting.min else grid.max
-    val predicted = stats.find(_.getAs[Int]("p") == selected).get
+    val predicted = stats.find(_.getAs[Int]("cfg") == selected).get
       .getAs[Long]("cand_pairs")
     info(s"selected=$selected planes " +
       s"(${if (fitting.nonEmpty) "FITTING" else "FALLBACK"}), " +
@@ -244,17 +251,18 @@ class ScaleCalibrationSpec extends AnyFunSuite {
     val grid = (derived ++
       Seq(derived.max + 2, derived.max + 4, EmbedNearDup.PlaneCap))
       .distinct.filter(_ <= EmbedNearDup.PlaneCap).sorted
-    val stats = EmbedNearDup.planeSweep(vecs, bands, grid, dim).collect()
-    for (r <- stats.sortBy(_.getAs[Int]("p")))
-      info(s"p=${r.getAs[Int]("p")}: " +
+    val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+        EmbedNearDup.family(vecs, "vec_id", bands, dim), grid)).collect()
+    for (r <- stats.sortBy(_.getAs[Int]("cfg")))
+      info(s"p=${r.getAs[Int]("cfg")}: " +
         s"cand_pairs=${r.getAs[Long]("cand_pairs")} budget=${Budget * n}")
     val fitting = stats.filter(r =>
-      r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_vec") * Budget)
-      .map(_.getAs[Int]("p"))
+      r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_docs") * Budget)
+      .map(_.getAs[Int]("cfg"))
     if (fitting.nonEmpty)
       info(s"FITTING selection p=${fitting.min} at the fourth decade")
     else {
-      val capLoad = stats.find(_.getAs[Int]("p") == EmbedNearDup.PlaneCap)
+      val capLoad = stats.find(_.getAs[Int]("cfg") == EmbedNearDup.PlaneCap)
         .map(_.getAs[Long]("cand_pairs"))
       info(s"committed proof: cap p=${EmbedNearDup.PlaneCap} predicts " +
         s"$capLoad > ${Budget * n} on this corpus — guarded fallback routes")
@@ -287,15 +295,16 @@ class ScaleCalibrationSpec extends AnyFunSuite {
       .persist()
     val n = vecs.count()
     def audit(label: String, grid: Seq[Int]): (Int, Long, Boolean) = {
-      val stats = EmbedNearDup.planeSweep(vecs, bands, grid, dim).collect()
-      for (r <- stats.sortBy(_.getAs[Int]("p")))
-        info(s"$label p=${r.getAs[Int]("p")}: " +
+      val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+        EmbedNearDup.family(vecs, "vec_id", bands, dim), grid)).collect()
+      for (r <- stats.sortBy(_.getAs[Int]("cfg")))
+        info(s"$label p=${r.getAs[Int]("cfg")}: " +
           s"cand_pairs=${r.getAs[Long]("cand_pairs")} budget=${Budget * n}")
       val fitting = stats.filter(r =>
-        r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_vec") * Budget)
-        .map(_.getAs[Int]("p"))
+        r.getAs[Long]("cand_pairs") <= r.getAs[Long]("n_docs") * Budget)
+        .map(_.getAs[Int]("cfg"))
       val selected = if (fitting.nonEmpty) fitting.min else grid.max
-      val predicted = stats.find(_.getAs[Int]("p") == selected).get
+      val predicted = stats.find(_.getAs[Int]("cfg") == selected).get
         .getAs[Long]("cand_pairs")
       info(s"$label: n_vec=$n selected=$selected planes " +
         s"(${if (fitting.nonEmpty) "FITTING" else "FALLBACK"}), " +
@@ -368,7 +377,8 @@ class ScaleCalibrationSpec extends AnyFunSuite {
       s"generate the decade first: runMain graft.tools.ScaleGen $dir ...")
     import graft.functions.SimHash64
     val sigs = sigs64At(dir).persist()
-    val stats = SimHash64.widthSweep(sigs, "sh").collect()
+    val stats = graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+      SimHash64.family(sigs, "doc_id", "sh"), SimHash64.DefaultWidthGrid)).collect()
     // the stats frame is collected — its sweep shuffle is dead; free
     // it before calibratedPairs runs its own sweep + band join (the
     // two sweeps coexisting was half the round-17 disk post-mortem)
@@ -377,11 +387,11 @@ class ScaleCalibrationSpec extends AnyFunSuite {
     info(s"retained shuffle bytes: $retainedPeak after sweep, " +
       s"${graft.operators.ShuffleHygiene.retainedShuffleBytes(spark)}" +
       " after reclaim")
-    for (r <- stats.sortBy(_.getAs[Int]("w")))
-      info(s"w=${r.getAs[Int]("w")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
+    for (r <- stats.sortBy(_.getAs[Int]("cfg")))
+      info(s"w=${r.getAs[Int]("cfg")}: cand_pairs=${r.getAs[Long]("cand_pairs")}" +
         s" budget=${Budget * r.getAs[Long]("n_docs")}")
     val fitting = stats.filter(r => r.getAs[Long]("cand_pairs") <=
-      r.getAs[Long]("n_docs") * Budget).map(_.getAs[Int]("w"))
+      r.getAs[Long]("n_docs") * Budget).map(_.getAs[Int]("cfg"))
     assert(fitting.nonEmpty,
       s"the 64-bit grid must hold a fitting width at $dir")
     val (selected, pairs, release) = SimHash64.calibratedPairsWithCleanup(

@@ -99,7 +99,8 @@ class Sf10000PricingSpec extends AnyFunSuite {
         (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_docs"))).toMap
   }
 
-  /** SimHash64 width sweep — same values as `SimHash64.widthSweep`,
+  /** SimHash64 width sweep — same values as `BandedLsh.sweep` over
+    * the SimHash64 family,
     * single pass over the fingerprints (same rationale as
     * [[minhashSweep]]; band keys here are pure bit arithmetic).
     */
@@ -267,22 +268,24 @@ class Sf10000PricingSpec extends AnyFunSuite {
     // embeddings parquet (when present) over the same derived grid —
     // row-for-row equality
     val derived4 = EmbedNearDup.planeGridFor(V4, bands, Budget)
-    val sketch4 = EmbedNearDup.planeSweep(
-        SketchGen.quantizedVecs(spark, V4), bands, derived4, dim)
-      .collect().map(r => r.getAs[Int]("p") ->
-        (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_vec"))).toMap
+    def planeSweep(vecs: org.apache.spark.sql.DataFrame, grid: Seq[Int]) =
+      graft.functions.BandedLsh.sweep(graft.functions.BandedLsh.occupancy(
+        EmbedNearDup.family(vecs, "vec_id", bands, dim), grid))
+    val sketch4 = planeSweep(SketchGen.quantizedVecs(spark, V4), derived4)
+      .collect().map(r => r.getAs[Int]("cfg") ->
+        (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_docs"))).toMap
     for ((p, (c, n)) <- sketch4.toSeq.sortBy(_._1))
       info(s"anchor 20M: p=$p cand_pairs=$c budget=${Budget * n}")
     val parquetDir = "bench/sfgen/sf1000/embeddings.parquet"
     if (new java.io.File(parquetDir).exists()) {
       import graft.functions.VecFns
-      val real = EmbedNearDup.planeSweep(
+      val real = planeSweep(
           spark.read.parquet(parquetDir)
             .repartition(spark.sparkContext.defaultParallelism)
             .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq")),
-          bands, derived4, dim)
-        .collect().map(r => r.getAs[Int]("p") ->
-          (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_vec"))).toMap
+          derived4)
+        .collect().map(r => r.getAs[Int]("cfg") ->
+          (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_docs"))).toMap
       assert(real == sketch4,
         "sketch sweep must equal the materialized-corpus sweep at 20M")
       info("anchor verified against the materialized sf1000 embeddings")
@@ -291,10 +294,9 @@ class Sf10000PricingSpec extends AnyFunSuite {
     // FIFTH DECADE: the derived grid at 200M (plus the cap rung)
     val derived5 = (EmbedNearDup.planeGridFor(V5, bands, Budget) ++
       Seq(EmbedNearDup.PlaneCap)).distinct.sorted
-    val fifth = EmbedNearDup.planeSweep(
-        SketchGen.quantizedVecs(spark, V5), bands, derived5, dim)
-      .collect().map(r => r.getAs[Int]("p") ->
-        (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_vec"))).toMap
+    val fifth = planeSweep(SketchGen.quantizedVecs(spark, V5), derived5)
+      .collect().map(r => r.getAs[Int]("cfg") ->
+        (r.getAs[Long]("cand_pairs"), r.getAs[Long]("n_docs"))).toMap
     val fitting = fifth.toSeq.filter { case (_, (c, n)) => c <= Budget * n }
       .map(_._1)
     for ((p, (c, n)) <- fifth.toSeq.sortBy(_._1))

@@ -182,8 +182,9 @@ class Sf1InvariantSpec extends AnyFunSuite {
       .persist()
     val grid = graft.operators.EmbedNearDup.planeGridFor(all.count(), 4, 20L)
     assert(grid.contains(planes))
-    assert(graft.operators.EmbedNearDup.calibratePlanes(
-      all, 4, grid, 64, 20L) === planes)
+    val fam = graft.operators.EmbedNearDup.family(all, "vec_id", 4, 64)
+    assert(graft.functions.BandedLsh.select(
+      graft.functions.BandedLsh.occupancy(fam, grid), fam, grid, 20L)._1 === planes)
     // budget respected by the executed config
     val keyed = (0 until 4).map(b => all.select(lit(b).as("band"),
       graft.functions.VecFns.lshBandKey(col("vq"), b, planes, 64).as("key")))
