@@ -53,7 +53,7 @@ class Extended23Spec extends AnyFunSuite {
     // 3000 identical docs: every (band, key) bucket of every config
     // holds the whole corpus, so no config fits the budget → the
     // calibration falls back to the fewest-bands config, and the
-    // executed join's LshGuard chain-links the degenerate bucket
+    // executed join's BandedLsh guard chain-links the degenerate bucket
     // (est = 1.0 runs) instead of building O(m²) pairs — the dedup
     // must still collapse the corpus to exactly one survivor
     val docs = spark.range(3000)

@@ -230,7 +230,7 @@ class ScaleCalibrationSpec extends AnyFunSuite {
     // adjudication is explicit either way: a fitting selection below
     // the cap, or a committed proof that the cap itself is over
     // budget on this corpus. Execution at this decade goes through
-    // the same LshGuard the sf100 row executes.
+    // the same BandedLsh guard the sf100 row executes.
     import graft.functions.VecFns
     import graft.operators.EmbedNearDup
     graft.functions.expressions.GraftFunctions.register(spark)
