@@ -5,41 +5,16 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark entry point (driver contract): times every registered
   * query on SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
-  * local[32] with shuffle.partitions = cores and AQE on — the local
-  * stand-in for the multi-executor layout the operators are designed
+  * The [[SessionTuning]] shape on local[SPARK_GRAFT_CPUS] (default 32),
+  * shuffle.partitions = cores and AQE on — the local stand-in for the multi-executor layout the operators are designed
   * for (each query's shuffle strategy is chosen for hash-partitioned
   * executors, so the same plans scale out unchanged).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle blocks and temp stream checkpoints are pure scratch —
-    // land them on tmpfs when present so timings measure the engine,
-    // not /tmp's disk fsync latency. (On a real cluster this is the
-    // standard fast-local-disk spark.local.dir provisioning.)
-    // SPARK_GRAFT_SCRATCH overrides the choice: at decade scales
-    // (sf10-docs) spill-heavy queries can write more scratch than the
-    // box has RAM — tmpfs pages count against physical memory, and a
-    // full /dev/shm gets the JVM OOM-killed mid-run (observed: 96 GB
-    // of shuffle spill on a 128 GB box). Point it at a disk path for
-    // those runs; timings there measure spill I/O honestly anyway.
-    val scratch = (sys.env.get("SPARK_GRAFT_SCRATCH").toSeq ++
-        Seq("/dev/shm", sys.props("java.io.tmpdir")))
-      .find(p => { val f = new java.io.File(p); f.mkdirs(); f.canWrite })
-      .map(_ + "/graft-bench-scratch")
-    scratch.foreach { s =>
-      new java.io.File(s).mkdirs()
-      sys.props("java.io.tmpdir") = s
-    }
-    val spark = SessionTuning.scaleAdaptive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratch.getOrElse(sys.props("java.io.tmpdir"))))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SessionTuning.builder(cpus, "bench").getOrCreate()
     // Warm JVM/codegen/shuffle machinery once so per-query timings
     // measure the queries, not session startup.
     spark.read.parquet(s"$sfDir/lineitem.parquet")

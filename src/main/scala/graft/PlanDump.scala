@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Writes the formatted physical plan of each headline query to a
@@ -22,14 +20,7 @@ object PlanDump {
     val only = args.drop(1).headOption
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionTuning.builder(4, "plandump").getOrCreate()
     spark.conf.set("spark.sql.maxMetadataStringLength", "200")
     // streaming impls drive the query to completion and hand back the
     // memory-sink table, whose plan is a trivial scan — exclude them

@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive session knobs shared by the graft entry points
-  * (Bench, Verify, tools). Everything here is sized by DATA VOLUME,
-  * not by the local core count, so the same settings hold from sf0.001
-  * to a 100 TB cluster; each knob is env-overridable for A/B runs.
+/** The one session shape every graft entry point builds (Bench,
+  * Verify, PlanDump, ScaleGen, tools.JobProfile, etl.Main, the test
+  * session and the `GRAFT_PERF` specs): master and
+  * `spark.sql.shuffle.partitions` from one core count, UTC, UI off,
+  * shuffle blocks and spills on one tmpfs-first scratch dir,
+  * [[scaleAdaptive]], log level WARN. Callers differ only in the core
+  * count (or master) and the scratch tag; a caller that needs one more
+  * conf adds it on top of [[builder]].
   */
 object SessionTuning {
 
@@ -30,12 +34,7 @@ object SessionTuning {
     * raises that ceiling, not these knobs.
     */
   def scaleAdaptive(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
+    Adaptive.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** Session-default verdict (round 21): `parallelismFirst=false`
     * globally is a wash-to-regression at the graded scale — an
@@ -46,9 +45,75 @@ object SessionTuning {
     * bytes-based sizing cannot see), and a fresh-JVM interleaved
     * referee rejected even the strongest per-operator candidate (the
     * q182 BPE loop: 1.96 s default vs 2.61 s bytes-sized medians).
-    * The default therefore stays parallelism-first; the env knobs
-    * above remain for cluster deployments, where
-    * `spark.sql.shuffle.partitions` is raised and advisory-byte
-    * coalescing is the documented guide-§2.2 posture.
+    * The default therefore stays parallelism-first; on a cluster
+    * deployment, where `spark.sql.shuffle.partitions` is raised,
+    * advisory-byte coalescing is the documented guide-§2.2 posture.
     */
+  private[graft] val Adaptive: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
+
+  /** The shape's confs for `master`, `cores` shuffle partitions and
+    * the scratch dir `scratch`.
+    */
+  private[graft] def shape(master: String, cores: Int, scratch: String)
+      : Seq[(String, String)] = Seq(
+    "spark.master" -> master,
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.local.dir" -> scratch,
+    "spark.log.level" -> "WARN") ++ Adaptive
+
+  /** The shape on `local[cores]`. */
+  def builder(cores: Int, scratchTag: String): SparkSession.Builder =
+    builder(s"local[$cores]", cores, scratchTag)
+
+  /** The shape on `master`, with `cores` shuffle partitions and its
+    * scratch in `graft-<scratchTag>-scratch` under [[scratchBase]]
+    * (also made the JVM's `java.io.tmpdir`, so temp stream checkpoints
+    * land there too).
+    *
+    * Refuses when this JVM already holds a live session on a different
+    * master: `getOrCreate` would hand that session back, silently
+    * measuring on the wrong core count and overwriting its SQL confs.
+    */
+  def builder(master: String, cores: Int, scratchTag: String): SparkSession.Builder = {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).filterNot(_.isStopped).map(_.master)
+      .filter(_ != master).foreach { held =>
+        throw new IllegalStateException(s"a SparkSession on $held already " +
+          s"exists in this JVM; getOrCreate would return it instead of the " +
+          s"requested $master (stop it first, or run this in its own JVM)")
+      }
+    val scratch = s"$scratchBase/graft-$scratchTag-scratch"
+    new java.io.File(scratch).mkdirs()
+    sys.props("java.io.tmpdir") = scratch
+    shape(master, cores, scratch).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+  }
+
+  /** Where scratch goes. Shuffle blocks, spills and temp checkpoints are
+    * pure scratch, so they land on tmpfs when present and timings
+    * measure the engine, not a disk's fsync latency (on a cluster this
+    * is the usual fast-local-disk `spark.local.dir`). At decade scales
+    * spill-heavy runs can write more scratch than the box has RAM —
+    * tmpfs pages count against physical memory, and a full /dev/shm
+    * gets the JVM OOM-killed mid-run (observed: 96 GB of shuffle spill
+    * on a 128 GB box) — so `SPARK_GRAFT_SCRATCH` points it at a disk
+    * path instead.
+    */
+  def scratchBase: String =
+    resolveScratch(sys.env.get("SPARK_GRAFT_SCRATCH"),
+      sys.props("java.io.tmpdir"), { p =>
+        val f = new java.io.File(p); f.mkdirs(); f.canWrite })
+
+  /** The first `writable` of the override, `/dev/shm` and `tmpdir`;
+    * `tmpdir` when none is.
+    */
+  private[graft] def resolveScratch(overrideDir: Option[String],
+      tmpdir: String, writable: String => Boolean): String =
+    (overrideDir.toSeq ++ Seq("/dev/shm", tmpdir)).find(writable).getOrElse(tmpdir)
 }

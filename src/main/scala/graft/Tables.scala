@@ -53,7 +53,7 @@ object Tables {
     * (table content fingerprint, defaultParallelism): the former
     * per-call `df.rdd.getNumPartitions` ran full physical planning +
     * RDD construction for a throwaway plan — measured 77–105 ms per
-    * call (tools.ProbeCost r21) against 0.15 ms for the fingerprint
+    * call (OPTIMIZATION_r21.md §6b) against 0.15 ms for the fingerprint
     * lookup, and docsParallel alone runs in ~50 query impls × 2 bench
     * executions each. The fingerprint key (per-part-file sizes +
     * mtimes) invalidates on any table rewrite, so generators and

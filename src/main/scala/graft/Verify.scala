@@ -12,24 +12,8 @@ object Verify {
     val only = args.drop(2).headOption
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same scratch policy as Bench: shuffle blocks and temp stream
-    // checkpoints on tmpfs when available, instead of /tmp's disk.
-    val scratch = Seq("/dev/shm", sys.props("java.io.tmpdir"))
-      .find(p => new java.io.File(p).canWrite)
-      .map(_ + "/graft-verify-scratch")
-    scratch.foreach { s =>
-      new java.io.File(s).mkdirs()
-      sys.props("java.io.tmpdir") = s
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratch.getOrElse(sys.props("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SessionTuning.builder(cpus, "verify").getOrCreate()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_SQL_ONLY=1 → emit just oracle_sql.json (the ANN
     // oracles are data-dependent, so tools/ratio.py needs them

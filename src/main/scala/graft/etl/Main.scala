@@ -51,12 +51,9 @@ object Main {
     val outDir = rest(0)
     val inputs = rest.drop(1)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.SessionTuning.builder(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "etl").getOrCreate()
     try run(spark, cmd, create, outDir, inputs)
     finally spark.stop()
   }

@@ -109,20 +109,13 @@ object ShuffleHygiene {
     * `shuffle_*` files.
     */
   def retainedShuffleBytes(spark: SparkSession): Long =
-    shuffleBytesInDirs(
-      sys.env.get("SPARK_LOCAL_DIRS")
-        .orElse(spark.conf.getOption("spark.local.dir"))
-        .map(_.split(",").toSeq)
-        .getOrElse(Seq(System.getProperty("java.io.tmpdir"))))
+    shuffleBytesInDirs(localDirs(spark.conf.getOption("spark.local.dir")))
 
   /** [[retainedShuffleBytes]] aggregated over EVERY executor (VERDICT
     * r19 #5): runs a short oversubscribed job whose tasks each walk
     * the block-manager dirs of the executor they land on, then sums
-    * ONE measurement per distinct HOST (ADVICE r20: each executor's
-    * walk covers every `blockmgr-*` tree under the node's shared local
-    * dirs, so with multiple executors per node — the common YARN/k8s
-    * layout — a per-executor-id sum would over-count by the
-    * executors-per-node factor). On `local[*]` there is a single
+    * ONE measurement per distinct (HOST, local-dir set) — see
+    * [[perHostDirSet]]. On `local[*]` there is a single
     * executor ("driver") on one host, so this equals
     * [[retainedShuffleBytes]] exactly (spec-pinned); on a cluster it
     * is the executor-disk high-water mark the local reading silently
@@ -150,18 +143,35 @@ object ShuffleHygiene {
     // getExecutorMemoryStatus keys = live block managers (driver incl.)
     val executors = math.max(1, sc.getExecutorMemoryStatus.size)
     val tasks = executors * tasksPerExecutor
-    sc.parallelize(1 to tasks, tasks).mapPartitions { _ =>
+    perHostDirSet(sc.parallelize(1 to tasks, tasks).mapPartitions { _ =>
       val env = org.apache.spark.SparkEnv.get
-      val dirs = sys.env.get("SPARK_LOCAL_DIRS")
-        .orElse(env.conf.getOption("spark.local.dir"))
-        .map(_.split(",").toSeq)
-        .getOrElse(Seq(System.getProperty("java.io.tmpdir")))
-      Iterator((env.blockManager.blockManagerId.host, shuffleBytesInDirs(dirs)))
-    }.collect()
-      .groupBy(_._1)            // one reading per HOST — every executor
-      .map(_._2.head._2)        // on a node walks the same node-level
-      .sum                      // blockmgr trees
+      val dirs = localDirs(env.conf.getOption("spark.local.dir"))
+      Iterator((env.blockManager.blockManagerId.host, dirs, shuffleBytesInDirs(dirs)))
+    }.collect().toSeq)
   }
+
+  /** Sums one reading per distinct (host, resolved local-dir set).
+    * Every executor on a node walks every `blockmgr-*` tree under its
+    * local dirs, so executors sharing a node's dirs (the common
+    * YARN/k8s layout) each see the same bytes: a per-executor sum
+    * would over-count by the executors-per-node factor (ADVICE r20).
+    * Executors on one host with DIFFERENT local dirs walk disjoint
+    * trees, and each counts.
+    */
+  private[operators] def perHostDirSet(
+      readings: Seq[(String, Seq[String], Long)]): Long =
+    readings.groupBy { case (host, dirs, _) => (host, dirs.toSet) }
+      .valuesIterator.map(_.head._3).sum
+
+  /** The block-manager roots Spark resolves: `SPARK_LOCAL_DIRS`, else
+    * `spark.local.dir`, else the JVM's tmpdir — canonicalized, so two
+    * spellings of one dir are one dir.
+    */
+  private def localDirs(localDirConf: Option[String]): Seq[String] =
+    sys.env.get("SPARK_LOCAL_DIRS").orElse(localDirConf)
+      .map(_.split(",").toSeq)
+      .getOrElse(Seq(System.getProperty("java.io.tmpdir")))
+      .map(d => new java.io.File(d).getCanonicalPath).distinct
 
   /** Sum of `shuffle_*` file sizes under `blockmgr-*` trees rooted at
     * `dirs` (runs driver- or executor-side; missing dirs contribute 0).

@@ -83,7 +83,7 @@ object Extended11 {
     // i -> struct(t[i-1], t[i]))` computes the same pairs but lambda
     // bodies evaluate INTERPRETED (no codegen inside higher-order
     // functions) — the zip construction refereed 2.3× faster on the
-    // 27 M-bigram sf10 corpus (graft.tools.Profile, bigram kernels).
+    // 27 M-bigram sf10 corpus (bench/STABILITY.md, round 15).
     // arrays_zip pads the shorter side with null, so the final
     // (t[n-1], null) row is filtered — exactly the n−1 bigrams -------
     "q130_pair_counts" -> Q(

@@ -181,7 +181,7 @@ object Extended12 {
       impl = (s, d) => {
         // bigrams via the zipped-slice construction (q130's rationale:
         // higher-order lambda bodies are interpreted; the zip refereed
-        // 2.3× faster on the sf10 corpus — graft.tools.Profile)
+        // 2.3× faster on the sf10 corpus — bench/STABILITY.md, round 15)
         val pairs = Tables.docsParallel(s, d)
           .withColumn("t", TextFns.tokens(col("text")))
           .filter(size(col("t")) >= 2)

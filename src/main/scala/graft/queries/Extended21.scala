@@ -77,7 +77,7 @@ object Extended21 {
     * otherwise (deterministic either way — integer counts, ties
     * broken (a, b) lexicographic, so every caller sees the same 8
     * merges). The single source for q183's replay, its generated
-    * apply-only oracle, and the Bench/TimeQ warm hook.
+    * apply-only oracle, and the Bench/JobProfile warm hook.
     */
   private[graft] def trajectoryFor(s: SparkSession, d: String)
       : Seq[(Long, String, String, Long)] =

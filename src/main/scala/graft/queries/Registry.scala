@@ -62,7 +62,7 @@ object Registry {
   }
 
   /** Untimed per-query preparation the timing harnesses (Bench,
-    * tools.TimeQ) run before a query's timed region. Only for
+    * tools.JobProfile) run before a query's timed region. Only for
     * JVM-local memo state that is part of a query's DECLARED timing
     * contract: q183 is an apply-only benchmark (its generated oracle
     * applies the same precomputed merges), so its trajectory memo is

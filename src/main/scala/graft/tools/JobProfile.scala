@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import graft.queries.Registry
 
@@ -24,30 +23,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(3)
-    // same scratch redirect as graft.Bench: shuffle blocks on tmpfs so
-    // timings measure the engine, not /tmp's disk fsync latency
-    val scratch = (sys.env.get("SPARK_GRAFT_SCRATCH").toSeq ++
-        Seq("/dev/shm", sys.props("java.io.tmpdir")))
-      .find(p => { val f = new java.io.File(p); f.mkdirs(); f.canWrite })
-      .map(_ + "/graft-bench-scratch")
-    scratch.foreach { s =>
-      new java.io.File(s).mkdirs()
-      sys.props("java.io.tmpdir") = s
-    }
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratch.getOrElse(sys.props("java.io.tmpdir")))
-    // A/B knob: GRAFT_COALESCE=1 → coalesce post-shuffle partitions by
-    // data volume (advisory size), not up to core count
-    if (sys.env.get("GRAFT_COALESCE").contains("1")) {
-      builder.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"): Unit
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.SessionTuning.builder(cpus, "bench").getOrCreate()
     spark.read.parquet(s"$dir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
 
@@ -87,50 +64,19 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // GRAFT_AB=coalesce → alternate parallelismFirst true/false per run
-    // GRAFT_AB=explain → alternate spark.sql.ui.explainMode
-    //   formatted/simple per run (AQE posts a plan-description string
-    //   per stage update even with the UI off — this prices it)
-    // (paired in-JVM samples, immune to box-noise drift between arms;
-    // valid for conf that does NOT change the plan shape — plan-variant
-    // alternation in one JVM measured unreliable, see bench/
-    // r21_referee_sf01.txt q182)
-    val abMode = sys.env.get("GRAFT_AB")
-    val ab = abMode.exists(m => m == "coalesce" || m == "explain")
     for (name <- args) {
       Registry.timingPrep.get(name).foreach(_(spark, dir))
-      var lastWall = 0.0
-      val abWalls = mutable.Map("pfTrue" -> mutable.ArrayBuffer.empty[Double],
-        "pfFalse" -> mutable.ArrayBuffer.empty[Double])
       val walls = (1 to runs).map { i =>
-        val arm = if (i % 2 == 1) "pfTrue" else "pfFalse"
-        if (ab && abMode.contains("coalesce")) spark.conf.set(
-          "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          (arm == "pfTrue").toString)
-        if (ab && abMode.contains("explain")) spark.conf.set(
-          "spark.sql.ui.explainMode",
-          if (arm == "pfTrue") "formatted" else "simple")
         jobs.synchronized(jobs.clear())
         val t0 = System.nanoTime()
         val n = Registry.all(name).impl(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         graft.functions.PersistLeases.releaseAll()
         spark.catalog.clearCache()
-        lastWall = dt
-        if (ab) abWalls(arm) += dt
-        println(f"$name run$i${if (ab) s" [$arm]" else ""}: $dt%.3f s rows=$n")
+        println(f"$name run$i: $dt%.3f s rows=$n")
         dt
       }
-      if (ab) {
-        def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-        // drop each arm's first sample (codegen warm-up for that arm's
-        // distinct plan shape)
-        val t = abWalls("pfTrue").drop(1)
-        val f = abWalls("pfFalse").drop(1)
-        if (t.nonEmpty && f.nonEmpty)
-          println(f"  == AB $name: pfTrue med ${med(t.toSeq)}%.3f (n=${t.size}) " +
-            f"pfFalse med ${med(f.toSeq)}%.3f (n=${f.size})")
-      }
+      val lastWall = walls.last
       Thread.sleep(300) // let the listener bus drain the last job-end events
       val snap = jobs.synchronized(jobs.toVector)
       val jobSum = snap.map(j => (j.t1 - j.t0) / 1e3).sum

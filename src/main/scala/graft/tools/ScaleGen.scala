@@ -115,13 +115,7 @@ object ScaleGen extends Serializable {
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nVecs = args.lift(2).map(_.toLong).getOrElse(20000L)
     val srcDir = args.lift(3).getOrElse(DefaultSrcDir)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.builder(32, "scalegen").getOrCreate()
     import spark.implicits._
 
     // Vocabulary = the harness corpus's own token set, so text-quality

@@ -3,28 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object TestSpark {
-  /** Spec scratch dirs go on tmpfs when available: a just-written
-    * parquet re-read from /tmp occasionally threw ChecksumException
-    * under parallel suites (disk-cache flakiness); /dev/shm sidesteps
-    * it and matches graft.Bench's scratch policy.
+  /** Spec scratch dirs go on the session shape's scratch base (tmpfs
+    * when available): a just-written parquet re-read from /tmp
+    * occasionally threw ChecksumException under parallel suites
+    * (disk-cache flakiness); /dev/shm sidesteps it.
     */
-  def scratchPath(prefix: String): java.nio.file.Path = {
-    val base = Seq("/dev/shm", sys.props("java.io.tmpdir"))
-      .find(p => new java.io.File(p).canWrite)
-      .getOrElse(sys.props("java.io.tmpdir"))
+  def scratchPath(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), prefix)
-  }
+      java.nio.file.Paths.get(SessionTuning.scratchBase), prefix)
 
   def scratchDir(prefix: String): String = scratchPath(prefix).toString
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = SessionTuning.builder(4, "test")
       .config("spark.sql.warehouse.dir", scratchDir("graft_wh"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // Kill the CRC-sidecar race: Hadoop caches ONE LocalFileSystem
     // instance per scheme, and Spark's streaming checkpoint managers
@@ -45,4 +37,24 @@ object TestSpark {
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
+}
+
+/** A `GRAFT_PERF` spec's own `local[32]` session in the shared shape,
+  * stopped after the suite so that a later suite in the same JVM can
+  * start the shared `local[4]` one. While another master's session is
+  * live, [[perfSession]] fails instead of measuring on it; run such a
+  * spec on its own (`GRAFT_PERF=1 sbt "testOnly <spec>"`).
+  */
+trait PerfSession extends org.scalatest.BeforeAndAfterAll {
+  this: org.scalatest.Suite =>
+  private var own: Option[SparkSession] = None
+
+  protected def perfSession(): SparkSession = {
+    val s = SessionTuning.builder(32, "perf").getOrCreate()
+    own = Some(s)
+    s
+  }
+
+  override protected def afterAll(): Unit =
+    try own.foreach(_.stop()) finally super.afterAll()
 }

@@ -22,23 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * fused calibrate+pairs 9.6 s vs probing 14.0 s — the probe's
   * md5-string groupBy is the dominant saving.
   */
-class CalibrationFusedPerfSpec extends AnyFunSuite {
+class CalibrationFusedPerfSpec extends AnyFunSuite with graft.PerfSession {
 
   private val K = 12
   private val Grid = Seq(2, 3, 4, 6)
   private val Budget = 20L
-
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** The interleaved A/B over a pre-landed signature table: result
     * identity first, then alternating timed reps so an external load
@@ -89,7 +77,7 @@ class CalibrationFusedPerfSpec extends AnyFunSuite {
 
   test("fused calibration+pairs within 15% of probing path (median of 5, interleaved)") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = session()
+    val spark = perfSession()
     // deterministic 150 k-doc synthetic corpus; signatures land on
     // parquet once so every timed run pays the same scan and none
     // pays the shingle/md5 signature build
@@ -119,7 +107,7 @@ class CalibrationFusedPerfSpec extends AnyFunSuite {
     val dir = "bench/sfgen/sf10"
     assume(new java.io.File(s"$dir/documents.parquet").exists(),
       s"generate the decade first: runMain graft.tools.ScaleGen $dir ...")
-    val spark = session()
+    val spark = perfSession()
     val scratch = graft.TestSpark.scratchDir("calib_ab_sf10")
     val sigsPath = s"$scratch/sigs.parquet"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -143,7 +131,7 @@ class CalibrationFusedPerfSpec extends AnyFunSuite {
     val dir = "bench/sfgen/sf100"
     assume(new java.io.File(s"$dir/documents.parquet").exists(),
       s"generate the decade first: runMain graft.tools.ScaleGen $dir ...")
-    val spark = session()
+    val spark = perfSession()
     val scratch = graft.TestSpark.scratchDir("calib_ab_sf100")
     val sigsPath = s"$scratch/sigs.parquet"
     val docs = spark.read.parquet(s"$dir/documents.parquet")

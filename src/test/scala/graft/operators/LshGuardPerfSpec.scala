@@ -34,7 +34,7 @@ import graft.functions.MinHashLsh
   * guard's median is within 30% of the unguarded floor — the bound the
   * round-12 windowed guard failed.
   */
-class LshGuardPerfSpec extends AnyFunSuite {
+class LshGuardPerfSpec extends AnyFunSuite with graft.PerfSession {
 
   private val K = 12
   private val Bands = 4
@@ -101,14 +101,7 @@ class LshGuardPerfSpec extends AnyFunSuite {
 
   test("guarded candidatePairs vs unguarded floor, 5 timed runs each at sf0.1") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
 
     // materialize the signature input once: every timed run reads the
     // same parquet, so signature cost is identical across variants

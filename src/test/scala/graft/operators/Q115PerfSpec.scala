@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (window) impl is not slower than the alternative beyond noise, and
   * prints the 5-run medians for the bench notes.
   */
-class Q115PerfSpec extends AnyFunSuite {
+class Q115PerfSpec extends AnyFunSuite with graft.PerfSession {
 
   private def shipIntervals(s: SparkSession, d: String) = {
     val st = datediff(to_date(col("l_shipdate")), lit("1970-01-01").cast("date"))
@@ -65,14 +65,7 @@ class Q115PerfSpec extends AnyFunSuite {
 
   test("window impl vs GroupedPrefixSum impl, 5 timed runs each at sf0.1") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     // warm: codegen + file listing
     windowImpl(spark, d).count(); groupedPrefixImpl(spark, d).count()

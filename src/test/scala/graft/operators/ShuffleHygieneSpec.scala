@@ -92,6 +92,19 @@ class ShuffleHygieneSpec extends AnyFunSuite {
         "the first call returned before its fixpoint")
   }
 
+  test("cluster accounting keeps one reading per (host, local-dir set)") {
+    // two executors on one host sharing its local dirs each walk the
+    // same blockmgr trees: one reading counts, whatever the dir order
+    assert(ShuffleHygiene.perHostDirSet(Seq(
+      ("h1", Seq("/a", "/b"), 100L), ("h1", Seq("/b", "/a"), 100L))) === 100L)
+    // different dirs on one host are disjoint trees: both count
+    assert(ShuffleHygiene.perHostDirSet(Seq(
+      ("h1", Seq("/a"), 100L), ("h1", Seq("/b"), 40L))) === 140L)
+    // the same dirs on two hosts are two disks
+    assert(ShuffleHygiene.perHostDirSet(Seq(
+      ("h1", Seq("/a"), 100L), ("h2", Seq("/a"), 40L))) === 140L)
+  }
+
   test("clusterRetainedShuffleBytes equals the local reading on local[*] (VERDICT r19 #5)") {
     // materialize a shuffle so both readings are non-trivially nonzero
     val shuffled = (1L to 20000L).toDF("x")

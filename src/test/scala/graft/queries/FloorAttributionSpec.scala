@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stage-attributed floor measurement for the two batch queries the
@@ -19,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *   GRAFT_PERF=1 sbt "testOnly graft.queries.FloorAttributionSpec"
   */
-class FloorAttributionSpec extends AnyFunSuite {
+class FloorAttributionSpec extends AnyFunSuite with graft.PerfSession {
 
   private class Counter extends SparkListener {
     @volatile var jobs = 0
@@ -35,14 +34,7 @@ class FloorAttributionSpec extends AnyFunSuite {
 
   test("q176/q181 floor: task-time vs wall attribution at sf0.1") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)

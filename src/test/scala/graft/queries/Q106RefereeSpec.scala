@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** 5-run referee for q106_heavy_hitters (round-15 watch item: the
@@ -16,18 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * STABILITY's watch-item paragraph, and anchors correctness (30
   * rows) so a speed number can never come from a broken plan.
   */
-class Q106RefereeSpec extends AnyFunSuite {
+class Q106RefereeSpec extends AnyFunSuite with graft.PerfSession {
 
   test("q106 heavy hitters: 5 timed runs at sf0.1") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val q = graft.SparkEntry.queries("q106_heavy_hitters")
     assert(q(spark, d).count() == 30L) // warm + correctness anchor

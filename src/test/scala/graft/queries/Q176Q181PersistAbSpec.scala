@@ -1,5 +1,5 @@
 package graft.queries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,13 +32,10 @@ import graft.functions.{TextFns, VecFns}
   * GRAFT_PERF-gated; numbers above measured at round 17 on a loaded
   * box — rerun both tests for fresh medians before citing new ones.
   */
-class Q176Q181PersistAbSpec extends AnyFunSuite {
+class Q176Q181PersistAbSpec extends AnyFunSuite with graft.PerfSession {
   test("q176 old-vs-new interleaved A/B") {
     assume(sys.env.contains("GRAFT_PERF"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val ListN = 50; val RrfK = 60; val FuseN = 20
     def q176(persists: Boolean): Long = {
@@ -142,10 +139,7 @@ class Q176Q181PersistAbSpec extends AnyFunSuite {
 
   test("q181 old-vs-new interleaved A/B") {
     assume(sys.env.contains("GRAFT_PERF"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val u = conv(substring(md5(concat(lit("audit:"),
         col("doc_id").cast("string"))), 1, 6), 16, 10)

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +34,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * GRAFT_PERF-gated.
   */
-class Q181RefereeSpec extends AnyFunSuite {
+class Q181RefereeSpec extends AnyFunSuite with graft.PerfSession {
 
   private class Meter extends SparkListener {
     @volatile var jobs = 0
@@ -52,14 +51,7 @@ class Q181RefereeSpec extends AnyFunSuite {
 
   test("q181 phase decomposition + corpus-pass count + sample-persist A/B") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val corpusBytes = dirBytes(new java.io.File(s"$d/documents.parquet"))
     val meter = new Meter

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,21 +17,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *   GRAFT_PERF=1 sbt "testOnly graft.queries.Q187GridPerfSpec"
   */
-class Q187GridPerfSpec extends AnyFunSuite {
+class Q187GridPerfSpec extends AnyFunSuite with graft.PerfSession {
 
   test("derived grid beats fixed-grid fallback at 200k vectors (interleaved)") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
     val dir = "bench/sfgen/sf10"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists(),
       s"generate the decade first: runMain graft.tools.ScaleGen $dir ...")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.VecFns
     import graft.operators.EmbedNearDup

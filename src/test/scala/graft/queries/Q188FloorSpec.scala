@@ -17,17 +17,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Findings land in bench/STABILITY.md (round 19).
   */
-class Q188FloorSpec extends AnyFunSuite {
+class Q188FloorSpec extends AnyFunSuite with graft.PerfSession {
 
   test("q188 trigger decomposition: probe vs ledger vs landing vs index vs machinery") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     val progresses =
       new java.util.concurrent.ConcurrentLinkedQueue[

@@ -50,22 +50,26 @@ class Sf10000PricingSpec extends AnyFunSuite {
         " pricing sweeps (long; tens of GB of transient shuffle)")
   }
 
+  /** The JVM's own tmpdir, read before the session shape moves
+    * `java.io.tmpdir` onto its scratch: the disk fallback for spill and
+    * sweep scratch when /dev/shm lacks headroom.
+    */
+  private val diskTmp = sys.props("java.io.tmpdir")
+
   private def session() = {
-    val b = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // the grid-occupancy aggregations sort-spill tens of GB of
     // ~unique-key rows; tmpfs spill (when present with headroom)
     // keeps the decade sweeps IO-bound on memory bandwidth instead of
     // the disk — a measurement-harness choice, not an engine one
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.getFreeSpace > 80L * (1L << 30))
-      b.config("spark.local.dir", "/dev/shm/graft_pricing_spill")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val spill =
+      if (shm.isDirectory && shm.getFreeSpace > 80L * (1L << 30))
+        "/dev/shm/graft_pricing_spill"
+      else diskTmp
+    graft.SessionTuning.builder(32, "pricing")
+      .config("spark.sql.shuffle.partitions", "256")
+      .config("spark.local.dir", spill)
+      .getOrCreate()
   }
 
   /** The q185 MinHash band sweep over a signature frame — identical
@@ -138,7 +142,7 @@ class Sf10000PricingSpec extends AnyFunSuite {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.getFreeSpace > 80L * (1L << 30))
         "/dev/shm/graft_occsweep"
-      else sys.props("java.io.tmpdir") + "/graft_occsweep"
+      else diskTmp + "/graft_occsweep"
     }
     val cfgOf = MinHashLsh.packedGridKeys(
       SketchGen.minhashSignatures(spark, 1L), 12, grid)._2

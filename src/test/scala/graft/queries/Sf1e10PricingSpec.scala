@@ -66,18 +66,22 @@ class Sf1e10PricingSpec extends AnyFunSuite {
       sys.env.contains("GRAFT_PERF"),
       "set GRAFT_SF1E10=1 AND GRAFT_PERF=1 for the sixth-decade rows")
 
+  /** The JVM's own tmpdir, read before the session shape moves
+    * `java.io.tmpdir` onto its scratch: the disk fallback for spill and
+    * sweep scratch when /dev/shm lacks headroom.
+    */
+  private val diskTmp = sys.props("java.io.tmpdir")
+
   private def session() = {
-    val b = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.getFreeSpace > 60L * (1L << 30))
-      b.config("spark.local.dir", "/dev/shm/graft_pricing_spill")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val spill =
+      if (shm.isDirectory && shm.getFreeSpace > 60L * (1L << 30))
+        "/dev/shm/graft_pricing_spill"
+      else diskTmp
+    graft.SessionTuning.builder(32, "pricing")
+      .config("spark.sql.shuffle.partitions", "256")
+      .config("spark.local.dir", spill)
+      .getOrCreate()
   }
 
   private def scratch(tag: String) = {
@@ -85,7 +89,7 @@ class Sf1e10PricingSpec extends AnyFunSuite {
     val base =
       if (shm.isDirectory && shm.getFreeSpace > 60L * (1L << 30))
         "/dev/shm/graft_occsweep6"
-      else sys.props("java.io.tmpdir") + "/graft_occsweep6"
+      else diskTmp + "/graft_occsweep6"
     s"$base/$tag"
   }
 

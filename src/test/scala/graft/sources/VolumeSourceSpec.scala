@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,20 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * splits, 0.3 GiB OBO → 3 splits; all row/stanza multisets equal the
   * single-split read.
   */
-class VolumeSourceSpec extends AnyFunSuite {
+class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = perfSession()
 
-  private def scratch(name: String): java.nio.file.Path = {
-    val base = Seq("/dev/shm", sys.props("java.io.tmpdir"))
-      .find(p => new java.io.File(p).canWrite).get
-    Files.createTempDirectory(Paths.get(base), "graft_volume").resolve(name)
-  }
+  private def scratch(name: String): java.nio.file.Path =
+    graft.TestSpark.scratchPath("graft_volume").resolve(name)
 
   /** Stream-repeat a fixture body to ~`targetBytes` without holding it
     * in memory; returns (path, repetitions).

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Diagnostic referee for the streaming fixed cost (VERDICT r12 #8:
@@ -17,18 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * bench notes; asserts only that the probe ran (numbers are for the
   * dossier, the bench gate is Bench itself).
   */
-class StreamFixedCostSpec extends AnyFunSuite {
+class StreamFixedCostSpec extends AnyFunSuite with graft.PerfSession {
 
   test("decompose streaming wall time: setup vs micro-batches vs sink") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = perfSession()
     val d = "/root/testdata/sf0.1"
     // warm codegen/session
     spark.read.parquet(s"$d/events.parquet").count()
