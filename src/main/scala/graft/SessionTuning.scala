@@ -31,7 +31,7 @@ object SessionTuning {
     *
     * `spark.sql.shuffle.partitions` stays the entry point's core-count
     * ceiling (AQE only coalesces DOWN from it); a 100 TB deployment
-    * raises that ceiling, not these knobs.
+    * raises that ceiling, not these values.
     */
   def scaleAdaptive(b: SparkSession.Builder): SparkSession.Builder =
     Adaptive.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }

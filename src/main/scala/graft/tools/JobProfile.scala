@@ -11,8 +11,9 @@ import graft.queries.Registry
   * fixed overhead (jobs × stages × scheduling), not dataflow.
   *
   * For each named query: runs it `SPARK_GRAFT_RUNS` times (default 3)
-  * in the Bench session shape, and prints, for the LAST run, every
-  * Spark job with its wall clock, stage count and task count, plus the
+  * in the Bench session shape (local[SPARK_GRAFT_CPUS], default 32),
+  * prints every run's wall, and prints, for the LAST run, every Spark
+  * job with its wall clock, stage count and task count, plus the
   * residual (wall − Σ jobs = driver-side planning/analysis/collect
   * gaps).
   *
