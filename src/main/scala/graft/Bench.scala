@@ -24,7 +24,10 @@ object Bench {
     // amortize away in any real deployment (Janino codegen compile,
     // JIT warm-up of the generated classes) and would otherwise
     // dominate sub-second queries; the warm run measures the actual
-    // dataflow.
+    // dataflow. Codegen is one-off only while a plan's classes stay in
+    // Spark's codegen cache: the session shape sizes it
+    // (SessionTuning.CodegenCacheEntries) so a query's whole working
+    // set survives until its warm run.
     // A query that throws is recorded as "err", never as a timing — a
     // regression must show up as a failure, not as a fast run.
     // Optional substring filter for focused iteration (comma-separated

@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.EtlOptions
@@ -11,9 +13,13 @@ import graft.model.EtlOptions
   * create-then-append per table family becomes a `union` of
   * per-species DataFrames written once; the only hard ordering kept is
   * the one that is semantically observable — GAF file order feeds the
-  * cross-file last-wins upsert of `gene_ontology_map` (§7.6.5).
-  * Families are independent pipelines (the SQLite file serialized them
-  * in the reference; here they can run concurrently).
+  * cross-file last-wins upsert of `gene_ontology_map` (§7.6.5), and
+  * that order lives inside one plan, not in the order plans run.
+  * Families are independent pipelines: the reference serialized its
+  * loaders only because they shared one SQLite file. Here `run` starts
+  * every family load at once, so their eager header, validation and
+  * closure jobs overlap, and `write`/`writeObserved` write the tables
+  * at once; both go through [[concurrently]].
   *
   * Sink (S9): each table lands as Parquet. Positional tables partition
   * by taxon and sort within partitions on (chr, start) — the physical
@@ -34,38 +40,65 @@ object Pipeline {
       gaf: Seq[(String, Int)] = Nil,
       homologs: Seq[String] = Nil)
 
-  /** Run every family; returns the ten tables by name. */
+  /** Run every family; returns the ten tables by name. Each input
+    * file's load is one concurrent task; a table with several input
+    * files is their union in input order.
+    */
   def run(spark: SparkSession, in: Inputs,
       opts: EtlOptions = EtlOptions()): Map[String, DataFrame] = {
-    val geneResults = in.genes.map(f => GenesExonsEtl.load(spark, f.path, f.taxonId))
-    val genes = geneResults.map(_.genes).reduceOption(_ unionByName _)
-    val exons = geneResults.map(_.exons).reduceOption(_ unionByName _)
-    val blocks = in.blocks.map(SyntenyBlocksEtl.load(spark, _, opts))
-      .reduceOption(_ unionByName _)
-    val bands = in.cytobands.map(f => CytoBandEtl.load(spark, f.path, f.taxonId))
-      .reduceOption(_ unionByName _)
-    val features = in.features.map(f => FeaturesEtl.load(spark, f.path, f.taxonId, opts))
-      .reduceOption(_ unionByName _)
-    val variants = in.variants.map(f => VariantsEtl.load(spark, f.path, f.taxonId))
-      .reduceOption(_ unionByName _)
-    val ontology =
-      if (in.obo.nonEmpty) Some(OntologyEtl.load(spark, in.obo, in.gaf)) else None
-    val homologs = in.homologs.map(HomologsEtl.load(spark, _).homologs)
-      .reduceOption(_ unionByName _)
-
-    (genes.map("gene" -> _) ++
-      exons.map("exon" -> _) ++
-      blocks.map("syntenic_block" -> _) ++
-      bands.map("cytogenetic_band" -> _) ++
-      features.map("feature" -> _) ++
-      variants.map("snp_variant" -> _) ++
-      ontology.map("on_terms" -> _.terms) ++
-      ontology.map("on_pairs" -> _.pairs) ++
-      // no GAF inputs → no gene_ontology_map table (a zero-column
-      // frame is unwritable by any sink)
-      ontology.filter(_ => in.gaf.nonEmpty).map("gene_ontology_map" -> _.geneMap) ++
-      homologs.map("homolog" -> _)).toMap
+    val loads: Seq[() => Seq[(String, DataFrame)]] =
+      in.genes.map(f => () => {
+        val r = GenesExonsEtl.load(spark, f.path, f.taxonId)
+        Seq("gene" -> r.genes, "exon" -> r.exons)
+      }) ++
+      in.blocks.map(p => () => Seq("syntenic_block" -> SyntenyBlocksEtl.load(spark, p, opts))) ++
+      in.cytobands.map(f => () =>
+        Seq("cytogenetic_band" -> CytoBandEtl.load(spark, f.path, f.taxonId))) ++
+      in.features.map(f => () =>
+        Seq("feature" -> FeaturesEtl.load(spark, f.path, f.taxonId, opts))) ++
+      in.variants.map(f => () =>
+        Seq("snp_variant" -> VariantsEtl.load(spark, f.path, f.taxonId))) ++
+      Option.when(in.obo.nonEmpty)(() => {
+        val o = OntologyEtl.load(spark, in.obo, in.gaf)
+        // no GAF inputs → no gene_ontology_map table (a zero-column
+        // frame is unwritable by any sink)
+        Seq("on_terms" -> o.terms, "on_pairs" -> o.pairs) ++
+          Option.when(in.gaf.nonEmpty)("gene_ontology_map" -> o.geneMap)
+      }) ++
+      in.homologs.map(p => () => Seq("homolog" -> HomologsEtl.load(spark, p).homologs))
+    concurrently(loads).flatten.groupMap(_._1)(_._2)
+      .map { case (name, parts) => name -> parts.reduce(_ unionByName _) }
   }
+
+  /** The name of [[concurrently]]'s pool threads. */
+  private[etl] val WorkerName = "graft-pipeline"
+
+  /** Runs `tasks` at once on a pool of one thread per task, created for
+    * this call and shut down before it returns; returns their results
+    * in task order. Pool threads start inside the call, so they inherit
+    * the caller's active session and Spark local properties (job group,
+    * scheduler pool, job description).
+    *
+    * When tasks fail, every task still runs to its end, and then the
+    * first failure in task order is rethrown as it was thrown — the
+    * exception a one-at-a-time loop would have stopped on.
+    */
+  private def concurrently[A](tasks: Seq[() => A]): Seq[A] =
+    if (tasks.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(tasks.size,
+        (r: Runnable) => new Thread(r, WorkerName))
+      try {
+        val futures = tasks.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
+        val outcomes = futures.map { f =>
+          try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        outcomes.map(_.fold(e => throw e, identity))
+      } finally {
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 
   /** Scale-oriented physical layout per table: (partition column,
     * in-partition sort). Mirrors the reference's index set (§1.4).
@@ -94,9 +127,9 @@ object Pipeline {
     */
   def write(tables: Map[String, DataFrame], outDir: String,
       dynamicPartitionOverwrite: Boolean = false): Unit =
-    tables.foreach { case (name, df) =>
-      writeOne(name, df, outDir, dynamicPartitionOverwrite)
-    }
+    concurrently(tables.toSeq.map { case (name, df) =>
+      () => writeOne(name, df, outDir, dynamicPartitionOverwrite)
+    }): Unit
 
   private def writeOne(name: String, df: DataFrame, outDir: String,
       dynamicPartitionOverwrite: Boolean): Unit = {
@@ -123,12 +156,12 @@ object Pipeline {
     */
   def writeObserved(tables: Map[String, DataFrame], outDir: String,
       dynamicPartitionOverwrite: Boolean = false): Map[String, Long] =
-    tables.map { case (name, df) =>
+    concurrently(tables.toSeq.map { case (name, df) => () =>
       val obs = org.apache.spark.sql.Observation(s"graft_write_$name")
       writeOne(name, df.observe(obs, count(lit(1)).as("rows")),
         outDir, dynamicPartitionOverwrite)
       name -> obs.get("rows").asInstanceOf[Long]
-    }
+    }).toMap
 
   /** S9 parity sink: every table through Spark's JDBC writer — the
     * drop-in replacement for the reference's single SQLite `.db`
@@ -136,8 +169,9 @@ object Pipeline {
     * on the classpath (SQLite via sqlite-jdbc when present; Derby
     * embedded ships with Spark and is what CliSpec round-trips).
     *
-    * Embedded single-file engines are single-writer, so each table is
-    * coalesced to one partition by default — this sink is a
+    * Embedded single-file engines are single-writer, so the tables are
+    * written one after another (unlike `write`'s concurrent tables) and
+    * each is coalesced to one partition by default — this sink is a
     * small-deliverable parity convenience; the scale path is the
     * partitioned/sorted parquet layout in `write`. Pass
     * `singleWriter = false` for a server-grade target (Postgres etc.)

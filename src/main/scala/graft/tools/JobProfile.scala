@@ -2,7 +2,9 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.queries.Registry
 
@@ -12,15 +14,20 @@ import graft.queries.Registry
   *
   * For each named query: runs it `SPARK_GRAFT_RUNS` times (default 3)
   * in the Bench session shape (local[SPARK_GRAFT_CPUS], default 32),
-  * prints every run's wall, and prints, for the LAST run, every Spark
-  * job with its wall clock, stage count and task count, plus the
-  * residual (wall − Σ jobs = driver-side planning/analysis/collect
-  * gaps).
+  * prints every run's wall and its Janino compiles (count and summed
+  * compile ms; a warm run that still compiles has outgrown the codegen
+  * cache), and prints, for the LAST run, every Spark job with its wall
+  * clock, stage count and task count, plus the residual (wall − Σ jobs
+  * = driver-side planning/analysis/collect gaps, compiles included).
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.tools.JobProfile q186_calibrated_neardup"
   */
 object JobProfile {
+  /** Janino compiles so far in this JVM: (count, summed compile ns). */
+  private def compiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(3)
@@ -69,23 +76,26 @@ object JobProfile {
       Registry.timingPrep.get(name).foreach(_(spark, dir))
       val walls = (1 to runs).map { i =>
         jobs.synchronized(jobs.clear())
+        val (c0, ns0) = compiles()
         val t0 = System.nanoTime()
         val n = Registry.all(name).impl(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
+        val (c1, ns1) = compiles()
         graft.functions.PersistLeases.releaseAll()
         spark.catalog.clearCache()
-        println(f"$name run$i: $dt%.3f s rows=$n")
-        dt
+        println(f"$name run$i: $dt%.3f s rows=$n " +
+          f"compiles=${c1 - c0} (${(ns1 - ns0) / 1e6}%.0f ms)")
+        (dt, c1 - c0)
       }
-      val lastWall = walls.last
+      val (lastWall, lastCompiles) = walls.last
       Thread.sleep(300) // let the listener bus drain the last job-end events
       val snap = jobs.synchronized(jobs.toVector)
       val jobSum = snap.map(j => (j.t1 - j.t0) / 1e3).sum
       println(f"  == last run: ${snap.size} jobs, " +
         f"${snap.map(_.stages).sum} stages, ${snap.map(_.tasks).sum} tasks; " +
         f"jobs sum $jobSum%.3f s, wall $lastWall%.3f s, " +
-        f"driver residual ${lastWall - jobSum}%.3f s " +
-        f"(median wall ${walls.sorted.apply(walls.size / 2)}%.3f)")
+        f"driver residual ${lastWall - jobSum}%.3f s, compiles $lastCompiles " +
+        f"(median wall ${walls.map(_._1).sorted.apply(walls.size / 2)}%.3f)")
       snap.foreach { j =>
         println(f"    job ${j.id}%4d  ${(j.t1 - j.t0) / 1e3}%7.3f s  " +
           f"stages=${j.stages}%2d tasks=${j.tasks}%4d  " +

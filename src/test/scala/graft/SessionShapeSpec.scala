@@ -17,12 +17,15 @@ class SessionShapeSpec extends AnyFunSuite {
     assert(conf("spark.ui.enabled") === "false")
     assert(conf("spark.local.dir") === "/scratch/graft-x-scratch")
     assert(conf("spark.log.level") === "WARN")
-    // scaleAdaptive's three values, which the benchmark harness also
-    // applies to its own session
-    assert(SessionTuning.Adaptive.toMap === Map(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m"))
+    // scaleAdaptive's values, which the benchmark harness also applies
+    // to its own session: three AQE settings and the codegen cache size
+    val adaptive = SessionTuning.Adaptive.toMap
+    assert(adaptive.size === 4)
+    assert(adaptive("spark.sql.adaptive.enabled") === "true")
+    assert(adaptive("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "true")
+    assert(adaptive("spark.sql.adaptive.advisoryPartitionSizeInBytes") === "64m")
+    assert(adaptive("spark.sql.codegen.cache.maxEntries") === "1000")
+    assert(conf("spark.sql.codegen.cache.maxEntries") === "1000")
     assert(SessionTuning.Adaptive.forall { case (k, v) => conf(k) == v })
   }
 
@@ -31,6 +34,7 @@ class SessionShapeSpec extends AnyFunSuite {
     assert(sc.master === "local[4]")
     assert(sc.getConf.get("spark.sql.session.timeZone") === "UTC")
     assert(sc.getConf.get("spark.ui.enabled") === "false")
+    assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries === 1000)
     val localDir = sc.getConf.get("spark.local.dir")
     assert(localDir.endsWith("/graft-test-scratch"))
     assert(sys.props("java.io.tmpdir") === localDir)

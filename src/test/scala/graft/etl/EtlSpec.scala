@@ -1,5 +1,8 @@
 package graft.etl
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -204,17 +207,26 @@ class EtlSpec extends AnyFunSuite {
   }
 
   // ---- pipeline (A9) ----------------------------------------------
+  /** Every family over the fixtures; GAF files in shell order, so
+    * gene_ontology_map exercises the cross-file last-wins upsert.
+    */
+  def pipelineInputs(genes: String = "genes_human.gff3") = Pipeline.Inputs(
+    genes = Seq(Pipeline.SpeciesFile(fx(genes), 9606)),
+    blocks = Seq(fx("blocks_humanrat.txt")),
+    cytobands = Seq(Pipeline.SpeciesFile(fx("cytoband_human.gff3"), 9606)),
+    features = Seq(Pipeline.SpeciesFile(fx("features_mouse.gff3"), 10090),
+      Pipeline.SpeciesFile(fx("features_rat.gff3.gz"), 10116)),
+    variants = Seq(Pipeline.SpeciesFile(fx("variants_human.vcf"), 9606)),
+    obo = Seq(fx("ontology_go.obo"), fx("ontology_mp.obo")),
+    gaf = Seq((fx("annotations_go_human.gaf"), 9606),
+      (fx("annotations_mp_mouse.gaf"), 10090)),
+    homologs = Seq(fx("homologs_mousehuman.tsv"), fx("homologs_rathuman.tsv")))
+
+  def workers(): Int = Thread.getAllStackTraces.keySet.asScala
+    .count(t => t.getName == Pipeline.WorkerName && t.isAlive)
+
   test("pipeline: end-to-end families produce all ten tables") {
-    val tables = Pipeline.run(spark, Pipeline.Inputs(
-      genes = Seq(Pipeline.SpeciesFile(fx("genes_human.gff3"), 9606)),
-      blocks = Seq(fx("blocks_humanrat.txt")),
-      cytobands = Seq(Pipeline.SpeciesFile(fx("cytoband_human.gff3"), 9606)),
-      features = Seq(Pipeline.SpeciesFile(fx("features_mouse.gff3"), 10090),
-        Pipeline.SpeciesFile(fx("features_rat.gff3.gz"), 10116)),
-      variants = Seq(Pipeline.SpeciesFile(fx("variants_human.vcf"), 9606)),
-      obo = Seq(fx("ontology_go.obo"), fx("ontology_mp.obo")),
-      gaf = Seq((fx("annotations_go_human.gaf"), 9606)),
-      homologs = Seq(fx("homologs_mousehuman.tsv"), fx("homologs_rathuman.tsv"))))
+    val tables = Pipeline.run(spark, pipelineInputs())
     assert(tables.keySet === Set("gene", "exon", "syntenic_block",
       "cytogenetic_band", "feature", "snp_variant", "on_terms", "on_pairs",
       "gene_ontology_map", "homolog"))
@@ -240,5 +252,53 @@ class EtlSpec extends AnyFunSuite {
         s"observed count for $name diverges from the written table")
     }
     assert(metrics.keySet === tables.keySet)
+  }
+
+  test("writeObserved: concurrent tables land exactly as one-at-a-time writes") {
+    val tables = Pipeline.run(spark, pipelineInputs())
+    val together = graft.TestSpark.scratchDir("graft_together")
+    val alone = graft.TestSpark.scratchDir("graft_alone")
+    val counts = Pipeline.writeObserved(tables, together)
+    val countsAlone = tables.flatMap { case (name, df) =>
+      Pipeline.writeObserved(Map(name -> df), alone)
+    }
+    assert(counts === countsAlone)
+    def rows(dir: String, name: String) =
+      spark.read.parquet(s"$dir/$name").collect().map(_.toString).sorted.toSeq
+    for (name <- tables.keys)
+      assert(rows(together, name) === rows(alone, name), s"$name differs")
+    // the cross-file last-wins row survives the concurrent write
+    assert(rows(together, "gene_ontology_map").exists(r =>
+      r.contains("GeneID:100") && r.contains("GO:0002") && r.contains("10090")))
+    assert(workers() === 0)
+  }
+
+  test("writeObserved: a failing table throws its own error after the rest land") {
+    val tables = Pipeline.run(spark, pipelineInputs("genes_dup.gff3"))
+    val out = graft.TestSpark.scratchDir("graft_dup")
+    val ex = intercept[Exception](Pipeline.writeObserved(tables, out))
+    assert(!ex.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("duplicate primary key"))),
+      ex.toString)
+    for (name <- tables.keySet - "gene")
+      assert(new java.io.File(s"$out/$name/_SUCCESS").exists, s"$name not written")
+    assert(workers() === 0)
+  }
+
+  test("a repeated load compiles no generated class") {
+    // one load over every fixture family compiles about 200 generated
+    // classes in a fresh JVM, more than Spark's default codegen cache
+    // of 100 holds (with it, the second load recompiles nearly all of
+    // them); the session shape's cache keeps them all. Whatever ran
+    // before only warms the first load, so the count does not depend
+    // on suite order.
+    def load(): Map[String, Long] = Pipeline.writeObserved(
+      Pipeline.run(spark, pipelineInputs()), graft.TestSpark.scratchDir("graft_reload"))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val first = load()
+    val before = compiles.getCount
+    assert(load() === first)
+    assert(compiles.getCount - before === 0)
   }
 }
