@@ -18,14 +18,17 @@ class SessionShapeSpec extends AnyFunSuite {
     assert(conf("spark.local.dir") === "/scratch/graft-x-scratch")
     assert(conf("spark.log.level") === "WARN")
     // scaleAdaptive's values, which the benchmark harness also applies
-    // to its own session: three AQE settings and the codegen cache size
+    // to its own session: three AQE settings, the codegen cache size
+    // and non-blocking broadcast cleanup
     val adaptive = SessionTuning.Adaptive.toMap
-    assert(adaptive.size === 4)
+    assert(adaptive.size === 5)
     assert(adaptive("spark.sql.adaptive.enabled") === "true")
     assert(adaptive("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "true")
     assert(adaptive("spark.sql.adaptive.advisoryPartitionSizeInBytes") === "64m")
     assert(adaptive("spark.sql.codegen.cache.maxEntries") === "1000")
     assert(conf("spark.sql.codegen.cache.maxEntries") === "1000")
+    assert(adaptive("spark.cleaner.referenceTracking.blocking") === "false")
+    assert(conf("spark.cleaner.referenceTracking.blocking") === "false")
     assert(SessionTuning.Adaptive.forall { case (k, v) => conf(k) == v })
   }
 
@@ -35,6 +38,7 @@ class SessionShapeSpec extends AnyFunSuite {
     assert(sc.getConf.get("spark.sql.session.timeZone") === "UTC")
     assert(sc.getConf.get("spark.ui.enabled") === "false")
     assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries === 1000)
+    assert(sc.getConf.get("spark.cleaner.referenceTracking.blocking") === "false")
     val localDir = sc.getConf.get("spark.local.dir")
     assert(localDir.endsWith("/graft-test-scratch"))
     assert(sys.props("java.io.tmpdir") === localDir)
