@@ -482,21 +482,6 @@ object Curation {
     df.join(contaminated, Seq(idCol), "left_anti")
   }
 
-  /** Deterministic mixture sampling: keep each row iff its salted md5
-    * draw falls under its source's rate (q101/q107 shape; rates are a
-    * dimension-sized broadcast).
-    */
-  def mixtureSample(rates: DataFrame, salt: String = "mix:",
-      idCol: String = "doc_id", sourceCol: String = "source")(
-      df: DataFrame): DataFrame = {
-    val draw = conv(substring(
-        md5(concat(lit(salt), col(idCol).cast("string"))), 1, 6),
-      16, 10).cast("double") / lit(16777216.0)
-    df.join(broadcast(rates), Seq(sourceCol))
-      .filter(draw < col("target_rate"))
-      .drop("target_rate")
-  }
-
   /** Sequence packing: assign each doc to the fixed-size token window
     * (`bin`) its running offset lands in, per source, ordered by id —
     * via `GroupedPrefixSum` (range partitioning + broadcast carry

@@ -20,12 +20,12 @@ object CytoBandEtl {
     raw.select(
       Gff3.attrFirst(col("attributes"), "ID").as("id"),
       lit(taxonId).as("taxon_id"),
-      Gff3.chrStripReplaceAll(col("seq_id")).as("chr"),
+      Gff3.chrStripReplaceAll(col("seqid")).as("chr"),
       Gff3.attrFirst(col("attributes"), "source").as("source"),
       col("type"),
       // BCBio start.position (= GFF3 start − 1) then +1 → GFF3 start.
-      col("start").cast("long").as("start"),
-      col("end").cast("long").as("end"),
+      col("start"),
+      col("end"),
       Gff3.attrFirst(col("attributes"), "Location").as("location"),
       Gff3.attrFirst(col("attributes"), "Color").as("color"))
   }

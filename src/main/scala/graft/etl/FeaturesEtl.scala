@@ -20,7 +20,9 @@ import graft.sources.Gff3
   *  - C5: attributes split on `;` / `=` with trimming; `Alias` values
   *    are collected-then-dropped in the reference (`:181-182`) — dead
   *    code, not stored here either;
-  *  - C6: `.` → null applied to every stored column (`:187-191`);
+  *  - C6: `.` → null applied to every stored column (`:187-191`): the
+  *    source nulls the 8 fixed columns, the stripped seq_id and the
+  *    attribute values are nulled here;
   *  - D3: duplicate PK (source, taxon_id, id, dbxref) keeps the first
   *    row in file order and continues (`:203-211`).
   */
@@ -51,20 +53,17 @@ object FeaturesEtl {
   def load(spark: SparkSession, path: String, taxonId: Int,
       opts: EtlOptions = EtlOptions()): DataFrame = {
     Gff3.assertVersionPragma(spark, path)
+    // a `.` type is null in the source and is not blacklisted
     val raw = Gff3.read(spark, path)
-      .filter(!col("type").isin(blacklist(opts).toSeq.map(x => x: Any): _*))
+      .filter(col("type").isNull ||
+        !col("type").isin(blacklist(opts).toSeq.map(x => x: Any): _*))
 
     def a(name: String) = Gff3.dotToNull(Gff3.attr(col("attributes"), name))
     val projected = raw.select(
       lit(taxonId).as("taxon_id"),
-      Gff3.dotToNull(Gff3.chrStripAnchored(col("seq_id"))).as("seq_id"),
-      Gff3.dotToNull(col("source")).as("source"),
-      Gff3.dotToNull(col("type")).as("type"),
-      Gff3.dotToNull(col("start")).cast("long").as("start"),
-      Gff3.dotToNull(col("end")).cast("long").as("end"),
-      Gff3.dotToNull(col("score")).cast("double").as("score"),
-      Gff3.dotToNull(col("strand")).as("strand"),
-      Gff3.dotToNull(col("phase")).cast("int").as("phase"),
+      Gff3.dotToNull(Gff3.chrStripAnchored(col("seqid"))).as("seq_id"),
+      col("source"), col("type"), col("start"), col("end"), col("score"),
+      col("strand"), col("phase"),
       a("ID").as("id"),
       a("Name").as("name"),
       a("Dbxref").as("dbxref"),

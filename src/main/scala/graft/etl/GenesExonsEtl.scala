@@ -50,9 +50,9 @@ object GenesExonsEtl {
         col("__dbxref").as("gene_id"),
         lit(taxonId).as("gene_taxonid"),
         Gff3.attrFirst(col("attributes"), "Symbol").as("gene_symbol"),
-        Gff3.chrStripReplaceAll(col("seq_id")).as("gene_chr"),
-        (col("start").cast("long") - 1).as("gene_start_pos"),
-        col("end").cast("long").as("gene_end_pos"),
+        Gff3.chrStripReplaceAll(col("seqid")).as("gene_chr"),
+        (col("start") - 1).as("gene_start_pos"),
+        col("end").as("gene_end_pos"),
         when(col("strand") === "+", "1")
           .when(col("strand") === "-", "-1").as("gene_strand"),
         col("type").as("gene_type"),
@@ -62,9 +62,9 @@ object GenesExonsEtl {
       .select(
         Gff3.attr(col("attributes"), "ID").as("exon_id"),
         col("__parent"),
-        Gff3.chrStripReplaceAll(col("seq_id")).as("exon_chr"),
-        (col("start").cast("long") - 1).as("exon_start_pos"),
-        col("end").cast("long").as("exon_end_pos"))
+        Gff3.chrStripReplaceAll(col("seqid")).as("exon_chr"),
+        (col("start") - 1).as("exon_start_pos"),
+        col("end").as("exon_end_pos"))
     val geneIds = geneRows.filter(col("__dbxref").isNotNull)
       .select(Gff3.attr(col("attributes"), "ID").as("__gene_row_id"),
         col("__dbxref").as("parent_gene"))

@@ -171,17 +171,13 @@ object Pipeline {
     *
     * Embedded single-file engines are single-writer, so the tables are
     * written one after another (unlike `write`'s concurrent tables) and
-    * each is coalesced to one partition by default — this sink is a
+    * each is coalesced to one partition — this sink is a
     * small-deliverable parity convenience; the scale path is the
-    * partitioned/sorted parquet layout in `write`. Pass
-    * `singleWriter = false` for a server-grade target (Postgres etc.)
-    * to keep parallel partition writes.
+    * partitioned/sorted parquet layout in `write`.
     */
   def writeJdbc(tables: Map[String, DataFrame], url: String,
-      singleWriter: Boolean = true,
       properties: java.util.Properties = new java.util.Properties()): Unit =
     tables.foreach { case (name, df) =>
-      val out = if (singleWriter) df.coalesce(1) else df
-      out.write.mode("overwrite").jdbc(url, name, properties)
+      df.coalesce(1).write.mode("overwrite").jdbc(url, name, properties)
     }
 }

@@ -2,20 +2,21 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.Gff3
 
 /** SNP-variant table from VCF (reference `import_variants.py:63-110`).
   *
-  * The VCF body is 8 fixed tab-separated columns after `#`-comment
-  * stripping — a plain csv read; the INFO column parses with
-  * `str_to_map` (VCF INFO keys are unique per record).
+  * The VCF body is read through the typed `vcf` DataSourceV2 source
+  * (`VcfDataSource`: 8 fixed columns, POS Long, QUAL Double, `.` and
+  * empty fields null, `#` comments, blank and short lines skipped);
+  * the INFO column parses with `str_to_map` (VCF INFO keys are unique
+  * per record).
   *
   * Semantics:
   *  - X3: one output row per gene in INFO `CG=g1,g2,…` (`:80-93`);
   *  - C7: ALT alleles slash-joined; a `.` ALT yields the empty string
   *    (PyVCF surfaces `[None]` and the reference's join produces "",
-  *    `:86-90`);
+  *    `:86-90`), so the source's null ALT loads as "";
   *  - C1: replace-all chr strip on CHROM (`:84`);
   *  - AF/LT: first value of the (possibly multi-valued) INFO fields;
   *  - quality/frequency are Double (SURVEY.md §1.2 — the reference's
@@ -24,29 +25,21 @@ import graft.sources.Gff3
   */
 object VariantsEtl {
 
-  private val vcfColumns = Seq(
-    "chrom", "pos", "vid", "ref", "alt", "qual", "filter", "info")
-  private val schema = StructType(vcfColumns.map(StructField(_, StringType)))
-
   def load(spark: SparkSession, path: String, taxonId: Int): DataFrame = {
-    val raw = spark.read
-      .option("sep", "\t")
-      .option("comment", "#")
-      .schema(schema)
-      .csv(path)
+    val raw = spark.read.format("vcf").load(path)
     val info = str_to_map(col("info"), lit(";"), lit("="))
     raw
       .withColumn("__info", info)
       .withColumn("gene", explode(split(col("__info")("CG"), ",")))
       .select(
         Gff3.chrStripReplaceAll(col("chrom")).as("chr"),
-        col("pos").cast("long").as("pos"),
-        Gff3.dotToNull(col("vid")).as("id"),
+        col("pos"),
+        col("id"),
         col("ref").as("ref_base"),
-        when(col("alt") === ".", lit(""))
+        when(col("alt").isNull, lit(""))
           .otherwise(regexp_replace(col("alt"), ",", "/")).as("alt_allele"),
-        Gff3.dotToNull(col("qual")).cast("double").as("quality"),
-        Gff3.dotToNull(col("filter")).as("filter"),
+        col("qual").as("quality"),
+        col("filter"),
         element_at(split(col("__info")("AF"), ","), 1).cast("double")
           .as("frequency"),
         col("gene"),

@@ -65,11 +65,6 @@ sealed abstract class SimHashFamily(val bits: Int) {
   def bitOf(h: Column, b: Int): Column =
     shiftright(h, b).bitwiseAND(lit(1L))
 
-  /** Bit b of the token's hash (kept for expression-level parity with
-    * the per-nibble oracle construction — see [[tokenHash]]).
-    */
-  def tokenBit(token: Column, b: Int): Column = bitOf(tokenHash(token), b)
-
   /** Aggregate expression: `bits`-bit simhash over grouped token rows.
     * The `1L << b` term for the sign bit is Long.MinValue; the left
     * fold adds it last, after the ≤(2^63 − 1) sum of the lower bits,

@@ -117,14 +117,11 @@ object TextFns {
     "de" -> Seq("der", "die", "das", "und", "ist"),
     "fr" -> Seq("le", "la", "les", "et", "est"))
 
-  def langScore(text: Column, lang: String): Column =
-    langScoreFromTokens(tokens(text), lang)
-
-  /** Score from a MATERIALIZED token-array column — the form to use
-    * on any hot path: `filter` is an interpreted higher-order
-    * function, so an inline `split` child is re-evaluated per score
-    * (langIdentify references each score twice → 6+ tokenizations per
-    * row with the text form).
+  /** Score from a token-array column; materialize the tokens on any
+    * hot path: `filter` is an interpreted higher-order function, so an
+    * inline `split` child is re-evaluated per score (langIdentify
+    * references each score twice → 6+ tokenizations per row with the
+    * text form).
     */
   def langScoreFromTokens(t: Column, lang: String): Column =
     size(filter(t, tok => tok.isin(langMarkers(lang).map(x => x: Any): _*)))

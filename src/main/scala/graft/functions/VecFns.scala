@@ -37,9 +37,6 @@ object VecFns {
   def dotQFast(a: Column, b: Column): Column =
     call_function("long_array_dot", a, b)
 
-  /** Exact integer squared norm of a quantized vector. */
-  def normSqQ(a: Column): Column = dotQ(a, a)
-
   /** Cosine similarity from precomputed integer dot/normSq values. */
   def cosineFromQ(dot: Column, normSqA: Column, normSqB: Column): Column =
     dot.cast("double") / (sqrt(normSqA.cast("double")) * sqrt(normSqB.cast("double")))

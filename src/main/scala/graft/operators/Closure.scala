@@ -13,10 +13,23 @@ import org.apache.spark.sql.functions._
   * O(graph depth) rounds.
   *
   * At scale: `edges` is usually dimension-sized (ontology ≈ 10^5 rows)
-  * — broadcast it so every round is a broadcast join with no shuffle of
-  * the growing closure.
+  * — it is broadcast, so every round is a broadcast join with no
+  * shuffle of the growing closure.
   */
 object Closure {
+
+  /** Convergence bound of both fixpoints: rounds of the closure and BFS
+    * layers of `minDepths`, far past the depth of any real ontology.
+    */
+  private val MaxIterations = 64
+
+  /** The edge count bounds the *input*, not the closure — a dense or
+    * deep graph can close to orders of magnitude more pairs than it has
+    * edges. If the in-heap closure's pair set outgrows this cap it is
+    * abandoned and the distributed path runs instead, so driver memory
+    * is bounded by cap × pair size regardless of graph shape.
+    */
+  private val LocalPairCap = 4000000
 
   /** @param edges DataFrame with direct-edge columns (`parentCol`, `childCol`)
     * @param localThreshold edge sets at or below this row count are
@@ -26,32 +39,24 @@ object Closure {
     *   job-scheduling latency that dwarf the actual work at that size;
     *   the threshold is probed with `limit(n+1).count()` so a 100 TB
     *   edge table never scans past the cap. Set 0 to force the
-    *   distributed path.
-    * @param localPairCap the edge count bounds the *input*, not the
-    *   closure — a dense or deep graph can close to orders of magnitude
-    *   more pairs than it has edges. If the in-heap fixpoint's pair set
-    *   outgrows this cap it is abandoned and the distributed path runs
-    *   instead, so driver memory is bounded by cap × pair size
-    *   regardless of graph shape.
+    *   distributed path (the in-heap pair set is capped at
+    *   `LocalPairCap`).
     * @return closure as (`ancestor`, `descendant`) — all transitive pairs
     */
   def transitiveClosure(
       edges: DataFrame,
       parentCol: String = "parent",
       childCol: String = "child",
-      broadcastEdges: Boolean = true,
-      maxIterations: Int = 64,
-      localThreshold: Int = 200000,
-      localPairCap: Int = 4000000): DataFrame = {
+      localThreshold: Int = 200000): DataFrame = {
     val e0 = edges.select(col(parentCol).as("parent"), col(childCol).as("child"))
     if (localThreshold > 0 &&
         e0.limit(localThreshold + 1).count() <= localThreshold) {
-      localClosure(e0, maxIterations, localPairCap) match {
+      localClosure(e0) match {
         case Some(closed) => return closed
         case None => // closure outgrew the pair cap — run distributed
       }
     }
-    val e = if (broadcastEdges) broadcast(e0) else e0
+    val e = broadcast(e0)
 
     val base = e0
       .select(col("parent").as("ancestor"), col("child").as("descendant"))
@@ -65,7 +70,7 @@ object Closure {
     var frontier = base
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxIterations) {
       val sofar = frames.reduce(_ union _)
       val next = frontier
         .join(e, frontier("descendant") === e("parent"))
@@ -80,7 +85,7 @@ object Closure {
       }
       iter += 1
     }
-    require(converged, s"transitiveClosure did not converge in $maxIterations iterations")
+    require(converged, s"transitiveClosure did not converge in $MaxIterations iterations")
     frames.reduce(_ union _)
   }
 
@@ -90,8 +95,7 @@ object Closure {
     * the distributed algorithm minus per-round scheduling. Types flow
     * through untouched (ids stay whatever the input columns were).
     */
-  private def localClosure(
-      e0: DataFrame, maxIterations: Int, pairCap: Int): Option[DataFrame] = {
+  private def localClosure(e0: DataFrame): Option[DataFrame] = {
     val spark = e0.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(
@@ -110,8 +114,8 @@ object Closure {
     seen ++= direct
     var frontier: Seq[(Any, Any)] = direct.toSeq
     var iter = 0
-    while (frontier.nonEmpty && iter < maxIterations) {
-      if (seen.size > pairCap) return None
+    while (frontier.nonEmpty && iter < MaxIterations) {
+      if (seen.size > LocalPairCap) return None
       frontier = for {
         (a, d) <- frontier
         if d != null
@@ -120,9 +124,9 @@ object Closure {
       } yield (a, c)
       iter += 1
     }
-    if (seen.size > pairCap) return None
+    if (seen.size > LocalPairCap) return None
     require(frontier.isEmpty,
-      s"transitiveClosure did not converge in $maxIterations iterations")
+      s"transitiveClosure did not converge in $MaxIterations iterations")
     val rows = seen.toSeq.map { case (a, d) =>
       org.apache.spark.sql.Row(a, d) }
     Some(spark.createDataFrame(
@@ -150,8 +154,6 @@ object Closure {
       edges: DataFrame,
       parentCol: String = "parent",
       childCol: String = "child",
-      broadcastEdges: Boolean = true,
-      maxIterations: Int = 64,
       localThreshold: Int = 200000): DataFrame = {
     val e0 = edges.select(col(parentCol).as("parent"), col(childCol).as("child"))
     if (localThreshold > 0 &&
@@ -161,13 +163,13 @@ object Closure {
         case None =>
       }
     }
-    val e = if (broadcastEdges) broadcast(e0) else e0
+    val e = broadcast(e0)
     val roots = e0.select(col("parent").as("node")).distinct()
       .join(e0.select(col("child").as("node")).distinct(), Seq("node"), "left_anti")
     var seen = roots.withColumn("depth", lit(0L)).localCheckpoint()
     var frontier = seen
     var iter = 0
-    while (iter < maxIterations && !frontier.isEmpty) {
+    while (iter < MaxIterations && !frontier.isEmpty) {
       val next = frontier
         .join(e, frontier("node") === e("parent"))
         .select(e("child").as("node"), (frontier("depth") + 1L).as("depth"))
@@ -178,7 +180,7 @@ object Closure {
       seen = seen.union(next).localCheckpoint()
       iter += 1
     }
-    require(frontier.isEmpty, s"minDepths did not converge in $maxIterations iterations")
+    require(frontier.isEmpty, s"minDepths did not converge in $MaxIterations iterations")
     seen
   }
 

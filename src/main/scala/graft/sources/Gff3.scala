@@ -2,35 +2,24 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** GFF3 source (SURVEY.md §2.1 S1/S2): a GFF3 file is tab-separated
-  * lines of 9 fixed columns after `#`-comment stripping, so the scan
-  * is a plain distributed csv read — no custom DataSource needed.
+/** GFF3 loading helpers (SURVEY.md §2.1 S1/S2): the scan is the typed
+  * `gff3` DataSourceV2 source (`Gff3DataSource`: 9 columns, positions
+  * Long, score Double, phase Int, `.`/empty → null, `#` comments,
+  * blank and short lines skipped, gzip-transparent per file, which
+  * covers the reference's `flex_open`, S8, `flex_open.py:10-20`).
   * Attribute access and gene↔exon nesting are rebuilt relationally
   * (`Parent`/`ID` self-join) instead of via a nested parser.
-  *
-  * Spark's csv source decompresses `.gz` transparently, which covers
-  * the reference's `flex_open` (S8, reference `flex_open.py:10-20`).
   */
 object Gff3 {
 
-  val columns: Seq[String] = Seq(
-    "seq_id", "source", "type", "start", "end", "score", "strand", "phase",
-    "attributes")
-
-  private val schema = StructType(columns.map(StructField(_, StringType)))
-
-  /** Raw 9-column read; one output row per feature line. An `__ord`
-    * column carries file order for order-sensitive downstream dedup
-    * (narrow read — no shuffle before the ordinal is assigned).
+  /** The `gff3` source's typed columns, one row per feature line, plus
+    * an `__ord` column carrying file order for order-sensitive
+    * downstream dedup (narrow read — no shuffle before the ordinal is
+    * assigned).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("comment", "#")
-      .schema(schema)
-      .csv(path)
+    spark.read.format("gff3").load(path)
       .withColumn("__ord", monotonically_increasing_id())
 
   /** V4 — `##gff-version 3` pragma check on the first line (reference

@@ -30,7 +30,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * across the cluster instead of serializing onto a single core;
   * gzip files are unsplittable and plan as one partition each. The
   * driver's full Hadoop configuration (incl. `spark.hadoop.*` object-
-  * store credentials) ships to executor readers.
+  * store credentials) reaches executor readers as one broadcast per
+  * scan, not a copy inside every task.
   */
 abstract class LineFileProvider extends TableProvider {
   def formatName: String
@@ -44,8 +45,16 @@ abstract class LineFileProvider extends TableProvider {
     new LineFileTable(this, properties.asScala.toMap)
 }
 
-private class LineFileTable(fmt: LineFileProvider, options: Map[String, String])
-    extends Table with SupportsRead {
+/** Two reads of one path with one format and options are one table, so
+  * their plans compare equal and a persisted read serves the other.
+  */
+private class LineFileTable(private val fmt: LineFileProvider,
+    private val options: Map[String, String]) extends Table with SupportsRead {
+  override def equals(o: Any): Boolean = o match {
+    case t: LineFileTable => t.fmt.getClass == fmt.getClass && t.options == options
+    case _ => false
+  }
+  override def hashCode(): Int = (fmt.getClass, options).hashCode
   override def name(): String =
     s"${fmt.formatName}(${options.getOrElse("path", "?")})"
   override def schema(): StructType = fmt.formatSchema
@@ -76,10 +85,9 @@ private class LineFileScanBuilder(fmt: LineFileProvider, options: Map[String, St
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
-    val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    new LineFileScan(LineFileProvider.resolveSplits(options),
-      new SerializableHadoopConf(conf),
+    val files = LineFileProvider.resolveFiles(options)
+    new LineFileScan(LineFileProvider.resolveSplits(options, files),
+      files.map(_._2).filter(_ > 0).sum, SparkSession.active,
       fmt.formatSchema, required, pushed, fmt.commentPrefix, fmt.formatName)
   }
 }
@@ -125,20 +133,27 @@ object LineFileProvider {
     }
   }
 
-  /** Plan line-aligned byte-range splits: uncompressed files cut at
-    * `maxSplitBytes` boundaries (the reader re-aligns to line starts),
-    * gzip files whole.
+  /** Every input file with its byte length (-1 when it cannot be read). */
+  private[sources] def resolveFiles(options: Map[String, String]): Seq[(String, Long)] = {
+    val hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
+    resolvePaths(options).map { p =>
+      val hPath = new Path(p)
+      val fs = hPath.getFileSystem(hadoopConf)
+      p -> (try fs.getFileStatus(hPath).getLen catch { case _: Exception => -1L })
+    }
+  }
+
+  /** Plan line-aligned byte-range splits of `files`: uncompressed files
+    * cut at `maxSplitBytes` boundaries (the reader re-aligns to line
+    * starts), gzip files whole.
     */
-  private[sources] def resolveSplits(rawOptions: Map[String, String]): Seq[LineFilePartition] = {
-    val spark = SparkSession.active
+  private[sources] def resolveSplits(rawOptions: Map[String, String],
+      files: Seq[(String, Long)]): Seq[LineFilePartition] = {
     val options = rawOptions.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
     val splitBytes = options.get("maxsplitbytes").map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
+      .getOrElse(SparkSession.active.sessionState.conf.filesMaxPartitionBytes)
     require(splitBytes > 0, s"maxSplitBytes must be positive, got $splitBytes")
-    resolvePaths(options).flatMap { p =>
-      val hPath = new Path(p)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val size = try fs.getFileStatus(hPath).getLen catch { case _: Exception => -1L }
+    files.flatMap { case (p, size) =>
       if (p.endsWith(".gz") || size <= 0)
         Seq(LineFilePartition(p, 0L, Long.MaxValue))
       else

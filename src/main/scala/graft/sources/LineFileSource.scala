@@ -1,15 +1,19 @@
 package graft.sources
 
+import java.util.OptionalLong
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Shared scan machinery for the tab-separated genomics formats
   * (GFF3, VCF): line-aligned byte-range input splits, comment/blank
@@ -42,34 +46,32 @@ private[sources] object LineFileSource {
   }
 }
 
-/** Minimal serializable Hadoop `Configuration` carrier (the standard
-  * DSv2 pattern): the driver's full configuration — including
-  * `spark.hadoop.*` filesystem credentials — reaches every executor
-  * reader, instead of executors falling back to default-FS-only
-  * config.
+/** One scan of the input files. The driver's Hadoop configuration
+  * (including `spark.hadoop.*` filesystem credentials) reaches the
+  * executor readers as one broadcast per reader factory, as Spark's own
+  * file scans do, rather than inside every task. The size estimate is
+  * the input's byte length scaled to the read columns, as for Spark's
+  * file scans, so joins above the scan plan as they would over a
+  * built-in file source.
   */
-private[sources] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 private[sources] class LineFileScan(
     splits: Seq[LineFilePartition],
-    confSer: SerializableHadoopConf,
+    inputBytes: Long,
+    spark: SparkSession,
     fullSchema: StructType,
     required: StructType,
     filters: Array[Filter],
     commentPrefix: Char,
-    formatName: String) extends Scan with Batch {
+    formatName: String) extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
+  override def estimateStatistics(): Statistics = {
+    val factor = spark.sessionState.conf.fileCompressionFactor
+    val size = (factor * inputBytes / fullSchema.defaultSize * required.defaultSize).toLong
+    new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(size)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
+  }
   override def description(): String =
     s"$formatName PushedFilters: ${filters.mkString("[", ", ", "]")}, " +
       s"ReadSchema: ${required.catalogString}"
@@ -77,7 +79,10 @@ private[sources] class LineFileScan(
   override def planInputPartitions(): Array[InputPartition] =
     splits.map(p => p: InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new LineFileReaderFactory(confSer, fullSchema, required, filters, commentPrefix)
+    new LineFileReaderFactory(
+      spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sessionState.newHadoopConf())),
+      fullSchema, required, filters, commentPrefix)
 }
 
 /** One line-aligned byte range of one file; `end == Long.MaxValue`
@@ -87,13 +92,13 @@ private[sources] case class LineFilePartition(path: String, start: Long, end: Lo
     extends InputPartition
 
 private[sources] class LineFileReaderFactory(
-    confSer: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     fullSchema: StructType, required: StructType,
     filters: Array[Filter], commentPrefix: Char)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new LineFileReader(partition.asInstanceOf[LineFilePartition],
-      confSer.value, fullSchema, required, filters, commentPrefix)
+      conf.value.value, fullSchema, required, filters, commentPrefix)
 }
 
 private[sources] class LineFileReader(

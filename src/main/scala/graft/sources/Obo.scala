@@ -5,10 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** OBO ontology source (SURVEY.md §2.1 S6, §7.4): `[Term]`-delimited
-  * multi-line stanzas. Stanzas span lines, so this is not a line-based
-  * csv read — the scan distributes on `LineFileProvider`'s byte-range
+  * multi-line stanzas. Stanzas span lines, so this is not a row-per-line
+  * scan — the scan distributes on `LineFileProvider`'s byte-range
   * splits with STANZA-boundary ownership: a split owns a stanza iff it
   * owns the stanza's `[Term]` line (the same first-byte-in-range rule
   * Hadoop uses for lines), and a reader keeps consuming past its range
@@ -148,7 +149,8 @@ object Obo {
   /** Distributed stanza scan: plan the same line-aligned byte-range
     * splits as the GFF3/VCF sources, parse each split's owned stanzas
     * executor-side. Split order = byte order, so the event stream is
-    * identical to a sequential parse of the whole file.
+    * identical to a sequential parse of the whole file. The Hadoop
+    * configuration reaches the tasks as one broadcast per read.
     *
     * @param maxSplitBytes override split size (default:
     *                      `spark.sql.files.maxPartitionBytes`)
@@ -158,11 +160,13 @@ object Obo {
     import spark.implicits._
     val options = Map("path" -> path) ++
       maxSplitBytes.map(b => "maxsplitbytes" -> b.toString)
-    val splits = LineFileProvider.resolveSplits(options)
-    val confSer = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    val splits = LineFileProvider.resolveSplits(options,
+      LineFileProvider.resolveFiles(options))
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val events = spark.sparkContext
       .parallelize(splits, math.max(splits.size, 1))
-      .flatMap(sp => parseLines(stanzaLines(sp, confSer.value)))
+      .flatMap(sp => parseLines(stanzaLines(sp, conf.value.value)))
     spark.createDataset(events)
   }
 }

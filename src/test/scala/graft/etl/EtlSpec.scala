@@ -82,6 +82,47 @@ class EtlSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("gff-version 3"))
   }
 
+  /** A GFF3 or VCF file with the given body lines. */
+  def tmpInput(suffix: String, lines: String*): String = {
+    val f = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(graft.TestSpark.scratchDir("graft_odd")), "in", suffix)
+    java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("features: a '.' type is a null type that the blacklist keeps") {
+    val f = FeaturesEtl.load(spark, tmpInput(".gff3",
+      "##gff-version 3",
+      "chr1\tsrc\t.\t10\t20\t.\t+\t.\tID=d1",
+      "chr1\tsrc\tCDS\t10\t20\t.\t+\t.\tID=c1",
+      "chr1\tsrc\tQTL\t10\t20\t.\t+\t.\tID=q1"), 10090)
+    val rows = f.orderBy("id").collect()
+    assert(rows.map(_.getAs[String]("id")).toSeq === Seq("d1", "q1"))
+    assert(rows(0).get(rows(0).fieldIndex("type")) === null)
+  }
+
+  test("gff3: whitespace-only and short lines are skipped, not null-padded") {
+    val b = CytoBandEtl.load(spark, tmpInput(".gff3",
+      "##gff-version 3",
+      "   ",
+      "\t\t",
+      "chr1\tUCSC\tcytoband\t1\t500",
+      "chr1\tUCSC\tcytoband\t1\t500\t.\t.\t.\tID=p1;source=UCSC"), 9606)
+    assert(b.collect().toSeq === Seq(
+      Row("p1", 9606, "1", "UCSC", "cytoband", 1L, 500L, null, null)))
+  }
+
+  test("gff3: a field that starts with a quote is kept verbatim") {
+    val f = FeaturesEtl.load(spark, tmpInput(".gff3",
+      "##gff-version 3",
+      "chr1\t\"Curated\"\tQTL\t10\t20\t.\t+\t.\tID=q1;Name=\"a b\"",
+      "chr1\t\"open\tQTL\t30\t40\t.\t+\t.\tID=q2"), 10090)
+    val rows = f.orderBy("id").collect()
+    assert(rows.map(r => (r.getAs[String]("source"), r.getAs[String]("name"))).toSeq ===
+      Seq(("\"Curated\"", "\"a b\""), ("\"open", null)))
+    assert(rows.map(_.getAs[Long]("start")).toSeq === Seq(10L, 30L))
+  }
+
   // ---- cytobands (A3) ---------------------------------------------
   test("cytobands: 1-based starts, chr strip, qualifier projection") {
     val b = CytoBandEtl.load(spark, fx("cytoband_human.gff3"), 9606)
@@ -159,6 +200,19 @@ class EtlSpec extends AnyFunSuite {
     assert(rs1a.getAs[Double]("frequency") === 0.12) // AF first value
     assert(Set(v(2), v(3)).map(_.getAs[String]("gene")) ===
       Set("GeneID:100", "GeneID:200"))
+  }
+
+  test("variants: a '.' ALT loads as the empty string; odd lines are skipped") {
+    val v = VariantsEtl.load(spark, tmpInput(".vcf",
+      "##fileformat=VCFv4.2",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO",
+      "chr1\t10\trs1\tA\t.\t5\tPASS\tCG=GeneID:1",
+      "  ",
+      "chr1\t20\trs2\tA",
+      "chr1\t30\trs3\tA\tC,G\t.\tPASS\tCG=GeneID:2"), 9606)
+      .orderBy("pos").collect()
+    assert(v.map(r => (r.getAs[Long]("pos"), r.getAs[String]("alt_allele"))).toSeq ===
+      Seq((10L, ""), (30L, "C/G")))
   }
 
   // ---- ontology (A7/A8) -------------------------------------------
