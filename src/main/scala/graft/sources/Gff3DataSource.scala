@@ -25,7 +25,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `LineFileSource`.
   *
   * Partitioning: uncompressed files are split into line-aligned byte
-  * ranges of `spark.sql.files.maxPartitionBytes` (override per read
+  * ranges sized as Spark's file sources size theirs (override per read
   * with option `maxSplitBytes`), so one multi-GB GFF3/VCF fans out
   * across the cluster instead of serializing onto a single core;
   * gzip files are unsplittable and plan as one partition each. The
@@ -145,13 +145,23 @@ object LineFileProvider {
 
   /** Plan line-aligned byte-range splits of `files`: uncompressed files
     * cut at `maxSplitBytes` boundaries (the reader re-aligns to line
-    * starts), gzip files whole.
+    * starts), gzip files whole. Without the option the split size is
+    * the one Spark's file sources pick (`FilePartition.maxSplitBytes`):
+    * the input spread over the cores, at least
+    * `spark.sql.files.openCostInBytes`, at most
+    * `spark.sql.files.maxPartitionBytes` — so a mid-size file parses on
+    * every core, not in one 128 MB split.
     */
   private[sources] def resolveSplits(rawOptions: Map[String, String],
       files: Seq[(String, Long)]): Seq[LineFilePartition] = {
     val options = rawOptions.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    val splitBytes = options.get("maxsplitbytes").map(_.toLong)
-      .getOrElse(SparkSession.active.sessionState.conf.filesMaxPartitionBytes)
+    val splitBytes = options.get("maxsplitbytes").map(_.toLong).getOrElse {
+      val spark = SparkSession.active
+      val conf = spark.sessionState.conf
+      val cores = conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
+      val bytesPerCore = files.map(_._2.max(0L) + conf.filesOpenCostInBytes).sum / cores
+      math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes, bytesPerCore))
+    }
     require(splitBytes > 0, s"maxSplitBytes must be positive, got $splitBytes")
     files.flatMap { case (p, size) =>
       if (p.endsWith(".gz") || size <= 0)

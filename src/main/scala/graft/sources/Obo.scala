@@ -152,8 +152,9 @@ object Obo {
     * identical to a sequential parse of the whole file. The Hadoop
     * configuration reaches the tasks as one broadcast per read.
     *
-    * @param maxSplitBytes override split size (default:
-    *                      `spark.sql.files.maxPartitionBytes`)
+    * @param maxSplitBytes override split size (default: the size
+    *                      Spark's file sources pick, see
+    *                      `LineFileProvider.resolveSplits`)
     */
   def read(spark: SparkSession, path: String,
       maxSplitBytes: Option[Long] = None): Dataset[OboEvent] = {

@@ -96,6 +96,19 @@ class Gff3DataSourceSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("without maxSplitBytes, splits are sized like Spark's file sources") {
+    // input spread over the 4 cores of the test session, at least the
+    // 4 MB open cost, at most the 128 MB partition cap
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val mb = 1L << 20
+    def splits(sizes: Long*) = LineFileProvider.resolveSplits(Map.empty,
+      sizes.zipWithIndex.map { case (n, i) => s"f$i.gff3" -> n })
+    assert(splits(24 * mb).map(_.start) == Seq(0L, 7 * mb, 14 * mb, 21 * mb))
+    assert(splits(2 * mb).size == 1)
+    assert(splits(1024 * mb).size == 8)
+    assert(splits(2 * mb, 2 * mb).size == 2)
+  }
+
   test("multi-path load (DataFrameReader encodes paths as a JSON array)") {
     val two = spark.read.format("gff3")
       .load(s"$fx/genes_human.gff3", s"$fx/features_rat.gff3")

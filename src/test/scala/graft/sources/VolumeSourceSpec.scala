@@ -5,21 +5,24 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Volume proof for the DSv2 line-file sources (VERDICT r11 #7): on a
-  * genuinely multi-GB uncompressed file with DEFAULT split sizing
-  * (spark.sql.files.maxPartitionBytes = 128 MiB), byte-range split
-  * parallelism must actually engage — task count ≈ ceil(size/128 MiB)
-  * per file, not 1 — and the split reads must reproduce the unsplit
-  * row multiset exactly (each line/stanza owned by exactly one split).
+  * genuinely multi-GB uncompressed file with DEFAULT split sizing (the
+  * size Spark's file sources pick: the input spread over the cores,
+  * between spark.sql.files.openCostInBytes and maxPartitionBytes),
+  * byte-range split parallelism must actually engage — task count =
+  * ceil(size / split size) per file, not 1 — and the split reads must
+  * reproduce the unsplit row multiset exactly (each line/stanza owned
+  * by exactly one split).
   *
   * Opt-in via GRAFT_PERF (writes ~2.5 GiB of scratch to tmpfs and
   * parses it on local[32]; no place in the regular suite):
   *
   *   GRAFT_PERF=1 sbt "testOnly graft.sources.VolumeSourceSpec"
   *
-  * Measured on the 128 GiB bench box (committed as the bench note the
-  * verdict asked for): 1.5 GiB GFF3 → 12 splits, 0.7 GiB VCF → 6
-  * splits, 0.3 GiB OBO → 3 splits; all row/stanza multisets equal the
-  * single-split read.
+  * Measured on the 128 GiB bench box with a fixed 128 MiB split size
+  * (committed as the bench note the verdict asked for): 1.5 GiB GFF3 →
+  * 12 splits, 0.7 GiB VCF → 6 splits, 0.3 GiB OBO → 3 splits; all
+  * row/stanza multisets equal the single-split read. On `local[32]`
+  * the default size now gives 32 splits for each.
   */
 class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
 
@@ -44,19 +47,23 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     (out.toString, reps)
   }
 
-  private def defaultSplit: Long =
-    spark.sessionState.conf.filesMaxPartitionBytes
+  /** Expected splits of one `size`-byte file at the default split size. */
+  private def defaultParts(size: Long): Int = {
+    val conf = spark.sessionState.conf
+    val split = math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes,
+      (size + conf.filesOpenCostInBytes) / spark.sparkContext.defaultParallelism))
+    ((size + split - 1) / split).toInt
+  }
 
   test("multi-GB GFF3: default-split fan-out with exact multiset parity") {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
     val (path, reps) = repeatFixture("genes_human.gff3", "big.gff3", 1500L << 20)
     val size = Files.size(Paths.get(path))
-    val expectedParts = ((size + defaultSplit - 1) / defaultSplit).toInt
+    val expectedParts = defaultParts(size)
 
     val split = spark.read.format("gff3").load(path)
     val parts = split.rdd.getNumPartitions
-    info(s"gff3: $size bytes planned $parts partitions " +
-      s"(default split $defaultSplit)")
+    info(s"gff3: $size bytes planned $parts partitions")
     assert(parts === expectedParts && parts > 1,
       s"expected $expectedParts default-size splits, planned $parts")
 
@@ -79,7 +86,7 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     assume(sys.env.contains("GRAFT_PERF"), "set GRAFT_PERF=1 to run")
     val (path, reps) = repeatFixture("variants_human.vcf", "big.vcf", 700L << 20)
     val size = Files.size(Paths.get(path))
-    val expectedParts = ((size + defaultSplit - 1) / defaultSplit).toInt
+    val expectedParts = defaultParts(size)
     val split = spark.read.format("vcf").load(path)
     val parts = split.rdd.getNumPartitions
     info(s"vcf: $size bytes planned $parts partitions")
@@ -122,7 +129,7 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
       }
     } finally w.close()
     val size = Files.size(out)
-    val expectedParts = ((size + defaultSplit - 1) / defaultSplit).toInt
+    val expectedParts = defaultParts(size)
 
     val split = Obo.read(spark, out.toString)
     val parts = split.rdd.getNumPartitions
