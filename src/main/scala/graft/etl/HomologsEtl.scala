@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.Gff3
+import graft.sources.{Gff3, LineFileSource}
 
 /** Homolog table from header-validated TSV (reference
   * `import_homologs.py:79-150`).
@@ -12,7 +12,9 @@ import graft.sources.Gff3
   * prefixed) must *contain* the 13 required lowercase names; extra
   * columns warn. Data rows are then mapped POSITIONALLY to the 13
   * expected names — column order is assumed, exactly like the
-  * reference's `csv.DictReader(fieldnames=…)` (`:111`).
+  * reference's `csv.DictReader(fieldnames=…)` (`:111`). Blank and
+  * space-only rows are skipped (DictReader skips empty rows, F3); any
+  * other row short of 13 fields aborts the load.
   *
   * Semantics: C2 anchored chr strip on both seqids (`:124-127`);
   * V5 non-'orthologue' type warns but loads (`:129-132`); U2 each row
@@ -37,8 +39,8 @@ object HomologsEtl {
   }
 
   def load(spark: SparkSession, path: String): Result = {
-    // V3 — header-set validation (driver-side single line).
-    val headerLine = spark.read.textFile(path).limit(1).collect().head
+    // V3 — header-set validation (driver-side single line, no job).
+    val headerLine = LineFileSource.firstLine(spark, path).getOrElse("")
     val header = headerLine.stripPrefix("##").split("\t").map(_.trim.toLowerCase).toSeq
     val missing = requiredColumns.filterNot(header.contains)
     require(missing.isEmpty, s"$path: missing homolog header column(s): " +
@@ -50,6 +52,7 @@ object HomologsEtl {
     val lines = spark.read.textFile(path)
       .withColumn("__ord", monotonically_increasing_id())
       .filter(col("value") =!= headerLine)
+      .filter(length(trim(col("value"))) > 0) // F3 empty-row skip
       .withColumn("f", split(col("value"), "\t", -1))
     val named = requiredColumns.zipWithIndex.foldLeft(lines) {
       case (df, (name, i)) => df.withColumn(name, trim(col("f")(i)))

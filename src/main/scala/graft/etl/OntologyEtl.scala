@@ -33,7 +33,10 @@ object OntologyEtl {
       gafFiles: Seq[(String, Int)]): Result = {
     // U4 — one term table + one is_a graph across all ontologies
     // (module-global dict in the reference, `import_ontology.py:54`).
-    val events = oboPaths.map(Obo.read(spark, _)).reduce(_ union _).toDF().cache()
+    // Not cached: the closure's one bounded collect and the terms write
+    // each parse the files once, and no cache entry outlives the load to
+    // serve a later load's read of a rewritten file.
+    val events = oboPaths.map(Obo.read(spark, _)).reduce(_ union _).toDF()
 
     val termsRaw = events.filter(col("kind") === "term")
       .select(col("id"), col("name"), col("namespace"),
@@ -85,13 +88,16 @@ object OntologyEtl {
           element_at(
             split(regexp_replace(trim(col("c12")), "taxon:", ""), "\\|"), 1)
             .cast("int").as("taxonid"),
-          (lit(fileIdx) * 1000000000000L + col("__ord")).as("__ord2"))
+          lit(fileIdx).as("__file"),
+          col("__ord"))
         .filter(col("taxonid") === taxon) // F5
     }
     val all = perFile.reduce(_ unionByName _)
     // D1 — INSERT OR REPLACE on (gene_id, ontology_id): last write in
-    // cross-file shell order wins.
-    Dedup.lastWins(all, Seq("gene_id", "ontology_id"), Seq(col("__ord2")),
-      keep = all.columns.filterNot(_ == "__ord2").toSeq)
+    // cross-file shell order wins. File index, then the in-file id: the
+    // id alone carries the partition index from bit 33 up, so it does
+    // not stay below any per-file offset.
+    Dedup.lastWins(all, Seq("gene_id", "ontology_id"), Seq(col("__file"), col("__ord")),
+      keep = Seq("gene_id", "ontology_id", "taxonid"))
   }
 }

@@ -37,7 +37,7 @@ object Closure {
     *   then re-parallelized). Ontologies are dimension-sized (~10^5
     *   edges), and the distributed fixpoint pays O(depth) rounds of
     *   job-scheduling latency that dwarf the actual work at that size;
-    *   the threshold is probed with `limit(n+1).count()` so a 100 TB
+    *   the probe is the collect itself, `limit(n+1)`, so a 100 TB
     *   edge table never scans past the cap. Set 0 to force the
     *   distributed path (the in-heap pair set is capped at
     *   `LocalPairCap`).
@@ -49,12 +49,9 @@ object Closure {
       childCol: String = "child",
       localThreshold: Int = 200000): DataFrame = {
     val e0 = edges.select(col(parentCol).as("parent"), col(childCol).as("child"))
-    if (localThreshold > 0 &&
-        e0.limit(localThreshold + 1).count() <= localThreshold) {
-      localClosure(e0) match {
-        case Some(closed) => return closed
-        case None => // closure outgrew the pair cap — run distributed
-      }
+    localEdges(e0, localThreshold).flatMap(localClosure(e0, _)) match {
+      case Some(closed) => return closed
+      case None => // too many edges, or the closure outgrew the pair cap
     }
     val e = broadcast(e0)
 
@@ -89,20 +86,32 @@ object Closure {
     frames.reduce(_ union _)
   }
 
+  /** The edges, when there are at most `localThreshold` of them: one
+    * bounded `limit(n + 1)` collect is both the size probe and the
+    * driver-side copy, so a 100 TB edge table is never read past the
+    * cap. Coalesced to one partition first, it is one job (a limit over
+    * several partitions runs a job per growing batch of them), and no
+    * limit lands in the input's generated code, whose counter name is
+    * new in every plan and would be compiled again on every load.
+    */
+  private def localEdges(e0: DataFrame, localThreshold: Int): Option[Array[(Any, Any)]] =
+    Option.when(localThreshold > 0)(e0.coalesce(1).limit(localThreshold + 1).collect())
+      .filter(_.length <= localThreshold)
+      .map(_.map(r => (r.get(0), r.get(1))))
+
   /** Metadata-tier closure: the whole edge set fits comfortably on the
     * driver (caller-bounded), so run the same semi-naive fixpoint in
     * one heap — work is O(|closure| · avg out-degree), identical to
     * the distributed algorithm minus per-round scheduling. Types flow
     * through untouched (ids stay whatever the input columns were).
     */
-  private def localClosure(e0: DataFrame): Option[DataFrame] = {
+  private def localClosure(e0: DataFrame, direct: Array[(Any, Any)]): Option[DataFrame] = {
     val spark = e0.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(
         "ancestor", e0.schema("parent").dataType, nullable = true),
       org.apache.spark.sql.types.StructField(
         "descendant", e0.schema("child").dataType, nullable = true)))
-    val direct = e0.collect().map(r => (r.get(0), r.get(1)))
     // null endpoints stay in the closure *base* (the distributed path's
     // seed is the raw edge set) but never extend a path: the equi-join
     // drops null keys under SQL semantics, while Scala map lookups
@@ -156,12 +165,9 @@ object Closure {
       childCol: String = "child",
       localThreshold: Int = 200000): DataFrame = {
     val e0 = edges.select(col(parentCol).as("parent"), col(childCol).as("child"))
-    if (localThreshold > 0 &&
-        e0.limit(localThreshold + 1).count() <= localThreshold) {
-      localMinDepths(e0) match {
-        case Some(d) => return d
-        case None =>
-      }
+    localEdges(e0, localThreshold).flatMap(localMinDepths(e0, _)) match {
+      case Some(d) => return d
+      case None =>
     }
     val e = broadcast(e0)
     val roots = e0.select(col("parent").as("node")).distinct()
@@ -184,9 +190,8 @@ object Closure {
     seen
   }
 
-  private def localMinDepths(e0: DataFrame): Option[DataFrame] = {
+  private def localMinDepths(e0: DataFrame, pairs: Array[(Any, Any)]): Option[DataFrame] = {
     val spark = e0.sparkSession
-    val pairs = e0.collect().map(r => (r.get(0), r.get(1)))
     if (pairs.exists { case (p, c) => p == null || c == null }) return None
     val children = pairs.map(_._2).toSet
     val adj = pairs.groupBy(_._1).map { case (p, es) => p -> es.map(_._2) }

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** GFF3 loading helpers (SURVEY.md §2.1 S1/S2): the scan is the typed
-  * `gff3` DataSourceV2 source (`Gff3DataSource`: 9 columns, positions
-  * Long, score Double, phase Int, `.`/empty → null, `#` comments,
-  * blank and short lines skipped, gzip-transparent per file, which
-  * covers the reference's `flex_open`, S8, `flex_open.py:10-20`).
-  * Attribute access and gene↔exon nesting are rebuilt relationally
-  * (`Parent`/`ID` self-join) instead of via a nested parser.
+  * `gff3` file source (`Gff3DataSource` on Spark's file-source V2
+  * classes: 9 columns, positions Long, score Double, phase Int,
+  * `.`/empty → null, `#` comments, blank and short lines skipped,
+  * decompressed by codec, which covers the reference's `flex_open`, S8,
+  * `flex_open.py:10-20`). Attribute access and gene↔exon nesting are
+  * rebuilt relationally (`Parent`/`ID` self-join) instead of via a
+  * nested parser.
   */
 object Gff3 {
 
@@ -23,10 +24,10 @@ object Gff3 {
       .withColumn("__ord", monotonically_increasing_id())
 
   /** V4 — `##gff-version 3` pragma check on the first line (reference
-    * `import_features.py:72-76`). Driver-side single-line read.
+    * `import_features.py:72-76`), read on the driver without a job.
     */
   def assertVersionPragma(spark: SparkSession, path: String): Unit = {
-    val first = spark.read.textFile(path).limit(1).collect().headOption
+    val first = LineFileSource.firstLine(spark, path)
     require(first.exists(_.trim.endsWith("gff-version 3")),
       s"$path: expected first line to end with 'gff-version 3'")
   }

@@ -1,181 +1,212 @@
 package graft.sources
 
-import java.util.OptionalLong
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.util.LineReader
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.V2ExpressionBuilder
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** Shared scan machinery for the tab-separated genomics formats
-  * (GFF3, VCF): line-aligned byte-range input splits, comment/blank
-  * skip, `.`→NULL, gzip transparency by suffix, schema-driven typed
-  * projection with column pruning, and equality/IN row filters applied
-  * before any InternalRow is allocated.
-  *
-  * Splitting follows Hadoop LineRecordReader semantics: a split
-  * `[start, end)` owns every line whose first byte is in `(start,
-  * end]` (plus the line at byte 0 for the first split) — a reader with
-  * `start > 0` seeks and discards the partial first line, and every
-  * reader consumes one line past `end`, so each line is parsed exactly
-  * once across splits. Gzip files are not splittable and plan as one
-  * split. This is what keeps a single multi-GB uncompressed GFF3/VCF
-  * from serializing onto one core.
+/** What a line-based format adds to Spark's file-source V2 classes: its
+  * columns and how the lines of one split become rows. Everything else
+  * is Spark's, as for its own `text` source: path and glob resolution
+  * and listing (`FileTable`), split sizing and packing by
+  * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+  * `minPartitionNum`, the size estimate, unsplittable compressed files
+  * (`TextBasedFileScan`), and the per-file reader loop that names the
+  * file in a read error (`FilePartitionReaderFactory`).
   */
-private[sources] object LineFileSource {
+private[sources] trait LineFormat extends Serializable {
+  def name: String
+  def schema: StructType
 
-  /** Filters acceptable for pre-projection evaluation: equality/IN on
-    * string columns of the format schema.
+  /** The rows of one split, as string values in `schema` order (null is
+    * SQL NULL), each with the byte offset of the line it came from.
     */
-  def splitFilters(filters: Array[Filter], schema: StructType): (Array[Filter], Array[Filter]) = {
-    val stringCols = schema.fields
-      .filter(_.dataType == StringType).map(_.name).toSet
-    filters.partition {
-      case EqualTo(a, _: String) => stringCols(a)
-      case In(a, vs) => stringCols(a) && vs.forall(_.isInstanceOf[String])
+  def rows(file: PartitionedFile, conf: Configuration): Iterator[(Long, Array[String])]
+}
+
+/** `spark.read.format(format.name)`: a file source whose reads compare
+  * by value, so a persisted read of a path serves a later read of it.
+  */
+abstract class LineFileSource(format: LineFormat) extends FileDataSourceV2 {
+  override def shortName(): String = format.name
+  override def fallbackFileFormat: Class[_ <: FileFormat] = classOf[NoV1Format]
+  override protected def getTable(options: CaseInsensitiveStringMap): Table = {
+    val paths = getPaths(options)
+    LineFileTable(format, getTableName(options, paths), sparkSession,
+      getOptionsWithoutPaths(options), paths)
+  }
+}
+
+object LineFileSource {
+
+  private def open(path: Path, start: Long, length: Long, conf: Configuration) = {
+    val reader = new LineRecordReader()
+    reader.initialize(new FileSplit(path, start, length, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    reader
+  }
+
+  /** The lines Hadoop's `LineRecordReader` gives the split
+    * [`start`, `start + length`) of `path`, each with its byte offset:
+    * those that start in (`start`, `start + length`], and the first line
+    * when `start` is 0, decompressed by the file's codec. The file closes
+    * after the last line or when the task ends.
+    */
+  private[sources] def lines(path: Path, start: Long, length: Long,
+      conf: Configuration): Iterator[(Long, String)] = {
+    val reader = open(path, start, length, conf)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+    Iterator.continually(reader.nextKeyValue())
+      .takeWhile { more => if (!more) reader.close(); more }
+      .map(_ => (reader.getCurrentKey.get, reader.getCurrentValue.toString))
+  }
+
+  /** The first line of the file at `path`, decompressed by its codec.
+    * It is read on the driver and starts no Spark job.
+    */
+  def firstLine(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = open(p, 0, p.getFileSystem(conf).getFileStatus(p).getLen, conf)
+    try Option.when(reader.nextKeyValue())(reader.getCurrentValue.toString)
+    finally reader.close()
+  }
+}
+
+/** The V1 side of the line formats, which Spark uses for catalog tables,
+  * streaming reads and writes: it refuses, where a V1 text format would
+  * read the file as something else.
+  */
+class NoV1Format extends FileFormat {
+  private def refuse = throw new UnsupportedOperationException(
+    "the gff3, vcf and obo sources only read, through spark.read.format(...).load")
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] = refuse
+  override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = refuse
+}
+
+private[sources] case class LineFileTable(format: LineFormat, name: String,
+    sparkSession: SparkSession, options: CaseInsensitiveStringMap, paths: Seq[String])
+    extends FileTable(sparkSession, options, paths, None) {
+  override def formatName: String = format.name
+  override def inferSchema(files: Seq[FileStatus]): Option[StructType] = Some(format.schema)
+  override def fallbackFileFormat: Class[_ <: FileFormat] = classOf[NoV1Format]
+  override def newScanBuilder(options: CaseInsensitiveStringMap): LineFileScanBuilder =
+    LineFileScanBuilder(format, sparkSession, fileIndex, dataSchema, mergedOptions(options))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    throw new UnsupportedOperationException(s"$name is read-only")
+}
+
+private[sources] case class LineFileScanBuilder(format: LineFormat,
+    sparkSession: SparkSession, fileIndex: PartitioningAwareFileIndex,
+    dataSchema: StructType, options: CaseInsensitiveStringMap)
+    extends FileScanBuilder(sparkSession, fileIndex, dataSchema) {
+
+  /** Equality and IN on string columns run in the reader, before a row
+    * is built.
+    */
+  override protected def pushDataFilters(dataFilters: Array[Filter]): Array[Filter] = {
+    val strings = dataSchema.fields.filter(_.dataType == StringType).map(_.name).toSet
+    dataFilters.filter {
+      case EqualTo(a, _: String) => strings(a)
+      case In(a, vs) => strings(a) && vs.forall(_.isInstanceOf[String])
       case _ => false
     }
   }
+
+  /** Spark's builder leaves every data filter to a Filter above the
+    * scan; the ones the reader applies are dropped from it.
+    */
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
+    super.pushFilters(filters).filterNot(e =>
+      new V2ExpressionBuilder(e, true).buildPredicate().exists(p => pushedFilters.contains(p)))
+
+  override def build(): Scan = LineFileScan(format, sparkSession, fileIndex, dataSchema,
+    readDataSchema(), readPartitionSchema(), options, pushedDataFilters,
+    partitionFilters, dataFilters)
 }
 
-/** One scan of the input files. The driver's Hadoop configuration
-  * (including `spark.hadoop.*` filesystem credentials) reaches the
-  * executor readers as one broadcast per reader factory, as Spark's own
-  * file scans do, rather than inside every task. The size estimate is
-  * the input's byte length scaled to the read columns, as for Spark's
-  * file scans, so joins above the scan plan as they would over a
-  * built-in file source.
-  */
-private[sources] class LineFileScan(
-    splits: Seq[LineFilePartition],
-    inputBytes: Long,
-    spark: SparkSession,
-    fullSchema: StructType,
-    required: StructType,
-    filters: Array[Filter],
-    commentPrefix: Char,
-    formatName: String) extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def estimateStatistics(): Statistics = {
-    val factor = spark.sessionState.conf.fileCompressionFactor
-    val size = (factor * inputBytes / fullSchema.defaultSize * required.defaultSize).toLong
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(size)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
+private[sources] case class LineFileScan(format: LineFormat, sparkSession: SparkSession,
+    fileIndex: PartitioningAwareFileIndex, dataSchema: StructType,
+    readDataSchema: StructType, readPartitionSchema: StructType,
+    options: CaseInsensitiveStringMap, pushedFilters: Array[Filter],
+    partitionFilters: Seq[Expression], dataFilters: Seq[Expression])
+    extends TextBasedFileScan(sparkSession, options) {
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val caseSensitive = options.asCaseSensitiveMap.asScala.toMap
+    LineFileReaderFactory(format, sparkSession.sparkContext.broadcast(new SerializableConfiguration(
+        sparkSession.sessionState.newHadoopConfWithOptions(caseSensitive))),
+      readDataSchema, readPartitionSchema, pushedFilters, new FileSourceOptions(caseSensitive))
   }
-  override def description(): String =
-    s"$formatName PushedFilters: ${filters.mkString("[", ", ", "]")}, " +
-      s"ReadSchema: ${required.catalogString}"
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    splits.map(p => p: InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LineFileReaderFactory(
-      spark.sparkContext.broadcast(
-        new SerializableConfiguration(spark.sessionState.newHadoopConf())),
-      fullSchema, required, filters, commentPrefix)
-}
 
-/** One line-aligned byte range of one file; `end == Long.MaxValue`
-  * means "whole file" (unsplittable / compressed).
-  */
-private[sources] case class LineFilePartition(path: String, start: Long, end: Long)
-    extends InputPartition
+  /** Names the format, and the filters the reader applies rather than
+    * the data filters: those it does not apply run in a Filter above
+    * the scan.
+    */
+  override def getMetaData(): Map[String, String] = super.getMetaData() - "DataFilters" ++
+    Map("Format" -> format.name, "PushedFilters" -> seqToString(pushedFilters.toSeq))
 
-private[sources] class LineFileReaderFactory(
-    conf: Broadcast[SerializableConfiguration],
-    fullSchema: StructType, required: StructType,
-    filters: Array[Filter], commentPrefix: Char)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new LineFileReader(partition.asInstanceOf[LineFilePartition],
-      conf.value.value, fullSchema, required, filters, commentPrefix)
-}
-
-private[sources] class LineFileReader(
-    split: LineFilePartition, conf: Configuration,
-    fullSchema: StructType, required: StructType,
-    filters: Array[Filter], commentPrefix: Char)
-    extends PartitionReader[InternalRow] {
-
-  private val gzipped = split.path.endsWith(".gz")
-  private var pos: Long = split.start
-  private val lineReader: LineReader = {
-    val hPath = new Path(split.path)
-    val fs = hPath.getFileSystem(conf)
-    val raw = fs.open(hPath)
-    if (gzipped) {
-      // not splittable: planner guarantees start == 0, end == MaxValue
-      new LineReader(new java.util.zip.GZIPInputStream(raw))
-    } else {
-      if (split.start > 0) raw.seek(split.start)
-      val lr = new LineReader(raw)
-      // discard the partial line the previous split owns
-      if (split.start > 0) pos += lr.readLine(new Text())
-      lr
-    }
+  override def equals(o: Any): Boolean = o match {
+    case s: LineFileScan => super.equals(s) && format == s.format
+    case _ => false
   }
-  private val text = new Text()
+}
 
-  private val colIndex: Map[String, Int] =
-    fullSchema.fieldNames.zipWithIndex.toMap
-  private val outIndexes: Array[Int] = required.fieldNames.map(colIndex)
-  private val outTypes: Array[DataType] =
-    required.fieldNames.map(n => fullSchema(n).dataType)
+/** Keeps the rows that pass the pushed filters and types the read
+  * columns; a value that does not parse names its line's byte offset,
+  * its column and itself (Spark's reader loop adds the file).
+  */
+private[sources] case class LineFileReaderFactory(format: LineFormat,
+    conf: Broadcast[SerializableConfiguration], readDataSchema: StructType,
+    partitionSchema: StructType, filters: Array[Filter], options: FileSourceOptions)
+    extends FilePartitionReaderFactory {
 
-  private def rowPasses(cols: Array[String]): Boolean =
-    filters.forall {
-      case EqualTo(a, v: String) => cols(colIndex(a)) == v
-      case In(a, vs) => vs.exists(_ == cols(colIndex(a)))
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val index = format.schema.fieldNames.zipWithIndex.toMap
+    val read = readDataSchema.fields.map(f => (index(f.name), f))
+    def passes(values: Array[String]) = filters.forall {
+      case EqualTo(a, v) => values(index(a)) == v
+      case In(a, vs) => vs.contains(values(index(a)))
       case _ => true
     }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    // read lines while the line START is within (start, end]
-    while (pos <= split.end) {
-      val consumed = lineReader.readLine(text)
-      if (consumed == 0) return false // EOF
-      pos += consumed
-      val line = text.toString
-      if (line.nonEmpty && line.charAt(0) != commentPrefix && line.trim.nonEmpty) {
-        val cols = line.split("\t", -1)
-        if (cols.length >= fullSchema.size && rowPasses(cols)) {
-          current = project(cols)
-          return true
+    def typed(offset: Long, v: String, f: StructField): Any =
+      try {
+        if (v == null) null
+        else f.dataType match {
+          case LongType => v.toLong
+          case DoubleType => v.toDouble
+          case IntegerType => v.toInt
+          case _ => UTF8String.fromString(v)
         }
+      } catch {
+        case e: NumberFormatException => throw new IllegalArgumentException(
+          s"line at byte $offset: ${f.name} '$v' is not a ${f.dataType.simpleString}", e)
       }
+    val rows = format.rows(file, conf.value.value).collect {
+      case (offset, values) if passes(values) =>
+        new GenericInternalRow(read.map { case (i, f) => typed(offset, values(i), f) }): InternalRow
     }
-    false
+    new PartitionReaderWithPartitionValues(new PartitionReaderFromIterator(rows),
+      readDataSchema, partitionSchema, file.partitionValues)
   }
-
-  private def project(cols: Array[String]): InternalRow = {
-    val row = new GenericInternalRow(outIndexes.length)
-    var i = 0
-    while (i < outIndexes.length) {
-      val v = cols(outIndexes(i))
-      if (v == "." || v.isEmpty) row.setNullAt(i)
-      else outTypes(i) match {
-        case LongType => row.setLong(i, v.toLong)
-        case DoubleType => row.setDouble(i, v.toDouble)
-        case IntegerType => row.setInt(i, v.toInt)
-        case _ => row.update(i, UTF8String.fromString(v))
-      }
-      i += 1
-    }
-    row
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = lineReader.close()
 }

@@ -1,29 +1,27 @@
 package graft.sources
 
 import scala.collection.mutable
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.util.LineReader
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.types.StructType
 
 /** OBO ontology source (SURVEY.md §2.1 S6, §7.4): `[Term]`-delimited
-  * multi-line stanzas. Stanzas span lines, so this is not a row-per-line
-  * scan — the scan distributes on `LineFileProvider`'s byte-range
-  * splits with STANZA-boundary ownership: a split owns a stanza iff it
-  * owns the stanza's `[Term]` line (the same first-byte-in-range rule
-  * Hadoop uses for lines), and a reader keeps consuming past its range
-  * end until the next split's first `[Term]` so every stanza is parsed
-  * exactly once. Real ontologies are ≤ tens of MB (one split), but a
-  * multi-GB OBO fans out across the cluster instead of serializing
-  * onto one core. Gzip files are unsplittable and read whole.
+  * multi-line stanzas, read as `spark.read.format("obo")` on the same
+  * Spark file-source classes as the `gff3`/`vcf` sources (see
+  * [[LineFileSource]]), so a multi-GB OBO fans out over Spark's
+  * line-aligned byte-range splits and a gzip file is one split.
+  * Ownership is per STANZA: a split owns a stanza iff it owns the
+  * stanza's `[Term]` line (the first-byte-in-range rule Hadoop's
+  * `LineRecordReader` uses for lines), and reads on past its range end
+  * up to the next `[Term]`, so every stanza is parsed exactly once.
   *
   * Splitting is transparent to the stanza parser because every bit of
   * parser state is confined to the segment between consecutive
   * `[Term]` lines: a pending term flushes exactly when the next
-  * `[Term]` opens (= the next split's first owned line) or at EOF, and
-  * intervening non-Term stanzas only stop line processing within the
-  * segment.
+  * `[Term]` opens (= the next split's first owned stanza) or at the end
+  * of the split's lines, and intervening non-Term stanzas only stop
+  * line processing within the segment.
   *
   * Faithful to the reference parser (`import_ontology.py:192-268`):
   *  - a pending term is flushed when the next `[Term]` opens, and once
@@ -84,90 +82,38 @@ object Obo {
     out.iterator
   }
 
-  /** The segment of lines a split owns: from its first owned `[Term]`
-    * line through the line before the next split's first `[Term]`.
-    * Ownership follows `LineFileReader`'s convention — seek to
-    * `start`, discard the partial first line when `start > 0`, own
-    * lines whose first byte is ≤ `end` — extended to stanzas via their
-    * `[Term]` header line. Lazy: lines stream off the open file and
-    * the handle closes at segment end.
+  /** `spark.read.format("obo")` as typed events: the stanzas of each
+    * split parse on the executors, and splits keep file order, so the
+    * events equal a sequential parse of the whole file.
     */
-  private def stanzaLines(split: LineFilePartition,
-      conf: org.apache.hadoop.conf.Configuration): Iterator[String] = {
-    val hPath = new Path(split.path)
-    val fs = hPath.getFileSystem(conf)
-    val raw = fs.open(hPath)
-    var pos = split.start
-    val lr =
-      if (split.path.endsWith(".gz")) {
-        // unsplittable: planner guarantees start == 0, end == MaxValue
-        new LineReader(new java.util.zip.GZIPInputStream(raw))
-      } else {
-        if (split.start > 0) raw.seek(split.start)
-        val r = new LineReader(raw)
-        if (split.start > 0) pos += r.readLine(new Text())
-        r
-      }
-    val text = new Text()
-    new Iterator[String] {
-      private var collecting = false
-      private var nextLine: String = null
-      private var done = false
+  def read(spark: SparkSession, path: String): Dataset[OboEvent] =
+    spark.read.format("obo").load(path).as[OboEvent](Encoders.product[OboEvent])
 
-      private def isTermHeader(s: String) = s.trim.startsWith("[Term]")
+  private def isTermHeader(line: String) = line.trim.startsWith("[Term]")
 
-      private def advance(): Unit = {
-        while (nextLine == null && !done) {
-          val lineStart = pos
-          if (!collecting && lineStart > split.end) { finish(); return }
-          val n = lr.readLine(text)
-          if (n == 0) { finish(); return } // EOF
-          pos += n
-          val line = text.toString
-          if (!collecting) {
-            if (isTermHeader(line)) { collecting = true; nextLine = line }
-          } else {
-            if (isTermHeader(line) && lineStart > split.end) finish()
-            else nextLine = line
-          }
-        }
-      }
-
-      private def finish(): Unit = { done = true; lr.close() }
-
-      override def hasNext: Boolean = {
-        if (nextLine == null && !done) advance()
-        nextLine != null
-      }
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        val l = nextLine; nextLine = null; l
-      }
+  /** The event columns, and the lines of a split as the stanzas it
+    * owns: its own lines, whose first `[Term]` opens its first stanza,
+    * then the lines after it up to the next `[Term]`, which end its last
+    * stanza. Lines before a split's first `[Term]` end the previous
+    * split's last stanza, and `parseLines` ignores them. Every column is
+    * a string, so no value fails to parse; a row's offset is its split's.
+    */
+  private[sources] object Format extends LineFormat {
+    override val name = "obo"
+    override val schema: StructType = Encoders.product[OboEvent].schema
+    override def rows(file: PartitionedFile, conf: Configuration): Iterator[(Long, Array[String])] = {
+      val end = file.start + file.length
+      def tail =
+        if (end >= file.fileSize) Iterator.empty
+        else LineFileSource.lines(file.toPath, end, file.fileSize - end, conf)
+          .takeWhile(l => !isTermHeader(l._2))
+      parseLines((LineFileSource.lines(file.toPath, file.start, file.length, conf) ++ tail)
+        .map(_._2))
+        .map(e => (file.start, Array(e.kind, e.id, e.name.orNull, e.namespace.orNull,
+          e.definition.orNull, e.parent.orNull)))
     }
   }
-
-  /** Distributed stanza scan: plan the same line-aligned byte-range
-    * splits as the GFF3/VCF sources, parse each split's owned stanzas
-    * executor-side. Split order = byte order, so the event stream is
-    * identical to a sequential parse of the whole file. The Hadoop
-    * configuration reaches the tasks as one broadcast per read.
-    *
-    * @param maxSplitBytes override split size (default: the size
-    *                      Spark's file sources pick, see
-    *                      `LineFileProvider.resolveSplits`)
-    */
-  def read(spark: SparkSession, path: String,
-      maxSplitBytes: Option[Long] = None): Dataset[OboEvent] = {
-    import spark.implicits._
-    val options = Map("path" -> path) ++
-      maxSplitBytes.map(b => "maxsplitbytes" -> b.toString)
-    val splits = LineFileProvider.resolveSplits(options,
-      LineFileProvider.resolveFiles(options))
-    val conf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val events = spark.sparkContext
-      .parallelize(splits, math.max(splits.size, 1))
-      .flatMap(sp => parseLines(stanzaLines(sp, conf.value.value)))
-    spark.createDataset(events)
-  }
 }
+
+/** `spark.read.format("obo")`: one row per [[Obo.OboEvent]]. */
+class OboDataSource extends LineFileSource(Obo.Format)

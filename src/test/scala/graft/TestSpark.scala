@@ -37,6 +37,20 @@ object TestSpark {
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
+
+  /** Runs `body` with the session confs `kv` set, then restores them.
+    * A file scan sizes its splits when it is planned, so plan and run
+    * the reads inside `body`.
+    */
+  def withConf[A](session: SparkSession)(kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> session.conf.getOption(k) }
+    kv.foreach { case (k, v) => session.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
+  }
 }
 
 /** A `GRAFT_PERF` spec's own `local[32]` session in the shared shape,

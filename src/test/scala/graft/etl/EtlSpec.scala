@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.model.EtlOptions
+import graft.sources.Gff3
 
 /** Golden-output tests per ETL pipeline over the handcrafted fixtures
   * (FIXTURES.md §A; every cited behavior from SURVEY.md §2 has a case).
@@ -80,6 +81,20 @@ class EtlSpec extends AnyFunSuite {
       FeaturesEtl.load(spark, fx("blocks_humanrat.txt"), 1)
     }
     assert(ex.getMessage.contains("gff-version 3"))
+  }
+
+  test("features: D3 keep-first picks the earlier row when its duplicate sits in a later split") {
+    // Spark sorts a file's splits by length before packing them into
+    // partitions; the file's order must survive that for `__ord`
+    val filler = (1 to 400).map(i => s"1\tMGI\tQTL\t$i\t${i + 9}\t.\t.\t.\tID=F$i;Dbxref=MGI:$i")
+    val path = tmpInput(".gff3", (Seq("##gff-version 3",
+      "1\tMGI\tQTL\t5\t9\t.\t.\t.\tID=DUP;Dbxref=MGI:1;Name=first") ++ filler :+
+      "1\tMGI\tQTL\t5\t9\t.\t.\t.\tID=DUP;Dbxref=MGI:1;Name=second"): _*)
+    TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> "1024") {
+      assert(Gff3.read(spark, path).rdd.getNumPartitions > 10)
+      val dup = FeaturesEtl.load(spark, path, 10090).filter("id = 'DUP'").collect()
+      assert(dup.map(_.getAs[String]("name")).toSeq === Seq("first"))
+    }
   }
 
   /** A GFF3 or VCF file with the given body lines. */
@@ -177,6 +192,15 @@ class EtlSpec extends AnyFunSuite {
     assert(reverse.getAs[Int]("ref_taxon_id") === 9606)
   }
 
+  test("homologs: a blank line is skipped, a short non-blank line aborts") {
+    val rows = scala.io.Source.fromFile(fx("homologs_mousehuman.tsv")).getLines().toSeq
+    val blank = HomologsEtl.load(spark,
+      tmpInput(".tsv", (rows.take(2) ++ Seq("", "   ") ++ rows.drop(2)): _*))
+    assert(blank.numRecords === 8 && blank.homologs.count() === 6)
+    val short = HomologsEtl.load(spark, tmpInput(".tsv", (rows.take(2) :+ "orthologue\t10090") ++ rows.drop(2): _*))
+    assert(intercept[Exception](short.homologs.count()).getMessage.contains("INVALID_ARRAY_INDEX"))
+  }
+
   test("homologs: missing header column aborts (V3)") {
     val ex = intercept[IllegalArgumentException] {
       HomologsEtl.load(spark, fx("homologs_missing_col.tsv"))
@@ -258,6 +282,39 @@ class EtlSpec extends AnyFunSuite {
       ("GeneID:100", "GO:0002", 10090),
       ("GeneID:200", "GO:0004", 9606),
       ("MGI:101", "MP:0002", 10090)))
+  }
+
+  test("gaf: cross-file last-wins holds past 117 partitions of the first file") {
+    // the in-file ordinal carries the partition index from bit 33 up:
+    // partition 117 of file 0 reaches 117 * 2^33 > 1e12
+    def gafLine(gene: String, term: String, taxon: Int) =
+      (Seq("DB", gene, "SYM", "", term, "REF", "EV", "", "P", "name", "", "protein",
+        s"taxon:$taxon", "20210101", "AA") ++ Seq.fill(2)("")).mkString("\t")
+    val first = tmpInput(".gaf", ((1 to 2000).map(i => gafLine(s"G$i", "GO:0001", 9606)) :+
+      gafLine("GeneID:7", "GO:0009", 9606)): _*)
+    val second = tmpInput(".gaf", gafLine("GeneID:7", "GO:0009", 10090))
+    TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> "1024") {
+      assert(spark.read.option("sep", "\t").csv(first).rdd.getNumPartitions > 117)
+      val kept = OntologyEtl.loadGafs(spark, Seq((first, 9606), (second, 10090)))
+        .filter("gene_id = 'GeneID:7'").collect()
+      assert(kept.toSeq === Seq(Row("GeneID:7", "GO:0009", 10090)))
+    }
+  }
+
+  test("ontology: no cache entry outlives a load, and a rewritten OBO is read fresh") {
+    val obo = java.nio.file.Paths.get(TestSpark.scratchDir("graft_obo"), "go.obo")
+    def load(): Set[String] = {
+      val out = TestSpark.scratchDir("graft_obo_out")
+      Pipeline.writeObserved(Pipeline.run(spark, Pipeline.Inputs(obo = Seq(obo.toString))), out)
+      assert(graft.sources.Obo.read(spark, obo.toString).queryExecution.withCachedData
+        .collectFirst { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }
+        .isEmpty)
+      spark.read.parquet(s"$out/on_terms").collect().map(_.getAs[String]("id")).toSet
+    }
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fx("ontology_mp.obo")), obo)
+    assert(load() === Set("MP:0001", "MP:0002"))
+    java.nio.file.Files.writeString(obo, "[Term]\nid: MP:0009\nname: rewritten\n")
+    assert(load() === Set("MP:0009"))
   }
 
   // ---- pipeline (A9) ----------------------------------------------

@@ -8,10 +8,12 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** The gff3 DataSourceV2: typed read, results identical to an
+/** The gff3 file source: typed read, results identical to an
   * independent csv-based reference reader, column pruning and filter
-  * pushdown visible in the plan, gzip transparency, cache reuse across
-  * reads, and a reader factory that carries no Hadoop configuration.
+  * pushdown visible in the plan, Spark's split sizing and path
+  * handling, gzip transparency, cache reuse across reads, a reader
+  * factory that carries no Hadoop configuration, a read error that
+  * names the bad value, and no V1 fallback.
   */
 class Gff3DataSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -79,34 +81,43 @@ class Gff3DataSourceSpec extends AnyFunSuite {
     val big = Files.createTempFile("graft_big", ".gff3")
     val body = (1 to 200).map(_ => base).mkString("\n")
     Files.write(big, body.getBytes("UTF-8"))
+    val key = concat_ws("|", col("seqid"), col("start"), col("attributes"))
+    def keyCounts(df: DataFrame) = df.select(key.as("k")).groupBy("k").count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val whole = spark.read.format("gff3").load(big.toString)
-    val split = spark.read.format("gff3")
-      .option("maxSplitBytes", "4096").load(big.toString)
-    assert(split.rdd.getNumPartitions > 1,
-      s"expected >1 split, got ${split.rdd.getNumPartitions}")
-    assert(whole.rdd.getNumPartitions < split.rdd.getNumPartitions)
+    val (splitParts, splitCount, a) =
+      TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> "4096") {
+        val split = spark.read.format("gff3").load(big.toString)
+        (split.rdd.getNumPartitions, split.count(), keyCounts(split))
+      }
+    assert(splitParts > 1, s"expected >1 split, got $splitParts")
+    assert(whole.rdd.getNumPartitions < splitParts)
     // every line lands in exactly one split: counts and full row
     // multisets agree between the split and unsplit reads
-    assert(split.count() == whole.count() && whole.count() > 0)
-    val key = concat_ws("|", col("seqid"), col("start"), col("attributes"))
-    val a = split.select(key.as("k")).groupBy("k").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val b = whole.select(key.as("k")).groupBy("k").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(a == b)
+    assert(splitCount == whole.count() && splitCount > 0)
+    assert(a == keyCounts(whole))
   }
 
   test("without maxSplitBytes, splits are sized like Spark's file sources") {
     // input spread over the 4 cores of the test session, at least the
-    // 4 MB open cost, at most the 128 MB partition cap
+    // 4 MB open cost, at most the 128 MB partition cap; planning only,
+    // so the sparse files are never read
     assert(spark.sparkContext.defaultParallelism == 4)
+    val dir = TestSpark.scratchPath("graft_sizes")
+    def sparse(name: String, bytes: Long): String = {
+      val f = new java.io.RandomAccessFile(dir.resolve(name).toFile, "rw")
+      try f.setLength(bytes) finally f.close()
+      dir.resolve(name).toString
+    }
+    def parts(paths: String*) = spark.read.format("gff3").load(paths: _*).rdd.getNumPartitions
     val mb = 1L << 20
-    def splits(sizes: Long*) = LineFileProvider.resolveSplits(Map.empty,
-      sizes.zipWithIndex.map { case (n, i) => s"f$i.gff3" -> n })
-    assert(splits(24 * mb).map(_.start) == Seq(0L, 7 * mb, 14 * mb, 21 * mb))
-    assert(splits(2 * mb).size == 1)
-    assert(splits(1024 * mb).size == 8)
-    assert(splits(2 * mb, 2 * mb).size == 2)
+    try {
+      assert(parts(sparse("a.gff3", 24 * mb)) == 4)
+      assert(parts(sparse("b.gff3", 2 * mb)) == 1)
+      assert(parts(dir.resolve("b.gff3").toString, sparse("c.gff3", 2 * mb)) == 2)
+      assert(parts(sparse("d.gff3", 1024 * mb)) == 8)
+    } finally Seq("a", "b", "c", "d").foreach(n =>
+      java.nio.file.Files.deleteIfExists(dir.resolve(s"$n.gff3")))
   }
 
   test("multi-path load (DataFrameReader encodes paths as a JSON array)") {
@@ -118,17 +129,15 @@ class Gff3DataSourceSpec extends AnyFunSuite {
   }
 
   test("paths option: glob starting with a character class is not mistaken for JSON") {
-    // `[ab]*.gff3` starts with '[' but is a Hadoop glob, not a JSON
-    // array — it must fall through to path interpretation, not throw
-    assert(LineFileProvider.parsePathsOption("[gf]*.gff3") == Seq("[gf]*.gff3"))
-    assert(LineFileProvider.parsePathsOption("""["p1.gff3","p2.gff3"]""") ==
-      Seq("p1.gff3", "p2.gff3"))
-    assert(LineFileProvider.parsePathsOption("a.gff3, b.gff3") ==
-      Seq("a.gff3", "b.gff3"))
-    // glob resolves end-to-end through the reader
+    // `[gf]enes_human.gff3` starts with '[' but is a Hadoop glob, not a
+    // JSON array — it resolves as a path, next to a `load(p1, p2)`,
+    // which reaches the source as a JSON-array `paths` option
     val n = spark.read.format("gff3").load(s"$fx/[gf]enes_human.gff3").count()
     val plain = spark.read.format("gff3").load(s"$fx/genes_human.gff3").count()
     assert(n == plain && n > 0)
+    val both = spark.read.format("gff3")
+      .load(s"$fx/[gf]enes_human.gff3", s"$fx/features_rat.gff3").count()
+    assert(both == plain + spark.read.format("gff3").load(s"$fx/features_rat.gff3").count())
   }
 
   test("gzip files decompress transparently") {
@@ -172,5 +181,26 @@ class Gff3DataSourceSpec extends AnyFunSuite {
     // measured on the fixtures: ~2.6 KB each with the conf broadcast,
     // ~115 KB each when the factory carried the conf itself
     assert(gff < 8192 && vcf < 8192, s"gff3 $gff B, vcf $vcf B")
+  }
+
+  test("a malformed number names the file, the line's byte offset and the column") {
+    val f = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(TestSpark.scratchDir("graft_bad")), "bad", ".gff3")
+    java.nio.file.Files.write(f, ("##gff-version 3\n" +
+      "chr1\tsrc\tgene\tabc\t20\t.\t+\t.\tID=g1\n").getBytes("UTF-8"))
+    val ex = intercept[Exception](spark.read.format("gff3").load(f.toString).collect())
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(chain.contains(f.getFileName.toString), chain)
+    assert(chain.contains("byte 16") && chain.contains("start 'abc'"), chain)
+  }
+
+  test("a V1 fallback refuses instead of reading the file as another format") {
+    val ex = intercept[Exception] {
+      TestSpark.withConf(spark)("spark.sql.sources.useV1SourceList" -> "gff3") {
+        spark.read.format("gff3").load(s"$fx/genes_human.gff3").collect()
+      }
+    }
+    assert(ex.getMessage.contains("only read"), ex.toString)
   }
 }

@@ -44,12 +44,14 @@ class OboSplitSpec extends AnyFunSuite {
     }
     assert(sequential.nonEmpty)
     for (splitBytes <- Seq(512L, 1777L, 4096L, 50000L)) {
-      val ds = Obo.read(spark, bigObo, maxSplitBytes = Some(splitBytes))
-      val parts = ds.rdd.getNumPartitions
-      if (splitBytes <= 4096L)
-        assert(parts > 1, s"splitBytes=$splitBytes planned only $parts partition(s)")
-      val got = ds.collect().toVector
-      assert(got == sequential, s"splitBytes=$splitBytes diverged from sequential parse")
+      TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> splitBytes.toString) {
+        val ds = Obo.read(spark, bigObo)
+        val parts = ds.rdd.getNumPartitions
+        if (splitBytes <= 4096L)
+          assert(parts > 1, s"splitBytes=$splitBytes planned only $parts partition(s)")
+        val got = ds.collect().toVector
+        assert(got == sequential, s"splitBytes=$splitBytes diverged from sequential parse")
+      }
     }
   }
 

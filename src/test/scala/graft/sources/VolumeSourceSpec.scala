@@ -47,6 +47,16 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     (out.toString, reps)
   }
 
+  /** `df` planned with each file in one split, as a frame over its RDD,
+    * so that later actions keep that plan.
+    */
+  private def unsplit(df: => org.apache.spark.sql.DataFrame) =
+    graft.TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> Long.MaxValue.toString,
+        "spark.sql.files.minPartitionNum" -> "1") {
+      val d = df
+      spark.createDataFrame(d.rdd, d.schema)
+    }
+
   /** Expected splits of one `size`-byte file at the default split size. */
   private def defaultParts(size: Long): Int = {
     val conf = spark.sessionState.conf
@@ -72,8 +82,7 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     assert(split.count() === base * reps,
       "split read lost or duplicated lines at split boundaries")
     // row multiset parity against a deliberately unsplit read
-    val whole = spark.read.format("gff3")
-      .option("maxSplitBytes", Long.MaxValue.toString).load(path)
+    val whole = unsplit(spark.read.format("gff3").load(path))
     assert(whole.rdd.getNumPartitions === 1)
     val key = concat_ws("|", col("seqid"), col("start"), col("attributes"))
     val a = split.groupBy(key.as("k")).count()
@@ -94,8 +103,7 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     val base = spark.read.format("vcf")
       .load(graft.TestSpark.fixture("variants_human.vcf")).count()
     assert(split.count() === base * reps)
-    val whole = spark.read.format("vcf")
-      .option("maxSplitBytes", Long.MaxValue.toString).load(path)
+    val whole = unsplit(spark.read.format("vcf").load(path))
     val key = concat_ws("|", col("chrom"), col("pos"), col("id"), col("alt"))
     val a = split.groupBy(key.as("k")).count()
     val b = whole.groupBy(key.as("k")).count()
@@ -135,12 +143,11 @@ class VolumeSourceSpec extends AnyFunSuite with graft.PerfSession {
     val parts = split.rdd.getNumPartitions
     info(s"obo: $size bytes ($n stanzas) planned $parts partitions")
     assert(parts === expectedParts && parts > 1)
-    val whole = Obo.read(spark, out.toString,
-      maxSplitBytes = Some(Long.MaxValue))
+    val whole = unsplit(Obo.read(spark, out.toString).toDF())
     assert(whole.rdd.getNumPartitions === 1)
     // full-row multiset parity: every stanza owned by exactly one split
-    assert(split.toDF().exceptAll(whole.toDF()).isEmpty
-      && whole.toDF().exceptAll(split.toDF()).isEmpty)
+    assert(split.toDF().exceptAll(whole).isEmpty
+      && whole.exceptAll(split.toDF()).isEmpty)
     assert(split.count() === whole.count())
     Files.delete(out)
   }
