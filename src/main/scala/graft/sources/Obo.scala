@@ -100,7 +100,7 @@ object Obo {
     */
   private[sources] object Format extends LineFormat {
     override val name = "obo"
-    override val schema: StructType = Encoders.product[OboEvent].schema
+    override lazy val schema: StructType = Encoders.product[OboEvent].schema
     override def rows(file: PartitionedFile, conf: Configuration): Iterator[(Long, Array[String])] = {
       val end = file.start + file.length
       def tail =
