@@ -97,7 +97,7 @@ class EtlSpec extends AnyFunSuite {
     }
   }
 
-  /** A GFF3 or VCF file with the given body lines. */
+  /** An input file with the given lines. */
   def tmpInput(suffix: String, lines: String*): String = {
     val f = java.nio.file.Files.createTempFile(
       java.nio.file.Paths.get(graft.TestSpark.scratchDir("graft_odd")), "in", suffix)
@@ -193,11 +193,13 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("homologs: a blank line is skipped, a short non-blank line aborts") {
-    val rows = scala.io.Source.fromFile(fx("homologs_mousehuman.tsv")).getLines().toSeq
-    val blank = HomologsEtl.load(spark,
-      tmpInput(".tsv", (rows.take(2) ++ Seq("", "   ") ++ rows.drop(2)): _*))
+    val rows = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(fx("homologs_mousehuman.tsv"))).asScala.toSeq
+    def withRows(extra: String*) = HomologsEtl.load(spark,
+      tmpInput(".tsv", (rows.take(2) ++ extra ++ rows.drop(2)): _*))
+    val blank = withRows("", "   ")
     assert(blank.numRecords === 8 && blank.homologs.count() === 6)
-    val short = HomologsEtl.load(spark, tmpInput(".tsv", (rows.take(2) :+ "orthologue\t10090") ++ rows.drop(2): _*))
+    val short = withRows("orthologue\t10090")
     assert(intercept[Exception](short.homologs.count()).getMessage.contains("INVALID_ARRAY_INDEX"))
   }
 
