@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.EtlOptions
 import graft.operators.Dedup
-import graft.sources.Gff3
+import graft.sources.{Gff3, InputFiles}
 
 /** Feature/QTL table from hand-rolled GFF3 (reference
   * `import_features.py:62-211`).
@@ -24,7 +24,11 @@ import graft.sources.Gff3
   *    source nulls the 8 fixed columns, the stripped seq_id and the
   *    attribute values are nulled here;
   *  - D3: duplicate PK (source, taxon_id, id, dbxref) keeps the first
-  *    row in file order and continues (`:203-211`).
+  *    row in file order and continues (`:203-211`); across two files of
+  *    one taxon the earlier file's row is first.
+  *
+  * Every species file is read in one `gff3` scan; each row's taxon is
+  * its file's.
   */
 object FeaturesEtl {
 
@@ -50,17 +54,18 @@ object FeaturesEtl {
     baseBlacklist ++ (if (opts.fixBlacklist) notCurrentlyUsedFixed
                       else notCurrentlyUsedBuggy)
 
-  def load(spark: SparkSession, path: String, taxonId: Int,
-      opts: EtlOptions = EtlOptions()): DataFrame = {
-    Gff3.assertVersionPragma(spark, path)
+  /** The feature table of every species file, from one scan. */
+  def load(spark: SparkSession, files: Seq[Pipeline.SpeciesFile],
+      opts: EtlOptions): DataFrame = {
+    files.foreach(f => Gff3.assertVersionPragma(spark, f.path))
     // a `.` type is null in the source and is not blacklisted
-    val raw = Gff3.read(spark, path)
+    val raw = Gff3.read(spark, files.map(_.path))
       .filter(col("type").isNull ||
         !col("type").isin(blacklist(opts).toSeq.map(x => x: Any): _*))
 
     def a(name: String) = Gff3.dotToNull(Gff3.attr(col("attributes"), name))
     val projected = raw.select(
-      lit(taxonId).as("taxon_id"),
+      InputFiles.perFile(files.map(_.taxonId)).as("taxon_id"),
       Gff3.dotToNull(Gff3.chrStripAnchored(col("seqid"))).as("seq_id"),
       col("source"), col("type"), col("start"), col("end"), col("score"),
       col("strand"), col("phase"),
@@ -70,11 +75,17 @@ object FeaturesEtl {
       a("bioType").as("bio_type"),
       a("Status").as("status"),
       a("Parent").as("parent"),
+      col(InputFiles.Column),
       col("__ord"))
 
     Dedup.keepFirst(projected,
       keys = Seq("source", "taxon_id", "id", "dbxref"),
-      ord = Seq(col("__ord")),
-      keep = projected.columns.filterNot(_ == "__ord").toSeq)
+      ord = Seq(col(InputFiles.Column), col("__ord")),
+      keep = projected.columns.filterNot(Set(InputFiles.Column, "__ord")).toSeq)
   }
+
+  /** [[load]] of one species file. */
+  def load(spark: SparkSession, path: String, taxonId: Int,
+      opts: EtlOptions = EtlOptions()): DataFrame =
+    load(spark, Seq(Pipeline.SpeciesFile(path, taxonId)), opts)
 }

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.Gff3
+import graft.sources.{Gff3, InputFiles}
 
 /** Genes + exons from GFF3 (reference `import_genes_exons.py:80-139`).
   *
@@ -11,8 +11,10 @@ import graft.sources.Gff3
   * exons); here the flat GFF3 rows are split relationally: top-level
   * rows (no `Parent` attribute) are genes, `Parent`-bearing rows are
   * exons, and the exon's `parent_gene` (the gene's Dbxref id) comes
-  * from an equi-join exon.Parent = gene.ID — broadcastable when the
-  * gene side is dimension-sized, a plain hash join otherwise.
+  * from an equi-join on (file, exon.Parent = gene.ID) — an exon links
+  * only to a gene of its own file; broadcastable when the gene side is
+  * dimension-sized, a plain hash join otherwise. Every species file is
+  * read in one `gff3` scan; each row's taxon is its file's.
   *
   * Fidelity (SURVEY.md §7.6):
   *  - F7: genes without `Dbxref` are skipped (with a counter), not
@@ -25,7 +27,9 @@ import graft.sources.Gff3
   *  - gene_id/symbol take the *first* comma-separated attribute value
   *    (BCBio qualifier lists, `[0]`);
   *  - D2: any duplicate (gene_id, taxonid, chr) or (exon_id, taxonid,
-  *    chr) aborts the load (`:120-126,130-136`).
+  *    chr) aborts the load (`:120-126,130-136`), within one file or
+  *    across two files of one taxon (the reference loads every file
+  *    into one table), and names the key.
   */
 object GenesExonsEtl {
 
@@ -37,8 +41,10 @@ object GenesExonsEtl {
     lazy val skippedNoDbxref: Long = skipped
   }
 
-  def load(spark: SparkSession, path: String, taxonId: Int): Result = {
-    val raw = Gff3.read(spark, path)
+  /** The gene and exon tables of every species file, from one scan. */
+  def load(spark: SparkSession, files: Seq[Pipeline.SpeciesFile]): Result = {
+    val raw = Gff3.read(spark, files.map(_.path))
+    val taxon = InputFiles.perFile(files.map(_.taxonId))
     val withParent = raw.withColumn("__parent", Gff3.attr(col("attributes"), "Parent"))
 
     val geneRows = withParent.filter(col("__parent").isNull)
@@ -48,7 +54,7 @@ object GenesExonsEtl {
       .filter(col("__dbxref").isNotNull)
       .select(
         col("__dbxref").as("gene_id"),
-        lit(taxonId).as("gene_taxonid"),
+        taxon.as("gene_taxonid"),
         Gff3.attrFirst(col("attributes"), "Symbol").as("gene_symbol"),
         Gff3.chrStripReplaceAll(col("seqid")).as("gene_chr"),
         (col("start") - 1).as("gene_start_pos"),
@@ -62,15 +68,19 @@ object GenesExonsEtl {
       .select(
         Gff3.attr(col("attributes"), "ID").as("exon_id"),
         col("__parent"),
+        col(InputFiles.Column),
+        taxon.as("taxonid"),
         Gff3.chrStripReplaceAll(col("seqid")).as("exon_chr"),
         (col("start") - 1).as("exon_start_pos"),
         col("end").as("exon_end_pos"))
     val geneIds = geneRows.filter(col("__dbxref").isNotNull)
       .select(Gff3.attr(col("attributes"), "ID").as("__gene_row_id"),
+        col(InputFiles.Column).as("__gene_file"),
         col("__dbxref").as("parent_gene"))
     val exons = exonSide
-      .join(geneIds, exonSide("__parent") === geneIds("__gene_row_id"))
-      .select(col("exon_id"), col("parent_gene"), lit(taxonId).as("taxonid"),
+      .join(geneIds, exonSide(InputFiles.Column) === geneIds("__gene_file") &&
+        exonSide("__parent") === geneIds("__gene_row_id"))
+      .select(col("exon_id"), col("parent_gene"), col("taxonid"),
         col("exon_chr"), col("exon_start_pos"), col("exon_end_pos"))
 
     new Result(
@@ -78,4 +88,8 @@ object GenesExonsEtl {
       Dedup.assertNoDuplicateKeys(exons, Seq("exon_id", "taxonid", "exon_chr")),
       geneRows.filter(col("__dbxref").isNull).count())
   }
+
+  /** [[load]] of one species file. */
+  def load(spark: SparkSession, path: String, taxonId: Int): Result =
+    load(spark, Seq(Pipeline.SpeciesFile(path, taxonId)))
 }

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.{Gff3, LineFileSource}
+import graft.sources.{Gff3, InputFiles, LineFileSource}
 
 /** Homolog table from header-validated TSV (reference
   * `import_homologs.py:79-150`).
@@ -18,9 +18,11 @@ import graft.sources.{Gff3, LineFileSource}
   *
   * Semantics: C2 anchored chr strip on both seqids (`:124-127`);
   * V5 non-'orthologue' type warns but loads (`:129-132`); U2 each row
-  * lands both ways (`:134-141`); D1 `INSERT OR REPLACE` on
-  * (ref_gene_id, ref_taxon_id, comp_gene_id, comp_taxon_id) — last in
-  * file order wins, reverse copy after its forward twin.
+  * lands both ways (`:134-141`), as one `explode` of its forward and
+  * reverse structs; D1 `INSERT OR REPLACE` on (ref_gene_id,
+  * ref_taxon_id, comp_gene_id, comp_taxon_id) into the one table every
+  * file loads into — last in (file, line) order wins, reverse copy
+  * after its forward twin. Every file is read in one text scan.
   */
 object HomologsEtl {
 
@@ -38,20 +40,24 @@ object HomologsEtl {
     lazy val unexpectedTypes: Long = unexpectedTypesDf
   }
 
-  def load(spark: SparkSession, path: String): Result = {
-    // V3 — header-set validation (driver-side single line, no job).
-    val headerLine = LineFileSource.firstLine(spark, path).getOrElse("")
-    val header = headerLine.stripPrefix("##").split("\t").map(_.trim.toLowerCase).toSeq
-    val missing = requiredColumns.filterNot(header.contains)
-    require(missing.isEmpty, s"$path: missing homolog header column(s): " +
-      missing.mkString(", "))
-    header.filterNot(requiredColumns.contains)
-      .foreach(c => System.err.println(s"[homologs] ignoring extra column $c"))
+  /** The homolog table of `paths`, loaded in that order, from one scan. */
+  def load(spark: SparkSession, paths: Seq[String]): Result = {
+    // V3 — header-set validation (driver-side single line per file, no job).
+    val headers = paths.map { path =>
+      val headerLine = LineFileSource.firstLine(spark, path).getOrElse("")
+      val header = headerLine.stripPrefix("##").split("\t").map(_.trim.toLowerCase).toSeq
+      val missing = requiredColumns.filterNot(header.contains)
+      require(missing.isEmpty, s"$path: missing homolog header column(s): " +
+        missing.mkString(", "))
+      header.filterNot(requiredColumns.contains)
+        .foreach(c => System.err.println(s"[homologs] ignoring extra column $c"))
+      headerLine
+    }
 
     // Positional mapping of data rows to the 13 expected names.
-    val lines = spark.read.textFile(path)
+    val lines = InputFiles.indexed(spark.read.text(paths: _*), paths)
       .withColumn("__ord", monotonically_increasing_id())
-      .filter(col("value") =!= headerLine)
+      .filter(col("value") =!= InputFiles.perFile(headers))
       .filter(length(trim(col("value"))) > 0) // F3 empty-row skip
       .withColumn("f", split(col("value"), "\t", -1))
     val named = requiredColumns.zipWithIndex.foldLeft(lines) {
@@ -66,18 +72,21 @@ object HomologsEtl {
       col(s"start$n").cast("long").as(s"${prefix}_start"),
       col(s"end$n").cast("long").as(s"${prefix}_end"))
 
-    val fwd = named.select(side(1, "ref") ++ side(2, "comp")
-      :+ (col("__ord") * 2).as("__ord2"): _*)
-    val rev = named.select(side(2, "ref") ++ side(1, "comp")
-      :+ (col("__ord") * 2 + 1).as("__ord2"): _*)
-    val both = fwd.unionByName(rev)
+    val both = named.select(col(InputFiles.Column), explode(array(
+        struct(side(1, "ref") ++ side(2, "comp") :+ (col("__ord") * 2).as("__ord2"): _*),
+        struct(side(2, "ref") ++ side(1, "comp") :+ (col("__ord") * 2 + 1).as("__ord2"): _*)))
+      .as("__row"))
+      .select(col(InputFiles.Column), col("__row.*"))
 
     val deduped = Dedup.lastWins(both,
       keys = Seq("ref_gene_id", "ref_taxon_id", "comp_gene_id", "comp_taxon_id"),
-      ord = Seq(col("__ord2")),
-      keep = both.columns.filterNot(_ == "__ord2").toSeq)
+      ord = Seq(col(InputFiles.Column), col("__ord2")),
+      keep = both.columns.filterNot(Set(InputFiles.Column, "__ord2")).toSeq)
     new Result(deduped,
       both.count(),
       named.filter(upper(trim(col("type"))) =!= "ORTHOLOGUE").count())
   }
+
+  /** [[load]] of one file. */
+  def load(spark: SparkSession, path: String): Result = load(spark, Seq(path))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Closure, Dedup}
-import graft.sources.Obo
+import graft.sources.{InputFiles, Obo}
 
 /** Ontology tables: OBO terms, GAF gene↔term mappings, and the
   * pre-materialized transitive closure (reference
@@ -17,6 +17,9 @@ import graft.sources.Obo
   * The closure itself runs as a distributed semi-naive fixpoint
   * (`graft.operators.Closure`) instead of the reference's in-heap
   * worklist — the one stage whose memory scales with |graph|².
+  *
+  * All OBO files are read in one `obo` scan, and all GAF files in one
+  * csv scan whose rows carry their file's index.
   */
 object OntologyEtl {
 
@@ -27,16 +30,18 @@ object OntologyEtl {
     *                 matters: gene_ontology_map's PK is NOT
     *                 taxon-qualified, so a later file's (gene, term)
     *                 overwrites an earlier species' row
-    *                 (`import_ontology.py:181`, SURVEY.md §7.6.5)
+    *                 (`import_ontology.py:181`, SURVEY.md §7.6.5);
+    *                 each file is named once
     */
   def load(spark: SparkSession, oboPaths: Seq[String],
       gafFiles: Seq[(String, Int)]): Result = {
     // U4 — one term table + one is_a graph across all ontologies
     // (module-global dict in the reference, `import_ontology.py:54`).
-    // Not cached: the closure's one bounded collect and the terms write
-    // each parse the files once, and no cache entry outlives the load to
-    // serve a later load's read of a rewritten file.
-    val events = oboPaths.map(Obo.read(spark, _)).reduce(_ union _).toDF()
+    // One scan over every file. Not cached: the closure's one bounded
+    // collect and the terms write each parse the files once, and no
+    // cache entry outlives the load to serve a later load's read of a
+    // rewritten file.
+    val events = Obo.read(spark, oboPaths).toDF()
 
     val termsRaw = events.filter(col("kind") === "term")
       .select(col("id"), col("name"), col("namespace"),
@@ -73,31 +78,31 @@ object OntologyEtl {
   private val gafSchema = StructType(
     (0 until 17).map(i => StructField(s"c$i", StringType)))
 
+  /** `gene_ontology_map` from every GAF file, in one csv scan. */
   def loadGafs(spark: SparkSession, gafFiles: Seq[(String, Int)]): DataFrame = {
-    val perFile = gafFiles.zipWithIndex.map { case ((path, taxon), fileIdx) =>
-      spark.read
+    val paths = gafFiles.map(_._1)
+    val all = InputFiles.indexed(spark.read
         .option("sep", "\t")
         .option("comment", "!")
         .schema(gafSchema)
-        .csv(path)
-        .withColumn("__ord", monotonically_increasing_id())
-        .select(
-          trim(col("c1")).as("gene_id"),
-          trim(col("c4")).as("ontology_id"),
-          // C8 — first taxon of `taxon:9606|taxon:1280`.
-          element_at(
-            split(regexp_replace(trim(col("c12")), "taxon:", ""), "\\|"), 1)
-            .cast("int").as("taxonid"),
-          lit(fileIdx).as("__file"),
-          col("__ord"))
-        .filter(col("taxonid") === taxon) // F5
-    }
-    val all = perFile.reduce(_ unionByName _)
+        .csv(paths: _*), paths)
+      .withColumn("__ord", monotonically_increasing_id())
+      .select(
+        trim(col("c1")).as("gene_id"),
+        trim(col("c4")).as("ontology_id"),
+        // C8 — first taxon of `taxon:9606|taxon:1280`.
+        element_at(
+          split(regexp_replace(trim(col("c12")), "taxon:", ""), "\\|"), 1)
+          .cast("int").as("taxonid"),
+        col(InputFiles.Column),
+        col("__ord"))
+      .filter(col("taxonid") === InputFiles.perFile(gafFiles.map(_._2))) // F5
     // D1 — INSERT OR REPLACE on (gene_id, ontology_id): last write in
     // cross-file shell order wins. File index, then the in-file id: the
     // id alone carries the partition index from bit 33 up, so it does
     // not stay below any per-file offset.
-    Dedup.lastWins(all, Seq("gene_id", "ontology_id"), Seq(col("__file"), col("__ord")),
+    Dedup.lastWins(all, Seq("gene_id", "ontology_id"),
+      Seq(col(InputFiles.Column), col("__ord")),
       keep = Seq("gene_id", "ontology_id", "taxonid"))
   }
 }

@@ -10,16 +10,19 @@ import graft.model.EtlOptions
   * 13-process shell DAG (`create_database.sh:16-53`, SURVEY.md §3.1).
   *
   * One SparkSession, one driver program. The reference's
-  * create-then-append per table family becomes a `union` of
-  * per-species DataFrames written once; the only hard ordering kept is
-  * the one that is semantically observable — GAF file order feeds the
-  * cross-file last-wins upsert of `gene_ontology_map` (§7.6.5), and
-  * that order lives inside one plan, not in the order plans run.
-  * Families are independent pipelines: the reference serialized its
-  * loaders only because they shared one SQLite file. Here `run` starts
-  * every family load at once, so their eager header, validation and
-  * closure jobs overlap, and `write`/`writeObserved` write the tables
-  * at once; both go through [[concurrently]].
+  * create-then-append per table family becomes one load per family
+  * that reads all of the family's files in one scan, each row tagged
+  * with its file's index (`graft.sources.InputFiles`); the only hard
+  * ordering kept is the one that is semantically observable — file
+  * order feeds the cross-file conflict rules of the reference's one
+  * table per family (last wins for `homolog`, `syntenic_block` and
+  * `gene_ontology_map`, §7.6.5; first wins for `feature`), and that
+  * order lives inside one plan, not in the order plans run. Families
+  * are independent pipelines: the reference serialized its loaders only
+  * because they shared one SQLite file. Here `run` starts every family
+  * load at once, so their eager header, validation and closure jobs
+  * overlap, and `write`/`writeObserved` write the tables at once; both
+  * go through [[concurrently]].
   *
   * Sink (S9): each table lands as Parquet. Positional tables partition
   * by taxon and sort within partitions on (chr, start) — the physical
@@ -40,34 +43,34 @@ object Pipeline {
       gaf: Seq[(String, Int)] = Nil,
       homologs: Seq[String] = Nil)
 
-  /** Run every family; returns the ten tables by name. Each input
-    * file's load is one concurrent task; a table with several input
-    * files is their union in input order.
+  /** Run every family; returns the ten tables by name. Each family's
+    * load is one concurrent task over all of its input files, read in
+    * one scan per format; a family that names one file twice fails,
+    * naming the file.
     */
   def run(spark: SparkSession, in: Inputs,
       opts: EtlOptions = EtlOptions()): Map[String, DataFrame] = {
-    val loads: Seq[() => Seq[(String, DataFrame)]] =
-      in.genes.map(f => () => {
-        val r = GenesExonsEtl.load(spark, f.path, f.taxonId)
+    def family(files: Seq[_])(load: => Seq[(String, DataFrame)]) =
+      Option.when(files.nonEmpty)(() => load)
+    val loads: Seq[() => Seq[(String, DataFrame)]] = Seq(
+      family(in.genes) {
+        val r = GenesExonsEtl.load(spark, in.genes)
         Seq("gene" -> r.genes, "exon" -> r.exons)
-      }) ++
-      in.blocks.map(p => () => Seq("syntenic_block" -> SyntenyBlocksEtl.load(spark, p, opts))) ++
-      in.cytobands.map(f => () =>
-        Seq("cytogenetic_band" -> CytoBandEtl.load(spark, f.path, f.taxonId))) ++
-      in.features.map(f => () =>
-        Seq("feature" -> FeaturesEtl.load(spark, f.path, f.taxonId, opts))) ++
-      in.variants.map(f => () =>
-        Seq("snp_variant" -> VariantsEtl.load(spark, f.path, f.taxonId))) ++
-      Option.when(in.obo.nonEmpty)(() => {
+      },
+      family(in.blocks)(Seq("syntenic_block" -> SyntenyBlocksEtl.load(spark, in.blocks, opts))),
+      family(in.cytobands)(Seq("cytogenetic_band" -> CytoBandEtl.load(spark, in.cytobands))),
+      family(in.features)(Seq("feature" -> FeaturesEtl.load(spark, in.features, opts))),
+      family(in.variants)(Seq("snp_variant" -> VariantsEtl.load(spark, in.variants))),
+      family(in.obo) {
         val o = OntologyEtl.load(spark, in.obo, in.gaf)
         // no GAF inputs → no gene_ontology_map table (a zero-column
         // frame is unwritable by any sink)
         Seq("on_terms" -> o.terms, "on_pairs" -> o.pairs) ++
           Option.when(in.gaf.nonEmpty)("gene_ontology_map" -> o.geneMap)
-      }) ++
-      in.homologs.map(p => () => Seq("homolog" -> HomologsEtl.load(spark, p).homologs))
-    concurrently(loads).flatten.groupMap(_._1)(_._2)
-      .map { case (name, parts) => name -> parts.reduce(_ unionByName _) }
+      },
+      family(in.homologs)(Seq("homolog" -> HomologsEtl.load(spark, in.homologs).homologs))
+    ).flatten
+    concurrently(loads).flatten.toMap
   }
 
   /** The name of [[concurrently]]'s pool threads. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.EtlOptions
 import graft.operators.Dedup
+import graft.sources.InputFiles
 
 /** Syntenic-block table from positional 10-column TSV (reference
   * `import_synteny_blocks.py:60-120`).
@@ -13,38 +14,46 @@ import graft.operators.Dedup
   *
   * Semantics:
   *  - V1/V2: any row with ≠10 fields or a block id not starting
-  *    `ID=SynBlock` aborts the whole load (`:63-70`);
+  *    `ID=SynBlock` aborts the whole load (`:63-70`), naming its file;
   *  - C3: same_orientation = (orientation == "+") (`:95`);
   *  - C4: symbol = block id minus the `ID=` prefix (`:101`);
   *  - U1: every row lands twice — forward, then ref↔comp swapped
-  *    (`:100-115`);
+  *    (`:100-115`), as one `explode` of the two structs;
   *  - D1: `INSERT OR REPLACE` on PK (ref_taxonid, comp_taxonid,
-  *    ref_chr, ref_start_pos) — last write in file order wins, with
-  *    the swapped copy ordered after its forward twin;
+  *    ref_chr, ref_start_pos) into the one table every file loads
+  *    into — last write in (file, line) order wins, with the swapped
+  *    copy ordered after its forward twin;
   *  - D4 (`strictSqliteCompat`): the reference's UNIQUE index on
   *    (ref_taxonid, comp_taxonid, ref_chr) additionally collapses to
   *    one block per chromosome pair (`:58-59`) — almost certainly a
   *    bug, reproduced only behind the flag.
+  *
+  * Every file is read in one text scan.
   */
 object SyntenyBlocksEtl {
 
-  def load(spark: SparkSession, path: String,
-      opts: EtlOptions = EtlOptions()): DataFrame = {
-    val lines = spark.read.textFile(path)
+  /** The block table of `paths`, loaded in that order, from one scan;
+    * the V1/V2 validation of every file is one job.
+    */
+  def load(spark: SparkSession, paths: Seq[String], opts: EtlOptions): DataFrame = {
+    val lines = InputFiles.indexed(spark.read.text(paths: _*), paths)
       .withColumn("__ord", monotonically_increasing_id())
       .filter(length(trim(col("value"))) > 0) // F3 empty-row skip
       .withColumn("f", split(col("value"), "\t", -1))
 
-    // V1/V2 validation — abort the load on any malformed row.
+    // V1/V2 validation — abort the load on any malformed row; the
+    // first three in (file, line) order, from one job.
     val bad = lines
       .filter(size(col("f")) =!= 10 || !col("f")(9).startsWith("ID=SynBlock"))
+      .orderBy(InputFiles.Column, "__ord")
+      .select(InputFiles.Column, "value")
       .limit(3).collect()
-    require(bad.isEmpty,
-      s"syntenic block validation failed (arity/id): ${bad.mkString("; ")}")
+    require(bad.isEmpty, "syntenic block validation failed (arity/id): " +
+      bad.map(r => s"${paths(r.getInt(0))}: ${r.getString(1)}").mkString("; "))
 
     def block(rT: Int, rC: Int, rS: Int, rE: Int, cT: Int, cC: Int, cS: Int,
         cE: Int, dir: Int) =
-      lines.select(
+      struct(
         col("f")(rT).cast("int").as("ref_taxonid"),
         col("f")(rC).as("ref_chr"),
         col("f")(rS).cast("long").as("ref_start_pos"),
@@ -57,24 +66,30 @@ object SyntenyBlocksEtl {
         substring(col("f")(9), 4, Int.MaxValue).as("symbol"),
         (col("__ord") * 2 + dir).as("__ord2"))
 
-    val forward = block(1, 0, 2, 3, 5, 4, 6, 7, dir = 0)
-    val reverse = block(5, 4, 6, 7, 1, 0, 2, 3, dir = 1)
-    val both = forward.unionByName(reverse)
+    val both = lines.select(col(InputFiles.Column), explode(array(
+        block(1, 0, 2, 3, 5, 4, 6, 7, dir = 0),
+        block(5, 4, 6, 7, 1, 0, 2, 3, dir = 1))).as("__row"))
+      .select(col(InputFiles.Column), col("__row.*"))
 
-    // The last dedup of the chain drops __ord2 from both the packed
-    // struct and the output (r22 keep projection) — it is only an
-    // ordering input, never a consumed column.
-    val dataCols = both.columns.filterNot(_ == "__ord2").toSeq
+    // The last dedup of the chain drops __file and __ord2 from both the
+    // packed struct and the output (r22 keep projection) — they are
+    // only ordering inputs, never consumed columns.
+    val ord = Seq(col(InputFiles.Column), col("__ord2"))
+    val dataCols = both.columns.filterNot(Set(InputFiles.Column, "__ord2")).toSeq
     if (opts.strictSqliteCompat)
       Dedup.lastWins(
         Dedup.lastWins(both,
           keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr", "ref_start_pos"),
-          ord = Seq(col("__ord2"))),
+          ord = ord),
         keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr"),
-        ord = Seq(col("__ord2")), keep = dataCols)
+        ord = ord, keep = dataCols)
     else
       Dedup.lastWins(both,
         keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr", "ref_start_pos"),
-        ord = Seq(col("__ord2")), keep = dataCols)
+        ord = ord, keep = dataCols)
   }
+
+  /** [[load]] of one file. */
+  def load(spark: SparkSession, path: String,
+      opts: EtlOptions = EtlOptions()): DataFrame = load(spark, Seq(path), opts)
 }

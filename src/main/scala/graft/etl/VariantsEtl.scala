@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Gff3
+import graft.sources.{Gff3, InputFiles}
 
 /** SNP-variant table from VCF (reference `import_variants.py:63-110`).
   *
@@ -22,11 +22,16 @@ import graft.sources.Gff3
   *  - quality/frequency are Double (SURVEY.md §1.2 — the reference's
   *    INTEGER DDL receives floats);
   *  - `.` ID/QUAL → null.
+  *
+  * Every species file is read in one `vcf` scan; each row's taxon is
+  * its file's.
   */
 object VariantsEtl {
 
-  def load(spark: SparkSession, path: String, taxonId: Int): DataFrame = {
-    val raw = spark.read.format("vcf").load(path)
+  /** The variant table of every species file, from one scan. */
+  def load(spark: SparkSession, files: Seq[Pipeline.SpeciesFile]): DataFrame = {
+    val paths = files.map(_.path)
+    val raw = InputFiles.indexed(spark.read.format("vcf").load(paths: _*), paths)
     val info = str_to_map(col("info"), lit(";"), lit("="))
     raw
       .withColumn("__info", info)
@@ -44,6 +49,10 @@ object VariantsEtl {
           .as("frequency"),
         col("gene"),
         element_at(split(col("__info")("LT"), ","), 1).as("trait_id"),
-        lit(taxonId).as("taxon_id"))
+        InputFiles.perFile(files.map(_.taxonId)).as("taxon_id"))
   }
+
+  /** [[load]] of one species file. */
+  def load(spark: SparkSession, path: String, taxonId: Int): DataFrame =
+    load(spark, Seq(Pipeline.SpeciesFile(path, taxonId)))
 }

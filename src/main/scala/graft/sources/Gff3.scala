@@ -15,13 +15,17 @@ import org.apache.spark.sql.functions._
 object Gff3 {
 
   /** The `gff3` source's typed columns, one row per feature line, plus
-    * an `__ord` column carrying file order for order-sensitive
-    * downstream dedup (narrow read — no shuffle before the ordinal is
-    * assigned).
+    * `__file`, the index in `paths` of the row's file
+    * ([[InputFiles.indexed]]), and `__ord`, the row's order within its
+    * file: together they order rows for order-sensitive downstream
+    * dedup (narrow read — no shuffle before the ordinal is assigned).
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("gff3").load(path)
+  def read(spark: SparkSession, paths: Seq[String]): DataFrame =
+    InputFiles.indexed(spark.read.format("gff3").load(paths: _*), paths)
       .withColumn("__ord", monotonically_increasing_id())
+
+  /** [[read]] of one file, its rows all `__file` 0. */
+  def read(spark: SparkSession, path: String): DataFrame = read(spark, Seq(path))
 
   /** V4 — `##gff-version 3` pragma check on the first line (reference
     * `import_features.py:72-76`), read on the driver without a job.

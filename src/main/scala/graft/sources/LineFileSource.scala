@@ -10,9 +10,9 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.catalyst.util.V2ExpressionBuilder
-import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, Table}
 import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile, PartitioningAwareFileIndex}
@@ -30,7 +30,9 @@ import org.apache.spark.util.SerializableConfiguration
   * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
   * `minPartitionNum`, the size estimate, unsplittable compressed files
   * (`TextBasedFileScan`), and the per-file reader loop that names the
-  * file in a read error (`FilePartitionReaderFactory`).
+  * file in a read error (`FilePartitionReaderFactory`). Like Spark's
+  * V1 file sources, a read exposes `_metadata.file_path`, the
+  * URL-encoded path of the file each row came from.
   */
 private[sources] trait LineFormat extends Serializable {
   def name: String
@@ -106,20 +108,43 @@ class NoV1Format extends FileFormat {
 
 private[sources] case class LineFileTable(format: LineFormat, name: String,
     sparkSession: SparkSession, options: CaseInsensitiveStringMap, paths: Seq[String])
-    extends FileTable(sparkSession, options, paths, None) {
+    extends FileTable(sparkSession, options, paths, None) with SupportsMetadataColumns {
   override def formatName: String = format.name
   override def inferSchema(files: Seq[FileStatus]): Option[StructType] = Some(format.schema)
   override def fallbackFileFormat: Class[_ <: FileFormat] = classOf[NoV1Format]
+  override def metadataColumns(): Array[MetadataColumn] = Array(LineFileTable.FileMetadata)
   override def newScanBuilder(options: CaseInsensitiveStringMap): LineFileScanBuilder =
     LineFileScanBuilder(format, sparkSession, fileIndex, dataSchema, mergedOptions(options))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     throw new UnsupportedOperationException(s"$name is read-only")
 }
 
+private[sources] object LineFileTable {
+
+  /** `_metadata` as Spark's V1 file sources name it, with their
+    * `file_path` field alone, filled as they fill it
+    * ([[InputFiles.metadataPath]]).
+    */
+  object FileMetadata extends MetadataColumn {
+    override def name: String = FileFormat.METADATA_NAME
+    override def dataType: StructType =
+      StructType(Seq(StructField(FileFormat.FILE_PATH, StringType, nullable = false)))
+    override def isNullable: Boolean = false
+  }
+}
+
 private[sources] case class LineFileScanBuilder(format: LineFormat,
     sparkSession: SparkSession, fileIndex: PartitioningAwareFileIndex,
     dataSchema: StructType, options: CaseInsensitiveStringMap)
     extends FileScanBuilder(sparkSession, fileIndex, dataSchema) {
+
+  /** The `_metadata` field when the plan reads it, else empty. */
+  private var metadataSchema = new StructType()
+
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    super.pruneColumns(requiredSchema)
+    metadataSchema = StructType(requiredSchema.filter(_.name == FileFormat.METADATA_NAME))
+  }
 
   /** Equality and IN on string columns run in the reader, before a row
     * is built.
@@ -141,22 +166,28 @@ private[sources] case class LineFileScanBuilder(format: LineFormat,
       new V2ExpressionBuilder(e, true).buildPredicate().exists(p => pushedFilters.contains(p)))
 
   override def build(): Scan = LineFileScan(format, sparkSession, fileIndex, dataSchema,
-    readDataSchema(), readPartitionSchema(), options, pushedDataFilters,
+    readDataSchema(), readPartitionSchema(), metadataSchema, options, pushedDataFilters,
     partitionFilters, dataFilters)
 }
 
 private[sources] case class LineFileScan(format: LineFormat, sparkSession: SparkSession,
     fileIndex: PartitioningAwareFileIndex, dataSchema: StructType,
     readDataSchema: StructType, readPartitionSchema: StructType,
-    options: CaseInsensitiveStringMap, pushedFilters: Array[Filter],
-    partitionFilters: Seq[Expression], dataFilters: Seq[Expression])
+    readMetadataSchema: StructType, options: CaseInsensitiveStringMap,
+    pushedFilters: Array[Filter], partitionFilters: Seq[Expression],
+    dataFilters: Seq[Expression])
     extends TextBasedFileScan(sparkSession, options) {
+
+  /** The data and partition columns, then `_metadata` when it is read. */
+  override def readSchema(): StructType =
+    StructType(super.readSchema().fields ++ readMetadataSchema.fields)
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val caseSensitive = options.asCaseSensitiveMap.asScala.toMap
     LineFileReaderFactory(format, sparkSession.sparkContext.broadcast(new SerializableConfiguration(
         sparkSession.sessionState.newHadoopConfWithOptions(caseSensitive))),
-      readDataSchema, readPartitionSchema, pushedFilters, new FileSourceOptions(caseSensitive))
+      readDataSchema, readPartitionSchema, readMetadataSchema, pushedFilters,
+      new FileSourceOptions(caseSensitive))
   }
 
   /** Names the format, and the filters the reader applies rather than
@@ -173,12 +204,14 @@ private[sources] case class LineFileScan(format: LineFormat, sparkSession: Spark
 }
 
 /** Keeps the rows that pass the pushed filters and types the read
-  * columns; a value that does not parse names its line's byte offset,
+  * columns, then appends the partition values and the read `_metadata`
+  * fields; a value that does not parse names its line's byte offset,
   * its column and itself (Spark's reader loop adds the file).
   */
 private[sources] case class LineFileReaderFactory(format: LineFormat,
     conf: Broadcast[SerializableConfiguration], readDataSchema: StructType,
-    partitionSchema: StructType, filters: Array[Filter], options: FileSourceOptions)
+    partitionSchema: StructType, metadataSchema: StructType, filters: Array[Filter],
+    options: FileSourceOptions)
     extends FilePartitionReaderFactory {
 
   override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
@@ -206,7 +239,11 @@ private[sources] case class LineFileReaderFactory(format: LineFormat,
       case (offset, values) if passes(values) =>
         new GenericInternalRow(read.map { case (i, f) => typed(offset, values(i), f) }): InternalRow
     }
+    val metadata =
+      if (metadataSchema.isEmpty) InternalRow.empty
+      else InternalRow(InternalRow(UTF8String.fromString(InputFiles.metadataPath(file.toPath))))
     new PartitionReaderWithPartitionValues(new PartitionReaderFromIterator(rows),
-      readDataSchema, partitionSchema, file.partitionValues)
+      readDataSchema, StructType(partitionSchema.fields ++ metadataSchema.fields),
+      new JoinedRow(file.partitionValues, metadata))
   }
 }

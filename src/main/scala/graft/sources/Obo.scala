@@ -82,12 +82,16 @@ object Obo {
     out.iterator
   }
 
-  /** `spark.read.format("obo")` as typed events: the stanzas of each
-    * split parse on the executors, and splits keep file order, so the
-    * events equal a sequential parse of the whole file.
+  /** `spark.read.format("obo")` over `paths` as typed events, in one
+    * scan: the stanzas of each split parse on the executors, and a
+    * file's splits keep its order, so each file's events equal a
+    * sequential parse of it.
     */
-  def read(spark: SparkSession, path: String): Dataset[OboEvent] =
-    spark.read.format("obo").load(path).as[OboEvent](Encoders.product[OboEvent])
+  def read(spark: SparkSession, paths: Seq[String]): Dataset[OboEvent] =
+    spark.read.format("obo").load(paths: _*).as[OboEvent](Encoders.product[OboEvent])
+
+  /** [[read]] of one file. */
+  def read(spark: SparkSession, path: String): Dataset[OboEvent] = read(spark, Seq(path))
 
   private def isTermHeader(line: String) = line.trim.startsWith("[Term]")
 

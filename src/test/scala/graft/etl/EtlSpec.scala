@@ -399,6 +399,179 @@ class EtlSpec extends AnyFunSuite {
     assert(workers() === 0)
   }
 
+  // ---- one load per family over all of its files ------------------
+  /** A file `name` in a fresh scratch directory whose name starts `dir`. */
+  def inputIn(dir: String, name: String, lines: String*): String = {
+    val f = TestSpark.scratchPath(dir).resolve(name)
+    java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  def gene(id: String, dbxref: String, chr: String = "chr1") =
+    s"$chr\tSRC\tgene\t10\t90\t.\t+\t.\tID=$id;Dbxref=$dbxref;Symbol=$id"
+  def exon(id: String, parent: String, chr: String = "chr1") =
+    s"$chr\tSRC\texon\t10\t40\t.\t+\t.\tID=$id;Parent=$parent"
+  def gff3(lines: String*): String = tmpInput(".gff3", ("##gff-version 3" +: lines): _*)
+
+  test("families: a key in two files follows the reference's one-table conflict modes") {
+    // Spark packs the larger of two small files first, so the later file
+    // is the larger one here: file order must come from the file index,
+    // not from the in-file ordinal alone
+    val padding = Seq.fill(40)("")
+    val homHeader = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(fx("homologs_mousehuman.tsv"))).get(0)
+    def homolog(sym: String) =
+      s"orthologue\t10090\tMGI:1\t$sym\t1\t1\t2\t9606\tGeneID:1\tH\t1\t1\t2"
+    val h = HomologsEtl.load(spark, Seq(
+      tmpInput(".tsv", homHeader, homolog("early")),
+      tmpInput(".tsv", (Seq(homHeader, homolog("late")) ++ padding): _*))).homologs
+    assert(h.filter("ref_gene_id = 'MGI:1'").select("ref_gene_sym").collect().toSeq ===
+      Seq(Row("late")), "homolog: the later file wins")
+    assert(h.count() === 2)
+
+    def block(sym: String) = s"1\t9606\t100\t500\t5\t10116\t200\t700\t+\tID=$sym"
+    val b = SyntenyBlocksEtl.load(spark, Seq(
+      tmpInput(".txt", block("SynBlockEarly")),
+      tmpInput(".txt", (block("SynBlockLate") +: padding): _*)),
+      EtlOptions())
+    assert(b.select("symbol").distinct().collect().toSeq === Seq(Row("SynBlockLate")),
+      "syntenic_block: the later file wins")
+    assert(b.count() === 2)
+
+    def feature(name: String) = s"1\tMGI\tQTL\t5\t9\t.\t.\t.\tID=Q;Dbxref=MGI:1;Name=$name"
+    val f = FeaturesEtl.load(spark, Seq(
+      Pipeline.SpeciesFile(gff3(feature("first")), 10090),
+      Pipeline.SpeciesFile(gff3((feature("second") +: padding.map(_ => "#")): _*), 10090),
+      Pipeline.SpeciesFile(gff3(feature("rat")), 10116)), EtlOptions())
+    assert(f.orderBy("taxon_id").select("taxon_id", "name").collect().toSeq ===
+      Seq(Row(10090, "first"), Row(10116, "rat")), "feature: first wins within a taxon")
+
+    val twice = Seq(
+      Pipeline.SpeciesFile(gff3(gene("g1", "GeneID:1"), exon("e1", "g1")), 9606),
+      Pipeline.SpeciesFile(gff3(gene("g9", "GeneID:1"), exon("e1", "g9")), 9606))
+    val r = GenesExonsEtl.load(spark, twice)
+    for ((t, df, key) <- Seq(("gene", r.genes, "GeneID:1,9606,1"), ("exon", r.exons, "e1,9606,1"))) {
+      val msg = intercept[Exception](df.collect()).getMessage
+      assert(msg.contains("duplicate primary key") && msg.contains(key), s"$t: $msg")
+    }
+    val otherTaxon = GenesExonsEtl.load(spark,
+      twice.zip(Seq(9606, 10090)).map { case (f, t) => f.copy(taxonId = t) })
+    assert(otherTaxon.genes.count() === 2 && otherTaxon.exons.count() === 2)
+  }
+
+  test("families: an exon links only to a gene of its own file") {
+    // both species files use the row IDs g1 and g2
+    val r = GenesExonsEtl.load(spark, Seq(
+      Pipeline.SpeciesFile(gff3(gene("g1", "GeneID:1"), gene("g2", "GeneID:2"),
+        exon("h1", "g1"), exon("h2", "g2")), 9606),
+      Pipeline.SpeciesFile(gff3(gene("g1", "MGI:1"), exon("m1", "g1"), exon("m2", "g2")), 10090)))
+    assert(r.exons.orderBy("exon_id").select("exon_id", "parent_gene", "taxonid")
+      .collect().toSeq === Seq(
+        Row("h1", "GeneID:1", 9606), Row("h2", "GeneID:2", 9606), Row("m1", "MGI:1", 10090)))
+  }
+
+  test("families: each row's file is the scan's own, whatever the path") {
+    val band = "chr1\tUCSC\tcytoband\t1\t500\t.\t.\t.\tID=b"
+    val spaced = inputIn("graft odd dir", "bands one.gff3", "##gff-version 3", band)
+    val absolute = inputIn("graft_a", "bands.gff3", "##gff-version 3", band)
+    val sameName = inputIn("graft_b", "bands.gff3", "##gff-version 3", band)
+    val relative = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(sameName)).toString
+    assert(!relative.startsWith("/"))
+    val files = Seq(spaced -> 1, absolute -> 2, relative -> 3).map {
+      case (p, t) => Pipeline.SpeciesFile(p, t)
+    }
+    def taxa(df: org.apache.spark.sql.DataFrame) =
+      df.select("taxon_id").collect().map(_.getInt(0)).sorted.toSeq
+    assert(taxa(CytoBandEtl.load(spark, files)) === Seq(1, 2, 3))
+
+    // a persisted multi-file read serves the load, and its file column
+    // survives the cache
+    val cached = Gff3.read(spark, files.map(_.path)).persist()
+    try {
+      cached.count()
+      val bands = CytoBandEtl.load(spark, files)
+      assert(bands.queryExecution.withCachedData.collectFirst {
+        case c: org.apache.spark.sql.execution.columnar.InMemoryRelation => c
+      }.nonEmpty)
+      assert(taxa(bands) === Seq(1, 2, 3))
+    } finally cached.unpersist(blocking = true)
+
+    // the same through Spark's csv source
+    def gafLine(taxon: Int) = (Seq("DB", s"G$taxon", "SYM", "", "GO:1", "REF", "EV", "", "P",
+      "name", "", "protein", s"taxon:$taxon", "20210101", "AA") ++ Seq.fill(2)("")).mkString("\t")
+    val gafs = Seq(inputIn("graft odd gaf", "a b.gaf", gafLine(1)) -> 1,
+      inputIn("graft_gaf_a", "x.gaf", gafLine(2)) -> 2,
+      inputIn("graft_gaf_b", "x.gaf", gafLine(3)) -> 3)
+    assert(OntologyEtl.loadGafs(spark, gafs).select("gene_id").collect().map(_.getString(0))
+      .sorted.toSeq === Seq("G1", "G2", "G3"))
+
+    // one file named twice in a family, however it is spelled
+    val ex = intercept[IllegalArgumentException](CytoBandEtl.load(spark,
+      Seq(Pipeline.SpeciesFile(absolute, 9606), Pipeline.SpeciesFile(s"file://$absolute", 10090))))
+    assert(ex.getMessage.contains(absolute), ex.getMessage)
+  }
+
+  test("pipeline: each table plan reads each format in one scan, with no union") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val in = pipelineInputs()
+    val tables = Pipeline.run(spark, in.copy(
+      genes = in.genes :+ Pipeline.SpeciesFile(fx("genes_dup.gff3"), 10090),
+      cytobands = in.cytobands :+ Pipeline.SpeciesFile(fx("features_mouse.gff3"), 10090),
+      variants = in.variants :+ Pipeline.SpeciesFile(fx("variants_dirty.vcf"), 10116),
+      blocks = in.blocks :+ tmpInput(".txt", "2\t9606\t1\t9\t4\t10116\t1\t9\t+\tID=SynBlock9")))
+    for ((name, df) <- tables) {
+      val plan = df.queryExecution.optimizedPlan
+      val scans = plan.collectLeaves().collect {
+        case r: DataSourceV2ScanRelation => r.relation.table.name.takeWhile(_ != ' ')
+        case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] =>
+          r.relation.asInstanceOf[HadoopFsRelation].fileFormat.toString
+      }
+      assert(scans.nonEmpty || name == "on_pairs", s"$name: no scan")
+      for ((format, n) <- scans.groupBy(identity).view.mapValues(_.size))
+        assert(n === 1 || (name == "exon" && n === 2), s"$name reads $format in $n scans")
+      if (name != "on_terms" && name != "on_pairs")
+        assert(plan.collectFirst { case u: Union => u }.isEmpty, s"$name plans a union")
+    }
+  }
+
+  test("blocks: two files cost one validation job, whose error names the bad file") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"etlspec-blocks-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    // listener delivery is async: poll until the count is quiet for 300 ms
+    def settled(): Int = {
+      var last = -1
+      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(300) }
+      last
+    }
+    val sc = spark.sparkContext
+    val good = fx("blocks_humanrat.txt")
+    val bad = inputIn("graft_blocks", "bad.txt", "1\t9606\t1\t9\t4\t10116\t1\t9\t+\tID=Nope")
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "validation")
+    try {
+      SyntenyBlocksEtl.load(spark, Seq(good, tmpInput(".txt",
+        "2\t9606\t1\t9\t4\t10116\t1\t9\t+\tID=SynBlock9")), EtlOptions())
+      assert(settled() === 1)
+      val ex = intercept[IllegalArgumentException](
+        SyntenyBlocksEtl.load(spark, Seq(good, bad), EtlOptions()))
+      assert(ex.getMessage.contains("validation") && ex.getMessage.contains(s"$bad: "),
+        ex.getMessage)
+      assert(settled() === 2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("a repeated load compiles no generated class") {
     // one load over every fixture family compiles about 200 generated
     // classes in a fresh JVM, more than Spark's default codegen cache
