@@ -25,7 +25,8 @@ import graft.sources.{Gff3, InputFiles}
   *    attribute values are nulled here;
   *  - D3: duplicate PK (source, taxon_id, id, dbxref) keeps the first
   *    row in file order and continues (`:203-211`); across two files of
-  *    one taxon the earlier file's row is first.
+  *    one taxon the earlier file's row is first. The order is the
+  *    scan's own (`Gff3.read`'s `__file` and `__ord`).
   *
   * Every species file is read in one `gff3` scan; each row's taxon is
   * its file's.
@@ -76,12 +77,12 @@ object FeaturesEtl {
       a("Status").as("status"),
       a("Parent").as("parent"),
       col(InputFiles.Column),
-      col("__ord"))
+      col(InputFiles.Ordinal))
 
     Dedup.keepFirst(projected,
       keys = Seq("source", "taxon_id", "id", "dbxref"),
-      ord = Seq(col(InputFiles.Column), col("__ord")),
-      keep = projected.columns.filterNot(Set(InputFiles.Column, "__ord")).toSeq)
+      ord = InputFiles.fileOrder,
+      keep = projected.columns.filterNot(Set(InputFiles.Column, InputFiles.Ordinal)).toSeq)
   }
 
   /** [[load]] of one species file. */

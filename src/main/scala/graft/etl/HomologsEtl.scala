@@ -22,7 +22,8 @@ import graft.sources.{Gff3, InputFiles, LineFileSource}
   * reverse structs; D1 `INSERT OR REPLACE` on (ref_gene_id,
   * ref_taxon_id, comp_gene_id, comp_taxon_id) into the one table every
   * file loads into — last in (file, line) order wins, reverse copy
-  * after its forward twin. Every file is read in one text scan.
+  * after its forward twin. Every file is read in one `lines` scan
+  * ([[InputFiles.tabLines]]), whose `__file` and `__ord` give the order.
   */
 object HomologsEtl {
 
@@ -55,14 +56,10 @@ object HomologsEtl {
     }
 
     // Positional mapping of data rows to the 13 expected names.
-    val lines = InputFiles.indexed(spark.read.text(paths: _*), paths)
-      .withColumn("__ord", monotonically_increasing_id())
+    val lines = InputFiles.tabLines(spark, paths)
       .filter(col("value") =!= InputFiles.perFile(headers))
-      .filter(length(trim(col("value"))) > 0) // F3 empty-row skip
-      .withColumn("f", split(col("value"), "\t", -1))
-    val named = requiredColumns.zipWithIndex.foldLeft(lines) {
-      case (df, (name, i)) => df.withColumn(name, trim(col("f")(i)))
-    }
+    val named = lines.select(col("*") +:
+      requiredColumns.zipWithIndex.map { case (name, i) => trim(col("f")(i)).as(name) }: _*)
 
     def side(n: Int, prefix: String) = Seq(
       col(s"id$n").as(s"${prefix}_gene_id"),
@@ -72,16 +69,16 @@ object HomologsEtl {
       col(s"start$n").cast("long").as(s"${prefix}_start"),
       col(s"end$n").cast("long").as(s"${prefix}_end"))
 
-    val both = named.select(col(InputFiles.Column), explode(array(
-        struct(side(1, "ref") ++ side(2, "comp") :+ (col("__ord") * 2).as("__ord2"): _*),
-        struct(side(2, "ref") ++ side(1, "comp") :+ (col("__ord") * 2 + 1).as("__ord2"): _*)))
-      .as("__row"))
-      .select(col(InputFiles.Column), col("__row.*"))
+    val both = named.select(InputFiles.fileOrder :+ explode(array(
+        struct(side(1, "ref") ++ side(2, "comp") :+ lit(0).as("__twin"): _*),
+        struct(side(2, "ref") ++ side(1, "comp") :+ lit(1).as("__twin"): _*)))
+      .as("__row"): _*)
+      .select(InputFiles.fileOrder :+ col("__row.*"): _*)
 
     val deduped = Dedup.lastWins(both,
       keys = Seq("ref_gene_id", "ref_taxon_id", "comp_gene_id", "comp_taxon_id"),
-      ord = Seq(col(InputFiles.Column), col("__ord2")),
-      keep = both.columns.filterNot(Set(InputFiles.Column, "__ord2")).toSeq)
+      ord = InputFiles.fileOrder :+ col("__twin"),
+      keep = both.columns.filterNot(Set(InputFiles.Column, InputFiles.Ordinal, "__twin")).toSeq)
     new Result(deduped,
       both.count(),
       named.filter(upper(trim(col("type"))) =!= "ORTHOLOGUE").count())

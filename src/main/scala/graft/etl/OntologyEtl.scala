@@ -2,7 +2,6 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.operators.{Closure, Dedup}
 import graft.sources.{InputFiles, Obo}
 
@@ -19,7 +18,7 @@ import graft.sources.{InputFiles, Obo}
   * worklist — the one stage whose memory scales with |graph|².
   *
   * All OBO files are read in one `obo` scan, and all GAF files in one
-  * csv scan whose rows carry their file's index.
+  * `lines` scan whose rows carry their file's index and in-file order.
   */
 object OntologyEtl {
 
@@ -75,34 +74,27 @@ object OntologyEtl {
     Result(termsWithCount, pairs, geneMap)
   }
 
-  private val gafSchema = StructType(
-    (0 until 17).map(i => StructField(s"c$i", StringType)))
-
-  /** `gene_ontology_map` from every GAF file, in one csv scan. */
+  /** `gene_ontology_map` from every GAF file, in one `lines` scan: each
+    * line not a `!` comment (F2) is tab-split as the reference splits
+    * it, and an empty field is null; a line too short to hold the taxon
+    * field has none, and the F5 filter drops it.
+    */
   def loadGafs(spark: SparkSession, gafFiles: Seq[(String, Int)]): DataFrame = {
-    val paths = gafFiles.map(_._1)
-    val all = InputFiles.indexed(spark.read
-        .option("sep", "\t")
-        .option("comment", "!")
-        .schema(gafSchema)
-        .csv(paths: _*), paths)
-      .withColumn("__ord", monotonically_increasing_id())
+    def field(i: Int) = trim(nullif(get(col("f"), lit(i)), lit("")))
+    val all = InputFiles.tabLines(spark, gafFiles.map(_._1))
+      .filter(!col("value").startsWith("!"))
       .select(
-        trim(col("c1")).as("gene_id"),
-        trim(col("c4")).as("ontology_id"),
+        field(1).as("gene_id"),
+        field(4).as("ontology_id"),
         // C8 — first taxon of `taxon:9606|taxon:1280`.
-        element_at(
-          split(regexp_replace(trim(col("c12")), "taxon:", ""), "\\|"), 1)
+        element_at(split(regexp_replace(field(12), "taxon:", ""), "\\|"), 1)
           .cast("int").as("taxonid"),
         col(InputFiles.Column),
-        col("__ord"))
+        col(InputFiles.Ordinal))
       .filter(col("taxonid") === InputFiles.perFile(gafFiles.map(_._2))) // F5
     // D1 — INSERT OR REPLACE on (gene_id, ontology_id): last write in
-    // cross-file shell order wins. File index, then the in-file id: the
-    // id alone carries the partition index from bit 33 up, so it does
-    // not stay below any per-file offset.
-    Dedup.lastWins(all, Seq("gene_id", "ontology_id"),
-      Seq(col(InputFiles.Column), col("__ord")),
+    // cross-file shell order, then file order, wins.
+    Dedup.lastWins(all, Seq("gene_id", "ontology_id"), InputFiles.fileOrder,
       keep = Seq("gene_id", "ontology_id", "taxonid"))
   }
 }

@@ -22,13 +22,14 @@ import graft.sources.InputFiles
   *  - D1: `INSERT OR REPLACE` on PK (ref_taxonid, comp_taxonid,
   *    ref_chr, ref_start_pos) into the one table every file loads
   *    into — last write in (file, line) order wins, with the swapped
-  *    copy ordered after its forward twin;
+  *    copy ordered after its forward twin (the order is the scan's
+  *    `__file` and `__ord`);
   *  - D4 (`strictSqliteCompat`): the reference's UNIQUE index on
   *    (ref_taxonid, comp_taxonid, ref_chr) additionally collapses to
   *    one block per chromosome pair (`:58-59`) — almost certainly a
   *    bug, reproduced only behind the flag.
   *
-  * Every file is read in one text scan.
+  * Every file is read in one `lines` scan ([[InputFiles.tabLines]]).
   */
 object SyntenyBlocksEtl {
 
@@ -36,16 +37,13 @@ object SyntenyBlocksEtl {
     * the V1/V2 validation of every file is one job.
     */
   def load(spark: SparkSession, paths: Seq[String], opts: EtlOptions): DataFrame = {
-    val lines = InputFiles.indexed(spark.read.text(paths: _*), paths)
-      .withColumn("__ord", monotonically_increasing_id())
-      .filter(length(trim(col("value"))) > 0) // F3 empty-row skip
-      .withColumn("f", split(col("value"), "\t", -1))
+    val lines = InputFiles.tabLines(spark, paths)
 
     // V1/V2 validation — abort the load on any malformed row; the
     // first three in (file, line) order, from one job.
     val bad = lines
       .filter(size(col("f")) =!= 10 || !col("f")(9).startsWith("ID=SynBlock"))
-      .orderBy(InputFiles.Column, "__ord")
+      .orderBy(InputFiles.fileOrder: _*)
       .select(InputFiles.Column, "value")
       .limit(3).collect()
     require(bad.isEmpty, "syntenic block validation failed (arity/id): " +
@@ -64,29 +62,25 @@ object SyntenyBlocksEtl {
         col("f")(cE).cast("long").as("comp_end_pos"),
         (col("f")(8) === "+").as("same_orientation"),
         substring(col("f")(9), 4, Int.MaxValue).as("symbol"),
-        (col("__ord") * 2 + dir).as("__ord2"))
+        lit(dir).as("__twin"))
 
-    val both = lines.select(col(InputFiles.Column), explode(array(
+    val both = lines.select(InputFiles.fileOrder :+ explode(array(
         block(1, 0, 2, 3, 5, 4, 6, 7, dir = 0),
-        block(5, 4, 6, 7, 1, 0, 2, 3, dir = 1))).as("__row"))
-      .select(col(InputFiles.Column), col("__row.*"))
+        block(5, 4, 6, 7, 1, 0, 2, 3, dir = 1))).as("__row"): _*)
+      .select(InputFiles.fileOrder :+ col("__row.*"): _*)
 
-    // The last dedup of the chain drops __file and __ord2 from both the
-    // packed struct and the output (r22 keep projection) — they are
-    // only ordering inputs, never consumed columns.
-    val ord = Seq(col(InputFiles.Column), col("__ord2"))
-    val dataCols = both.columns.filterNot(Set(InputFiles.Column, "__ord2")).toSeq
+    // The last dedup of the chain drops __file, __ord and __twin from
+    // both the packed struct and the output (r22 keep projection) —
+    // they are only ordering inputs, never consumed columns.
+    val ord = InputFiles.fileOrder :+ col("__twin")
+    val dataCols = both.columns.filterNot(Set(InputFiles.Column, InputFiles.Ordinal, "__twin")).toSeq
+    val byPk = Dedup.lastWins(both,
+      keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr", "ref_start_pos"),
+      ord = ord, keep = if (opts.strictSqliteCompat) both.columns.toSeq else dataCols)
     if (opts.strictSqliteCompat)
-      Dedup.lastWins(
-        Dedup.lastWins(both,
-          keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr", "ref_start_pos"),
-          ord = ord),
-        keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr"),
-        ord = ord, keep = dataCols)
-    else
-      Dedup.lastWins(both,
-        keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr", "ref_start_pos"),
-        ord = ord, keep = dataCols)
+      Dedup.lastWins(byPk, keys = Seq("ref_taxonid", "comp_taxonid", "ref_chr"), ord = ord,
+        keep = dataCols)
+    else byPk
   }
 
   /** [[load]] of one file. */

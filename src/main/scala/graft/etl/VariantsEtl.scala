@@ -30,8 +30,7 @@ object VariantsEtl {
 
   /** The variant table of every species file, from one scan. */
   def load(spark: SparkSession, files: Seq[Pipeline.SpeciesFile]): DataFrame = {
-    val paths = files.map(_.path)
-    val raw = InputFiles.indexed(spark.read.format("vcf").load(paths: _*), paths)
+    val raw = InputFiles.read(spark, "vcf", files.map(_.path))
     val info = str_to_map(col("info"), lit(";"), lit("="))
     raw
       .withColumn("__info", info)

@@ -56,8 +56,9 @@ object Dedup {
     * row_number window worked; this pre-check turns that into a clear
     * message. And the winner on full-ordering ties is the payload-
     * struct extremum, not scan order: callers must keep `ord` unique
-    * per key group (all six call sites derive ordinals from
-    * `monotonically_increasing_id` or unique key suffixes).
+    * per key group (the ETL call sites order by the scan-filled
+    * `__file` and `__ord` of `graft.sources.InputFiles`, the others by
+    * unique key suffixes).
     */
   private def assertOrderable(df: DataFrame, cols: Seq[String]): Unit = {
     def hasMap(t: org.apache.spark.sql.types.DataType): Boolean = t match {

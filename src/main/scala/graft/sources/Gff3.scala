@@ -15,14 +15,13 @@ import org.apache.spark.sql.functions._
 object Gff3 {
 
   /** The `gff3` source's typed columns, one row per feature line, plus
-    * `__file`, the index in `paths` of the row's file
-    * ([[InputFiles.indexed]]), and `__ord`, the row's order within its
-    * file: together they order rows for order-sensitive downstream
-    * dedup (narrow read — no shuffle before the ordinal is assigned).
+    * `__file`, the index in `paths` of the row's file, and `__ord`, the
+    * row's place in its file, both filled by the scan
+    * ([[InputFiles.read]]): together they order rows for
+    * order-sensitive downstream dedup ([[InputFiles.fileOrder]]).
     */
   def read(spark: SparkSession, paths: Seq[String]): DataFrame =
-    InputFiles.indexed(spark.read.format("gff3").load(paths: _*), paths)
-      .withColumn("__ord", monotonically_increasing_id())
+    InputFiles.read(spark, "gff3", paths)
 
   /** [[read]] of one file, its rows all `__file` 0. */
   def read(spark: SparkSession, path: String): DataFrame = read(spark, Seq(path))

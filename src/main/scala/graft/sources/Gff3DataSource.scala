@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 /** The reference's tab-separated formats on Spark's file-source V2
   * classes: `spark.read.format("gff3")` and `spark.read.format("vcf")`
-  * (SURVEY.md §2.1 S1/S2/S5; the shared part is [[LineFileSource]]).
+  * (SURVEY.md §2.1 S1/S2/S5; the shared part is [[LineFileSource]]),
+  * and `spark.read.format("lines")` for the others ([[LinesFormat]]).
   *
   * One row per line, in fixed typed columns (positions Long, score/qual
   * Double, phase Int). `#` comment lines, whitespace-only lines and
@@ -32,6 +33,22 @@ private[sources] case class TabFormat(name: String, schema: StructType) extends 
         (offset, fields.map(f => if (f == "." || f.isEmpty) null else f))
       }
 }
+
+/** The homolog and block TSVs and GAF (SURVEY.md §2.1 S4/S5/S7), which
+  * the reference reads with a line iterator: one string column
+  * `value`, every line kept as it is, blank and comment lines included,
+  * so each loader skips what the reference skips
+  * ([[InputFiles.tabLines]]).
+  */
+private[sources] object LinesFormat extends LineFormat {
+  override val name = "lines"
+  override val schema: StructType = StructType(Seq(StructField("value", StringType)))
+  override def rows(file: PartitionedFile, conf: Configuration): Iterator[(Long, Array[String])] =
+    LineFileSource.lines(file.toPath, file.start, file.length, conf).map { case (o, l) => (o, Array(l)) }
+}
+
+/** `spark.read.format("lines")`: one row per line, as it is. */
+class LinesDataSource extends LineFileSource(LinesFormat)
 
 /** `spark.read.format("gff3")`: the 9 GFF3 columns. */
 class Gff3DataSource extends LineFileSource(TabFormat("gff3", Gff3DataSource.schema))

@@ -10,7 +10,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.V2ExpressionBuilder
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, Table}
 import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory, Scan}
@@ -30,9 +30,10 @@ import org.apache.spark.util.SerializableConfiguration
   * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
   * `minPartitionNum`, the size estimate, unsplittable compressed files
   * (`TextBasedFileScan`), and the per-file reader loop that names the
-  * file in a read error (`FilePartitionReaderFactory`). Like Spark's
-  * V1 file sources, a read exposes `_metadata.file_path`, the
-  * URL-encoded path of the file each row came from.
+  * file in a read error (`FilePartitionReaderFactory`). A read exposes
+  * `_metadata` ([[LineFileTable.FileMetadata]]): each row's file, the
+  * start of its split and its index among the split's rows, which
+  * together order rows as their files hold them.
   */
 private[sources] trait LineFormat extends Serializable {
   def name: String
@@ -99,7 +100,7 @@ object LineFileSource {
   */
 class NoV1Format extends FileFormat {
   private def refuse = throw new UnsupportedOperationException(
-    "the gff3, vcf and obo sources only read, through spark.read.format(...).load")
+    "the gff3, vcf, obo and lines sources only read, through spark.read.format(...).load")
   override def inferSchema(spark: SparkSession, options: Map[String, String],
       files: Seq[FileStatus]): Option[StructType] = refuse
   override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
@@ -121,14 +122,23 @@ private[sources] case class LineFileTable(format: LineFormat, name: String,
 
 private[sources] object LineFileTable {
 
-  /** `_metadata` as Spark's V1 file sources name it, with their
-    * `file_path` field alone, filled as they fill it
-    * ([[InputFiles.metadataPath]]).
+  /** `_metadata` as Spark's V1 file sources name it: their `file_path`,
+    * filled as they fill it ([[InputFiles.metadataPath]]), and
+    * `file_block_start`, the byte where the row's split starts; then
+    * `block_row_index`, the row's index among the rows its split
+    * emits. Splits of one file never overlap and each reads its rows
+    * in file order, so (`file_block_start`, `block_row_index`) orders
+    * a file's rows for any split count and any splittable codec, where
+    * a line's byte offset does not: Hadoop's bzip2 reader counts it
+    * from the compressed start of the split's first block.
     */
   object FileMetadata extends MetadataColumn {
+    val BlockRowIndex = "block_row_index"
     override def name: String = FileFormat.METADATA_NAME
-    override def dataType: StructType =
-      StructType(Seq(StructField(FileFormat.FILE_PATH, StringType, nullable = false)))
+    override def dataType: StructType = StructType(Seq(
+      StructField(FileFormat.FILE_PATH, StringType, nullable = false),
+      StructField(FileFormat.FILE_BLOCK_START, LongType, nullable = false),
+      StructField(BlockRowIndex, LongType, nullable = false)))
     override def isNullable: Boolean = false
   }
 }
@@ -138,12 +148,13 @@ private[sources] case class LineFileScanBuilder(format: LineFormat,
     dataSchema: StructType, options: CaseInsensitiveStringMap)
     extends FileScanBuilder(sparkSession, fileIndex, dataSchema) {
 
-  /** The `_metadata` field when the plan reads it, else empty. */
+  /** `_metadata`, all of its fields, when the plan reads any, else empty. */
   private var metadataSchema = new StructType()
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     super.pruneColumns(requiredSchema)
-    metadataSchema = StructType(requiredSchema.filter(_.name == FileFormat.METADATA_NAME))
+    metadataSchema = StructType(requiredSchema.filter(_.name == FileFormat.METADATA_NAME)
+      .map(_.copy(dataType = LineFileTable.FileMetadata.dataType)))
   }
 
   /** Equality and IN on string columns run in the reader, before a row
@@ -206,7 +217,9 @@ private[sources] case class LineFileScan(format: LineFormat, sparkSession: Spark
 /** Keeps the rows that pass the pushed filters and types the read
   * columns, then appends the partition values and the read `_metadata`
   * fields; a value that does not parse names its line's byte offset,
-  * its column and itself (Spark's reader loop adds the file).
+  * its column and itself (Spark's reader loop adds the file). A row's
+  * `block_row_index` counts every row the format gives the split,
+  * filtered or not.
   */
 private[sources] case class LineFileReaderFactory(format: LineFormat,
     conf: Broadcast[SerializableConfiguration], readDataSchema: StructType,
@@ -235,15 +248,14 @@ private[sources] case class LineFileReaderFactory(format: LineFormat,
         case e: NumberFormatException => throw new IllegalArgumentException(
           s"line at byte $offset: ${f.name} '$v' is not a ${f.dataType.simpleString}", e)
       }
-    val rows = format.rows(file, conf.value.value).collect {
-      case (offset, values) if passes(values) =>
-        new GenericInternalRow(read.map { case (i, f) => typed(offset, values(i), f) }): InternalRow
+    val path = UTF8String.fromString(InputFiles.metadataPath(file.toPath))
+    val partitionValues = file.partitionValues.toSeq(partitionSchema)
+    val project = UnsafeProjection.create(StructType(readDataSchema ++ partitionSchema ++ metadataSchema))
+    val rows = format.rows(file, conf.value.value).zip(Iterator.iterate(0L)(_ + 1)).collect {
+      case ((offset, values), index) if passes(values) => project(new GenericInternalRow(
+        read.map { case (i, f) => typed(offset, values(i), f) } ++ partitionValues ++
+          metadataSchema.map(_ => InternalRow(path, file.start, index)))): InternalRow
     }
-    val metadata =
-      if (metadataSchema.isEmpty) InternalRow.empty
-      else InternalRow(InternalRow(UTF8String.fromString(InputFiles.metadataPath(file.toPath))))
-    new PartitionReaderWithPartitionValues(new PartitionReaderFromIterator(rows),
-      readDataSchema, StructType(partitionSchema.fields ++ metadataSchema.fields),
-      new JoinedRow(file.partitionValues, metadata))
+    new PartitionReaderFromIterator(rows)
   }
 }

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, input_file_block_start}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.model.EtlOptions
@@ -85,7 +86,7 @@ class EtlSpec extends AnyFunSuite {
 
   test("features: D3 keep-first picks the earlier row when its duplicate sits in a later split") {
     // Spark sorts a file's splits by length before packing them into
-    // partitions; the file's order must survive that for `__ord`
+    // partitions; `__ord` comes from the split, not from the packing
     val filler = (1 to 400).map(i => s"1\tMGI\tQTL\t$i\t${i + 9}\t.\t.\t.\tID=F$i;Dbxref=MGI:$i")
     val path = tmpInput(".gff3", (Seq("##gff-version 3",
       "1\tMGI\tQTL\t5\t9\t.\t.\t.\tID=DUP;Dbxref=MGI:1;Name=first") ++ filler :+
@@ -303,6 +304,59 @@ class EtlSpec extends AnyFunSuite {
     }
   }
 
+  test("gaf: each row is a tab-split line") {
+    // the reference splits each line on tabs: a field that opens with a
+    // quote is text, not the start of a quoted field; `!` comments,
+    // blank and space-only lines, and lines too short to hold the
+    // taxon field are skipped
+    def gafLine(gene: String, name: String) =
+      (Seq("DB", gene, "SYM", "", "GO:0001", "REF", "EV", "", "P", name, "", "protein",
+        "taxon:9606", "20210101", "AA") ++ Seq.fill(2)("")).mkString("\t")
+    val path = tmpInput(".gaf", "!gaf-version: 2.2", gafLine("G1", "\"beta"), "", "   ", "\t",
+      "DB\tG3\tSYM\t\tGO:0003", gafLine("G2", "alpha"))
+    assert(OntologyEtl.loadGafs(spark, Seq((path, 9606))).orderBy("gene_id").collect().toSeq ===
+      Seq(Row("G1", "GO:0001", 9606), Row("G2", "GO:0001", 9606)))
+  }
+
+  test("ordinals: keep-first and last-wins follow file order across bzip2 splits") {
+    // Hadoop's bzip2 reader splits a file at its ~900 kB blocks, and keys
+    // a line by the compressed start of its split plus the bytes read
+    // since: the earlier duplicate, deep in the first block, has the
+    // larger key. Each file is two blocks.
+    def bz2Input(suffix: String, lines: Seq[String]): String = {
+      val f = java.nio.file.Files.createTempFile(
+        java.nio.file.Paths.get(TestSpark.scratchDir("graft_bz2")), "in", suffix)
+      val codec = new org.apache.hadoop.io.compress.BZip2Codec()
+      codec.setConf(spark.sparkContext.hadoopConfiguration)
+      val out = codec.createOutputStream(java.nio.file.Files.newOutputStream(f))
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+      f.toString
+    }
+    val n = 24000
+    def withDups(line: Int => String, first: String, last: String) =
+      (1 until n).map(i => if (i == n / 2) first else line(i)) :+ last
+    def feature(i: Int, id: String, name: String) =
+      s"1\tMGI\tQTL\t$i\t${i + 9}\t.\t.\t.\tID=$id;Dbxref=MGI:$i;Name=$name"
+    val gff = bz2Input(".gff3.bz2", "##gff-version 3" +: withDups(i => feature(i, s"F$i", "f"),
+      feature(0, "DUP", "first"), feature(0, "DUP", "second")))
+    def block(i: Int, id: String) = s"1\t9606\t$i\t${i + 9}\t4\t10116\t$i\t${i + 9}\t+\tID=$id"
+    val blocks = bz2Input(".txt.bz2", withDups(i => block(i, s"SynBlock$i"),
+      block(0, "SynBlockEarly"), block(0, "SynBlockLate")))
+    def splitsOf(path: String, dup: String) = spark.read.text(path)
+      .filter(col("value").contains(dup)).select(input_file_block_start()).collect().map(_.getLong(0))
+    val size = Seq(gff, blocks).map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).max
+    TestSpark.withConf(spark)("spark.sql.files.maxPartitionBytes" -> (size / 8).toString) {
+      for ((path, dup) <- Seq(gff, blocks).zip(Seq("ID=DUP", "\t9606\t0\t"))) {
+        val starts = splitsOf(path, dup)
+        assert(starts.length === 2 && starts(0) < starts(1), s"$path: ${starts.toSeq}")
+      }
+      assert(FeaturesEtl.load(spark, gff, 10090).filter("id = 'DUP'").select("name")
+        .collect().toSeq === Seq(Row("first")))
+      assert(SyntenyBlocksEtl.load(spark, blocks).filter("ref_start_pos = 0").select("symbol")
+        .collect().toSeq === Seq(Row("SynBlockLate"), Row("SynBlockLate")))
+    }
+  }
+
   test("ontology: no cache entry outlives a load, and a rewritten OBO is read fresh") {
     val obo = java.nio.file.Paths.get(TestSpark.scratchDir("graft_obo"), "go.obo")
     def load(): Set[String] = {
@@ -513,7 +567,8 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("pipeline: each table plan reads each format in one scan, with no union") {
-    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet, Nondeterministic}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Union}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
     val in = pipelineInputs()
@@ -534,7 +589,17 @@ class EtlSpec extends AnyFunSuite {
         assert(n === 1 || (name == "exon" && n === 2), s"$name reads $format in $n scans")
       if (name != "on_terms" && name != "on_pairs")
         assert(plan.collectFirst { case u: Union => u }.isEmpty, s"$name plans a union")
+      // row order comes from the scan, so nothing blocks a filter's pushdown
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[Nondeterministic]))),
+        s"$name plans a nondeterministic expression")
     }
+    val feature = tables("feature").queryExecution.optimizedPlan
+    assert(feature.exists {
+      case Filter(blacklist, scan: DataSourceV2ScanRelation) =>
+        scan.relation.table.name.startsWith("gff3 ") &&
+          blacklist.exists(e => e.isInstanceOf[In] || e.isInstanceOf[InSet])
+      case _ => false
+    }, s"feature: no blacklist filter directly above its gff3 scan\n$feature")
   }
 
   test("blocks: two files cost one validation job, whose error names the bad file") {
