@@ -306,7 +306,7 @@ object Curation {
           .filter(col("n_shared") >= minSharedFps)
           .select(idCol)
       } else {
-        // q165's exact accounting (Extended17): duplicated-window
+        // q165's exact accounting (DocQueries): duplicated-window
         // region merge, threshold on the duplicated-token fraction
         val docs = src
           .select(col(idCol), col(tokensCol).as("__t"))

@@ -23,8 +23,8 @@ import graft.model.EtlOptions
   * }}}
   *
   * Append keeps the reference's create-then-append family pattern
-  * working verbatim; for new deployments `Pipeline.run` + `write`
-  * loads every family in one session with the partitioned/sorted
+  * working verbatim; for new deployments `Pipeline.run` +
+  * `writeObserved` loads every family in one session with the partitioned/sorted
   * layout (preferred: one job, no per-invocation session cost).
   *
   * Passing a `jdbc:` URL as `<outDir>` routes every table through the

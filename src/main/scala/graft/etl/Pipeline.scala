@@ -21,8 +21,8 @@ import graft.model.EtlOptions
   * are independent pipelines: the reference serialized its loaders only
   * because they shared one SQLite file. Here `run` starts every family
   * load at once, so their eager header, validation and closure jobs
-  * overlap, and `write`/`writeObserved` write the tables at once; both
-  * go through [[concurrently]].
+  * overlap, and `writeObserved` writes the tables at once; both go
+  * through [[concurrently]].
   *
   * Sink (S9): each table lands as Parquet. Positional tables partition
   * by taxon and sort within partitions on (chr, start) — the physical
@@ -121,19 +121,6 @@ object Pipeline {
     "on_pairs" -> (None, Seq("parent", "child")),
     "gene_ontology_map" -> (None, Seq("ontology_id", "gene_id")))
 
-  /** @param dynamicPartitionOverwrite when true, an overwrite replaces
-    *        only the taxon partitions present in the incoming frame
-    *        (Spark's dynamic partitionOverwriteMode) — the per-species
-    *        reload the reference does by re-running one loader, without
-    *        rewriting every other species' data. Default (static)
-    *        overwrites the whole table.
-    */
-  def write(tables: Map[String, DataFrame], outDir: String,
-      dynamicPartitionOverwrite: Boolean = false): Unit =
-    concurrently(tables.toSeq.map { case (name, df) =>
-      () => writeOne(name, df, outDir, dynamicPartitionOverwrite)
-    }): Unit
-
   private def writeOne(name: String, df: DataFrame, outDir: String,
       dynamicPartitionOverwrite: Boolean): Unit = {
     val (partCol, sortCols) = layout.getOrElse(name, (None, Nil))
@@ -150,12 +137,21 @@ object Pipeline {
     writer.mode("overwrite").parquet(s"$outDir/$name")
   }
 
-  /** `write` with in-flight record accounting (SURVEY A4): each
-    * table's written-row count rides the write job itself through
-    * `Dataset.observe` — the Spark-native form of the reference's
-    * loader counters, with NO second pass over the data (a `count()`
-    * after the fact would re-read every table; at 100 TB that doubles
-    * the job). Returns rows written per table.
+  /** The parquet sink: each table partitioned by taxon and sorted to
+    * mirror its reference indexes (`layout`), the tables written at
+    * once on a pool of one thread per table. Record accounting (SURVEY
+    * A4) rides the write job itself: each table's written-row count
+    * comes from `Dataset.observe` — the Spark-native form of the
+    * reference's loader counters, with NO second pass over the data (a
+    * `count()` after the fact would re-read every table; at 100 TB that
+    * doubles the job). Returns rows written per table.
+    *
+    * @param dynamicPartitionOverwrite when true, an overwrite replaces
+    *        only the taxon partitions present in the incoming frame
+    *        (Spark's dynamic partitionOverwriteMode) — the per-species
+    *        reload the reference does by re-running one loader, without
+    *        rewriting every other species' data. Default (static)
+    *        overwrites the whole table.
     */
   def writeObserved(tables: Map[String, DataFrame], outDir: String,
       dynamicPartitionOverwrite: Boolean = false): Map[String, Long] =
@@ -173,10 +169,10 @@ object Pipeline {
     * embedded ships with Spark and is what CliSpec round-trips).
     *
     * Embedded single-file engines are single-writer, so the tables are
-    * written one after another (unlike `write`'s concurrent tables) and
-    * each is coalesced to one partition — this sink is a
+    * written one after another (unlike `writeObserved`'s concurrent
+    * tables) and each is coalesced to one partition — this sink is a
     * small-deliverable parity convenience; the scale path is the
-    * partitioned/sorted parquet layout in `write`.
+    * partitioned/sorted parquet layout in `writeObserved`.
     */
   def writeJdbc(tables: Map[String, DataFrame], url: String,
       properties: java.util.Properties = new java.util.Properties()): Unit =

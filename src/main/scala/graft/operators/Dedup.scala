@@ -9,14 +9,17 @@ import org.apache.spark.sql.functions._
   * `import_homologs.py:114`, `import_genes_exons.py:120-126`,
   * `import_features.py:203-211`).
   *
-  * D1/D3 run as ONE hash aggregation — `min`/`max` of a
+  * D1/D3 run as ONE aggregation — `min`/`max` of a
   * `struct(ord…, kept non-key columns)` per key — instead of the former
   * exchange + per-partition sort + row_number window (r21, guide
   * §2.3 "aggregate before you shuffle"): the partial aggregate
   * combines map-side, so the shuffle carries at most one row per
-  * (map task, key) rather than every input row, and the sort is gone
-  * entirely. Struct comparison is lexicographic by field with nulls
-  * ordered first — exactly `ORDER BY … ASC NULLS FIRST` under `min`
+  * (map task, key) rather than every input row. It is not a hash
+  * aggregation: `min`/`max` of a struct has no fixed-width buffer, so
+  * Spark plans a `SortAggregate` with a `Sort` on each side of the
+  * exchange (the q40–q42 and q44 plans). Struct comparison is
+  * lexicographic by field with nulls ordered first — exactly
+  * `ORDER BY … ASC NULLS FIRST` under `min`
   * and `ORDER BY … DESC NULLS LAST` under `max`, Spark's window
   * defaults, so winners are identical to the window form wherever the
   * ordering keys are unique per key group; on full ties the pick is
@@ -25,7 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** D1 — `INSERT OR REPLACE`: last write (by `ord`) wins per key. */
+  /** D1 — `INSERT OR REPLACE`: last write (by `ord`) wins per key.
+    * @note `ord` must be unique per key group. On a tie the winner is
+    *   the payload-struct extremum, not the first or last row in scan
+    *   order.
+    */
   def lastWins(df: DataFrame, keys: Seq[String], ord: Seq[Column]): DataFrame =
     pick(df, keys, ord, useMax = true, df.columns.toSeq)
 
@@ -36,16 +43,27 @@ object Dedup {
     * whole table (r22; the all-columns form widened q09's ReadSchema
     * from 3 to all 11 lineitem columns — a full-width scan + shuffle
     * at 100 TB for columns the query never outputs).
+    * @note `ord` must be unique per key group. On a tie the winner is
+    *   the payload-struct extremum, not the first or last row in scan
+    *   order.
     */
   def lastWins(df: DataFrame, keys: Seq[String], ord: Seq[Column],
       keep: Seq[String]): DataFrame =
     pick(df, keys, ord, useMax = true, keep)
 
-  /** D3 — `INSERT`-and-skip-dup: first write (by `ord`) wins per key. */
+  /** D3 — `INSERT`-and-skip-dup: first write (by `ord`) wins per key.
+    * @note `ord` must be unique per key group. On a tie the winner is
+    *   the payload-struct extremum, not the first or last row in scan
+    *   order.
+    */
   def keepFirst(df: DataFrame, keys: Seq[String], ord: Seq[Column]): DataFrame =
     pick(df, keys, ord, useMax = false, df.columns.toSeq)
 
-  /** D3 with an explicit output projection — see the 4-arg [[lastWins]]. */
+  /** D3 with an explicit output projection — see the 4-arg [[lastWins]].
+    * @note `ord` must be unique per key group. On a tie the winner is
+    *   the payload-struct extremum, not the first or last row in scan
+    *   order.
+    */
   def keepFirst(df: DataFrame, keys: Seq[String], ord: Seq[Column],
       keep: Seq[String]): DataFrame =
     pick(df, keys, ord, useMax = false, keep)

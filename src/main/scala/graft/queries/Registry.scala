@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `bench = true` marks the headline set timed by `graft.Bench`.
   *
   * `streaming = true` marks queries that execute as Structured
-  * Streaming micro-batch runs; Bench lists them separately in its
+  * Streaming micro-batch runs (the `StreamingQueries` module, marked
+  * by `Registry.modules`); Bench lists them separately in its
   * JSON so baseline ratios can separate per-trigger fixed overhead
   * (a micro-batch artifact at toy scale) from dataflow cost.
   */
@@ -31,35 +32,27 @@ final case class Q(
 
 object Registry {
 
-  /** The Structured-Streaming micro-batch queries (marked centrally so
-    * the declarations stay uncluttered; `all` applies the flag). Kept
-    * consistent with the declarations by the require below.
+  /** The query modules, one per domain. `StreamingQueries` is marked
+    * `streaming` here, so its declarations stay uncluttered.
     */
-  private val streamingNames: Set[String] = Set(
-    "q20_stream_tumbling", "q39_stream_sessionize", "q63_stream_stream_join",
-    "q71_stream_dedup", "q74_stream_sliding", "q82_stream_watermark",
-    "q100_stream_static_enrich", "q108_stream_outer_join",
-    "q111_stream_dedup_watermark", "q142_stream_spend_monitor",
-    "q188_stream_neardup_ingest")
+  private[queries] lazy val modules: Seq[Map[String, Q]] = Seq(
+    Relational.queries, EventQueries.queries, DocQueries.queries,
+    LshQueries.queries, VectorQueries.queries, SamplingQueries.queries,
+    EtlQueries.queries,
+    StreamingQueries.queries.map { case (n, q) => n -> q.copy(streaming = true) })
 
-  lazy val all: Map[String, Q] = {
-    val base =
-      Relational.queries ++ EventQueries.queries ++ DocQueries.queries ++
-        VectorQueries.queries ++ EtlQueries.queries ++ Extended.queries ++
-        Extended2.queries ++ Extended3.queries ++ Extended4.queries ++
-        Extended5.queries ++ Extended6.queries ++ Extended7.queries ++
-        Extended8.queries ++ Extended9.queries ++ Extended10.queries ++
-        Extended11.queries ++ Extended12.queries ++ Extended13.queries ++
-        Extended14.queries ++ Extended15.queries ++ Extended16.queries ++
-        Extended17.queries ++ Extended18.queries ++ Extended19.queries ++
-        Extended20.queries ++ Extended21.queries ++ Extended22.queries ++
-        Extended23.queries ++ Extended24.queries
-    val missing = streamingNames -- base.keySet
-    require(missing.isEmpty, s"streamingNames not in registry: $missing")
-    base.map { case (n, q) =>
-      n -> (if (streamingNames(n)) q.copy(streaming = true) else q)
+  /** Every declared query, by name. */
+  lazy val all: Map[String, Q] = merge(modules)
+
+  /** The union of the module maps; a name declared in two modules
+    * fails instead of silently keeping one of the two queries.
+    */
+  private[queries] def merge(modules: Seq[Map[String, Q]]): Map[String, Q] =
+    modules.foldLeft(Map.empty[String, Q]) { (acc, m) =>
+      val dup = acc.keySet.intersect(m.keySet)
+      require(dup.isEmpty, s"query declared twice: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
     }
-  }
 
   /** Untimed per-query preparation the timing harnesses (Bench,
     * tools.JobProfile) run before a query's timed region. Only for
@@ -71,5 +64,5 @@ object Registry {
     * (Verify) never consult this map.
     */
   val timingPrep: Map[String, (SparkSession, String) => Unit] = Map(
-    "q183_bpe_segment" -> ((s, d) => Extended21.ensureTrajectory(s, d)))
+    "q183_bpe_segment" -> ((s, d) => DocQueries.ensureTrajectory(s, d)))
 }

@@ -401,7 +401,7 @@ class EtlSpec extends AnyFunSuite {
     assert(tables("feature").count() === 6)
     assert(tables("homolog").count() === 10) // 6 + 4 across two files
     val out = graft.TestSpark.scratchDir("graft_pipeline")
-    Pipeline.write(tables, out)
+    Pipeline.writeObserved(tables, out)
     val geneBack = spark.read.parquet(s"$out/gene")
     assert(geneBack.count() === tables("gene").count())
     assert(geneBack.columns.contains("gene_taxonid")) // partition col survives

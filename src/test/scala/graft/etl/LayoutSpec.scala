@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** The parquet layout written by `Pipeline.write` must deliver what
-  * the reference's B-tree indexes delivered (SURVEY.md §1.4): a
+/** The parquet layout written by `Pipeline.writeObserved` must deliver
+  * what the reference's B-tree indexes delivered (SURVEY.md §1.4): a
   * per-species lookup touches one taxon partition (partition pruning
   * visible in the scan), and rows inside each partition are sorted on
   * (chr, start) for min/max row-group skipping.
@@ -23,7 +23,7 @@ class LayoutSpec extends AnyFunSuite {
     val g1 = GenesExonsEtl.load(spark, s"$fx/genes_human.gff3", 9606).genes
     val g2 = GenesExonsEtl.load(spark, s"$fx/genes_human.gff3", 10090).genes
       .withColumn("gene_taxonid", lit(10090))
-    Pipeline.write(Map("gene" -> g1.unionByName(g2)), out)
+    Pipeline.writeObserved(Map("gene" -> g1.unionByName(g2)), out)
 
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     val schema = spark.read.parquet(s"$out/gene").schema
@@ -67,13 +67,13 @@ class LayoutSpec extends AnyFunSuite {
     val human = GenesExonsEtl.load(spark, s"$fx/genes_human.gff3", 9606).genes
     val mouse = GenesExonsEtl.load(spark, s"$fx/genes_human.gff3", 10090).genes
       .withColumn("gene_taxonid", lit(10090))
-    Pipeline.write(Map("gene" -> human.unionByName(mouse)), out)
+    Pipeline.writeObserved(Map("gene" -> human.unionByName(mouse)), out)
     val humanBefore = spark.read.parquet(s"$out/gene")
       .filter(col("gene_taxonid") === 9606).count()
     // per-species reload: only the mouse partition in the frame;
     // dynamic overwrite must not touch the human partition
     val mouseHalf = mouse.filter(col("gene_chr") === "2")
-    Pipeline.write(Map("gene" -> mouseHalf), out,
+    Pipeline.writeObserved(Map("gene" -> mouseHalf), out,
       dynamicPartitionOverwrite = true)
     val after = spark.read.parquet(s"$out/gene")
     assert(after.filter(col("gene_taxonid") === 9606).count() == humanBefore,
@@ -81,7 +81,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(after.filter(col("gene_taxonid") === 10090).count()
       == mouseHalf.count(), "mouse partition not replaced")
     // static overwrite (default) drops every partition not in the frame
-    Pipeline.write(Map("gene" -> mouseHalf), out)
+    Pipeline.writeObserved(Map("gene" -> mouseHalf), out)
     assert(spark.read.parquet(s"$out/gene")
       .filter(col("gene_taxonid") === 9606).count() == 0)
   }
@@ -90,7 +90,7 @@ class LayoutSpec extends AnyFunSuite {
     import spark.implicits._
     val out = graft.TestSpark.scratchDir("graft_layout_exon")
     val exons = GenesExonsEtl.load(spark, s"$fx/genes_human.gff3", 9606).exons
-    Pipeline.write(Map("exon" -> exons), out)
+    Pipeline.writeObserved(Map("exon" -> exons), out)
     val files = new java.io.File(s"$out/exon/taxonid=9606")
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.toString)
     val rows = spark.read.parquet(files: _*)

@@ -47,7 +47,7 @@ class Q176Q181PersistAbSpec extends AnyFunSuite with graft.PerfSession {
       val stats = docs.agg(count(lit(1)).as("n"), sum("len").as("sumlen"))
       val tf = docs
         .select(col("doc_id"), col("len"), explode(col("t")).as("tok"))
-        .filter(col("tok").isin(Extended18.Bm25Terms.map(x => x: Any): _*))
+        .filter(col("tok").isin(DocQueries.Bm25Terms.map(x => x: Any): _*))
         .groupBy("doc_id", "len", "tok").agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy("tok")
         .agg(count_distinct(col("doc_id")).as("dfreq"))

@@ -59,7 +59,7 @@ class Q181RefereeSpec extends AnyFunSuite with graft.PerfSession {
 
     import graft.corpus.Curation
     import graft.functions.{MinHashLsh, TextFns}
-    val target = 1000 // Extended16.RecallSampleTarget (object-private)
+    val target = 1000 // LshQueries.RecallSampleTarget (object-private)
 
     // the registry dataflow, decomposed at its seams (identical
     // expressions — Curation.sampledRecallAudit's own pieces)
@@ -92,8 +92,8 @@ class Q181RefereeSpec extends AnyFunSuite with graft.PerfSession {
       val withT = src.withColumn("__t", TextFns.tokens(col("text")))
       MinHashLsh.candidatePairs(
         MinHashLsh.signaturesFromTokens(withT, "doc_id", "__t", 3,
-          Extended2.MinhashK),
-        "doc_id", Extended2.MinhashK, Extended2.Bands)
+          Shared.MinhashK),
+        "doc_id", Shared.MinhashK, Shared.Bands)
     }
 
     def timed(label: String)(body: => Long): (Double, Int, Double) = {
