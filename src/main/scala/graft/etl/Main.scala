@@ -89,13 +89,16 @@ object Main {
         save("snp_variant", VariantsEtl.load(spark, inputs(0), inputs(1).toInt))
       case "ontology" =>
         val obo = inputs(0).split(",").toSeq
+        // the taxon follows the last ':', so a path may carry a scheme
         val gaf = inputs.drop(1).toSeq.map { g =>
-          val Array(path, taxon) = g.split(":")
-          (path, taxon.toInt)
+          val at = g.lastIndexOf(':')
+          val taxon = g.substring(at + 1).toIntOption
+          require(at > 0 && taxon.isDefined, s"ontology: expected <gaf>:<taxonId>, got '$g'")
+          (g.substring(0, at), taxon.get)
         }
-        val r = OntologyEtl.load(spark, obo, gaf)
+        val r = OntologyEtl.load(spark, obo)
         save("on_terms", r.terms); save("on_pairs", r.pairs)
-        if (gaf.nonEmpty) save("gene_ontology_map", r.geneMap)
+        if (gaf.nonEmpty) save("gene_ontology_map", OntologyEtl.loadGafs(spark, gaf))
       case other =>
         System.err.println(s"unknown command: $other"); usage()
     }

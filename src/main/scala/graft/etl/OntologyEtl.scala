@@ -22,18 +22,12 @@ import graft.sources.{InputFiles, Obo}
   */
 object OntologyEtl {
 
-  final case class Result(terms: DataFrame, pairs: DataFrame, geneMap: DataFrame)
+  final case class Result(terms: DataFrame, pairs: DataFrame)
 
-  /** @param oboPaths ontology files in load order (GO, MP, DO)
-    * @param gafFiles (path, taxonId) in shell-script order — order
-    *                 matters: gene_ontology_map's PK is NOT
-    *                 taxon-qualified, so a later file's (gene, term)
-    *                 overwrites an earlier species' row
-    *                 (`import_ontology.py:181`, SURVEY.md §7.6.5);
-    *                 each file is named once
+  /** `on_terms` and `on_pairs`.
+    * @param oboPaths ontology files in load order (GO, MP, DO)
     */
-  def load(spark: SparkSession, oboPaths: Seq[String],
-      gafFiles: Seq[(String, Int)]): Result = {
+  def load(spark: SparkSession, oboPaths: Seq[String]): Result = {
     // U4 — one term table + one is_a graph across all ontologies
     // (module-global dict in the reference, `import_ontology.py:54`).
     // One scan over every file. Not cached: the closure's one bounded
@@ -64,20 +58,21 @@ object OntologyEtl {
     // descendants keep a NULL count (reference leaves them unset).
     val counts = Closure.descendantCounts(closure)
       .select(col("ancestor").as("id"), col("n_descendants").as("count"))
-    val termsWithCount = terms.join(counts, Seq("id"), "left")
-
-    // GAF mappings (S7/F2/F5/C8/D1).
-    val geneMap =
-      if (gafFiles.nonEmpty) loadGafs(spark, gafFiles)
-      else spark.emptyDataFrame
-
-    Result(termsWithCount, pairs, geneMap)
+    Result(terms.join(counts, Seq("id"), "left"), pairs)
   }
 
-  /** `gene_ontology_map` from every GAF file, in one `lines` scan: each
-    * line not a `!` comment (F2) is tab-split as the reference splits
-    * it, and an empty field is null; a line too short to hold the taxon
-    * field has none, and the F5 filter drops it.
+  /** `gene_ontology_map` (S7/F2/F5/C8/D1) from every GAF file, in one
+    * `lines` scan: each line not a `!` comment (F2) is tab-split as the
+    * reference splits it, and an empty field is null; a line too short
+    * to hold the taxon field has none, and the F5 filter drops it. It
+    * reads no term table: a mapping's term need not be loaded.
+    *
+    * @param gafFiles (path, taxonId) in shell-script order — order
+    *                 matters: gene_ontology_map's PK is NOT
+    *                 taxon-qualified, so a later file's (gene, term)
+    *                 overwrites an earlier species' row
+    *                 (`import_ontology.py:181`, SURVEY.md §7.6.5);
+    *                 each file is named once
     */
   def loadGafs(spark: SparkSession, gafFiles: Seq[(String, Int)]): DataFrame = {
     def field(i: Int) = trim(nullif(get(col("f"), lit(i)), lit("")))

@@ -62,12 +62,10 @@ object Pipeline {
       family(in.features)(Seq("feature" -> FeaturesEtl.load(spark, in.features, opts))),
       family(in.variants)(Seq("snp_variant" -> VariantsEtl.load(spark, in.variants))),
       family(in.obo) {
-        val o = OntologyEtl.load(spark, in.obo, in.gaf)
-        // no GAF inputs → no gene_ontology_map table (a zero-column
-        // frame is unwritable by any sink)
-        Seq("on_terms" -> o.terms, "on_pairs" -> o.pairs) ++
-          Option.when(in.gaf.nonEmpty)("gene_ontology_map" -> o.geneMap)
+        val o = OntologyEtl.load(spark, in.obo)
+        Seq("on_terms" -> o.terms, "on_pairs" -> o.pairs)
       },
+      family(in.gaf)(Seq("gene_ontology_map" -> OntologyEtl.loadGafs(spark, in.gaf))),
       family(in.homologs)(Seq("homolog" -> HomologsEtl.load(spark, in.homologs).homologs))
     ).flatten
     concurrently(loads).flatten.toMap

@@ -1,61 +1,5 @@
 package graft.model
 
-/** Typed row models for the ten reference tables (SURVEY.md §1.3;
-  * DDL at reference `import_genes_exons.py:44-75`,
-  * `import_features.py:39-56`, `import_cytogenetic_loc.py:45-57`,
-  * `import_synteny_blocks.py:43-56`, `import_homologs.py:52-67`,
-  * `import_variants.py:45-59`, `import_ontology.py:152-183`).
-  *
-  * Types follow SURVEY.md §1.2: positions are Long (safe at 100 TB
-  * scale), VCF quality/frequency are Double (the reference's INTEGER
-  * DDL receives floats anyway), strand is the textual form each
-  * loader actually stored.
-  */
-final case class Gene(
-    gene_id: String, gene_taxonid: Int, gene_symbol: String, gene_chr: String,
-    gene_start_pos: Long, gene_end_pos: Long, gene_strand: String,
-    gene_type: String, gene_name: Option[String])
-
-final case class Exon(
-    exon_id: String, parent_gene: String, taxonid: Int, exon_chr: String,
-    exon_start_pos: Long, exon_end_pos: Long)
-
-final case class Feature(
-    taxon_id: Int, seq_id: String, source: String, `type`: String,
-    start: Option[Long], end: Option[Long], score: Option[Double],
-    strand: Option[String], phase: Option[Int], id: Option[String],
-    name: Option[String], dbxref: Option[String], bio_type: Option[String],
-    status: Option[String], parent: Option[String])
-
-final case class CytoBand(
-    id: String, taxon_id: Int, chr: String, source: String, `type`: String,
-    start: Long, end: Long, location: String, color: String)
-
-final case class SyntenicBlock(
-    ref_taxonid: Int, ref_chr: String, ref_start_pos: Long, ref_end_pos: Long,
-    comp_taxonid: Int, comp_chr: String, comp_start_pos: Long,
-    comp_end_pos: Long, same_orientation: Boolean, symbol: String)
-
-final case class Homolog(
-    ref_gene_id: String, ref_gene_sym: String, ref_taxon_id: Int,
-    ref_seq_id: String, ref_start: Long, ref_end: Long,
-    comp_gene_id: String, comp_gene_sym: String, comp_taxon_id: Int,
-    comp_seq_id: String, comp_start: Long, comp_end: Long)
-
-final case class SnpVariant(
-    chr: String, pos: Long, id: Option[String], ref_base: String,
-    alt_allele: String, quality: Option[Double], filter: Option[String],
-    frequency: Option[Double], gene: String, trait_id: Option[String],
-    taxon_id: Int)
-
-final case class OntologyTerm(
-    id: String, name: String, namespace: Option[String], `def`: Option[String],
-    count: Option[Long])
-
-final case class OntologyPair(parent: String, child: String, relationship: String)
-
-final case class GeneOntologyMap(gene_id: String, ontology_id: String, taxonid: Int)
-
 /** Fidelity switches for the reference's committed quirks
   * (SURVEY.md §7.6). Defaults reproduce the reference byte-for-byte.
   */

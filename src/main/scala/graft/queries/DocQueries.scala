@@ -320,6 +320,28 @@ object DocQueries {
     "WITH " + ctes
   }
 
+  /** DuckDB CTEs replaying `Curation.winnowFingerprints` at k = 4,
+    * w = 5 over `documents`: per doc the distinct winnowed fingerprints
+    * `fp(doc_id, fp)` — md5-prefix hashes of the word 4-grams, the
+    * (h, -pos) minimum of each full 5-hash window.
+    */
+  private def winnowCtes: String = """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        idx AS (SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 1))) AS i
+                FROM toks),
+        g AS (SELECT doc_id, i - 1 AS pos,
+                     CAST('0x' || substr(md5(
+                       t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
+                     ), 1, 12) AS BIGINT) AS h
+              FROM idx WHERE i + 3 <= len(t)),
+        wm AS (SELECT doc_id, pos,
+                      min(struct_pack(h := h, np := -pos)) OVER (
+                        PARTITION BY doc_id ORDER BY pos
+                        ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS wmin,
+                      count(*) OVER (PARTITION BY doc_id) AS n_grams
+               FROM g),
+        fp AS (SELECT DISTINCT doc_id, wmin.h AS fp
+               FROM wm WHERE pos <= n_grams - 5)"""
+
   val queries: Map[String, Q] = Map(
     // ---- exact dedup: hash-groupBy ---------------------------------
     "q21_doc_exact_dedup" -> Q(
@@ -450,7 +472,7 @@ object DocQueries {
         j.select("a", "b", "jaccard").orderBy("a", "b")
       },
       oracle = Some(s"""
-        WITH ${shingleCtes(2, withSource = true)},
+        WITH ${shingleCtes("documents", 2, withSource = true)},
         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         inter AS (
           SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
@@ -689,23 +711,8 @@ object DocQueries {
           .agg(count(lit(1)).as("n_fp"), min("fp").as("min_fp"),
             max("fp").as("max_fp"))
           .orderBy("doc_id"),
-      oracle = Some("""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        idx AS (SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 1))) AS i
-                FROM toks),
-        g AS (SELECT doc_id, i - 1 AS pos,
-                     CAST('0x' || substr(md5(
-                       t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-                     ), 1, 12) AS BIGINT) AS h
-              FROM idx WHERE i + 3 <= len(t)),
-        wm AS (SELECT doc_id, pos,
-                      min(struct_pack(h := h, np := -pos)) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS wmin,
-                      count(*) OVER (PARTITION BY doc_id) AS n_grams
-               FROM g),
-        fp AS (SELECT DISTINCT doc_id, wmin.h AS fp
-               FROM wm WHERE pos <= n_grams - 5)
+      oracle = Some(s"""
+        WITH $winnowCtes
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp,
                min(fp) AS min_fp, max(fp) AS max_fp
         FROM fp GROUP BY doc_id ORDER BY doc_id""")),
@@ -1350,7 +1357,7 @@ object DocQueries {
           .orderBy("doc_id")
       },
       oracle = Some(s"""
-        WITH ${shingleCtes(3)},
+        WITH ${shingleCtes("documents", 3)},
         shh AS (SELECT doc_id, sh AS h FROM sh),
         df AS (SELECT h, CAST(count(*) AS BIGINT) AS df FROM shh GROUP BY 1),
         agg AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
@@ -1434,7 +1441,7 @@ object DocQueries {
           .orderBy("a", "b")
       },
       oracle = Some(s"""
-        WITH ${shingleCtes(3)},
+        WITH ${shingleCtes("documents", 3)},
         shh AS (SELECT doc_id, sh AS h FROM sh),
         rare AS (SELECT h FROM shh GROUP BY h
                  HAVING count(*) <= $MaxShingleDf),
@@ -2601,23 +2608,8 @@ object DocQueries {
           .agg(count(lit(1)).as("n_kept"))
           .orderBy("source")
       },
-      oracle = Some("""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        idx AS (SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 1))) AS i
-                FROM toks),
-        g AS (SELECT doc_id, i - 1 AS pos,
-                     CAST('0x' || substr(md5(
-                       t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-                     ), 1, 12) AS BIGINT) AS h
-              FROM idx WHERE i + 3 <= len(t)),
-        wm AS (SELECT doc_id, pos,
-                      min(struct_pack(h := h, np := -pos)) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS wmin,
-                      count(*) OVER (PARTITION BY doc_id) AS n_grams
-               FROM g),
-        fp AS (SELECT DISTINCT doc_id, wmin.h AS fp
-               FROM wm WHERE pos <= n_grams - 5),
+      oracle = Some(s"""
+        WITH $winnowCtes,
         shared AS (SELECT fp FROM fp GROUP BY fp
                    HAVING count(DISTINCT doc_id) >= 2),
         dropped AS (SELECT doc_id FROM fp SEMI JOIN shared USING (fp)

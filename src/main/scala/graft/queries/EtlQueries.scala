@@ -373,7 +373,7 @@ object EtlQueries {
     "q48_etl_ontology_terms" -> Q(
       impl = (s, _) =>
         OntologyEtl.load(s,
-            Seq(s"$Fx/ontology_go.obo", s"$Fx/ontology_mp.obo"), Nil)
+            Seq(s"$Fx/ontology_go.obo", s"$Fx/ontology_mp.obo"))
           .terms.orderBy("id"),
       oracle = Some(s"""
         WITH RECURSIVE $oboCtes,
@@ -407,7 +407,7 @@ object EtlQueries {
     "q49_etl_closure" -> Q(
       impl = (s, _) =>
         OntologyEtl.load(s,
-            Seq(s"$Fx/ontology_go.obo", s"$Fx/ontology_mp.obo"), Nil)
+            Seq(s"$Fx/ontology_go.obo", s"$Fx/ontology_mp.obo"))
           .pairs.orderBy("parent", "child"),
       oracle = Some(s"""
         WITH RECURSIVE $oboCtes,

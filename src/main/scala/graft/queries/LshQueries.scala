@@ -6,8 +6,8 @@ import graft.Tables
 import graft.corpus.Curation
 import graft.functions.{MinHashLsh, SimHash, SimHash64, TextFns, VecFns}
 import graft.operators.{Components, EmbedNearDup}
-import Shared.{MinhashK, Bands, EmbDim, Threshold, shingleCtes, hashCte, sigSelect,
-  weightRows, powerRows}
+import Shared.{MinhashK, Bands, EmbDim, Threshold, shingleCtes, minhashSigCtes,
+  bandRows, minhashEst, powerRows, planeProjCtes}
 
 /** Near-duplicate detection with the three banded-LSH families over
   * `documents` and `embeddings`: MinHash signatures over word
@@ -20,9 +20,10 @@ import Shared.{MinhashK, Bands, EmbDim, Threshold, shingleCtes, hashCte, sigSele
   * candidate-pair budget (q184-q191).
   *
   * Oracles replay each family exactly: md5-prefix base hashes and the
-  * 2-universal MinHash constants (`Shared.sigSelect`), md5-derived ±1
-  * hyperplanes as literal VALUES (`Shared.weightRows`), and the
-  * SimHash majority vote over hex nibbles.
+  * 2-universal MinHash constants (`Shared.minhashSigCtes`), md5-derived
+  * ±1 hyperplanes as literal VALUES (`Shared.planeProjCtes`), and the
+  * SimHash majority vote over hex nibbles. Each fragment that several
+  * oracles share is built by one function below or in `Shared`.
   */
 object LshQueries {
 
@@ -31,10 +32,10 @@ object LshQueries {
     */
   private val PlanesPerBand = 4
 
-  /** Shared doc→distinct-token→simhash pipeline (same as q29):
-    * one-pass hash-dedup fingerprints (round 19 retired the
-    * string-dedup mode) — the oracle dedups on the hex prefix, a
-    * bijection of the 16-bit hash (SimHashOnePassSpec).
+  /** Doc→distinct-token→simhash pipeline of q29 and q60: one-pass
+    * hash-dedup fingerprints (round 19 retired the string-dedup mode)
+    * — the oracle dedups on the hex prefix, a bijection of the 16-bit
+    * hash (SimHashOnePassSpec).
     */
   private def simhashSigs(s: org.apache.spark.sql.SparkSession, d: String) =
     SimHash.fingerprintsFromTokens(
@@ -43,38 +44,47 @@ object LshQueries {
       "doc_id", "t", 1)
       .select(col("doc_id"), col("sh").as("simhash"))
 
-  /** DuckDB CTE: 16-bit simhash per doc (identical to q29's oracle). */
+  /** DuckDB CTEs: the 16-bit simhash `sig(doc_id, sh)` per doc. */
   private def simhashCte: String =
     s"""tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
                FROM documents),
         hx AS (SELECT DISTINCT doc_id, substr(md5(tok), 1, 4) AS hx FROM tk),
-        sig AS (SELECT doc_id, CAST(${simhashSqlFromHex("hx")} AS BIGINT) AS simhash
+        sig AS (SELECT doc_id, ${simhashSqlFromHex("hx", SimHash.bits)} AS sh
                 FROM hx GROUP BY doc_id)"""
 
-  /** DuckDB CTEs: word-3-gram MinHash signatures + banded LSH pairs
-    * with est >= `minEst` (same construction as q27/q58 oracles).
+  /** DuckDB CTEs of the banded MinHash join over table `src`
+    * (doc_id, text): signatures and their `Bands`-band rows `band`, the
+    * candidate pairs `cand(a, b, est)` of `MinHashLsh.candidatePairs`,
+    * and the near-dup pairs `pairs(a, b)` with est ≥ `Threshold`.
     */
-  private def lshPairCtes(minEst: Double): String = {
-    val r = MinhashK / Bands
-    val bandRows = (0 until Bands).map { b =>
-      val key = (b * r until (b + 1) * r).map(i => s"s$i").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-        (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-    }.mkString("\n UNION ALL\n ")
-    val matches = (0 until MinhashK)
-      .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks),
-        sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows),
-        pairs AS (
-          SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+  private def lshPairCtes(src: String): String =
+    s"""${minhashSigCtes(src)},
+        band AS (${bandRows(Bands)}),
+        cand AS (
+          SELECT DISTINCT l.doc_id AS a, r.doc_id AS b, $minhashEst AS est
           FROM band l JOIN band r
-            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-          WHERE ($matches) / ${MinhashK.toDouble} >= $minEst)"""
+            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
+        pairs AS (SELECT a, b FROM cand WHERE est >= $Threshold)"""
+
+  /** DuckDB CTEs of q58's and q190's cleaning chain over `documents`:
+    * `filtered` holds the docs `Curation.qualityFilter` keeps (symbol
+    * ratio, length, and the stopword-count language guess `en`), and
+    * `kept` the smallest doc_id per exact text (`Curation.exactDedup`).
+    */
+  private def cleanedCtes: String = {
+    def hits(words: String) =
+      s"len(list_filter(string_split(text, ' '), x -> x IN ($words)))"
+    val en = hits("'the', 'a', 'of', 'and', 'to'")
+    s"""filtered AS (
+          SELECT doc_id, text FROM documents
+          WHERE round(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
+                  / length(text), 4) < 0.1
+            AND len(string_split(text, ' ')) >= 10
+            AND $en >= ${hits("'der', 'die', 'das', 'und', 'ist'")}
+            AND $en >= ${hits("'le', 'la', 'les', 'et', 'est'")}),
+        kept AS (
+          SELECT doc_id, text FROM filtered
+          WHERE doc_id IN (SELECT min(doc_id) FROM filtered GROUP BY md5(text)))"""
   }
 
   /** Expected sample size for q181's bounded-cost recall audit. */
@@ -96,19 +106,9 @@ object LshQueries {
     * the guard would be why (run with maxBucket = Int.MaxValue to
     * confirm).
     */
-  private def recallAuditSql(prefixCtes: String, src: String): String = {
-    val r = MinhashK / Bands
-    val bandRows = (0 until Bands).map { b =>
-      val key = (b * r until (b + 1) * r).map(i => s"s$i").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key FROM sig"
-    }.mkString("\n UNION ALL\n ")
+  private def recallAuditSql(prefixCtes: String, src: String): String =
     s"""
-        WITH $prefixCtes
-        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks),
-        sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),
+        WITH $prefixCtes ${minhashSigCtes(src)},
         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
         inter AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
                   FROM sh x JOIN sh y
@@ -119,9 +119,8 @@ object LshQueries {
                   FROM inter
                     JOIN sizes sa ON sa.doc_id = a
                     JOIN sizes sb ON sb.doc_id = b
-                  WHERE c / (sa.n + sb.n - c) >= 0.3),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows),
+                  WHERE c / (sa.n + sb.n - c) >= 0.3),
+        band AS (${bandRows(Bands)}),
         found AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
                   FROM band l JOIN band r
                     ON l.band = r.band AND l.key = r.key
@@ -132,22 +131,6 @@ object LshQueries {
                  AS n_found
         FROM exact e LEFT JOIN found f ON f.a = e.a AND f.b = e.b
         GROUP BY 1 ORDER BY bucket"""
-  }
-
-  /** DuckDB expression reproducing the 16-bit simhash vote over a
-    * PRE-COMPUTED 4-hex-char hash-prefix column (the q29 oracle's
-    * construction after the round-19 hash-dedup migration: dedup and
-    * aggregate on `substr(md5(tok), 1, 4)`, a bijection of the
-    * 16-bit hash long — the `simhash64SqlFromHex` pattern at 4
-    * nibbles). Shared with the q60 and q189 oracles.
-    */
-  private def simhashSqlFromHex(hex: String): String =
-    (0 until SimHash.bits).map { b =>
-      val hexPos = 4 - b / 4
-      val pw = 1 << (b % 4)
-      val nib = s"(instr('0123456789abcdef', substr($hex, $hexPos, 1)) - 1)"
-      s"CASE WHEN 2 * sum(($nib // $pw) % 2) > count(*) THEN ${1L << b} ELSE 0 END"
-    }.mkString(" + ")
 
   // q184/q185: LSH self-calibration — the "calibration knob" the decade
   // curve documents, turned into operators for BOTH banded-LSH
@@ -291,24 +274,157 @@ object LshQueries {
   /** q191: candidate bits-per-band grid of the 64-bit family. */
   private val WidthGrid64 = SimHash64.DefaultWidthGrid
 
-  /** DuckDB expression reproducing [[SimHash64.simhashAggFromHash]]
-    * over a PRE-COMPUTED 16-hex-char hash column (the oracle's twin
-    * of Spark's hash-long: hex prefix ↔ long is a bijection, so
-    * deduping and aggregating on it matches the impl exactly) — the
-    * `simhashSqlFromHex` construction at 16 nibbles, CAST back to
-    * BIGINT because the `1<<63` term promotes the sum to HUGEINT
-    * (the cast is what keeps the oracle's shift/xor/bit_count
-    * arithmetic in 64-bit two's complement, matching Spark's long
-    * exactly).
+  /** DuckDB expression reproducing the `bits`-bit SimHash majority
+    * vote (`SimHash`, and [[SimHash64.simhashAggFromHash]] at 64 bits)
+    * over a PRE-COMPUTED `bits / 4`-hex-char hash-prefix column `hex`:
+    * dedup and aggregate on the hex prefix, a bijection of the impl's
+    * hash long, so both sides vote over the same set. CAST to BIGINT
+    * because at 64 bits the `1<<63` term promotes the sum to HUGEINT
+    * (the cast keeps the oracle's shift/xor/bit_count arithmetic in
+    * 64-bit two's complement, matching Spark's long exactly).
     */
-  private def simhash64SqlFromHex(hex: String): String = {
-    val terms = (0 until SimHash64.bits).map { b =>
-      val hexPos = SimHash64.bits / 4 - b / 4
+  private def simhashSqlFromHex(hex: String, bits: Int): String = {
+    val terms = (0 until bits).map { b =>
+      val hexPos = bits / 4 - b / 4
       val pw = 1 << (b % 4)
       val nib = s"(instr('0123456789abcdef', substr($hex, $hexPos, 1)) - 1)"
       s"CASE WHEN 2 * sum(($nib // $pw) % 2) > count(*) THEN ${1L << b} ELSE 0 END"
     }.mkString(" + ")
     s"CAST($terms AS BIGINT)"
+  }
+
+  /** DuckDB CTE `occ$tag`: the rows per (band, key) of `$keys$tag`. */
+  private def occCte(tag: Int, keys: String): String =
+    s"occ$tag AS (SELECT band, key, count(*) AS m FROM $keys$tag GROUP BY 1, 2)"
+
+  /** DuckDB CTE `allstats`: the `stat<g>` rows of every grid config. */
+  private def allStats(grid: Seq[Int]): String =
+    grid.map(g => s"SELECT * FROM stat$g").mkString("allstats AS (", " UNION ALL ", ")")
+
+  /** DuckDB UNION ALL of `cols` from `table<g>` for the one grid config
+    * `g` equal to the scalar `choice`.
+    */
+  private def selectedRows(grid: Seq[Int], cols: String, table: String,
+      choice: String): String =
+    grid.map(g => s"SELECT $cols FROM $table$g WHERE $choice = $g").mkString(" UNION ALL ")
+
+  /** DuckDB CTE `bk$p(vec_id, band, key)`: `Bands` hyperplane band keys
+    * of `p` planes each over `proj` ([[Shared.planeProjCtes]]), each
+    * packing its planes' signs as `VecFns.lshBandKeyFromSigns` does.
+    */
+  private def planeKeyCte(p: Int): String = s"""
+        bk$p AS (
+          SELECT vec_id, j // $p AS band,
+                 CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
+          FROM proj JOIN (VALUES ${powerRows(p)}) pw$p(m, pv) ON pw$p.m = j % $p
+          WHERE j < ${Bands * p}
+          GROUP BY 1, 2)"""
+
+  /** DuckDB candidate pairs (a, b) sharing a band key of `bk$p`. */
+  private def planePairs(p: Int): String =
+    s"""SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
+          FROM bk$p x JOIN bk$p y
+            ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id"""
+
+  /** DuckDB CTEs verifying the candidate pairs of table `cand` (a, b)
+    * by exact quantized cosine: `epairs(a, b, cos_r)` with cos_r ≥
+    * `minCos`. Depends on `VectorQueries.quantCtes`.
+    */
+  private def cosPairCtes(cand: String, minCos: Double): String = s"""
+        edots AS (
+          SELECT p.a, p.b, CAST(sum(xa.e * xb.e) AS BIGINT) AS dot
+          FROM $cand p
+            JOIN qv xa ON xa.vec_id = p.a
+            JOIN qv xb ON xb.vec_id = p.b AND xb.i = xa.i
+          GROUP BY 1, 2),
+        ecos AS (
+          SELECT a, b, round(CAST(dot AS DOUBLE)
+            / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6) AS cos_r
+          FROM edots
+            JOIN norms na ON na.vec_id = a
+            JOIN norms nb ON nb.vec_id = b),
+        epairs AS (SELECT a, b, cos_r FROM ecos WHERE cos_r >= $minCos)"""
+
+  /** DuckDB CTEs of `EmbedNearDup.bandedPairs` over `embeddings` at
+    * `Bands` bands of `PlanesPerBand` planes: the verified pairs
+    * `epairs(a, b, cos_r)` with quantized cosine ≥ `minCos`.
+    */
+  private def embedPairCtes(minCos: Double): String =
+    s"""${VectorQueries.quantCtes},${planeProjCtes(Bands * PlanesPerBand)},${planeKeyCte(PlanesPerBand)},
+        ecand AS (${planePairs(PlanesPerBand)}),${cosPairCtes("ecand", minCos)}"""
+
+  /** DuckDB CTEs replaying `Curation.calibratedNearDup` over `sig`: per
+    * `BandGrid` config its band rows, occupancy, candidate load and
+    * drop set (the larger id of each pair with est ≥ `Threshold`); the
+    * selection `bsel(bs)`, the most bands whose load fits
+    * `PairsPerDocBudget` (fewest as fallback); and `dropped(doc_id)`,
+    * the selected config's drop set.
+    */
+  private def calibratedDropCtes: String = {
+    val perConfig = BandGrid.map { b =>
+      s"""
+        band$b AS (${bandRows(b)}),
+        ${occCte(b, "band")},
+        stat$b AS (
+          SELECT CAST($b AS BIGINT) AS bands,
+                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
+                 CAST(sum(m) // $b AS BIGINT) AS n_docs
+          FROM occ$b),
+        drop$b AS (
+          SELECT DISTINCT r.doc_id
+          FROM band$b l JOIN band$b r
+            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
+          WHERE $minhashEst >= $Threshold)"""
+    }.mkString(",")
+    s"""$perConfig,
+        ${allStats(BandGrid)},
+        bsel AS (
+          SELECT coalesce(
+                   max(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
+                       THEN bands END),
+                   min(bands)) AS bs
+          FROM allstats),
+        dropped AS (${selectedRows(BandGrid, "doc_id", "drop", "(SELECT bs FROM bsel)")})"""
+  }
+
+  /** DuckDB CTEs replaying the SimHash width calibration
+    * (`SimHash.calibratedPairs`, or `SimHash64`'s for `bits` = 64) over
+    * the fingerprints `sig(doc_id, sh)`: per `grid` width its band
+    * keys, occupancy, candidate load and candidate pairs; the selection
+    * `wsel(ws)`, the narrowest width whose load fits
+    * `PairsPerDocBudget` (widest as fallback); and `selpairs(a, b, sa,
+    * sb)`, the selected width's pairs.
+    */
+  private def simhashCalibrationCtes(bits: Int, grid: Seq[Int]): String = {
+    val perConfig = grid.map { w =>
+      val bands = bits / w
+      s"""
+        bw$w AS (SELECT doc_id, sh, unnest(range(0, $bands)) AS band
+                 FROM sig),
+        bk$w AS (SELECT doc_id, sh, band,
+                        (sh >> (band * $w)) & ${(1L << w) - 1} AS key
+                 FROM bw$w),
+        ${occCte(w, "bk")},
+        stat$w AS (
+          SELECT CAST($w AS BIGINT) AS w,
+                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
+                 CAST(sum(m) // $bands AS BIGINT) AS n_docs
+          FROM occ$w),
+        pairs$w AS (
+          SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
+                 x.sh AS sa, y.sh AS sb
+          FROM bk$w x JOIN bk$w y
+            ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)"""
+    }.mkString(",")
+    s"""$perConfig,
+        ${allStats(grid)},
+        wsel AS (
+          SELECT coalesce(
+                   min(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
+                       THEN w END),
+                   max(w)) AS ws
+          FROM allstats),
+        selpairs AS (${selectedRows(grid, "a, b, sa, sb", "pairs", "(SELECT ws FROM wsel)")})"""
   }
 
   val queries: Map[String, Q] = Map(
@@ -324,9 +440,8 @@ object LshQueries {
           .orderBy("doc_id")
       },
       oracle = Some(s"""
-        WITH ${shingleCtes(3)}, $hashCte
-        SELECT doc_id, $sigSelect
-        FROM hh GROUP BY doc_id ORDER BY doc_id"""),
+        WITH ${minhashSigCtes("documents")}
+        SELECT * FROM sig ORDER BY doc_id"""),
       bench = true),
 
     // ---- LSH candidate pairs (4 bands × 3 rows) --------------------
@@ -339,26 +454,9 @@ object LshQueries {
         MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
           .orderBy("a", "b")
       },
-      oracle = Some {
-        val r = MinhashK / Bands
-        val bandRows = (0 until Bands).map { b =>
-          val key = (b * r until (b + 1) * r).map(i => s"s$i")
-            .mkString(" || '|' || ")
-          s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-            (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-        }.mkString("\n UNION ALL\n ")
-        val matches = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END").mkString(" + ")
-        s"""
-        WITH ${shingleCtes(3)}, $hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows)
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
-               round(($matches) / ${MinhashK.toDouble}, 4) AS est
-        FROM band l JOIN band r
-          ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-        ORDER BY a, b"""
-      }),
+      oracle = Some(s"""
+        WITH ${lshPairCtes("documents")}
+        SELECT a, b, est FROM cand ORDER BY a, b""")),
 
     // ---- SimHash fingerprints --------------------------------------
     "q29_simhash" -> Q(
@@ -368,20 +466,10 @@ object LshQueries {
         // the 16-bit md5 prefix, the oracle on its hex form — a
         // bijection, so both sides select the same vote set
         // (SimHashOnePassSpec pins it)
-        SimHash.fingerprintsFromTokens(
-          Tables.docsParallel(s, d)
-            .withColumn("t", split(col("text"), " ")),
-          "doc_id", "t", 1)
-          .select(col("doc_id"), col("sh").as("simhash"))
-          .orderBy("doc_id"),
-      oracle = Some {
-        s"""
-        WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-                    FROM documents),
-        hx AS (SELECT DISTINCT doc_id, substr(md5(tok), 1, 4) AS hx FROM tk)
-        SELECT doc_id, CAST(${simhashSqlFromHex("hx")} AS BIGINT) AS simhash
-        FROM hx GROUP BY doc_id ORDER BY doc_id"""
-      }),
+        simhashSigs(s, d).orderBy("doc_id"),
+      oracle = Some(s"""
+        WITH $simhashCte
+        SELECT doc_id, sh AS simhash FROM sig ORDER BY doc_id""")),
 
     // ---- embedding-cosine near-duplicate pairs (banded hyperplane
     // LSH candidates + exact verify — the 100 TB shape: candidate
@@ -403,39 +491,9 @@ object LshQueries {
             dim = EmbDim, minCos = 0.4)
           .orderBy("a", "b")
       },
-      oracle = Some {
-        val nPlanes = Bands * PlanesPerBand
-        val pw = powerRows(PlanesPerBand)
-        s"""
-        WITH ${VectorQueries.quantCtes},
-        w(j, i, wt) AS (VALUES ${weightRows(nPlanes)}),
-        pw(m, pv) AS (VALUES $pw),
-        proj AS (
-          SELECT qv.vec_id, w.j, CAST(sum(qv.e * w.wt) AS BIGINT) AS p
-          FROM qv JOIN w ON qv.i = w.i GROUP BY 1, 2),
-        bk AS (
-          SELECT vec_id, j // $PlanesPerBand AS band,
-                 CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
-          FROM proj JOIN pw ON pw.m = j % $PlanesPerBand
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-          FROM bk x JOIN bk y
-            ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id),
-        dots AS (
-          SELECT p.a, p.b, CAST(sum(xa.e * xb.e) AS BIGINT) AS dot
-          FROM pairs p
-            JOIN qv xa ON xa.vec_id = p.a
-            JOIN qv xb ON xb.vec_id = p.b AND xb.i = xa.i
-          GROUP BY 1, 2),
-        cosv AS (
-          SELECT a, b, round(CAST(dot AS DOUBLE)
-            / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6) AS cos_r
-          FROM dots
-            JOIN norms na ON na.vec_id = a
-            JOIN norms nb ON nb.vec_id = b)
-        SELECT a, b, cos_r FROM cosv WHERE cos_r >= 0.4 ORDER BY a, b"""
-      }),
+      oracle = Some(s"""
+        WITH ${embedPairCtes(0.4)}
+        SELECT a, b, cos_r FROM epairs ORDER BY a, b""")),
 
     // ---- end-to-end corpus cleaning: the composed training-data
     // pipeline — quality filter → language filter → exact dedup →
@@ -466,57 +524,11 @@ object LshQueries {
           .select("doc_id")
           .orderBy("doc_id")
       },
-      oracle = Some {
-        val r = MinhashK / Bands
-        val bandRows = (0 until Bands).map { b =>
-          val key = (b * r until (b + 1) * r).map(i => s"s$i")
-            .mkString(" || '|' || ")
-          s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-            (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-        }.mkString("\n UNION ALL\n ")
-        val matches = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END").mkString(" + ")
-        s"""
-        WITH filtered AS (
-          SELECT doc_id, text FROM documents
-          WHERE round(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-                  / length(text), 4) < 0.1
-            AND len(string_split(text, ' ')) >= 10
-            AND (CASE WHEN len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the', 'a', 'of', 'and', 'to')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('der', 'die', 'das', 'und', 'ist')))
-                   AND len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the', 'a', 'of', 'and', 'to')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('le', 'la', 'les', 'et', 'est')))
-                 THEN 'en'
-                 WHEN len(list_filter(string_split(text, ' '),
-                        x -> x IN ('der', 'die', 'das', 'und', 'ist')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('le', 'la', 'les', 'et', 'est')))
-                 THEN 'de' ELSE 'fr' END) = 'en'),
-        kept AS (
-          SELECT doc_id, text FROM filtered
-          WHERE doc_id IN (SELECT min(doc_id) FROM filtered GROUP BY md5(text))),
-        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM kept),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks),
-        sh AS (SELECT DISTINCT doc_id,
-                      t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)), $hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows),
-        pairs AS (
-          SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
-                 round(($matches) / ${MinhashK.toDouble}, 4) AS est
-          FROM band l JOIN band r
-            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
-        dropids AS (SELECT DISTINCT b AS doc_id FROM pairs WHERE est >= 0.5)
+      oracle = Some(s"""
+        WITH $cleanedCtes, ${lshPairCtes("kept")}
         SELECT doc_id FROM kept
-        WHERE doc_id NOT IN (SELECT doc_id FROM dropids)
-        ORDER BY doc_id"""
-      },
+        WHERE doc_id NOT IN (SELECT b FROM pairs)
+        ORDER BY doc_id"""),
       bench = true),
 
     // ---- banded SimHash near-dup (Manku-style exact Hamming<=3):
@@ -551,10 +563,10 @@ object LshQueries {
       },
       oracle = Some(s"""
         WITH $simhashCte
-        SELECT CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming,
+        SELECT CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming,
                CAST(count(*) AS BIGINT) AS n_pairs
         FROM sig a JOIN sig b
-          ON a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3
+          ON a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 3
         GROUP BY 1 ORDER BY hamming""")),
 
     // ---- connected components over LSH near-dup pairs (est >= 0.5):
@@ -573,7 +585,7 @@ object LshQueries {
           .orderBy("doc_id")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes(0.5)},
+        WITH RECURSIVE ${lshPairCtes("documents")},
         sym AS (SELECT a AS x, b AS y FROM pairs
                 UNION SELECT b, a FROM pairs),
         reach(node, lab) AS (
@@ -601,46 +613,9 @@ object LshQueries {
           .select(col("node").as("vec_id"), col("component"))
           .orderBy("vec_id")
       },
-      oracle = Some {
-        val nPlanes = Bands * PlanesPerBand
-        val pw = powerRows(PlanesPerBand)
-        s"""
-        WITH RECURSIVE
-        f AS (SELECT vec_id, unnest(embedding) AS x,
-                     generate_subscripts(embedding, 1) AS i
-              FROM embeddings),
-        qv AS (SELECT vec_id, i,
-                      CAST(round(CAST(x AS DOUBLE) * ${VecFns.Scale}) AS BIGINT) AS e
-               FROM f),
-        norms AS (SELECT vec_id, CAST(sum(e * e) AS BIGINT) AS nsq
-                  FROM qv GROUP BY vec_id),
-        w(j, i, wt) AS (VALUES ${weightRows(nPlanes)}),
-        pw(m, pv) AS (VALUES $pw),
-        proj AS (
-          SELECT qv.vec_id, w.j, CAST(sum(qv.e * w.wt) AS BIGINT) AS p
-          FROM qv JOIN w ON qv.i = w.i GROUP BY 1, 2),
-        bk AS (
-          SELECT vec_id, j // $PlanesPerBand AS band,
-                 CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
-          FROM proj JOIN pw ON pw.m = j % $PlanesPerBand
-          GROUP BY 1, 2),
-        cand AS (
-          SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-          FROM bk x JOIN bk y
-            ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id),
-        dots AS (
-          SELECT c.a, c.b, CAST(sum(xa.e * xb.e) AS BIGINT) AS dot
-          FROM cand c
-            JOIN qv xa ON xa.vec_id = c.a
-            JOIN qv xb ON xb.vec_id = c.b AND xb.i = xa.i
-          GROUP BY 1, 2),
-        pairs AS MATERIALIZED (
-          SELECT a, b FROM dots
-            JOIN norms na ON na.vec_id = a
-            JOIN norms nb ON nb.vec_id = b
-          WHERE round(CAST(dot AS DOUBLE)
-            / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6)
-            >= 0.45),
+      oracle = Some(s"""
+        WITH RECURSIVE ${embedPairCtes(0.45)},
+        pairs AS MATERIALIZED (SELECT a, b FROM epairs),
         sym AS MATERIALIZED (SELECT a AS x, b AS y FROM pairs
                 UNION SELECT b, a FROM pairs),
         reach(node, lab) AS (
@@ -648,8 +623,7 @@ object LshQueries {
           UNION
           SELECT s.x, r.lab FROM sym s JOIN reach r ON r.node = s.y)
         SELECT node AS vec_id, min(lab) AS component
-        FROM reach GROUP BY node ORDER BY vec_id"""
-      }),
+        FROM reach GROUP BY node ORDER BY vec_id""")),
 
     // ---- near-dup clusters → canonical representative: LSH pairs →
     // connected components (as q61), then per cluster keep the
@@ -683,7 +657,7 @@ object LshQueries {
           .orderBy("component")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes(0.5)},
+        WITH RECURSIVE ${lshPairCtes("documents")},
         sym AS (SELECT a AS x, b AS y FROM pairs
                 UNION SELECT b, a FROM pairs),
         reach(node, lab) AS (
@@ -768,7 +742,7 @@ object LshQueries {
         }
       },
       oracle = Some(s"""
-        WITH ${lshPairCtes(0.5)}
+        WITH ${lshPairCtes("documents")}
         SELECT (SELECT CAST(count(DISTINCT x) AS BIGINT)
                 FROM (SELECT a AS x FROM pairs UNION SELECT b FROM pairs)) AS n_nodes,
                (SELECT CAST(count(*) AS BIGINT) FROM pairs) AS n_edges,
@@ -815,7 +789,7 @@ object LshQueries {
         score.select(col("u").as("doc_id"), col("score")).orderBy("doc_id")
       },
       oracle = Some(s"""
-        WITH ${lshPairCtes(0.5)},
+        WITH ${lshPairCtes("documents")},
         sym AS (SELECT a AS u, b AS v FROM pairs
                 UNION ALL SELECT b, a FROM pairs),
         deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
@@ -857,7 +831,7 @@ object LshQueries {
           .orderBy("cluster_size")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes(0.5)},
+        WITH RECURSIVE ${lshPairCtes("documents")},
         sym AS (SELECT a AS x, b AS y FROM pairs
                 UNION SELECT b, a FROM pairs),
         reach(node, lab) AS (
@@ -898,7 +872,7 @@ object LshQueries {
           .orderBy("s1", "s2")
       },
       oracle = Some(s"""
-        WITH ${lshPairCtes(0.5)},
+        WITH ${lshPairCtes("documents")},
         src AS (SELECT doc_id, source FROM documents)
         SELECT least(x.source, y.source) AS s1,
                greatest(x.source, y.source) AS s2,
@@ -932,7 +906,7 @@ object LshQueries {
           .orderBy("a", "b")
       },
       oracle = Some(s"""
-        WITH ${lshPairCtes(0.5)}
+        WITH ${lshPairCtes("documents")}
         SELECT p.a, p.b,
                CAST(levenshtein(x.text, y.text) AS BIGINT) AS edit_dist,
                CAST(greatest(length(x.text), length(y.text)) AS BIGINT) AS max_len
@@ -977,11 +951,7 @@ object LshQueries {
           .orderBy("a", "b")
       },
       oracle = Some(s"""
-        WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-                    FROM documents),
-        hx AS (SELECT DISTINCT doc_id, substr(md5(tok), 1, 4) AS hx FROM tk),
-        sig AS (SELECT doc_id, ${simhashSqlFromHex("hx")} AS sh
-                FROM hx GROUP BY doc_id),
+        WITH $simhashCte,
         b AS (SELECT doc_id, sh, unnest(range(0, 4)) AS band FROM sig),
         bk AS (SELECT doc_id, sh, band, (sh >> (band * 4)) & 15 AS key FROM b),
         cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
@@ -1037,31 +1007,16 @@ object LshQueries {
           .filter(col("est") >= 0.5)
           .orderBy("delta_doc", "index_doc")
       },
-      oracle = Some {
-        val r = MinhashK / Bands
-        val bandRows = (0 until Bands).map { b =>
-          val key = (b * r until (b + 1) * r).map(i => s"s$i").mkString(" || '|' || ")
-          s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-            (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-        }.mkString("\n UNION ALL\n ")
-        val m = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END").mkString(" + ")
-        s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks),
-        sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows)
+      oracle = Some(s"""
+        WITH ${minhashSigCtes("documents")},
+        band AS (${bandRows(Bands)})
         SELECT DISTINCT l.doc_id AS delta_doc, r.doc_id AS index_doc,
-               round(($m) / ${MinhashK.toDouble}, 4) AS est
+               $minhashEst AS est
         FROM band l JOIN band r
           ON l.band = r.band AND l.key = r.key
         WHERE l.doc_id % 10 = 0 AND r.doc_id % 10 <> 0
-          AND round(($m) / ${MinhashK.toDouble}, 4) >= 0.5
-        ORDER BY delta_doc, index_doc"""
-      },
+          AND $minhashEst >= 0.5
+        ORDER BY delta_doc, index_doc"""),
       bench = true),
 
     // ---- LSH recall audit: how many EXACT-Jaccard near-dup pairs does
@@ -1127,45 +1082,8 @@ object LshQueries {
           .join(nDocs, "class")
           .orderBy("class")
       },
-      oracle = Some {
-        val nPlanes = Bands * PlanesPerBand // the q53 geometry
-        val pw = powerRows(PlanesPerBand)
-        s"""
-        WITH ${lshPairCtes(0.5)},
-        f AS (SELECT vec_id, unnest(embedding) AS x,
-                     generate_subscripts(embedding, 1) AS i
-              FROM embeddings),
-        qv AS (SELECT vec_id, i,
-                      CAST(round(CAST(x AS DOUBLE) * ${VecFns.Scale}) AS BIGINT) AS e
-               FROM f),
-        norms AS (SELECT vec_id, CAST(sum(e * e) AS BIGINT) AS nsq
-                  FROM qv GROUP BY vec_id),
-        ew(j, i, wt) AS (VALUES ${weightRows(nPlanes)}),
-        epw(m, pv) AS (VALUES $pw),
-        eproj AS (
-          SELECT qv.vec_id, ew.j, CAST(sum(qv.e * ew.wt) AS BIGINT) AS p
-          FROM qv JOIN ew ON qv.i = ew.i GROUP BY 1, 2),
-        ebk AS (
-          SELECT vec_id, j // 4 AS band,
-                 CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
-          FROM eproj JOIN epw ON epw.m = j % 4
-          GROUP BY 1, 2),
-        ecand AS (
-          SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-          FROM ebk x JOIN ebk y
-            ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id),
-        edots AS (
-          SELECT p.a, p.b, CAST(sum(xa.e * xb.e) AS BIGINT) AS dot
-          FROM ecand p
-            JOIN qv xa ON xa.vec_id = p.a
-            JOIN qv xb ON xb.vec_id = p.b AND xb.i = xa.i
-          GROUP BY 1, 2),
-        epairs AS (
-          SELECT a, b FROM edots
-            JOIN norms na ON na.vec_id = a
-            JOIN norms nb ON nb.vec_id = b
-          WHERE round(CAST(dot AS DOUBLE)
-            / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6) >= 0.4),
+      oracle = Some(s"""
+        WITH ${lshPairCtes("documents")}, ${embedPairCtes(0.4)},
         classed AS (
           SELECT coalesce(p.a, e.a) AS a, coalesce(p.b, e.b) AS b,
                  CASE WHEN p.a IS NOT NULL AND e.a IS NOT NULL THEN 'both'
@@ -1178,8 +1096,7 @@ object LshQueries {
           GROUP BY class)
         SELECT class, CAST(count(*) AS BIGINT) AS n_pairs, n_docs
         FROM classed JOIN nd USING (class)
-        GROUP BY class, n_docs ORDER BY class"""
-      }),
+        GROUP BY class, n_docs ORDER BY class""")),
 
     // ---- sampled LSH recall audit: q162's measurement at a cost that
     // does NOT grow with the corpus. A deterministic md5 draw keeps an
@@ -1254,18 +1171,9 @@ object LshQueries {
           .orderBy("planes_per_band")
       },
       oracle = Some {
-        val maxPlanes = Bands * PlaneGrid.max
         val perConfig = PlaneGrid.map { p =>
-          val pw = powerRows(p)
-          s"""
-        bk$p AS (
-          SELECT vec_id, j // $p AS band,
-                 CAST(sum(CASE WHEN pr >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
-          FROM proj JOIN (VALUES $pw) pw$p(m, pv) ON pw$p.m = j % $p
-          WHERE j < ${Bands * p}
-          GROUP BY 1, 2),
-        occ$p AS (
-          SELECT band, key, count(*) AS m FROM bk$p GROUP BY 1, 2),
+          s"""${planeKeyCte(p)},
+        ${occCte(p, "bk")},
         stat$p AS (
           SELECT CAST($p AS BIGINT) AS planes_per_band,
                  CAST(count(*) AS BIGINT) AS n_buckets,
@@ -1273,20 +1181,9 @@ object LshQueries {
                  CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs
           FROM occ$p)"""
         }.mkString(",")
-        val unioned = PlaneGrid.map(p => s"SELECT * FROM stat$p")
-          .mkString(" UNION ALL ")
         s"""
-        WITH f AS (SELECT vec_id, unnest(embedding) AS x,
-                          generate_subscripts(embedding, 1) AS i
-                   FROM embeddings),
-        qv AS (SELECT vec_id, i,
-                      CAST(round(CAST(x AS DOUBLE) * ${VecFns.Scale}) AS BIGINT) AS e
-               FROM f),
-        w(j, i, wt) AS (VALUES ${weightRows(maxPlanes)}),
-        proj AS (
-          SELECT qv.vec_id, w.j, CAST(sum(qv.e * w.wt) AS BIGINT) AS pr
-          FROM qv JOIN w ON qv.i = w.i GROUP BY 1, 2),$perConfig,
-        allstats AS ($unioned),
+        WITH ${VectorQueries.quantCtes},${planeProjCtes(Bands * PlaneGrid.max)},$perConfig,
+        ${allStats(PlaneGrid)},
         sel AS (
           SELECT min(CASE WHEN cand_pairs <=
                        $PairsPerVecBudget * (SELECT count(*) FROM embeddings)
@@ -1342,18 +1239,11 @@ object LshQueries {
       },
       oracle = Some {
         val perConfig = BandGrid.map { b =>
-          val r = MinhashK / b
-          val bandRows = (0 until b).map { bi =>
-            val key = (bi * r until (bi + 1) * r)
-              .map(i => s"s$i").mkString(" || '|' || ")
-            s"SELECT doc_id, $bi AS band, ${MinHashLsh.bandKeySql(key)} AS key FROM sig"
-          }.mkString("\n UNION ALL\n ")
           s"""
-        band$b AS ($bandRows),
-        occ$b AS (
-          SELECT band, key, count(*) AS m FROM band$b GROUP BY 1, 2),
+        band$b AS (${bandRows(b)}),
+        ${occCte(b, "band")},
         stat$b AS (
-          SELECT CAST($b AS BIGINT) AS bands, CAST($r AS BIGINT) AS r,
+          SELECT CAST($b AS BIGINT) AS bands, CAST(${MinhashK / b} AS BIGINT) AS r,
                  CAST(${j50(b)} AS DOUBLE) AS j50,
                  CAST(count(*) AS BIGINT) AS n_buckets,
                  CAST(max(m) AS BIGINT) AS max_occ,
@@ -1361,19 +1251,9 @@ object LshQueries {
                  CAST(sum(m) // $b AS BIGINT) AS n_docs
           FROM occ$b)"""
         }.mkString(",")
-        val unioned = BandGrid.map(b => s"SELECT * FROM stat$b")
-          .mkString(" UNION ALL ")
         s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                      FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i
-                FROM toks),
-        sh AS (SELECT DISTINCT doc_id,
-                      t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),$perConfig,
-        allstats AS ($unioned),
+        WITH ${minhashSigCtes("documents")},$perConfig,
+        ${allStats(BandGrid)},
         sel AS (
           SELECT max(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
                      THEN bands END) AS b_fit,
@@ -1398,62 +1278,13 @@ object LshQueries {
           .select(col("source"), col("bands"), col("n_kept"))
           .orderBy("source")
       },
-      oracle = Some {
-        val m = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        val perConfig = BandGrid.map { b =>
-          val r = MinhashK / b
-          val bandRows = (0 until b).map { bi =>
-            val key = (bi * r until (bi + 1) * r)
-              .map(i => s"s$i").mkString(" || '|' || ")
-            s"SELECT doc_id, $bi AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-              (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-          }.mkString("\n UNION ALL\n ")
-          s"""
-        band$b AS ($bandRows),
-        occ$b AS (
-          SELECT band, key, count(*) AS m FROM band$b GROUP BY 1, 2),
-        stat$b AS (
-          SELECT CAST($b AS BIGINT) AS bands,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
-                 CAST(sum(m) // $b AS BIGINT) AS n_docs
-          FROM occ$b),
-        drop$b AS (
-          SELECT DISTINCT r.doc_id
-          FROM band$b l JOIN band$b r
-            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-          WHERE round(($m) / ${MinhashK.toDouble}, 4) >= $Threshold)"""
-        }.mkString(",")
-        val unioned = BandGrid.map(b => s"SELECT * FROM stat$b")
-          .mkString(" UNION ALL ")
-        val droppedUnion = BandGrid.map(b =>
-          s"SELECT doc_id FROM drop$b WHERE (SELECT bs FROM bsel) = $b")
-          .mkString(" UNION ALL ")
-        s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                      FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i
-                FROM toks),
-        sh AS (SELECT DISTINCT doc_id,
-                      t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),$perConfig,
-        allstats AS ($unioned),
-        bsel AS (
-          SELECT coalesce(
-                   max(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
-                       THEN bands END),
-                   min(bands)) AS bs
-          FROM allstats),
-        dropped AS ($droppedUnion)
+      oracle = Some(s"""
+        WITH ${minhashSigCtes("documents")},$calibratedDropCtes
         SELECT d.source, (SELECT bs FROM bsel) AS bands,
                CAST(count(*) AS BIGINT) AS n_kept
         FROM documents d LEFT JOIN dropped dr ON dr.doc_id = d.doc_id
         WHERE dr.doc_id IS NULL
-        GROUP BY d.source ORDER BY d.source"""
-      },
+        GROUP BY d.source ORDER BY d.source"""),
       bench = true),
 
     // ---- q187: the embedding-family counterpart — one projection
@@ -1493,69 +1324,28 @@ object LshQueries {
           .orderBy("a", "b")
       },
       oracle = Some {
-        val maxPlanes = Bands * PlaneGrid.max
         val perConfig = PlaneGrid.map { p =>
-          val pw = powerRows(p)
-          s"""
-        bk$p AS (
-          SELECT vec_id, j // $p AS band,
-                 CAST(sum(CASE WHEN pr >= 0 THEN pv ELSE 0 END) AS BIGINT) AS key
-          FROM proj JOIN (VALUES $pw) pw$p(m, pv) ON pw$p.m = j % $p
-          WHERE j < ${Bands * p}
-          GROUP BY 1, 2),
-        occ$p AS (
-          SELECT band, key, count(*) AS m FROM bk$p GROUP BY 1, 2),
+          s"""${planeKeyCte(p)},
+        ${occCte(p, "bk")},
         stat$p AS (
           SELECT CAST($p AS BIGINT) AS planes,
                  CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
                  CAST(sum(m) // $Bands AS BIGINT) AS n_vec
           FROM occ$p),
-        pairs$p AS (
-          SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-          FROM bk$p x JOIN bk$p y
-            ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id)"""
+        pairs$p AS (${planePairs(p)})"""
         }.mkString(",")
-        val unioned = PlaneGrid.map(p => s"SELECT * FROM stat$p")
-          .mkString(" UNION ALL ")
-        val selUnion = PlaneGrid.map(p =>
-          s"SELECT a, b FROM pairs$p WHERE (SELECT ps FROM psel) = $p")
-          .mkString(" UNION ALL ")
         s"""
-        WITH f AS (SELECT vec_id, unnest(embedding) AS x,
-                          generate_subscripts(embedding, 1) AS i
-                   FROM embeddings),
-        qv AS (SELECT vec_id, i,
-                      CAST(round(CAST(x AS DOUBLE) * ${VecFns.Scale}) AS BIGINT) AS e
-               FROM f),
-        norms AS (SELECT vec_id, CAST(sum(e * e) AS BIGINT) AS nsq
-                  FROM qv GROUP BY vec_id),
-        w(j, i, wt) AS (VALUES ${weightRows(maxPlanes)}),
-        proj AS (
-          SELECT qv.vec_id, w.j, CAST(sum(qv.e * w.wt) AS BIGINT) AS pr
-          FROM qv JOIN w ON qv.i = w.i GROUP BY 1, 2),$perConfig,
-        allstats AS ($unioned),
+        WITH ${VectorQueries.quantCtes},${planeProjCtes(Bands * PlaneGrid.max)},$perConfig,
+        ${allStats(PlaneGrid)},
         psel AS (
           SELECT coalesce(
                    min(CASE WHEN cand_pairs <= $PairsPerVecBudget * n_vec
                        THEN planes END),
                    max(planes)) AS ps
           FROM allstats),
-        selpairs AS ($selUnion),
-        dots AS (
-          SELECT p.a, p.b, CAST(sum(xa.e * xb.e) AS BIGINT) AS dot
-          FROM selpairs p
-            JOIN qv xa ON xa.vec_id = p.a
-            JOIN qv xb ON xb.vec_id = p.b AND xb.i = xa.i
-          GROUP BY 1, 2),
-        cosv AS (
-          SELECT a, b, round(CAST(dot AS DOUBLE)
-            / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6)
-              AS cos_r
-          FROM dots
-            JOIN norms na ON na.vec_id = a
-            JOIN norms nb ON nb.vec_id = b)
+        selpairs AS (${selectedRows(PlaneGrid, "a, b", "pairs", "(SELECT ps FROM psel)")}),${cosPairCtes("selpairs", MinCos)}
         SELECT a, b, cos_r, (SELECT ps FROM psel) AS planes
-        FROM cosv WHERE cos_r >= $MinCos ORDER BY a, b"""
+        FROM epairs ORDER BY a, b"""
       },
       bench = true),
 
@@ -1610,53 +1400,12 @@ object LshQueries {
             lit(selected.toLong).as("width"))
           .orderBy("a", "b")
       },
-      oracle = Some {
-        val perConfig = WidthGrid.map { w =>
-          val bands = SimHash.bits / w
-          s"""
-        bw$w AS (SELECT doc_id, sh, unnest(range(0, $bands)) AS band
-                 FROM sig),
-        bk$w AS (SELECT doc_id, sh, band,
-                        (sh >> (band * $w)) & ${(1L << w) - 1} AS key
-                 FROM bw$w),
-        occ$w AS (
-          SELECT band, key, count(*) AS m FROM bk$w GROUP BY 1, 2),
-        stat$w AS (
-          SELECT CAST($w AS BIGINT) AS w,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
-                 CAST(sum(m) // $bands AS BIGINT) AS n_docs
-          FROM occ$w),
-        pairs$w AS (
-          SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-                 x.sh AS sa, y.sh AS sb
-          FROM bk$w x JOIN bk$w y
-            ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)"""
-        }.mkString(",")
-        val unioned = WidthGrid.map(w => s"SELECT * FROM stat$w")
-          .mkString(" UNION ALL ")
-        val selUnion = WidthGrid.map(w =>
-          s"SELECT a, b, sa, sb FROM pairs$w WHERE (SELECT ws FROM wsel) = $w")
-          .mkString(" UNION ALL ")
-        s"""
-        WITH tk AS (SELECT doc_id,
-                           unnest(string_split(text, ' ')) AS tok
-                    FROM documents),
-        hx AS (SELECT DISTINCT doc_id, substr(md5(tok), 1, 4) AS hx FROM tk),
-        sig AS (SELECT doc_id, ${simhashSqlFromHex("hx")} AS sh
-                FROM hx GROUP BY doc_id),$perConfig,
-        allstats AS ($unioned),
-        wsel AS (
-          SELECT coalesce(
-                   min(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
-                       THEN w END),
-                   max(w)) AS ws
-          FROM allstats),
-        selpairs AS ($selUnion)
+      oracle = Some(s"""
+        WITH $simhashCte,${simhashCalibrationCtes(SimHash.bits, WidthGrid)}
         SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming,
                (SELECT ws FROM wsel) AS width
         FROM selpairs WHERE bit_count(xor(sa, sb)) <= 1
-        ORDER BY a, b"""
-      },
+        ORDER BY a, b"""),
       bench = true),
 
     // ---- q190: the SELF-TUNING corpus pipeline — q58's end-to-end
@@ -1679,82 +1428,12 @@ object LshQueries {
         kept.select(col("doc_id"), lit(bands.toLong).as("bands"))
           .orderBy("doc_id")
       },
-      oracle = Some {
-        val m = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        val perConfig = BandGrid.map { b =>
-          val r = MinhashK / b
-          val bandRows = (0 until b).map { bi =>
-            val key = (bi * r until (bi + 1) * r)
-              .map(i => s"s$i").mkString(" || '|' || ")
-            s"SELECT doc_id, $bi AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-              (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-          }.mkString("\n UNION ALL\n ")
-          s"""
-        band$b AS ($bandRows),
-        occ$b AS (
-          SELECT band, key, count(*) AS m FROM band$b GROUP BY 1, 2),
-        stat$b AS (
-          SELECT CAST($b AS BIGINT) AS bands,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
-                 CAST(sum(m) // $b AS BIGINT) AS n_docs
-          FROM occ$b),
-        drop$b AS (
-          SELECT DISTINCT r.doc_id
-          FROM band$b l JOIN band$b r
-            ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-          WHERE round(($m) / ${MinhashK.toDouble}, 4) >= $Threshold)"""
-        }.mkString(",")
-        val unioned = BandGrid.map(b => s"SELECT * FROM stat$b")
-          .mkString(" UNION ALL ")
-        val droppedUnion = BandGrid.map(b =>
-          s"SELECT doc_id FROM drop$b WHERE (SELECT bs FROM bsel) = $b")
-          .mkString(" UNION ALL ")
-        s"""
-        WITH filtered AS (
-          SELECT doc_id, text FROM documents
-          WHERE round(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-                  / length(text), 4) < 0.1
-            AND len(string_split(text, ' ')) >= 10
-            AND (CASE WHEN len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the', 'a', 'of', 'and', 'to')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('der', 'die', 'das', 'und', 'ist')))
-                   AND len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the', 'a', 'of', 'and', 'to')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('le', 'la', 'les', 'et', 'est')))
-                 THEN 'en'
-                 WHEN len(list_filter(string_split(text, ' '),
-                        x -> x IN ('der', 'die', 'das', 'und', 'ist')))
-                      >= len(list_filter(string_split(text, ' '),
-                        x -> x IN ('le', 'la', 'les', 'et', 'est')))
-                 THEN 'de' ELSE 'fr' END) = 'en'),
-        kept AS (
-          SELECT doc_id, text FROM filtered
-          WHERE doc_id IN (SELECT min(doc_id) FROM filtered GROUP BY md5(text))),
-        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM kept),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i
-                FROM toks),
-        sh AS (SELECT DISTINCT doc_id,
-                      t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),$perConfig,
-        allstats AS ($unioned),
-        bsel AS (
-          SELECT coalesce(
-                   max(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
-                       THEN bands END),
-                   min(bands)) AS bs
-          FROM allstats),
-        dropped AS ($droppedUnion)
+      oracle = Some(s"""
+        WITH $cleanedCtes, ${minhashSigCtes("kept")},$calibratedDropCtes
         SELECT k.doc_id, (SELECT bs FROM bsel) AS bands
         FROM kept k LEFT JOIN dropped dr ON dr.doc_id = k.doc_id
         WHERE dr.doc_id IS NULL
-        ORDER BY k.doc_id"""
-      },
+        ORDER BY k.doc_id"""),
       bench = true),
 
     "q191_calibrated_simhash64" -> Q(
@@ -1790,58 +1469,16 @@ object LshQueries {
             lit(selected.toLong).as("width"))
           .orderBy("a", "b")
       },
-      oracle = Some {
-        val perConfig = WidthGrid64.map { w =>
-          val bands = SimHash64.bits / w
-          s"""
-        bw$w AS (SELECT doc_id, sh, unnest(range(0, $bands)) AS band
-                 FROM sig),
-        bk$w AS (SELECT doc_id, sh, band,
-                        (sh >> (band * $w)) & ${(1L << w) - 1} AS key
-                 FROM bw$w),
-        occ$w AS (
-          SELECT band, key, count(*) AS m FROM bk$w GROUP BY 1, 2),
-        stat$w AS (
-          SELECT CAST($w AS BIGINT) AS w,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
-                 CAST(sum(m) // $bands AS BIGINT) AS n_docs
-          FROM occ$w),
-        pairs$w AS (
-          SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-                 x.sh AS sa, y.sh AS sb
-          FROM bk$w x JOIN bk$w y
-            ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)"""
-        }.mkString(",")
-        val unioned = WidthGrid64.map(w => s"SELECT * FROM stat$w")
-          .mkString(" UNION ALL ")
-        val selUnion = WidthGrid64.map(w =>
-          s"SELECT a, b, sa, sb FROM pairs$w WHERE (SELECT ws FROM wsel) = $w")
-          .mkString(" UNION ALL ")
-        s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                      FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i
-                FROM toks),
-        hx AS (SELECT DISTINCT doc_id,
-                      substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-                             1, ${SimHash64.bits / 4}) AS hx
-               FROM idx WHERE i + 2 <= len(t)),
-        sig AS (SELECT doc_id, ${simhash64SqlFromHex("hx")} AS sh
-                FROM hx GROUP BY doc_id),$perConfig,
-        allstats AS ($unioned),
-        wsel AS (
-          SELECT coalesce(
-                   min(CASE WHEN cand_pairs <= $PairsPerDocBudget * n_docs
-                       THEN w END),
-                   max(w)) AS ws
-          FROM allstats),
-        selpairs AS ($selUnion)
+      oracle = Some(s"""
+        WITH ${shingleCtes("documents", 3)},
+        hx AS (SELECT DISTINCT doc_id, substr(md5(sh), 1, ${SimHash64.bits / 4}) AS hx
+               FROM sh),
+        sig AS (SELECT doc_id, ${simhashSqlFromHex("hx", SimHash64.bits)} AS sh
+                FROM hx GROUP BY doc_id),${simhashCalibrationCtes(SimHash64.bits, WidthGrid64)}
         SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming,
                (SELECT ws FROM wsel) AS width
         FROM selpairs WHERE bit_count(xor(sa, sb)) <= $HammingMax
-        ORDER BY a, b"""
-      },
+        ORDER BY a, b"""),
       bench = true)
   )
 }

@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.functions.MinHashLsh
 import graft.streaming.EventStream
 import EventQueries.WindowUs
-import Shared.{MinhashK, Threshold, hashCte, sigSelect}
+import Shared.{Bands, Threshold, minhashSigCtes, bandRows, minhashEst}
 
 /** Structured Streaming queries: each runs as micro-batches over a file
   * source (`EventStream`, `NearDupIngest`) into a memory or parquet
@@ -174,16 +173,6 @@ object StreamingQueries {
     "q188_stream_neardup_ingest" -> Q(
       impl = (s, d) => graft.streaming.NearDupIngest.demoRun(s, d),
       oracle = Some {
-        val r = MinhashK / 4
-        val bandRows = (0 until 4).map { b =>
-          val key = (b * r until (b + 1) * r)
-            .map(i => s"s$i").mkString(" || '|' || ")
-          s"SELECT doc_id, $b AS band, ${MinHashLsh.bandKeySql(key)} AS key, " +
-            (0 until MinhashK).map(i => s"s$i").mkString(", ") + " FROM sig"
-        }.mkString("\n UNION ALL\n ")
-        val m = (0 until MinhashK)
-          .map(i => s"CASE WHEN l.s$i = r.s$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
         def batchPred(side: String, b: Int) =
           s"$side.doc_id % 10 = 0 AND ($side.doc_id // 10) % 3 = $b"
         val batchCtes = (0 until 3).map { b =>
@@ -196,23 +185,15 @@ object StreamingQueries {
           FROM band l JOIN band r
             ON l.band = r.band AND l.key = r.key
           WHERE ${batchPred("l", b)} AND ($indexMembers)
-            AND round(($m) / ${MinhashK.toDouble}, 4) >= $Threshold),
+            AND $minhashEst >= $Threshold),
         land$b AS (
           SELECT doc_id FROM documents d
           WHERE ${batchPred("d", b)}
             AND doc_id NOT IN (SELECT doc_id FROM dup$b))"""
         }.mkString(",")
         s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                      FROM documents),
-        idx AS (SELECT doc_id, t,
-                       unnest(range(1, greatest(len(t) - 1, 1))) AS i
-                FROM toks),
-        sh AS (SELECT DISTINCT doc_id,
-                      t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-               FROM idx WHERE i + 2 <= len(t)),$hashCte,
-        sig AS (SELECT doc_id, $sigSelect FROM hh GROUP BY doc_id),
-        band AS ($bandRows),$batchCtes,
+        WITH ${minhashSigCtes("documents")},
+        band AS (${bandRows(Bands)}),$batchCtes,
         landed AS (SELECT doc_id FROM land0 UNION ALL
                    SELECT doc_id FROM land1 UNION ALL
                    SELECT doc_id FROM land2)

@@ -7,7 +7,7 @@ import graft.Tables
 import graft.functions.{TextFns, VecFns}
 import graft.functions.expressions.GraftFunctions
 import graft.operators.{Ivf, TopK}
-import Shared.{EmbDim, weightRows, powerRows}
+import Shared.{EmbDim, weightRows, powerRows, planeProjCtes}
 
 /** Similarity search and vector analytics over the `embeddings` table:
   * brute-force cosine top-k (the exactness baseline), random-hyperplane
@@ -55,12 +55,8 @@ object VectorQueries {
     * packing). Depends on `quantCtes`'s `qv`. Shared with q127's
     * bucket-centroid dedup so both oracles pin ONE construction.
     */
-  private def lshBucketCtes: String = s"""
-        w(j, i, wt) AS (VALUES ${weightRows(NPlanes)}),
+  private def lshBucketCtes: String = s"""${planeProjCtes(NPlanes)},
         pw(j, pv) AS (VALUES ${powerRows(NPlanes)}),
-        proj AS (
-          SELECT qv.vec_id, w.j, CAST(sum(qv.e * w.wt) AS BIGINT) AS p
-          FROM qv JOIN w ON qv.i = w.i GROUP BY 1, 2),
         buckets AS (
           SELECT vec_id,
                  CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS bucket

@@ -18,26 +18,15 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object EventStream {
 
-  /** Default stateful-shuffle width; `SPARK_GRAFT_STREAM_PARTS`
-    * overrides for sizing experiments (results are partition-count
-    * independent — only state-store instance overhead changes).
-    * Default 4, measured over the 10-query streaming set at sf0.1:
-    * 8 → 16.0 s, 4 → 14.3 s, 2 → 19.0 s (StreamFixedCostSpec is the
-    * per-phase decomposition referee) — below 4 the per-partition
-    * dataflow starts to dominate, above it the per-store per-batch
-    * commit overhead does.
+  /** Width of the stateful shuffle every streaming query here runs
+    * with. Results are partition-count independent; only the
+    * state-store instance overhead changes. Measured over the 10-query
+    * streaming set at sf0.1: 8 → 16.0 s, 4 → 14.3 s, 2 → 19.0 s
+    * (StreamFixedCostSpec is the per-phase decomposition referee) —
+    * below 4 the per-partition dataflow starts to dominate, above it
+    * the per-store per-batch commit overhead does.
     */
-  // a def, not a val: throwing from object init would surface as an
-  // opaque ExceptionInInitializerError (and NoClassDefFoundError on
-  // every later touch of the object) — validated per call instead so
-  // a malformed value fails with the readable message below
-  private def DefaultStateParts: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS") match {
-      case None => 4
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$v'"))
-    }
+  private val StateParts = 4
 
   /** Footer-read schema per events file, cached: every stream
     * construction needs the batch schema (FileStreamSource takes it
@@ -62,19 +51,29 @@ object EventStream {
       _ => spark.read.parquet(p).schema)
   }
 
-  /** Start a streaming query with the stateful shuffle sized to the
-    * state, not the core count: every stateful partition carries
-    * state-store setup/commit cost per micro-batch, which dominates
-    * these bounded-input queries. On a real cluster this is the same
+  /** Run `stream` to completion into a fresh memory-sink table
+    * (`Trigger.AvailableNow`, output mode `mode`) and return the table.
+    * The stateful shuffle is sized to the state, not the core count
+    * (`StateParts`): every stateful partition carries state-store
+    * setup/commit cost per micro-batch, which dominates these
+    * bounded-input queries. On a real cluster this is the same
     * per-query `shuffle.partitions` knob, sized to state volume.
     */
-  private def startSized[T](spark: SparkSession, partitions: Int = DefaultStateParts)(
-      start: => T): T = {
+  private def drain(spark: SparkSession, stream: DataFrame, prefix: String,
+      mode: String): DataFrame = {
+    val name = s"graft_${prefix}_${System.nanoTime()}"
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      start
+    val q = try {
+      spark.conf.set("spark.sql.shuffle.partitions", StateParts.toString)
+      stream.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+    spark.table(name)
   }
 
   /** Tumbling count/sum per (window, event_type), via streaming. */
@@ -89,17 +88,7 @@ object EventStream {
       .withColumn("w_start_us", expr(s"(us div $windowUs) * $windowUs"))
       .groupBy("w_start_us", "event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 3).as("v"))
-    val name = s"graft_tumbling_${System.nanoTime()}"
-    val q = startSized(spark) {
-      stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start_us", "event_type")
+    drain(spark, stream, "tumbling", "complete").orderBy("w_start_us", "event_type")
   }
 
   /** Per-user event for the stateful sessionizer. */
@@ -143,17 +132,7 @@ object EventStream {
     val counted = stream.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
       .toDF("user_id", "n_sessions")
-    val name = s"graft_sessions_${System.nanoTime()}"
-    val q = startSized(spark) {
-      counted.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id")
+    drain(spark, counted, "sessions", "append").orderBy("user_id")
   }
 
   /** Streamed `events` source with epoch-micros + event-time columns. */
@@ -181,17 +160,7 @@ object EventStream {
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_nationkey"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 3).as("v"))
-    val name = s"graft_enrich_${System.nanoTime()}"
-    val q = startSized(spark) {
-      stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("c_nationkey", "event_type")
+    drain(spark, stream, "enrich", "complete").orderBy("c_nationkey", "event_type")
   }
 
   /** Sliding-window count/sum per (window, event_type) via streaming —
@@ -205,17 +174,7 @@ object EventStream {
       .groupBy(window(col("ets"), s"${widthUs / 1000000} seconds",
         s"${slideUs / 1000000} seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 3).as("v"))
-    val name = s"graft_sliding_${System.nanoTime()}"
-    val q = startSized(spark) {
-      stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, stream, "sliding", "complete")
       .select(unix_micros(col("window.start")).as("w_start_us"),
         col("event_type"), col("n"), col("v"))
       .orderBy("w_start_us", "event_type")
@@ -234,17 +193,7 @@ object EventStream {
       .groupBy(window(col("ets"), s"${windowUs / 1000000} seconds"),
         col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val name = s"graft_wm_${System.nanoTime()}"
-    val q = startSized(spark) {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, stream, "wm", "append")
       .select(unix_micros(col("window.start")).as("w_start_us"),
         col("event_type"), col("n"))
       .orderBy("w_start_us", "event_type")
@@ -275,20 +224,10 @@ object EventStream {
       col("user_id") === col("c_uid") &&
         col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
         col("cts") <= col("pts"))
-    val name = s"graft_ssjoin_${System.nanoTime()}"
     // Stream-stream join state cost is 4 stores per partition
     // (left/right × keyToNumValues/keyWithIndexToValue) — the
     // heaviest beneficiary of the sized stateful shuffle.
-    val q = startSized(spark) {
-      joined.select("pid", "cid").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, joined.select("pid", "cid"), "ssjoin", "append")
       .groupBy("pid").agg(count(lit(1)).as("n_clicks_30m"))
       .orderBy("pid")
   }
@@ -321,26 +260,11 @@ object EventStream {
         col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
         col("cts") <= col("pts"),
       "left_outer")
-    val name = s"graft_ssouter_${System.nanoTime()}"
-    val q = startSized(spark) {
-      joined.select("pid", "cid").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, joined.select("pid", "cid"), "ssouter", "append")
       .groupBy("pid").agg(count(col("cid")).as("n_clicks_30m"))
       .orderBy("pid")
   }
 
-  /** Streaming exact deduplication: the source unioned with itself
-    * (every event twice) → `dropDuplicates` on the event id → counts
-    * per type from the sink. The state store holds one entry per seen
-    * key — the streaming half of the exact-dedup operator family.
-    */
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark`
     * holds a key only until the watermark passes its event time, so
     * state is O(keys per watermark window) instead of O(all keys ever)
@@ -358,37 +282,22 @@ object EventStream {
       .select(col("event_id"), col("event_type"), col("ets"))
       .withWatermark("ets", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val name = s"graft_wdedup_${System.nanoTime()}"
-    val q = startSized(spark) {
-      deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, deduped, "wdedup", "append")
       .groupBy("event_type").agg(count(lit(1)).as("n_unique"))
       .orderBy("event_type")
   }
 
+  /** Streaming exact deduplication: the source unioned with itself
+    * (every event twice) → `dropDuplicates` on the event id → counts
+    * per type from the sink. The state store holds one entry per seen
+    * key — the streaming half of the exact-dedup operator family.
+    */
   def streamDedupCounts(spark: SparkSession, dir: String): DataFrame = {
     val doubled = eventStream(spark, dir).unionByName(eventStream(spark, dir))
     val deduped = doubled
       .select("event_id", "event_type")
       .dropDuplicates("event_id")
-    val name = s"graft_sdedup_${System.nanoTime()}"
-    val q = startSized(spark) {
-      deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drain(spark, deduped, "sdedup", "append")
       .groupBy("event_type").agg(count(lit(1)).as("n_unique"))
       .orderBy("event_type")
   }

@@ -504,7 +504,7 @@ object NearDupIngest {
         .parquet(inDir)
       // batch-sized joins/aggregations inside foreachBatch: a 32-wide
       // shuffle is per-task overhead, not parallelism, on a micro-batch
-      // (the EventStream.startSized policy — on a cluster this is the
+      // (the EventStream.StateParts policy — on a cluster this is the
       // same per-query shuffle.partitions knob sized to batch volume)
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       try {

@@ -67,4 +67,18 @@ class CliSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/on_pairs").count() == 11)
     assert(spark.read.parquet(s"$out/gene_ontology_map").count() > 0)
   }
+
+  test("ontology command: the taxon follows a gaf path's last colon") {
+    val out = graft.TestSpark.scratchDir("graft_cli_onto_uri")
+    val obo = s"$fx/ontology_go.obo"
+    Main.run(spark, "ontology", create = true, out,
+      Array(obo, s"file:$fx/annotations_go_human.gaf:9606"))
+    assert(spark.read.parquet(s"$out/gene_ontology_map").count() ===
+      OntologyEtl.loadGafs(spark, Seq((s"$fx/annotations_go_human.gaf", 9606))).count())
+    for (bad <- Seq(s"$fx/annotations_go_human.gaf", s"file:$fx/annotations_go_human.gaf:human")) {
+      val ex = intercept[IllegalArgumentException](
+        Main.run(spark, "ontology", create = true, out, Array(obo, bad)))
+      assert(ex.getMessage.contains(bad), ex.getMessage)
+    }
+  }
 }

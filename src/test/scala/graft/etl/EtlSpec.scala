@@ -245,9 +245,7 @@ class EtlSpec extends AnyFunSuite {
   // ---- ontology (A7/A8) -------------------------------------------
   test("ontology: stanza parse, obsolete drop, closure, counts") {
     val r = OntologyEtl.load(spark,
-      Seq(fx("ontology_go.obo"), fx("ontology_mp.obo")),
-      Seq((fx("annotations_go_human.gaf"), 9606),
-        (fx("annotations_mp_mouse.gaf"), 10090)))
+      Seq(fx("ontology_go.obo"), fx("ontology_mp.obo")))
     val terms = r.terms.orderBy("id").collect()
     // GO:0006 obsolete (F6) dropped; Typedef ignored; 6 GO + 2 MP
     assert(terms.map(_.getString(0)).toSeq === Seq(
@@ -405,6 +403,18 @@ class EtlSpec extends AnyFunSuite {
     val geneBack = spark.read.parquet(s"$out/gene")
     assert(geneBack.count() === tables("gene").count())
     assert(geneBack.columns.contains("gene_taxonid")) // partition col survives
+  }
+
+  test("pipeline: GAF files without an OBO file still load gene_ontology_map") {
+    val gaf = pipelineInputs().gaf
+    val tables = Pipeline.run(spark, Pipeline.Inputs(gaf = gaf))
+    assert(tables.keySet === Set("gene_ontology_map"))
+    assert(tables("gene_ontology_map").collect().toSet ===
+      OntologyEtl.loadGafs(spark, gaf).collect().toSet)
+    assert(tables("gene_ontology_map").count() > 0)
+    // and no GAF file still means no gene_ontology_map table
+    assert(!Pipeline.run(spark, Pipeline.Inputs(obo = pipelineInputs().obo))
+      .contains("gene_ontology_map"))
   }
 
   test("writeObserved: in-flight row accounting matches what landed (A4)") {
