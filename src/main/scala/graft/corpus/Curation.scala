@@ -3,7 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BandedLsh, LshGuard, MinHashLsh, TextFns}
+import graft.functions.{BandedLsh, LshGuard, MinHashLsh, PersistLeases, TextFns}
 import graft.operators.{BloomDecontaminate, Components}
 
 /** Composable corpus-curation stages — the public API form of the
@@ -49,13 +49,28 @@ object Curation {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
+  /** The near-dup pairs of a tokenized corpus: MinHash signatures
+    * over `shingleWidth`-token shingles (`k` components, one pass per
+    * document), their banded candidate pairs at `bands` bands through
+    * the hot-bucket guard, and the pairs whose estimate reaches
+    * `threshold` — (a, b, est), a < b. The fixed-config stages below
+    * and the registry's near-dup graph queries build their pairs here.
+    */
+  private[graft] def nearDupPairs(df: DataFrame, idCol: String,
+      tokensCol: String, shingleWidth: Int, k: Int, bands: Int,
+      threshold: Double): DataFrame = {
+    val sigs =
+      MinHashLsh.signaturesFromTokens(df, idCol, tokensCol, shingleWidth, k)
+    MinHashLsh.candidatePairs(sigs, idCol, k, bands)
+      .filter(col("est") >= threshold)
+  }
+
   /** MinHash/LSH near-dup removal: drop the higher id of every
-    * candidate pair at or above `threshold`. Banded equi-join —
-    * never all-pairs.
+    * [[nearDupPairs]] pair. Banded equi-join — never all-pairs.
     *
-    * CACHING CONTRACT (ADVICE r18): the input frame is persisted and
-    * its unpersist handle registered on
-    * [[graft.functions.PersistLeases]] — released by the session's
+    * CACHING CONTRACT (ADVICE r18): the input frame is persisted by
+    * [[graft.functions.PersistLeases.persist]], which registers its
+    * unpersist handle as a lease — released by the session's
     * `releaseAll()` drain (harness loops call it between queries) or,
     * in long-lived sessions composing many pipelines, by wrapping the
     * pipeline in `PersistLeases.scoped { ... }` and releasing the
@@ -69,28 +84,11 @@ object Curation {
     // anti-join; uncached, a composed pipeline's whole upstream chain
     // executes twice (the calibratedNearDup rationale). Released with
     // the session's lease drain.
-    val src = leasedPersist(df)
-    val sigs =
-      MinHashLsh.signaturesFromTokens(src, idCol, tokensCol, shingleWidth, k)
-    val drop = MinHashLsh.candidatePairs(sigs, idCol, k, bands)
-      .filter(col("est") >= threshold)
+    val src = PersistLeases.persist(df)
+    val drop = nearDupPairs(src, idCol, tokensCol, shingleWidth, k, bands,
+        threshold)
       .select(col("b").as(idCol)).distinct()
     src.join(drop, Seq(idCol), "left_anti")
-  }
-
-  /** Persist with the unpersist handle registered on
-    * [[graft.functions.PersistLeases]] — the stage-input caching
-    * pattern for `DataFrame => DataFrame` stages that consume their
-    * input more than once but have no cleanup handle to return. The
-    * lease lands on the caller's active `PersistLeases.scoped { }`
-    * scope when one is open (per-pipeline lifetime), else on the
-    * session queue drained by `releaseAll()`.
-    */
-  private def leasedPersist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    graft.functions.PersistLeases.register(
-      () => { p.unpersist(blocking = false); () })
-    p
   }
 
   /** Calibrate-then-execute near-dup removal — the operator that
@@ -287,7 +285,7 @@ object Curation {
       df: DataFrame): DataFrame = {
     require(k >= 1 && w >= 1 && minSharedFps >= 1 && spanK >= 1)
     // consumed twice (fingerprints + anti-join) — see nearDupFilter
-    val src = leasedPersist(df)
+    val src = PersistLeases.persist(df)
     val dropIds =
       if (!exact) {
         // q84's exact construction (12-hex md5 prefix gram hashes,
@@ -345,7 +343,7 @@ object Curation {
   }
 
   /** Near-dup clustering variant: keep ONE canonical doc per
-    * connected component of the candidate-pair graph (the q102
+    * connected component of the [[nearDupPairs]] graph (the q102
     * shape), choosing by `preferenceAsc` ascending (e.g.
     * `struct(-n_chars, doc_id)`).
     *
@@ -358,11 +356,9 @@ object Curation {
       df: DataFrame): DataFrame = {
     // consumed three times (signatures, canonical-pick join, final
     // semi-join) — see the nearDupFilter caching note
-    val src = leasedPersist(df)
-    val sigs =
-      MinHashLsh.signaturesFromTokens(src, idCol, tokensCol, shingleWidth, k)
-    val pairs = MinHashLsh.candidatePairs(sigs, idCol, k, bands)
-      .filter(col("est") >= threshold)
+    val src = PersistLeases.persist(df)
+    val pairs =
+      nearDupPairs(src, idCol, tokensCol, shingleWidth, k, bands, threshold)
     val comp = Components.connectedComponents(pairs, "a", "b")
       .withColumnRenamed("node", idCol)
     val keep = src.join(comp, Seq(idCol), "left")

@@ -38,17 +38,24 @@ object AnnOracles {
           (x, i) <- c.zipWithIndex)
       yield s"($mi,$j,${i + 1},$x)").mkString(",")
 
-  /** Coarse-quantizer CTEs: integer distance to every cell, the
-    * (unique) cell per corpus vector, and the `nprobe` probe cells per
-    * query vector. Depends on `quantCtes`'s `qv`.
+  /** The coarse quantizer's centroids `cent(j, i, c)` and every
+    * vector's integer distance to each of them, `cdist(vec_id, j, d)`
+    * = |c_j|² − 2·v·c_j. Depends on `quantCtes`'s `qv`.
     */
-  private def ivfCtes(model: Ivf.Model, nq: Int, nprobe: Int): String = s"""
-        cent0(j, i, c) AS (VALUES ${centValues(model.centroidsQ)}),
+  private def cellDistCtes(model: Ivf.Model): String =
+    s"""cent0(j, i, c) AS (VALUES ${centValues(model.centroidsQ)}),
         cent AS (SELECT j, i, CAST(c AS BIGINT) AS c FROM cent0),
         cdist AS (
           SELECT qv.vec_id, cent.j,
                  CAST(sum(cent.c * cent.c - 2 * qv.e * cent.c) AS BIGINT) AS d
-          FROM qv JOIN cent ON qv.i = cent.i GROUP BY 1, 2),
+          FROM qv JOIN cent ON qv.i = cent.i GROUP BY 1, 2)"""
+
+  /** Coarse-quantizer CTEs: integer distance to every cell
+    * ([[cellDistCtes]]), the (unique) cell per corpus vector, and the
+    * `nprobe` probe cells per query vector.
+    */
+  private def ivfCtes(model: Ivf.Model, nq: Int, nprobe: Int): String = s"""
+        ${cellDistCtes(model)},
         asg AS (
           SELECT vec_id AS n_id, j AS cell FROM (
             SELECT vec_id, j, row_number() OVER (
@@ -110,36 +117,12 @@ object AnnOracles {
               JOIN cnorm cn ON cn.vec_id = a.n_id)
           WHERE rn <= $rerank)"""
 
-  /** Exact-cosine final ranking from a `cand`/`acand`-shaped pair CTE
-    * named `fcand(q_id, n_id)` — the `TopK.perGroup` contract.
-    */
-  private def finalSelect(k: Int): String = s"""
-        dots AS (
-          SELECT c.q_id, c.n_id, CAST(sum(a.e * b.e) AS BIGINT) AS dot
-          FROM fcand c
-            JOIN qv a ON a.vec_id = c.q_id
-            JOIN qv b ON b.vec_id = c.n_id AND b.i = a.i
-          GROUP BY 1, 2),
-        scored AS (
-          SELECT d.q_id, d.n_id,
-                 CAST(d.dot AS DOUBLE)
-                   / (sqrt(CAST(qa.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))) AS cos
-          FROM dots d
-            JOIN norms qa ON qa.vec_id = d.q_id
-            JOIN norms nb ON nb.vec_id = d.n_id),
-        ranked AS (
-          SELECT q_id, n_id, cos, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, n_id) AS rk
-          FROM scored)
-        SELECT q_id, rk, n_id, round(cos, 6) AS cos_r
-        FROM ranked WHERE rk <= $k ORDER BY q_id, rk"""
-
   /** q54: IVF search — probe cells, exact cosine inside them, top-k. */
   def ivfOracle(model: Ivf.Model, nq: Int, nprobe: Int, k: Int): String = s"""
         WITH ${VectorQueries.quantCtes},
         ${ivfCtes(model, nq, nprobe)},
         fcand AS (SELECT q_id, n_id FROM cand),
-        ${finalSelect(k)}"""
+        ${VectorQueries.candRankedSelect("fcand", k)}"""
 
   /** q166: PQ search — ADC over the full corpus, rerank the shortlist. */
   def pqOracle(model: Pq.Model, nq: Int, rerank: Int, k: Int): String = s"""
@@ -151,7 +134,7 @@ object AnnOracles {
           WHERE l.q_id <> c.vec_id GROUP BY 1, 2),
         ${shortlistCte(rerank)},
         fcand AS (SELECT q_id, n_id FROM acand),
-        ${finalSelect(k)}"""
+        ${VectorQueries.candRankedSelect("fcand", k)}"""
 
   /** q178: SemDeDup — k-means cells from the same coarse quantizer as
     * q54, then the within-cell "dominated by an earlier vector"
@@ -163,12 +146,7 @@ object AnnOracles {
     */
   def semDedupOracle(model: Ivf.Model, tauMicro: Long): String = s"""
         WITH ${VectorQueries.quantCtes},
-        cent0(j, i, c) AS (VALUES ${centValues(model.centroidsQ)}),
-        cent AS (SELECT j, i, CAST(c AS BIGINT) AS c FROM cent0),
-        cdist AS (
-          SELECT qv.vec_id, cent.j,
-                 CAST(sum(cent.c * cent.c - 2 * qv.e * cent.c) AS BIGINT) AS d
-          FROM qv JOIN cent ON qv.i = cent.i GROUP BY 1, 2),
+        ${cellDistCtes(model)},
         asg AS (
           SELECT vec_id, j AS cell FROM (
             SELECT vec_id, j, row_number() OVER (
@@ -217,5 +195,5 @@ object AnnOracles {
           GROUP BY 1, 2),
         ${shortlistCte(rerank)},
         fcand AS (SELECT q_id, n_id FROM acand),
-        ${finalSelect(k)}"""
+        ${VectorQueries.candRankedSelect("fcand", k)}"""
 }

@@ -8,7 +8,7 @@ import graft.corpus.Curation
 import graft.functions.{MisraGries, TextFns}
 import graft.multimodal.Multimodal
 import graft.operators.GroupedPrefixSum
-import Shared.shingleCtes
+import Shared.{shingleCtes, tokenizedDocs}
 
 /** Training-data-pipeline queries over the `documents` table: exact,
   * chunk, span and containment dedup (the banded-LSH near-dup family
@@ -75,6 +75,26 @@ object DocQueries {
 
   /** q137: minimum bigram support for a collocation candidate. */
   private val PmiMinCount = 5L
+
+  /** Corpus bigram counts (a, b, c) of q130 and q137: every adjacent
+    * token pair, zipped from the token array against its own
+    * 1-shifted slice. `transform(sequence(...), i -> struct(t[i-1],
+    * t[i]))` computes the same pairs, but lambda bodies evaluate
+    * interpreted (no codegen inside higher-order functions); the zip
+    * refereed 2.3× faster on the 27 M-bigram sf10 corpus
+    * (bench/STABILITY.md, round 15). arrays_zip pads the shorter side
+    * with null, so the final (t[n-1], null) row is filtered — exactly
+    * the n−1 bigrams.
+    */
+  private def bigramCounts(s: SparkSession, d: String): DataFrame =
+    tokenizedDocs(s, d)
+      .filter(size(col("t")) >= 2)
+      .withColumn("x", col("t"))
+      .withColumn("y", slice(col("t"), lit(2), size(col("t"))))
+      .select(explode(arrays_zip(col("x"), col("y"))).as("p"))
+      .filter(col("p.y").isNotNull)
+      .select(col("p.x").as("a"), col("p.y").as("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("c"))
 
   /** q138: chunk width / stride in tokens (25% overlap). */
   private val ChunkW = 32
@@ -761,8 +781,7 @@ object DocQueries {
     // shuffle on doc_id only ----------------------------------------
     "q95_repetition_filter" -> Q(
       impl = (s, d) => {
-        val sh = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
+        val sh = tokenizedDocs(s, d)
           .select(col("doc_id"),
             explode(TextFns.wordShinglesFromTokens(col("t"), 3)).as("sh"))
         sh.groupBy("doc_id")
@@ -943,8 +962,7 @@ object DocQueries {
     // (pos, chunk) structs is per-row work on bounded doc length) ----
     "q105_chunk_dedup" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
+        val docs = tokenizedDocs(s, d)
         val nChunks = ceil(size(col("t")) / lit(DedupChunkW.toDouble)).cast("int")
         val chunks = docs.select(col("doc_id"),
             posexplode(transform(sequence(lit(0), nChunks - 1),
@@ -1266,8 +1284,7 @@ object DocQueries {
     // shuffles, both keyed on (source, token) then source -----------
     "q128_source_entropy" -> Q(
       impl = (s, d) => {
-        val tok = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
+        val tok = tokenizedDocs(s, d)
           .select(col("source"), explode(col("t")).as("tok"))
         val cnt = tok.groupBy("source", "tok").agg(count(lit(1)).as("c"))
         val tot = cnt.groupBy("source")
@@ -1305,25 +1322,10 @@ object DocQueries {
     // frequency. The pair explode is narrow (no shuffle until the
     // count); the top-k is orderBy+limit, which Spark executes as
     // TakeOrdered (per-partition heaps + driver merge of 20-row
-    // partials), never a global sort. Bigrams come from zipping the
-    // array against its own 1-shifted slice: `transform(sequence(...),
-    // i -> struct(t[i-1], t[i]))` computes the same pairs but lambda
-    // bodies evaluate INTERPRETED (no codegen inside higher-order
-    // functions) — the zip construction refereed 2.3× faster on the
-    // 27 M-bigram sf10 corpus (bench/STABILITY.md, round 15).
-    // arrays_zip pads the shorter side with null, so the final
-    // (t[n-1], null) row is filtered — exactly the n−1 bigrams -------
+    // partials), never a global sort. Bigrams: `bigramCounts` --------
     "q130_pair_counts" -> Q(
       impl = (s, d) =>
-        Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-          .filter(size(col("t")) >= 2)
-          .withColumn("x", col("t"))
-          .withColumn("y", slice(col("t"), lit(2), size(col("t"))))
-          .select(explode(arrays_zip(col("x"), col("y"))).as("p"))
-          .filter(col("p.y").isNotNull)
-          .select(col("p.x").as("a"), col("p.y").as("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("c"))
+        bigramCounts(s, d)
           .orderBy(desc("c"), col("a"), col("b"))
           .limit(20),
       oracle = Some("""
@@ -1496,19 +1498,7 @@ object DocQueries {
     // (c, la, rb, N) tuple — integer inputs, identical doubles ------
     "q137_pmi_collocations" -> Q(
       impl = (s, d) => {
-        // bigrams via the zipped-slice construction (q130's rationale:
-        // higher-order lambda bodies are interpreted; the zip refereed
-        // 2.3× faster on the sf10 corpus — bench/STABILITY.md, round 15)
-        val pairs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-          .filter(size(col("t")) >= 2)
-          .withColumn("x", col("t"))
-          .withColumn("y", slice(col("t"), lit(2), size(col("t"))))
-          .select(explode(arrays_zip(col("x"), col("y"))).as("p"))
-          .filter(col("p.y").isNotNull)
-          .select(col("p.x").as("a"), col("p.y").as("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("c"))
-          .persist()
+        val pairs = bigramCounts(s, d).persist()
         val la = pairs.groupBy("a").agg(sum("c").as("la"))
         val rb = pairs.groupBy("b").agg(sum("c").as("rb"))
         val n = pairs.agg(sum("c").as("n"))
@@ -1548,8 +1538,7 @@ object DocQueries {
     // equi-key, not a text compare --------------------------------
     "q138_token_chunks" -> Q(
       impl = (s, d) =>
-        Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
+        tokenizedDocs(s, d)
           .select(col("doc_id"), col("t"),
             explode(expr(s"sequence(1, size(t), $ChunkS)")).as("st"))
           .select(col("doc_id"),

@@ -63,6 +63,23 @@ object EtlQueries {
   private def dAttrFirst(name: String): String =
     s"string_split(${dAttr(name)}, ',')[1]"
 
+  /** DuckDB CTEs over `raw` ([[gffCte]]) linking exons to genes as
+    * `GenesExonsEtl` does: the exon rows `ex(exon_id, parent_attr,
+    * exon_chr, exon_start_pos, exon_end_pos)` and the gene rows they
+    * name as parent, `gn(gene_row_id, parent_gene)`.
+    */
+  private def exonGeneCtes: String = s"""ex AS (
+          SELECT ${dAttr("ID")} AS exon_id, ${dAttr("Parent")} AS parent_attr,
+                 regexp_replace(c0, 'chr', '', 'g') AS exon_chr,
+                 CAST(c3 AS BIGINT) - 1 AS exon_start_pos,
+                 CAST(c4 AS BIGINT) AS exon_end_pos
+          FROM raw WHERE ${dAttr("Parent")} IS NOT NULL),
+        gn AS (
+          SELECT ${dAttr("ID")} AS gene_row_id,
+                 ${dAttrFirst("Dbxref")} AS parent_gene
+          FROM raw
+          WHERE ${dAttr("Parent")} IS NULL AND ${dAttr("Dbxref")} IS NOT NULL)"""
+
   val queries: Map[String, Q] = Map(
     // ---- S3/V1/V2/C3/C4/U1: positional synteny TSV -----------------
     "q40_etl_synteny_blocks" -> Q(
@@ -232,17 +249,7 @@ object EtlQueries {
           .orderBy("exon_id"),
       oracle = Some(s"""
         WITH ${gffCte("genes_human.gff3")},
-        ex AS (
-          SELECT ${dAttr("ID")} AS exon_id, ${dAttr("Parent")} AS parent_attr,
-                 regexp_replace(c0, 'chr', '', 'g') AS exon_chr,
-                 CAST(c3 AS BIGINT) - 1 AS exon_start_pos,
-                 CAST(c4 AS BIGINT) AS exon_end_pos
-          FROM raw WHERE ${dAttr("Parent")} IS NOT NULL),
-        gn AS (
-          SELECT ${dAttr("ID")} AS gene_row_id,
-                 ${dAttrFirst("Dbxref")} AS parent_gene
-          FROM raw
-          WHERE ${dAttr("Parent")} IS NULL AND ${dAttr("Dbxref")} IS NOT NULL)
+        $exonGeneCtes
         SELECT exon_id, parent_gene, 9606 AS taxonid, exon_chr,
                exon_start_pos, exon_end_pos
         FROM ex JOIN gn ON ex.parent_attr = gn.gene_row_id
@@ -303,16 +310,7 @@ object EtlQueries {
           .orderBy("exon_start_pos", "exon_id"),
       oracle = Some(s"""
         WITH ${gffCte("genes_human.gff3")},
-        ex AS (
-          SELECT ${dAttr("ID")} AS exon_id, ${dAttr("Parent")} AS parent_attr,
-                 CAST(c3 AS BIGINT) - 1 AS exon_start_pos,
-                 CAST(c4 AS BIGINT) AS exon_end_pos
-          FROM raw WHERE ${dAttr("Parent")} IS NOT NULL),
-        gn AS (
-          SELECT ${dAttr("ID")} AS gene_row_id,
-                 ${dAttrFirst("Dbxref")} AS parent_gene
-          FROM raw
-          WHERE ${dAttr("Parent")} IS NULL AND ${dAttr("Dbxref")} IS NOT NULL)
+        $exonGeneCtes
         SELECT exon_id, parent_gene, exon_start_pos, exon_end_pos
         FROM ex JOIN gn ON ex.parent_attr = gn.gene_row_id
         WHERE parent_gene = 'GeneID:100'

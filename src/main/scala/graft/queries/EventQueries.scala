@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -40,6 +41,57 @@ object EventQueries {
 
   /** q129: events more than 30 minutes apart start a new session. */
   private val SessionGapUs = 1800000000L
+
+  /** DuckDB per-user session counts at a 30-minute inactivity gap:
+    * the oracle of q33 and of its streaming twin q39.
+    */
+  private[queries] val SessionCountsSql = """
+        WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        m AS (
+          SELECT user_id,
+                 CASE WHEN lag(us) OVER w IS NULL
+                        OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
+          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
+        SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions
+        FROM m GROUP BY user_id ORDER BY user_id"""
+
+  /** DuckDB counts and value sums per (30-minute window sliding by
+    * 15 minutes, event_type): the oracle of q55 and of its streaming
+    * twin q74.
+    */
+  private[queries] val SlidingCountsSql = {
+    val S = 900000000L
+    s"""
+        WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
+        w2 AS (
+          SELECT (us // $S) * $S AS w_start_us, event_type, value FROM e
+          UNION ALL
+          SELECT ((us // $S) - 1) * $S AS w_start_us, event_type, value FROM e)
+        SELECT w_start_us, event_type, CAST(count(*) AS BIGINT) AS n,
+               round(sum(value), 3) AS v
+        FROM w2 GROUP BY 1, 2 ORDER BY w_start_us, event_type"""
+  }
+
+  /** The purchases (user_id, pid, us) and the clicks (user_id, cid,
+    * cus) among the events: the two sides of the q34 and q65 as-of
+    * joins.
+    */
+  private def purchasesAndClicks(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+    (ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("pid"), col("us")),
+      ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("cid"), col("us").as("cus")))
+  }
+
+  /** DuckDB CTEs of the purchases `p(pid, user_id, pus)` and the
+    * clicks `c(cid, cu, cus)` among the events: the two sides of q34,
+    * q65 and the streaming joins q63 and q108.
+    */
+  private[queries] val PurchaseClickCtes = """p AS (SELECT event_id AS pid, user_id, epoch_us(ts) AS pus
+                   FROM events WHERE event_type = 'purchase'),
+             c AS (SELECT event_id AS cid, user_id AS cu, epoch_us(ts) AS cus
+                   FROM events WHERE event_type = 'click')"""
 
   val queries: Map[String, Q] = Map(
     // ---- 5a. non-equi range join: same-user event pairs ≤5 min apart
@@ -118,24 +170,12 @@ object EventQueries {
     // ---- sessionization: 30-min-gap sessions per user --------------
     "q33_sessionize" -> Q(
       impl = (s, d) => EventStream.sessionCountsBatch(Tables.events(s, d)),
-      oracle = Some("""
-        WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        m AS (
-          SELECT user_id,
-                 CASE WHEN lag(us) OVER w IS NULL
-                        OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
-        SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions
-        FROM m GROUP BY user_id ORDER BY user_id""")),
+      oracle = Some(SessionCountsSql)),
 
     // ---- as-of join: last prior click before each purchase ---------
     "q34_asof_join" -> Q(
       impl = (s, d) => {
-        val ev = Tables.events(s, d)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("pid"), col("us"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("cid"), col("us").as("cus"))
+        val (purchases, clicks) = purchasesAndClicks(s, d)
         AsOfJoin.lastBefore(purchases, clicks, Seq("user_id"),
             lTime = "us", rTime = "cus", payloadCols = Seq("cid", "cus"))
           .select(
@@ -144,11 +184,8 @@ object EventQueries {
             (col("us") - col("asof_match.cus")).as("gap_us"))
           .orderBy("pid")
       },
-      oracle = Some("""
-        WITH p AS (SELECT event_id AS pid, user_id, epoch_us(ts) AS pus
-                   FROM events WHERE event_type = 'purchase'),
-             c AS (SELECT event_id AS cid, user_id AS cu, epoch_us(ts) AS cus
-                   FROM events WHERE event_type = 'click')
+      oracle = Some(s"""
+        WITH $PurchaseClickCtes
         SELECT pid, cid, pus - cus AS gap_us
         FROM p ASOF JOIN c ON p.user_id = c.cu AND p.pus >= c.cus
         ORDER BY pid"""),
@@ -196,8 +233,7 @@ object EventQueries {
 
     // ---- sliding windows via Spark's native window() ----------------
     "q55_window_sliding" -> Q(
-      impl = (s, d) => {
-        val SlideUs = 900000000L
+      impl = (s, d) =>
         Tables.events(s, d)
           .withColumn("__ts", timestamp_micros(col("us")))
           .groupBy(window(col("__ts"), "1800 seconds", "900 seconds"),
@@ -205,20 +241,8 @@ object EventQueries {
           .agg(count(lit(1)).as("n"), round(sum("value"), 3).as("v"))
           .select(unix_micros(col("window.start")).as("w_start_us"),
             col("event_type"), col("n"), col("v"))
-          .orderBy("w_start_us", "event_type")
-      },
-      oracle = Some {
-        val S = 900000000L
-        s"""
-        WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-        w2 AS (
-          SELECT (us // $S) * $S AS w_start_us, event_type, value FROM e
-          UNION ALL
-          SELECT ((us // $S) - 1) * $S AS w_start_us, event_type, value FROM e)
-        SELECT w_start_us, event_type, CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 3) AS v
-        FROM w2 GROUP BY 1, 2 ORDER BY w_start_us, event_type"""
-      }),
+          .orderBy("w_start_us", "event_type"),
+      oracle = Some(SlidingCountsSql)),
 
     // ---- pure overlap join via the optimizer rule ------------------
     // No equi key at all: Catalyst alone would plan a nested-loop
@@ -259,11 +283,7 @@ object EventQueries {
     // ---- forward as-of join: first click at/after each purchase ----
     "q65_asof_forward" -> Q(
       impl = (s, d) => {
-        val ev = Tables.events(s, d)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("pid"), col("us"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("cid"), col("us").as("cus"))
+        val (purchases, clicks) = purchasesAndClicks(s, d)
         AsOfJoin.firstAfter(purchases, clicks, Seq("user_id"),
             lTime = "us", rTime = "cus", payloadCols = Seq("cid", "cus"))
           .select(
@@ -272,11 +292,8 @@ object EventQueries {
             (col("asof_match.cus") - col("us")).as("gap_us"))
           .orderBy("pid")
       },
-      oracle = Some("""
-        WITH p AS (SELECT event_id AS pid, user_id, epoch_us(ts) AS pus
-                   FROM events WHERE event_type = 'purchase'),
-             c AS (SELECT event_id AS cid, user_id AS cu, epoch_us(ts) AS cus
-                   FROM events WHERE event_type = 'click')
+      oracle = Some(s"""
+        WITH $PurchaseClickCtes
         SELECT pid, cid, cus - pus AS gap_us
         FROM p ASOF JOIN c ON p.user_id = c.cu AND p.pus <= c.cus
         ORDER BY pid""")),

@@ -1,13 +1,14 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.corpus.Curation
-import graft.functions.{MinHashLsh, SimHash, SimHash64, TextFns, VecFns}
+import graft.functions.{MinHashLsh, PersistLeases, SimHash, SimHash64, TextFns, VecFns}
 import graft.operators.{Components, EmbedNearDup}
-import Shared.{MinhashK, Bands, EmbDim, Threshold, shingleCtes, minhashSigCtes,
-  bandRows, minhashEst, powerRows, planeProjCtes}
+import Shared.{MinhashK, Bands, EmbDim, Threshold, tokenizedDocs, shingleCtes,
+  minhashSigCtes, bandRows, minhashEst, powerRows, planeProjCtes}
 
 /** Near-duplicate detection with the three banded-LSH families over
   * `documents` and `embeddings`: MinHash signatures over word
@@ -31,6 +32,15 @@ object LshQueries {
     * planes (16 hyperplanes).
     */
   private val PlanesPerBand = 4
+
+  /** The near-dup pairs (a, b, est) of `documents`:
+    * `Curation.nearDupPairs` over word 3-grams at `MinhashK`
+    * components, `Bands` bands and est ≥ `Threshold` — the graph of
+    * q61, q102, q117, q121, q140, q144, q154 and q169.
+    */
+  private def nearDupPairs(s: SparkSession, d: String): DataFrame =
+    Curation.nearDupPairs(tokenizedDocs(s, d), "doc_id", "t", 3, MinhashK,
+      Bands, Threshold)
 
   /** Doc→distinct-token→simhash pipeline of q29 and q60: one-pass
     * hash-dedup fingerprints (round 19 retired the string-dedup mode)
@@ -65,6 +75,22 @@ object LshQueries {
           FROM band l JOIN band r
             ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
         pairs AS (SELECT a, b FROM cand WHERE est >= $Threshold)"""
+
+  /** DuckDB CTEs (under `WITH RECURSIVE`) of the near-dup components
+    * of `documents`: the [[lshPairCtes]] graph made symmetric (`sym`),
+    * every node's reachable labels (`reach`), and per node the least
+    * one, `comp(node, component)` — `Components.connectedComponents`'
+    * min-label components.
+    */
+  private def componentCtes: String =
+    s"""${lshPairCtes("documents")},
+        sym AS (SELECT a AS x, b AS y FROM pairs
+                UNION SELECT b, a FROM pairs),
+        reach(node, lab) AS (
+          SELECT x, x FROM sym
+          UNION
+          SELECT s.x, r.lab FROM sym s JOIN reach r ON r.node = s.y),
+        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)"""
 
   /** DuckDB CTEs of q58's and q190's cleaning chain over `documents`:
     * `filtered` holds the docs `Curation.qualityFilter` keeps (symbol
@@ -320,6 +346,28 @@ object LshQueries {
           WHERE j < ${Bands * p}
           GROUP BY 1, 2)"""
 
+  /** DuckDB CTEs of the hyperplane sweep over `embeddings` (q184,
+    * q187): per `PlaneGrid` config its `Bands` band keys `bk<p>`, their
+    * occupancy `occ<p>` and `stat<p>` — the config's bucket count,
+    * largest bucket, banded-join cost Σ m·(m−1)/2 and vector count —
+    * and `allstats`, every config's row.
+    */
+  private def planeSweepCtes: String = {
+    val perConfig = PlaneGrid.map { p =>
+      s"""${planeKeyCte(p)},
+        ${occCte(p, "bk")},
+        stat$p AS (
+          SELECT CAST($p AS BIGINT) AS planes,
+                 CAST(count(*) AS BIGINT) AS n_buckets,
+                 CAST(max(m) AS BIGINT) AS max_occ,
+                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
+                 CAST(sum(m) // $Bands AS BIGINT) AS n_vec
+          FROM occ$p)"""
+    }.mkString(",")
+    s"""${VectorQueries.quantCtes},${planeProjCtes(Bands * PlaneGrid.max)},$perConfig,
+        ${allStats(PlaneGrid)}"""
+  }
+
   /** DuckDB candidate pairs (a, b) sharing a band key of `bk$p`. */
   private def planePairs(p: Int): String =
     s"""SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
@@ -344,6 +392,15 @@ object LshQueries {
             JOIN norms na ON na.vec_id = a
             JOIN norms nb ON nb.vec_id = b),
         epairs AS (SELECT a, b, cos_r FROM ecos WHERE cos_r >= $minCos)"""
+
+  /** `EmbedNearDup.bandedPairs` (a, b, cos_r) over the quantized
+    * `embeddings` at `Bands` bands of `PlanesPerBand` planes, verified
+    * at quantized cosine ≥ `minCos` — the pairs of q53, q92 and q169,
+    * replayed by [[embedPairCtes]].
+    */
+  private def embedPairs(s: SparkSession, d: String, minCos: Double): DataFrame =
+    EmbedNearDup.bandedPairs(VectorQueries.quantized(s, d), "vec_id",
+      bands = Bands, planesPerBand = PlanesPerBand, dim = EmbDim, minCos = minCos)
 
   /** DuckDB CTEs of `EmbedNearDup.bandedPairs` over `embeddings` at
     * `Bands` bands of `PlanesPerBand` planes: the verified pairs
@@ -434,9 +491,8 @@ object LshQueries {
         // One-pass local form: each doc's k mins complete inside the
         // scan (no shingle explode, no aggregation shuffle); values
         // are bit-equal to the exploded formulation (MinHashAggSpec).
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        MinHashLsh.signaturesFromTokens(docs, "doc_id", "t", 3, MinhashK)
+        MinHashLsh.signaturesFromTokens(tokenizedDocs(s, d), "doc_id", "t", 3,
+            MinhashK)
           .orderBy("doc_id")
       },
       oracle = Some(s"""
@@ -447,10 +503,8 @@ object LshQueries {
     // ---- LSH candidate pairs (4 bands × 3 rows) --------------------
     "q27_lsh_pairs" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val sigs =
-          MinHashLsh.signaturesFromTokens(docs, "doc_id", "t", 3, MinhashK)
+        val sigs = MinHashLsh.signaturesFromTokens(tokenizedDocs(s, d),
+          "doc_id", "t", 3, MinhashK)
         MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
           .orderBy("a", "b")
       },
@@ -480,17 +534,7 @@ object LshQueries {
     // quadratic baseline survives as the guarded
     // EmbedNearDup.allPairs, recall-checked in VectorSpec ------------
     "q53_embed_neardup" -> Q(
-      impl = (s, d) => {
-        graft.functions.expressions.GraftFunctions.register(s)
-        import graft.functions.VecFns
-        val all = Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-          .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-        graft.operators.EmbedNearDup.bandedPairs(all, "vec_id",
-            bands = Bands, planesPerBand = PlanesPerBand,
-            dim = EmbDim, minCos = 0.4)
-          .orderBy("a", "b")
-      },
+      impl = (s, d) => embedPairs(s, d, 0.4).orderBy("a", "b"),
       oracle = Some(s"""
         WITH ${embedPairCtes(0.4)}
         SELECT a, b, cos_r FROM epairs ORDER BY a, b""")),
@@ -499,31 +543,14 @@ object LshQueries {
     // pipeline — quality filter → language filter → exact dedup →
     // LSH near-dup removal → surviving document ids ------------------
     "q58_corpus_pipeline" -> Q(
-      impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val filtered = docs.filter(
-          TextFns.punctRatio(col("text")) < 0.1
-            && size(col("t")) >= 10
-            && TextFns.langIdentifyFromTokens(col("t")) === "en")
-        // exact dedup: keep the smallest doc_id per content hash
-        val keepIds = filtered
-          .groupBy(md5(col("text")).as("h"))
-          .agg(min("doc_id").as("doc_id"))
+      impl = (s, d) =>
+        Tables.docsParallel(s, d)
+          .transform(Curation.withTokens())
+          .transform(Curation.qualityFilter())
+          .transform(Curation.exactDedup())
+          .transform(Curation.nearDupFilter())
           .select("doc_id")
-        val kept = filtered.join(keepIds, Seq("doc_id"), "left_semi")
-          .persist()
-        // near-dup removal: LSH candidates with est >= 0.5 drop the
-        // larger id of each pair
-        val sigs =
-          MinHashLsh.signaturesFromTokens(kept, "doc_id", "t", 3, MinhashK)
-        val dropIds = MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
-          .select(col("b").as("doc_id")).distinct()
-        kept.join(dropIds, Seq("doc_id"), "left_anti")
-          .select("doc_id")
-          .orderBy("doc_id")
-      },
+          .orderBy("doc_id"),
       oracle = Some(s"""
         WITH $cleanedCtes, ${lshPairCtes("kept")}
         SELECT doc_id FROM kept
@@ -574,26 +601,13 @@ object LshQueries {
     // same clusters with a recursive reachability CTE ----------------
     "q61_lsh_components" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val sigs =
-          MinHashLsh.signaturesFromTokens(docs, "doc_id", "t", 3, MinhashK)
-        val pairs = MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
-        Components.connectedComponents(pairs, "a", "b")
+        Components.connectedComponents(nearDupPairs(s, d), "a", "b")
           .select(col("node").as("doc_id"), col("component"))
           .orderBy("doc_id")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes("documents")},
-        sym AS (SELECT a AS x, b AS y FROM pairs
-                UNION SELECT b, a FROM pairs),
-        reach(node, lab) AS (
-          SELECT x, x FROM sym
-          UNION
-          SELECT s.x, r.lab FROM sym s JOIN reach r ON r.node = s.y)
-        SELECT node AS doc_id, min(lab) AS component
-        FROM reach GROUP BY node ORDER BY doc_id""")),
+        WITH RECURSIVE $componentCtes
+        SELECT node AS doc_id, component FROM comp ORDER BY doc_id""")),
 
     // ---- embedding near-dup clustering: the full scale-shape
     // composition — banded hyperplane LSH candidates (equi-join) →
@@ -602,14 +616,7 @@ object LshQueries {
     // recursive reachability CTE -------------------------------------
     "q92_embed_components" -> Q(
       impl = (s, d) => {
-        graft.functions.expressions.GraftFunctions.register(s)
-        val all = Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-          .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-        val pairs = EmbedNearDup.bandedPairs(all, "vec_id",
-          bands = Bands, planesPerBand = PlanesPerBand,
-          dim = EmbDim, minCos = 0.45)
-        Components.connectedComponents(pairs, "a", "b")
+        Components.connectedComponents(embedPairs(s, d, 0.45), "a", "b")
           .select(col("node").as("vec_id"), col("component"))
           .orderBy("vec_id")
       },
@@ -635,13 +642,7 @@ object LshQueries {
     // no per-group sort ----------------------------------------------
     "q102_cluster_canonical" -> Q(
       impl = (s, d) => {
-        val docs0 = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val sigs =
-          MinHashLsh.signaturesFromTokens(docs0, "doc_id", "t", 3, MinhashK)
-        val pairs = MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
-        val comp = Components.connectedComponents(pairs, "a", "b")
+        val comp = Components.connectedComponents(nearDupPairs(s, d), "a", "b")
           .withColumnRenamed("node", "doc_id")
         val docs = Tables.load(s, d, "documents")
           .select(col("doc_id"), col("n_chars"))
@@ -657,14 +658,7 @@ object LshQueries {
           .orderBy("component")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes("documents")},
-        sym AS (SELECT a AS x, b AS y FROM pairs
-                UNION SELECT b, a FROM pairs),
-        reach(node, lab) AS (
-          SELECT x, x FROM sym
-          UNION
-          SELECT s.x, r.lab FROM sym s JOIN reach r ON r.node = s.y),
-        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
+        WITH RECURSIVE $componentCtes,
         lab AS (SELECT d.doc_id,
                        coalesce(c.component, d.doc_id) AS component,
                        d.n_chars
@@ -685,13 +679,7 @@ object LshQueries {
     "q117_lsh_triangles" -> Q(
       impl = (s, d) => {
         import s.implicits._
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val sigs = MinHashLsh.signaturesFromTokens(
-          docs, "doc_id", "t", 3, MinhashK)
-        val pairs = MinHashLsh
-          .candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
+        val pairs = nearDupPairs(s, d)
           .select(col("a"), col("b"))
           .persist() // consumed by degree/orientation/closure joins
         // ONE incremental take is both the size gate and the collect
@@ -762,16 +750,7 @@ object LshQueries {
     // operator shape and the per-round cost --------------------------
     "q121_pagerank" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        // one-pass per-doc signatures: no shingle explode, no
-        // corpus-wide groupBy shuffle (bit-equal to the exploded form)
-        val sigs = MinHashLsh.signaturesFromTokens(docs, "doc_id", "t",
-          3, MinhashK)
-        val pairs = MinHashLsh
-          .candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
-          .select(col("a"), col("b"))
+        val pairs = nearDupPairs(s, d).select(col("a"), col("b"))
         val sym = pairs.select(col("a").as("u"), col("b").as("v"))
           .union(pairs.select(col("b").as("u"), col("a").as("v")))
           .persist() // edge frame drives deg + two join rounds
@@ -817,29 +796,13 @@ object LshQueries {
     // (pointer-doubling, O(log diameter) rounds) -------------------
     "q140_cluster_histogram" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", graft.functions.TextFns.tokens(col("text")))
-        // one-pass per-doc signatures: no shingle explode, no
-        // corpus-wide groupBy shuffle (bit-equal to the exploded form)
-        val sigs = graft.functions.MinHashLsh
-          .signaturesFromTokens(docs, "doc_id", "t", 3, MinhashK)
-        val pairs = graft.functions.MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
-        Components.connectedComponents(pairs, "a", "b")
+        Components.connectedComponents(nearDupPairs(s, d), "a", "b")
           .groupBy("component").agg(count(lit(1)).as("cluster_size"))
           .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
           .orderBy("cluster_size")
       },
       oracle = Some(s"""
-        WITH RECURSIVE ${lshPairCtes("documents")},
-        sym AS (SELECT a AS x, b AS y FROM pairs
-                UNION SELECT b, a FROM pairs),
-        reach(node, lab) AS (
-          SELECT x, x FROM sym
-          UNION
-          SELECT s.x, r.lab FROM sym s JOIN reach r ON r.node = s.y),
-        comp AS (SELECT node, min(lab) AS component
-                 FROM reach GROUP BY node),
+        WITH RECURSIVE $componentCtes,
         sizes AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
                   FROM comp GROUP BY 1)
         SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
@@ -854,16 +817,8 @@ object LshQueries {
     // LSH-bounded, never quadratic --------------------------------
     "q144_cross_source_dups" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        // one-pass per-doc signatures: no shingle explode, no
-        // corpus-wide groupBy shuffle (bit-equal to the exploded form)
-        val sigs = MinHashLsh.signaturesFromTokens(docs, "doc_id", "t",
-          3, MinhashK)
-        val pairs = MinHashLsh.candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
         val src = Tables.load(s, d, "documents").select("doc_id", "source")
-        pairs
+        nearDupPairs(s, d)
           .join(src.toDF("a", "sa"), "a")
           .join(src.toDF("b", "sb"), "b")
           .select(least(col("sa"), col("sb")).as("s1"),
@@ -890,14 +845,8 @@ object LshQueries {
     // distances; both engines implement classic edit distance -------
     "q154_editdist_verify" -> Q(
       impl = (s, d) => {
-        val docs = graft.Tables.docsParallel(s, d)
-          .withColumn("t", graft.functions.TextFns.tokens(col("text")))
-        val sigs = graft.functions.MinHashLsh
-          .signaturesFromTokens(docs, "doc_id", "t", 3, 12)
-        val pairs = graft.functions.MinHashLsh.candidatePairs(sigs, "doc_id", 12, 4)
-          .filter(col("est") >= 0.5)
         val txt = Tables.load(s, d, "documents").select("doc_id", "text")
-        pairs
+        nearDupPairs(s, d)
           .join(txt.toDF("a", "ta"), "a")
           .join(txt.toDF("b", "tb"), "b")
           .select(col("a"), col("b"),
@@ -927,10 +876,8 @@ object LshQueries {
         // one-pass hash-dedup fingerprints (round 19 retired the
         // string-dedup mode) — the oracle dedups on the hex prefix,
         // a bijection of the 16-bit hash (SimHashOnePassSpec)
-        val sigs = SimHash.fingerprintsFromTokens(
-          Tables.docsParallel(s, d)
-            .withColumn("t", TextFns.tokens(col("text"))),
-          "doc_id", "t", 1)
+        val sigs =
+          SimHash.fingerprintsFromTokens(tokenizedDocs(s, d), "doc_id", "t", 1)
         val banded = sigs.select(col("doc_id"), col("sh"),
             explode(array((0 until 4).map(lit(_)): _*)).as("band"))
           .withColumn("key",
@@ -973,8 +920,7 @@ object LshQueries {
     // O(delta + collisions) ---------------------------------------------
     "q161_incremental_neardup" -> Q(
       impl = (s, d) => {
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
+        val docs = tokenizedDocs(s, d)
         val sigs = MinHashLsh
           .signaturesFromTokens(docs, "doc_id", "t", 3, MinhashK)
           .persist() // index + probe sides; cleared by harness clearCache
@@ -1045,20 +991,9 @@ object LshQueries {
     // cross-engine hash is exact by construction ---------------------
     "q169_modality_audit" -> Q(
       impl = (s, d) => {
-        graft.functions.expressions.GraftFunctions.register(s)
-        val docs = Tables.docsParallel(s, d)
-          .withColumn("t", TextFns.tokens(col("text")))
-        val sigs = MinHashLsh.signaturesFromTokens(
-          docs, "doc_id", "t", 3, MinhashK)
-        val text = MinHashLsh
-          .candidatePairs(sigs, "doc_id", MinhashK, Bands)
-          .filter(col("est") >= 0.5)
+        val text = nearDupPairs(s, d)
           .select(col("a"), col("b"), lit(1).as("tm"))
-        val emb = Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-          .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-        val epairs = graft.operators.EmbedNearDup.bandedPairs(emb, "vec_id",
-            bands = 4, planesPerBand = 4, dim = 64, minCos = 0.4)
+        val epairs = embedPairs(s, d, 0.4)
           .select(col("a"), col("b"), lit(1).as("em"))
         // classed is PAIR-sized (bounded candidate sets from both
         // banded joins) but its lineage is the full text-LSH + embed-
@@ -1067,14 +1002,12 @@ object LshQueries {
         // in the plan (r21 plan audit: duplicate FullOuter subtrees at
         // ops 65/99) and executed twice per run. Leased persist: the
         // harness drain (or a caller scope) releases it.
-        val classed = text.join(epairs, Seq("a", "b"), "full_outer")
-          .withColumn("class",
-            when(col("tm").isNotNull && col("em").isNotNull, "both")
-              .when(col("tm").isNotNull, "text_only")
-              .otherwise("embed_only"))
-          .persist()
-        graft.functions.PersistLeases.register(
-          () => { classed.unpersist(blocking = false); () })
+        val classed = PersistLeases.persist(
+          text.join(epairs, Seq("a", "b"), "full_outer")
+            .withColumn("class",
+              when(col("tm").isNotNull && col("em").isNotNull, "both")
+                .when(col("tm").isNotNull, "text_only")
+                .otherwise("embed_only")))
         val nDocs = classed
           .select(col("class"), explode(array(col("a"), col("b"))).as("doc"))
           .groupBy("class").agg(count_distinct(col("doc")).as("n_docs"))
@@ -1170,31 +1103,18 @@ object LshQueries {
               .cast("long").as("selected"))
           .orderBy("planes_per_band")
       },
-      oracle = Some {
-        val perConfig = PlaneGrid.map { p =>
-          s"""${planeKeyCte(p)},
-        ${occCte(p, "bk")},
-        stat$p AS (
-          SELECT CAST($p AS BIGINT) AS planes_per_band,
-                 CAST(count(*) AS BIGINT) AS n_buckets,
-                 CAST(max(m) AS BIGINT) AS max_occ,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs
-          FROM occ$p)"""
-        }.mkString(",")
-        s"""
-        WITH ${VectorQueries.quantCtes},${planeProjCtes(Bands * PlaneGrid.max)},$perConfig,
-        ${allStats(PlaneGrid)},
+      oracle = Some(s"""
+        WITH $planeSweepCtes,
         sel AS (
           SELECT min(CASE WHEN cand_pairs <=
                        $PairsPerVecBudget * (SELECT count(*) FROM embeddings)
-                     THEN planes_per_band END) AS p_fit,
-                 max(planes_per_band) AS p_max
+                     THEN planes END) AS p_fit,
+                 max(planes) AS p_max
           FROM allstats)
-        SELECT planes_per_band, n_buckets, max_occ, cand_pairs,
-               CAST(planes_per_band = coalesce(p_fit, p_max) AS BIGINT) AS selected
+        SELECT planes AS planes_per_band, n_buckets, max_occ, cand_pairs,
+               CAST(planes = coalesce(p_fit, p_max) AS BIGINT) AS selected
         FROM allstats CROSS JOIN sel
-        ORDER BY planes_per_band"""
-      },
+        ORDER BY planes_per_band"""),
       bench = true),
 
     "q185_minhash_calibration" -> Q(
@@ -1295,11 +1215,10 @@ object LshQueries {
     // config's band join + verification as chained CTEs ---------------
     "q187_calibrated_embed_neardup" -> Q(
       impl = (s, d) => {
-        graft.functions.expressions.GraftFunctions.register(s)
-        val all = Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), VecFns.quantize(col("embedding")).as("vq"))
-          .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
-          .persist()
+        // leased: the sweep and, with no hot cell, the band join read
+        // the quantized vectors (BandedLsh.execute's caller-persisted
+        // input)
+        val all = PersistLeases.persist(VectorQueries.quantized(s, d))
         // the grid CEILING scales with the corpus (planeGridFor:
         // p ~ log₂(bands·N / 2·budget)) so a fitting selection keeps
         // existing across decades — at the harness scales (≤2k
@@ -1308,35 +1227,22 @@ object LshQueries {
         // runs; only decade corpora extend it (ScaleCalibrationSpec
         // pins the 200k-vector row). The count is a one-column job
         // over the persisted frame the sweep reads next.
-        val grid = graft.operators.EmbedNearDup.planeGridFor(
+        val grid = EmbedNearDup.planeGridFor(
           all.count(), Bands, PairsPerVecBudget)
-        val (p, pairs) = graft.operators.EmbedNearDup.calibratedPairs(
+        val (p, pairs) = EmbedNearDup.calibratedPairs(
           all, "vec_id", Bands, grid, EmbDim, MinCos,
           PairsPerVecBudget)
-        // released before the pairs run: with no hot cell the band
-        // join reads the quantized vectors again and, uncached,
-        // recomputes them from the embeddings (BandedLsh.execute's
-        // caller-persisted-input precondition is not met here)
-        all.unpersist(blocking = false)
         pairs
           .withColumn("planes", lit(p.toLong))
           .select(col("a"), col("b"), col("cos_r"), col("planes"))
           .orderBy("a", "b")
       },
       oracle = Some {
-        val perConfig = PlaneGrid.map { p =>
-          s"""${planeKeyCte(p)},
-        ${occCte(p, "bk")},
-        stat$p AS (
-          SELECT CAST($p AS BIGINT) AS planes,
-                 CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs,
-                 CAST(sum(m) // $Bands AS BIGINT) AS n_vec
-          FROM occ$p),
-        pairs$p AS (${planePairs(p)})"""
-        }.mkString(",")
+        val pairs = PlaneGrid.map(p => s"pairs$p AS (${planePairs(p)})")
+          .mkString(",\n        ")
         s"""
-        WITH ${VectorQueries.quantCtes},${planeProjCtes(Bands * PlaneGrid.max)},$perConfig,
-        ${allStats(PlaneGrid)},
+        WITH $planeSweepCtes,
+        $pairs,
         psel AS (
           SELECT coalesce(
                    min(CASE WHEN cand_pairs <= $PairsPerVecBudget * n_vec
@@ -1377,21 +1283,14 @@ object LshQueries {
         // 16-bit vote run locally, bit-equal to the oracle's DISTINCT
         // (doc, hex-prefix) construction — a bijection of the hash
         // (SimHashOnePassSpec pins it)
-        val sigs = SimHash.fingerprintsFromTokens(
-          Tables.docsParallel(s, d)
-            .withColumn("t", TextFns.tokens(col("text"))),
-          "doc_id", "t", 1)
-          .persist() // sweep + selected-config join read it
+        // leased: the sweep and the selected-config join read it
+        val sigs = PersistLeases.persist(
+          SimHash.fingerprintsFromTokens(tokenizedDocs(s, d), "doc_id", "t", 1))
         // fused calibrate-then-execute: the sweep's persisted grid
         // occupancy drives the selection AND the hot-bucket split — no
         // separate occupancy probe job over the banded frame
         val (selected, pairs) = SimHash.calibratedPairs(sigs, "doc_id",
           "sh", WidthGrid, PairsPerDocBudget)
-        // released before the pairs run: with no hot bucket the band
-        // join reads the fingerprints again and, uncached, recomputes
-        // them from the documents (BandedLsh.execute's
-        // caller-persisted-input precondition is not met here)
-        sigs.unpersist(blocking = false)
         pairs
           .withColumn("hamming", SimHash.hamming(col("sa"), col("sb")))
           .filter(col("hamming") <= 1)
@@ -1449,18 +1348,11 @@ object LshQueries {
         // 64-bit prefix collapse to one vote on BOTH sides (~2^-64
         // per pair — the oracle's hex-prefix dedup mirrors it
         // exactly). Parity pinned by SimHashOnePassSpec.
-        val sigs = SimHash64.fingerprintsFromTokens(
-          Tables.docsParallel(s, d)
-            .withColumn("t", TextFns.tokens(col("text"))),
-          "doc_id", "t", 3)
-          .persist() // sweep + selected-config join read it
+        // leased: the sweep and the selected-config join read it
+        val sigs = PersistLeases.persist(
+          SimHash64.fingerprintsFromTokens(tokenizedDocs(s, d), "doc_id", "t", 3))
         val (selected, pairs) = SimHash64.calibratedPairs(sigs, "doc_id",
           "sh", WidthGrid64, PairsPerDocBudget)
-        // released before the pairs run: with no hot bucket the band
-        // join reads the fingerprints again and, uncached, recomputes
-        // them from the documents (BandedLsh.execute's
-        // caller-persisted-input precondition is not met here)
-        sigs.unpersist(blocking = false)
         pairs
           .withColumn("hamming", SimHash64.hamming(col("sa"), col("sb")))
           .filter(col("hamming") <= HammingMax)

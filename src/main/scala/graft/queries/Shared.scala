@@ -1,11 +1,15 @@
 package graft.queries
 
-import graft.functions.{MinHashLsh, VecFns}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Parameters and DuckDB oracle fragments that more than one query
-  * module uses: the MinHash near-dup family (k = 12 components over
-  * word 3-gram shingles, 4 bands) and the hyperplane family over the
-  * 64-dim `embeddings` table.
+import graft.Tables
+import graft.functions.{MinHashLsh, TextFns, VecFns}
+
+/** Parameters, the tokenized corpus and DuckDB oracle fragments that
+  * more than one query module uses: the MinHash near-dup family (k = 12
+  * components over word 3-gram shingles, 4 bands) and the hyperplane
+  * family over the 64-dim `embeddings` table.
   */
 private[queries] object Shared {
 
@@ -25,6 +29,12 @@ private[queries] object Shared {
     * q186, q188 and q190.
     */
   val Threshold = 0.5
+
+  /** `documents` read in parallel (`Tables.docsParallel`) with its
+    * token array `t` (`TextFns.tokens` of `text`).
+    */
+  def tokenizedDocs(s: SparkSession, d: String): DataFrame =
+    Tables.docsParallel(s, d).withColumn("t", TextFns.tokens(col("text")))
 
   /** DuckDB CTEs producing distinct (doc_id, sh) word n-gram shingles
     * of table `src` (doc_id, text).

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
-import EventQueries.WindowUs
+import EventQueries.{WindowUs, SessionCountsSql, SlidingCountsSql, PurchaseClickCtes}
 import Shared.{Bands, Threshold, minhashSigCtes, bandRows, minhashEst}
 
 /** Structured Streaming queries: each runs as micro-batches over a file
@@ -27,24 +27,13 @@ object StreamingQueries {
     // ---- stateful streaming sessionization (flatMapGroupsWithState)
     "q39_stream_sessionize" -> Q(
       impl = (s, d) => EventStream.sessionCountsStateful(s, d),
-      oracle = Some("""
-        WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        m AS (
-          SELECT user_id,
-                 CASE WHEN lag(us) OVER w IS NULL
-                        OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_s
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
-        SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions
-        FROM m GROUP BY user_id ORDER BY user_id""")),
+      oracle = Some(SessionCountsSql)),
 
     // ---- stream-stream interval join (watermarked both sides) ------
     "q63_stream_stream_join" -> Q(
       impl = (s, d) => EventStream.purchaseClickJoin(s, d),
-      oracle = Some("""
-        WITH p AS (SELECT event_id AS pid, user_id, epoch_us(ts) AS pus
-                   FROM events WHERE event_type = 'purchase'),
-             c AS (SELECT event_id AS cid, user_id AS cu, epoch_us(ts) AS cus
-                   FROM events WHERE event_type = 'click')
+      oracle = Some(s"""
+        WITH $PurchaseClickCtes
         SELECT pid, CAST(count(*) AS BIGINT) AS n_clicks_30m
         FROM p JOIN c ON p.user_id = c.cu
           AND c.cus >= p.pus - 1800000000 AND c.cus <= p.pus
@@ -61,18 +50,7 @@ object StreamingQueries {
     "q74_stream_sliding" -> Q(
       impl = (s, d) => EventStream.slidingCounts(s, d,
         widthUs = 1800000000L, slideUs = 900000000L),
-      oracle = Some {
-        val S = 900000000L
-        s"""
-        WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-        w2 AS (
-          SELECT (us // $S) * $S AS w_start_us, event_type, value FROM e
-          UNION ALL
-          SELECT ((us // $S) - 1) * $S AS w_start_us, event_type, value FROM e)
-        SELECT w_start_us, event_type, CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 3) AS v
-        FROM w2 GROUP BY 1, 2 ORDER BY w_start_us, event_type"""
-      }),
+      oracle = Some(SlidingCountsSql)),
 
     // ---- append-mode watermarked windows: only windows finalized by
     // the watermark (max event time − 1 h, at Spark's millisecond
@@ -113,11 +91,8 @@ object StreamingQueries {
     // pretending the batch left join is equivalent ------------------
     "q108_stream_outer_join" -> Q(
       impl = (s, d) => graft.streaming.EventStream.purchaseClickLeftOuter(s, d),
-      oracle = Some("""
-        WITH p AS (SELECT event_id AS pid, user_id, epoch_us(ts) AS pus
-                   FROM events WHERE event_type = 'purchase'),
-             c AS (SELECT event_id AS cid, user_id AS cu, epoch_us(ts) AS cus
-                   FROM events WHERE event_type = 'click'),
+      oracle = Some(s"""
+        WITH $PurchaseClickCtes,
              wm AS (SELECT least((SELECT max(pus) FROM p),
                                  (SELECT max(cus) FROM c)) // 1000
                            - 3600000 AS wm_ms),

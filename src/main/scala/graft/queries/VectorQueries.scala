@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{TextFns, VecFns}
+import graft.functions.{PersistLeases, TextFns, VecFns}
 import graft.functions.expressions.GraftFunctions
 import graft.operators.{Ivf, TopK}
 import Shared.{EmbDim, weightRows, powerRows, planeProjCtes}
@@ -39,6 +39,19 @@ object VectorQueries {
       .withColumn("nsq", VecFns.dotQFast(col("vq"), col("vq")))
   }
 
+  /** The top `K` neighbours per query of the candidate rows `cand`
+    * (q_id, q_vq, q_nsq, n_id, n_vq, n_nsq) by exact quantized cosine,
+    * ties to the lower n_id: (q_id, rk, n_id, cos_r) — q30 and q31.
+    */
+  private def cosineTopK(cand: DataFrame): DataFrame = {
+    val scored = cand
+      .withColumn("dot", VecFns.dotQFast(col("q_vq"), col("n_vq")))
+      .withColumn("cos", VecFns.cosineFromQ(col("dot"), col("q_nsq"), col("n_nsq")))
+    TopK.perGroup(scored, Seq("q_id"), Seq(col("cos").desc, col("n_id").asc), K)
+      .select(col("q_id"), col("rk"), col("n_id"), round(col("cos"), 6).as("cos_r"))
+      .orderBy("q_id", "rk")
+  }
+
   /** Shared oracle CTEs: element-wise quantized vectors + norms. */
   private[queries] def quantCtes: String = s"""
         f AS (SELECT vec_id, unnest(embedding) AS x,
@@ -62,7 +75,12 @@ object VectorQueries {
                  CAST(sum(CASE WHEN p >= 0 THEN pv ELSE 0 END) AS BIGINT) AS bucket
           FROM proj JOIN pw ON proj.j = pw.j GROUP BY vec_id)"""
 
-  private def rankedSelect: String = s"""
+  /** DuckDB tail of an exact-cosine top-`k`: the cosine of each
+    * (q_id, n_id, dot) row of CTE `dots` (`scored`), its rank per
+    * query by (cos DESC, n_id) (`ranked`, the `TopK.perGroup`
+    * tie-break), and the top `k` per query.
+    */
+  private def rankedSelect(k: Int): String = s"""
         scored AS (
           SELECT d.q_id, d.n_id,
                  CAST(d.dot AS DOUBLE)
@@ -75,7 +93,19 @@ object VectorQueries {
             PARTITION BY q_id ORDER BY cos DESC, n_id) AS rk
           FROM scored)
         SELECT q_id, rk, n_id, round(cos, 6) AS cos_r
-        FROM ranked WHERE rk <= $K ORDER BY q_id, rk"""
+        FROM ranked WHERE rk <= $k ORDER BY q_id, rk"""
+
+  /** DuckDB exact-cosine top-`k` of the (q_id, n_id) candidate pairs
+    * of CTE `cand`: their quantized dot products `dots`, then
+    * [[rankedSelect]]. Depends on [[quantCtes]].
+    */
+  private[queries] def candRankedSelect(cand: String, k: Int): String = s"""
+        dots AS (
+          SELECT c.q_id, c.n_id, CAST(sum(a.e * b.e) AS BIGINT) AS dot
+          FROM $cand c
+            JOIN qv a ON a.vec_id = c.q_id
+            JOIN qv b ON b.vec_id = c.n_id AND b.i = a.i
+          GROUP BY 1, 2),${rankedSelect(k)}"""
 
   private val JlPlanes = 16     // q172 projection dims for the JL audit
   private val RrfK = 60L        // q176 standard RRF rank damping
@@ -103,13 +133,7 @@ object VectorQueries {
         val q = broadcast(
           all.filter(col("vec_id") < NQueries).toDF("q_id", "q_vq", "q_nsq"))
         val v = all.toDF("n_id", "n_vq", "n_nsq")
-        val scored = v.crossJoin(q)
-          .filter(col("q_id") =!= col("n_id"))
-          .withColumn("dot", VecFns.dotQFast(col("q_vq"), col("n_vq")))
-          .withColumn("cos", VecFns.cosineFromQ(col("dot"), col("q_nsq"), col("n_nsq")))
-        TopK.perGroup(scored, Seq("q_id"), Seq(col("cos").desc, col("n_id").asc), K)
-          .select(col("q_id"), col("rk"), col("n_id"), round(col("cos"), 6).as("cos_r"))
-          .orderBy("q_id", "rk")
+        cosineTopK(v.crossJoin(q).filter(col("q_id") =!= col("n_id")))
       },
       oracle = Some(s"""
         WITH $quantCtes,
@@ -119,7 +143,7 @@ object VectorQueries {
           FROM qv a JOIN qv b
             ON a.i = b.i AND a.vec_id < $NQueries AND a.vec_id <> b.vec_id
           GROUP BY 1, 2),
-        $rankedSelect"""),
+        ${rankedSelect(K)}"""),
       bench = true),
 
     // ---- LSH-bucketed ANN ------------------------------------------
@@ -131,30 +155,16 @@ object VectorQueries {
           all.filter(col("vec_id") < NQueries)
             .toDF("q_id", "q_vq", "q_nsq", "bucket"))
         val v = all.toDF("n_id", "n_vq", "n_nsq", "bucket")
-        val cand = v.join(q, "bucket").filter(col("q_id") =!= col("n_id"))
-        val scored = cand
-          .withColumn("dot", VecFns.dotQFast(col("q_vq"), col("n_vq")))
-          .withColumn("cos", VecFns.cosineFromQ(col("dot"), col("q_nsq"), col("n_nsq")))
-        TopK.perGroup(scored, Seq("q_id"), Seq(col("cos").desc, col("n_id").asc), K)
-          .select(col("q_id"), col("rk"), col("n_id"), round(col("cos"), 6).as("cos_r"))
-          .orderBy("q_id", "rk")
+        cosineTopK(v.join(q, "bucket").filter(col("q_id") =!= col("n_id")))
       },
-      oracle = Some {
-        s"""
+      oracle = Some(s"""
         WITH $quantCtes,
         $lshBucketCtes,
         cand AS (
           SELECT q.vec_id AS q_id, v.vec_id AS n_id
           FROM buckets q JOIN buckets v
             ON q.bucket = v.bucket AND q.vec_id < $NQueries AND q.vec_id <> v.vec_id),
-        dots AS (
-          SELECT c.q_id, c.n_id, CAST(sum(a.e * b.e) AS BIGINT) AS dot
-          FROM cand c
-            JOIN qv a ON a.vec_id = c.q_id
-            JOIN qv b ON b.vec_id = c.n_id AND b.i = a.i
-          GROUP BY 1, 2),
-        $rankedSelect"""
-      }),
+        ${candRankedSelect("cand", K)}""")),
 
     // ---- IVF ANN (k-means coarse quantizer; the quantizer is data-
     // trained but deterministic, so the oracle re-trains the identical
@@ -390,13 +400,10 @@ object VectorQueries {
         // term tf) — persist so the scan + tokenize runs once (r16
         // ratio audit: the per-branch recomputes of 1-row aggregates
         // were q176's floor; bounded at <2000 rows by the filter)
-        val docs = Tables.docsParallel(s, d)
+        val docs = PersistLeases.persist(Tables.docsParallel(s, d)
           .filter(col("doc_id") < 2000)
           .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-          .withColumn("len", size(col("t")))
-          .persist()
-        graft.functions.PersistLeases.register(
-          () => { docs.unpersist(blocking = false); () })
+          .withColumn("len", size(col("t"))))
         val stats = docs.agg(count(lit(1)).as("n"), sum("len").as("sumlen"))
         val tf = docs
           .select(col("doc_id"), col("len"), explode(col("t")).as("tok"))
@@ -421,9 +428,7 @@ object VectorQueries {
         // vector side: q30's exact quantized cosine vs query vec 0;
         // quantized vectors feed the query-vector lookup AND the scored
         // scan — persist so quantization runs once
-        val all = quantized(s, d).persist()
-        graft.functions.PersistLeases.register(
-          () => { all.unpersist(blocking = false); () })
+        val all = PersistLeases.persist(quantized(s, d))
         val q0 = broadcast(all.filter(col("vec_id") === 0)
           .toDF("q_id", "q_vq", "q_nsq"))
         val scored = all.toDF("n_id", "n_vq", "n_nsq").crossJoin(q0)

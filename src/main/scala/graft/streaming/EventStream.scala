@@ -199,17 +199,15 @@ object EventStream {
       .orderBy("w_start_us", "event_type")
   }
 
-  /** Stream-stream interval join: per purchase, the same-user clicks
-    * in the 30 minutes up to the purchase. Both sides are watermarked
-    * and the join condition carries event-time bounds, so the state
-    * store evicts rows as the watermark advances — the unbounded-state
-    * hazard of stream-stream joins is handled, not ignored. Driven
-    * with `Trigger.AvailableNow` the result equals the batch interval
-    * join exactly; the per-purchase counts are aggregated from the
-    * sink table (batch), keeping the streaming query single-stateful-op.
+  /** The (pid, cid) rows of a stream-stream interval join of each
+    * purchase with the same-user clicks in the 30 minutes up to it.
+    * Both sides are watermarked 1 hour behind their event time and
+    * the join condition carries event-time bounds, so the state store
+    * evicts rows as the watermark advances — the unbounded-state
+    * hazard of stream-stream joins is handled, not ignored.
     */
-  def purchaseClickJoin(spark: SparkSession, dir: String,
-      windowUs: Long = 1800000000L): DataFrame = {
+  private def purchaseClickPairs(spark: SparkSession, dir: String,
+      joinType: String): DataFrame = {
     val purchases = eventStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("pid"),
@@ -220,21 +218,33 @@ object EventStream {
       .select(col("user_id").as("c_uid"), col("event_id").as("cid"),
         col("us").as("cus"), col("ets").as("cts"))
       .withWatermark("cts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("user_id") === col("c_uid") &&
-        col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
-        col("cts") <= col("pts"))
+    purchases.join(clicks,
+        col("user_id") === col("c_uid") &&
+          col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
+          col("cts") <= col("pts"),
+        joinType)
+      .select("pid", "cid")
+  }
+
+  /** Stream-stream interval join: per purchase, the number of
+    * same-user clicks in the 30 minutes up to it (a fixed lookback;
+    * see [[purchaseClickPairs]]). Driven with `Trigger.AvailableNow`
+    * the result equals the batch interval join exactly; the
+    * per-purchase counts are aggregated from the sink table (batch),
+    * keeping the streaming query single-stateful-op.
+    */
+  def purchaseClickJoin(spark: SparkSession, dir: String): DataFrame =
     // Stream-stream join state cost is 4 stores per partition
     // (left/right × keyToNumValues/keyWithIndexToValue) — the
     // heaviest beneficiary of the sized stateful shuffle.
-    drain(spark, joined.select("pid", "cid"), "ssjoin", "append")
+    drain(spark, purchaseClickPairs(spark, dir, "inner"), "ssjoin", "append")
       .groupBy("pid").agg(count(lit(1)).as("n_clicks_30m"))
       .orderBy("pid")
-  }
 
   /** Stream-stream LEFT OUTER interval join — the outer member of the
-    * streaming join family. Matched pairs emit as they join; a
-    * purchase with NO same-user click in its 30-minute lookback emits
+    * streaming join family, over the same fixed 30-minute lookback
+    * ([[purchaseClickPairs]]). Matched pairs emit as they join; a
+    * purchase with NO same-user click in its lookback emits
     * null-padded only once the global watermark (min of the two
     * sides' per-source watermarks, ms granularity) passes its event
     * time and the state store evicts it. Purchases newer than the
@@ -243,27 +253,10 @@ object EventStream {
     * reproduces it exactly: unmatched purchases appear only when
     * `pts_ms < min(max_purchase_ms, max_click_ms) - 1h`.
     */
-  def purchaseClickLeftOuter(spark: SparkSession, dir: String,
-      windowUs: Long = 1800000000L): DataFrame = {
-    val purchases = eventStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("pid"),
-        col("us").as("pus"), col("ets").as("pts"))
-      .withWatermark("pts", "1 hour")
-    val clicks = eventStream(spark, dir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("event_id").as("cid"),
-        col("us").as("cus"), col("ets").as("cts"))
-      .withWatermark("cts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("user_id") === col("c_uid") &&
-        col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
-        col("cts") <= col("pts"),
-      "left_outer")
-    drain(spark, joined.select("pid", "cid"), "ssouter", "append")
+  def purchaseClickLeftOuter(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, purchaseClickPairs(spark, dir, "left_outer"), "ssouter", "append")
       .groupBy("pid").agg(count(col("cid")).as("n_clicks_30m"))
       .orderBy("pid")
-  }
 
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark`
     * holds a key only until the watermark passes its event time, so

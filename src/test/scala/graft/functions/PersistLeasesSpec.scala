@@ -158,7 +158,7 @@ class PersistLeasesSpec extends AnyFunSuite {
     PersistLeases.releaseAll()
     val docsA = corpus(0 until 40, "alpha beta gamma delta shared words")
     val docsB = corpus(0 until 40, "one two three four five six seven")
-    // spanDedup persists its INPUT via leasedPersist — persist()
+    // spanDedup persists its INPUT via PersistLeases.persist — persist()
     // returns the same Dataset, so the input frames' storage levels
     // are the observable
     val (keptA, sA) = PersistLeases.scoped(Curation.spanDedup()(docsA))
